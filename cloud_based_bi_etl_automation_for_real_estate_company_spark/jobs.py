@@ -3,9 +3,9 @@ reference's cron-ish operational loop (backfill script + webhook
 receiver + 8×/day Power BI refresh, reference README.md:511–513).
 
 ``refresh_gold`` is the scheduled batch: silver event log → current
-snapshot → every dashboard measure materialized as partition-pruned
-gold parquet + SQL views. Incremental by construction: dynamic
-partition overwrite only rewrites changed months.
+snapshot → every dashboard measure materialized as gold parquet + SQL
+views. Each refresh recomputes the snapshot from all of silver, once,
+and replaces the published gold tables in full.
 
 ``run_backfill_merge`` is the U2/J4 flow: merge a historical bulk load
 with live silver, latest-per-key, write the snapshot.
@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.generations import read_current, write_generation
+from .operators.generations import generation_path, read_current, write_generation
 from .operators.snapshot import upsert_merge
 from .plans import gold
 from .sources.sinks import materialize_gold
@@ -30,32 +30,45 @@ def refresh_gold(
     prefix: str = "gold_",
     atomic: bool = False,
 ) -> dict[str, DataFrame]:
-    """The 8×/day dashboard refresh as one Spark job.
+    """The 8×/day dashboard refresh.
 
-    ``atomic=False`` (default) refreshes in place with dynamic
-    partition overwrite — incremental (only changed months rewrite)
-    but a concurrent reader can catch a partition mid-rewrite.
+    The lead snapshot is built from silver once and published first;
+    every measure table is then computed from the PUBLISHED snapshot,
+    so the silver scan, the delete anti-join and the latest-per-lead
+    window run once per refresh, not once per table. Every table is
+    published as a full replacement: an account whose leads are all
+    deleted loses its snapshot partition instead of keeping a stale
+    one that every measure would then count. Each table is read back
+    with the schema just written (no schema-inference job).
+
+    ``atomic=False`` (default) overwrites each table's directory in
+    place — a concurrent reader can catch a table mid-rewrite.
     ``atomic=True`` publishes each table as a fresh generation
-    directory behind a manifest (operators/generations.py): full
-    rewrite per refresh, but readers see old-or-new, never a mix —
-    the right trade for the dashboard gold layer, which is small
-    relative to silver."""
+    directory behind a manifest (operators/generations.py): readers
+    see old-or-new, never a mix — the right trade for the dashboard
+    gold layer, which is small relative to silver."""
 
     def _publish(df: DataFrame, name: str, partition_by=None) -> DataFrame:
         path = os.path.join(gold_path, name)
         if atomic:
-            write_generation(df, path, partition_by=partition_by)
-            out = read_current(spark, path)
-            out.createOrReplaceTempView(f"{prefix}{name}")
-            return out
-        return materialize_gold(
-            df, path, view_name=f"{prefix}{name}", partition_by=partition_by
-        )
+            gen = write_generation(df, path, partition_by=partition_by)
+            path = generation_path(path, gen)
+        else:
+            writer = df.write.mode("overwrite").option(
+                "partitionOverwriteMode", "static"
+            )
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(path)
+        out = spark.read.schema(df.schema).parquet(path)
+        out.createOrReplaceTempView(f"{prefix}{name}")
+        return out
 
     silver = spark.read.parquet(silver_path)
-    snap = gold.lead_snapshot(silver)
     out: dict[str, DataFrame] = {}
-    out["lead_snapshot"] = _publish(snap, "lead_snapshot", partition_by=["account"])
+    snap = out["lead_snapshot"] = _publish(
+        gold.lead_snapshot(silver), "lead_snapshot", partition_by=["account"]
+    )
     builders = {
         "funnel": gold.funnel,
         "conversion_rates": gold.conversion_rates,
@@ -416,10 +429,9 @@ def run_curation_pipeline(
         finally:
             curated.unpersist()
     else:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        curated.write.mode("overwrite").partitionBy("split").parquet(out_path)
+        curated.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("split").parquet(out_path)
     # the write above is the last action over the near-dup candidates;
     # release the MinHash signature cache they pinned (and the soft-
     # dedup path's pinned labeled frame)

@@ -32,6 +32,11 @@ def _manifest_path(table_path: str) -> str:
     return os.path.join(table_path, MANIFEST)
 
 
+def generation_path(table_path: str, gen: int) -> str:
+    """The directory holding generation ``gen`` of the table."""
+    return os.path.join(table_path, f"gen-{gen}")
+
+
 def current_generation(table_path: str) -> int | None:
     p = _manifest_path(table_path)
     if not os.path.exists(p):
@@ -50,8 +55,10 @@ def write_generation(
     Returns the new generation number."""
     cur = current_generation(table_path)
     nxt = 0 if cur is None else cur + 1
-    gen_dir = os.path.join(table_path, f"gen-{nxt}")
-    writer = df.write.mode("overwrite")
+    gen_dir = generation_path(table_path, nxt)
+    # a generation is a complete snapshot: replace any leftover of a
+    # crashed earlier attempt whole, whatever the session's overwrite mode
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(gen_dir)
@@ -75,7 +82,7 @@ def read_current(spark: SparkSession, table_path: str) -> DataFrame:
     gen = current_generation(table_path)
     if gen is None:
         raise FileNotFoundError(f"no published generation under {table_path}")
-    return spark.read.parquet(os.path.join(table_path, f"gen-{gen}"))
+    return spark.read.parquet(generation_path(table_path, gen))
 
 
 def compact_generation(
@@ -96,7 +103,7 @@ def compact_generation(
     gen = current_generation(table_path)
     if gen is None:
         raise FileNotFoundError(f"no published generation under {table_path}")
-    src = os.path.join(table_path, f"gen-{gen}")
+    src = generation_path(table_path, gen)
     n_bytes = sum(
         os.path.getsize(os.path.join(root, f))
         for root, _, files in os.walk(src)

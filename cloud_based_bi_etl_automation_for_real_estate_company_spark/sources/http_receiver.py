@@ -14,8 +14,11 @@ spooler replaced by any HTTP→log edge (nginx+Kafka, API gateway →
 object store); the Spark side is transport-agnostic by construction.
 
 Single-threaded stdlib ``HTTPServer`` — a test/dev edge, not a load
-balancer; one spool file per receiver instance, rotated per flush, so
-concurrent receivers never interleave partial lines.
+balancer; one spool file per receiver instance, so concurrent
+receivers never interleave partial lines. The file is appended for the
+receiver's whole lifetime and never rotated: Spark's file source reads
+each file once, so lines appended after a running stream has listed
+the file are not seen — drain the spool after :meth:`stop`.
 """
 
 from __future__ import annotations

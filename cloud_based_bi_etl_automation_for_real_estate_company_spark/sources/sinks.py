@@ -40,14 +40,17 @@ def materialize_gold(
     """S11 — gold refresh: overwrite the materialized table and
     re-register its view. Dynamic partition overwrite only rewrites the
     partitions present in ``df`` — an incremental refresh touches one
-    month's directory, not the whole table."""
+    month's directory, not the whole table. The mode is a per-write
+    option, so the session's own overwrite mode is left as it was.
+
+    The table is read back with the schema just written, which skips
+    the parquet schema-inference job a bare read would run."""
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    writer = df.write.mode("overwrite")
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    out = spark.read.parquet(path)
+    out = spark.read.schema(df.schema).parquet(path)
     if view_name:
         out.createOrReplaceTempView(view_name)
     return out

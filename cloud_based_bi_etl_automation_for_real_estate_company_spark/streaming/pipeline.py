@@ -14,7 +14,8 @@ Reference behavior being reproduced (SURVEY.md §2.7):
 State sizing at scale: dropDuplicates keeps one record per event id
 inside the watermark horizon; with a 1-hour horizon and ~1k events/s
 that is ~3.6M keys of state per office — trivially partitioned across
-executors by the id hash.
+executors by the id hash. ``stream_silver`` sizes that state to the
+cluster's cores (see its docstring).
 """
 
 from __future__ import annotations
@@ -52,6 +53,19 @@ def stream_silver(
     raw-webhook schema — e.g. ``sources.webhook.rate_webhook_source``
     (the live push adapter) or a Kafka value stream parsed the same
     way; every stage after the source is shared.
+
+    State sizing: the dedup state store has one partition per shuffle
+    partition, and the checkpoint pins that count for the query's
+    lifetime. A query started on a NEW checkpoint gets
+    ``sparkContext.defaultParallelism`` partitions — one state task
+    per core per micro-batch, instead of the batch-query width of
+    ``spark.sql.shuffle.partitions`` (tens of near-empty tasks on a
+    webhook-sized batch). A query restarted on an EXISTING checkpoint
+    keeps the count recorded in its offset log, which Spark restores
+    over the session value. The session conf is only overridden while
+    the query starts (the stream clones the session then) and is
+    restored before this returns; a query another thread plans on the
+    same session during that window sees the core count too.
     """
     if raw is None:
         raw = read_webhook_json(spark, in_path, streaming=True)
@@ -72,7 +86,13 @@ def stream_silver(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    key = "spark.sql.shuffle.partitions"
+    caller = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, caller)
 
 
 def stream_dedup_documents(

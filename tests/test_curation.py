@@ -19,7 +19,10 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_curation_pipeline_end_to_end(spark, tmp_path):
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     out = run_curation_pipeline(spark, SF, str(tmp_path / "curated"))
+    # the split write overwrites dynamically without touching the session
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
     total = t(spark, SF, "documents").count()
     n = out.count()
     assert 0 < n < total

@@ -51,6 +51,16 @@ def test_materialize_gold_dynamic_partition_overwrite(spark, tmp_path):
     assert got == {"2025-01": 10, "2025-02": 25}
 
 
+def test_materialize_gold_leaves_session_overwrite_mode(spark, tmp_path):
+    """Dynamic overwrite is a per-write option: the session's own
+    overwrite mode is the same after the call."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    df = spark.createDataFrame([("2025-01", 1)], "month string, n int")
+    materialize_gold(df, str(tmp_path / "gold"), partition_by=["month"])
+    assert spark.conf.get(key) == before
+
+
 def test_compact_small_files(spark, tmp_path):
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.sinks import (
         compact,
