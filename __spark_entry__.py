@@ -16,11 +16,13 @@ HLL rollup (exact-distinct + tolerance boolean), trained IVF
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloud_based_bi_etl_automation_for_real_estate_company_spark import gate
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.plans import (
     analytics,
     extensions,
@@ -61,111 +63,16 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Round-16 gate front block (optimization round — no new queries, so
-# the 50-slot window is pure STALENESS ROTATION): (a) the COMPLETE
-# 28-name r10-vintage tier (the oldest tier once CORRECTNESS_r15
-# landed; staged verbatim as _ROTATION_R16 last round), then (b) the
-# spare 22 slots promote the alphabetically-first r11-tier names so
-# the next-oldest tier starts draining early. After this window runs,
-# no catalog name's newest driver row is older than r11.
-# scripts/check_rotation.py verifies; test_gate_rotation_invariant
-# pins the mechanism.
-_GATE_PRIORITY = (
-    # -- (a) staleness rotation: the complete 28-name r10 tier --------------
-    "l22_nation_profit",
-    "l23_stock_concentration",
-    "w11_asof_snapshot",
-    "w12_rolling_distinct",
-    "w13_range_frame",
-    "x_ann_recall",
-    "x_card_redact",
-    "x_cluster_split",
-    "x_dataset_card",
-    "x_dd_quantiles",
-    "x_dedup_clusters",
-    "x_dedup_simhash",
-    "x_dsir_weights",
-    "x_golden_records",
-    "x_kcore",
-    "x_knn_classify",
-    "x_logreg_quality",
-    "x_lsh_precision",
-    "x_lsh_recall",
-    "x_mmr_first",
-    "x_mojibake",
-    "x_multimodal_meta",
-    "x_nb_lang",
-    "x_normalized_dedup",
-    "x_pca_invariants",
-    "x_softdedup_weights",
-    "x_sorted_neighborhood",
-    "x_video_meta",
-    # -- (b) early r11-tier promotions (fill to exactly 50) ------------------
-    "a10_monthly_trend",
-    "a11_origin_counts",
-    "a12_agent_measures",
-    "a13_detail_listing",
-    "a43_km_survival",
-    "a44_gini",
-    "l24_forecast_revenue",
-    "l25_priority_mode_split",
-    "l26_waiting_suppliers",
-    "l28_copurchase_lift",
-    "l2_revenue_by_nation",
-    "l3_top_parts",
-    "l4_order_lifecycle",
-    "l5_top_revenue_orders",
-    "l6_returned_customers",
-    "l7_lone_late_suppliers",
-    "l8_supplier_variety",
-    "l9_groupwise_min",
-    "t14_cusum",
-    "t15_backtest",
-    "t18_acf",
-    "t19_xcorr",
-)
-
-# Round-17 rotation backlog: the 22 r11-vintage names NOT promoted in
-# the round-16 front (the oldest staleness tier once round 16 lands).
-# It fits one front with slots to spare for round-17 additions;
-# run scripts/check_rotation.py to re-derive.
-_ROTATION_R17: tuple[str, ...] = (
-    "t3_top_terms",
-    "x_ann_ivf_trained",
-    "x_bm25",
-    "x_bpe_encode",
-    "x_bpe_train",
-    "x_calibration",
-    "x_cms_heavy_hitters",
-    "x_golden_mode",
-    "x_hll_rollup",
-    "x_js_divergence",
-    "x_keyphrases",
-    "x_ks_drift",
-    "x_label_prop",
-    "x_mmr_rerank",
-    "x_mojibake_full",
-    "x_nb_confusion",
-    "x_prefix_join",
-    "x_psi_drain",
-    "x_psi_drift",
-    "x_readability",
-    "x_softdedup_drain",
-    "x_url_canon",
-)
+# Registration order is the correctness gate's rotation: the first 50 names
+# are the stalest per the CORRECTNESS_r*.json files beside this module.
+_LATEST = gate.load_latest(os.path.dirname(os.path.abspath(__file__)))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Gate-priority names register first (see _GATE_PRIORITY), then
-    # the round-2 additions, then the round-1-checked families, so
-    # per-round CORRECTNESS files union toward full coverage.
     all_q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in (warehouse, windows, extensions, measures, analytics, scalars, temporal):
         all_q.update(mod.QUERIES)
-    out = {n: all_q[n] for n in _GATE_PRIORITY if n in all_q}
-    out.update({n: all_q[n] for n in _ROTATION_R17 if n in all_q and n not in out})
-    out.update({n: f for n, f in all_q.items() if n not in out})
-    return out
+    return {n: all_q[n] for n in gate.staleness_order(all_q, _LATEST)}
 
 
 def oracle_sql() -> dict[str, str]:

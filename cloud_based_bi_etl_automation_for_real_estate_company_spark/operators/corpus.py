@@ -21,9 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import read_store
-
 from ..functions.text import shingles, tokens
+from . import stores
 
 
 def tfidf_by_group(
@@ -1424,83 +1423,46 @@ def bm25_query_store(
     pinned by the x_bm25_drain gate and the compaction-invariance
     test). Each query-time doc-stats agg is map-side partial over a
     column-pruned store scan — no state beyond the postings table."""
-    tf = read_store(
-        spark,
-        f"{store_path}/postings",
-        required="term string, tf bigint",
-        required_names=(id_col,),
-        merge=False,  # query read; compaction keeps mergeSchema
-    )
-    tf = _drop_tombstoned(spark, tf, store_path, id_col)
+    tf = _live_postings(spark, store_path, id_col)
     qterms = queries.select(
         "query", F.explode(F.split("query", " ")).alias("term")
     )
     return _bm25_score_postings(tf, qterms, id_col, k, k1, b)
 
 
-def _drop_tombstoned(
-    spark, tf: DataFrame, store_path: str, id_col: str
-) -> DataFrame:
-    """Apply the store's tombstone set (round 15 — takedowns against
-    the append-only postings store, see dedup.append_tombstones) to a
-    postings read: deleted docs vanish from retrieval AND from every
-    query-time-derived statistic (N, avgdl, doc_freq all re-derive
-    from the filtered postings), so a post-delete query is IDENTICAL
-    to one over a store never containing the doc — the x_bm25_delete
-    gate pins exactly that equivalence against the one-shot SQL over
-    the reduced corpus."""
-    from .dedup import read_tombstones
-
-    tomb = read_tombstones(spark, store_path, id_col)
-    if tomb is not None:
-        tf = tf.join(tomb, id_col, "left_anti")
-    return tf
+def _live_postings(spark, store_path: str, id_col: str) -> DataFrame:
+    """The postings store minus tombstoned docs: deleted docs vanish
+    from retrieval AND from every query-time statistic (N, avgdl and
+    doc_freq re-derive from the filtered postings), so a post-delete
+    query is IDENTICAL to one over a store never containing the doc —
+    the x_bm25_delete gate pins that against the one-shot SQL over the
+    reduced corpus."""
+    return stores.read_live(
+        spark, store_path, "postings", id_col,
+        required="term string, tf bigint", required_names=(id_col,),
+    )
 
 
-def bm25_delete_docs(
-    ids: DataFrame, store_path: str, id_col: str = "doc_id"
-) -> None:
-    """Logical delete from the BM25/MLT postings store: tombstoned
-    docs drop out of both retrieval surfaces (and their statistics)
-    at the next query; :func:`compact_bm25_store` makes the delete
-    physical and clears the tombstones. Append-only and idempotent
-    under replay — see dedup.append_tombstones for the contract."""
-    from .dedup import append_tombstones
-
-    append_tombstones(ids, store_path, id_col)
+# Logical delete from the BM25/MLT postings store: tombstoned docs drop
+# out of both retrieval surfaces (and their statistics) at the next
+# query; compact_bm25_store makes the delete physical.
+bm25_delete_docs = stores.delete
 
 
 def compact_bm25_store(
     spark, store_path: str, bytes_per_file: int = 128 << 20
 ) -> None:
     """Store-lifecycle companion to :func:`bm25_index_append`: rewrite
-    ``{store_path}/postings`` into right-sized files via the shared
-    generation-swap (operators/dedup._write_and_swap_store — same
-    quiet-window contract as compact_minhash_store: don't run
+    ``{store_path}/postings`` into right-sized files under the
+    :func:`stores.compact` quiet-window contract (don't run
     concurrently with appends or queries). The row set is IDENTICAL,
     so retrieval across a compaction is invariant (test-pinned) —
     except postings tombstoned by :func:`bm25_delete_docs`, which this
-    pass physically drops (tombstones cleared strictly AFTER the
-    swap; a crash in between leaves a no-op tombstone set)."""
-    from .dedup import (
-        _clear_tombstones,
-        _local_store_path,
-        _write_and_swap_store,
-        read_tombstones,
+    pass physically drops."""
+    stores.compact(
+        spark, store_path, {"postings": {}},
+        id_col=lambda df: df.columns[0], bytes_per_file=bytes_per_file,
     )
-
-    store_path = _local_store_path(store_path)
-    # mergeSchema (via read_store) is load-bearing on a compaction
-    # read: dropping a newer column here would destroy it permanently
-    postings = read_store(spark, f"{store_path}/postings")
-    tomb = read_tombstones(spark, store_path, postings.columns[0])
-    if tomb is not None:
-        postings = postings.join(tomb, tomb.columns[0], "left_anti")
-    _write_and_swap_store(
-        postings, store_path, bytes_per_file, subdir="postings"
-    )
-    if tomb is not None:
-        _clear_tombstones(store_path)
 
 
 def more_like_this(
@@ -1683,14 +1645,7 @@ def mlt_query_store(
     x_mlt_drain gate, whose oracle is literally the x_mlt SQL). Same
     hot-term bound, decimal dot/norm sums, and rank convention as
     more_like_this."""
-    tf = read_store(
-        spark,
-        f"{store_path}/postings",
-        required="term string, tf bigint",
-        required_names=(id_col,),
-        merge=False,  # query read; compaction keeps mergeSchema
-    )
-    tf = _drop_tombstoned(spark, tf, store_path, id_col)
+    tf = _live_postings(spark, store_path, id_col)
     n_docs = tf.agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
     return _mlt_score_postings(tf, n_docs, query_docs, id_col, k, max_df_frac)
 

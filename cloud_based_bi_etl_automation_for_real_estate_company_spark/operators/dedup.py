@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
-from ..session import hadoop_path_exists, read_store
+from . import stores
 from .cacheutil import release_checkpoint
 
 
@@ -385,13 +385,14 @@ def connected_components_star(
     # each round's stats/mid/cur frames die as soon as their single
     # downstream consumer has materialized — release their blocks then,
     # instead of leaking three checkpoints per contraction round until
-    # JVM GC. mid_{r-1} is dead once cur_{r-1} has materialized (the
-    # local-finish count or this round's stats job, whichever runs
-    # first); stats_r and cur_{r-1} are dead once mid_r materialized.
+    # JVM GC. Every checkpoint here is eager (``localCheckpoint()``
+    # defaults to eager=True), so mid_{r-1} is dead as soon as the
+    # statement building cur_{r-1} returns; stats_r and cur_{r-1} are
+    # dead once mid_r materialized.
     prev_mid = None
     for _ in range(max_iter):
         if local_finish_max_edges and cur.count() <= local_finish_max_edges:
-            release_checkpoint(prev_mid)  # cur materialized by the count
+            release_checkpoint(prev_mid)  # cur is already materialized
             return _local_cc(cur, spark, id_type)
         # ONE flagged pass over the symmetrized canon list computes
         # the fixpoint degree stats AND the large star's neighborhood
@@ -411,8 +412,9 @@ def connected_components_star(
             )
             .localCheckpoint(eager=True)
         )
-        # the stats job materialized cur's lazy checkpoint, so the
-        # previous round's mid has no live reader left
+        # cur is an eager localCheckpoint, materialized when the
+        # previous round built it, so that round's mid has no live
+        # reader left
         release_checkpoint(prev_mid)
         prev_mid = None
         # star forest ⟺ no child has 2 parents and no node is both
@@ -984,12 +986,11 @@ def incremental_paragraph_dedup(
         F.trim(F.col("para")).alias("para"),
     ).filter(F.length("para") > 0)
     paras = paras.withColumn("__h", F.md5("para"))
-    if hadoop_path_exists(spark, f"{store_path}/hashes"):
-        seen = read_store(
-            spark, f"{store_path}/hashes", required="para_hash string",
-            merge=False,  # query read; compaction keeps mergeSchema
-        )
-    else:
+    seen = stores.read_live(
+        spark, store_path, "hashes", required="para_hash string",
+        missing_ok=True,
+    )
+    if seen is None:
         seen = spark.createDataFrame([], "para_hash string")
     fresh = paras.join(
         seen.select(F.col("para_hash").alias("__h")), "__h", "left_anti"
@@ -1033,16 +1034,13 @@ def compact_paragraph_store(
     :func:`incremental_paragraph_dedup`: at-least-once replays append
     duplicate hashes (harmless for membership — the anti-join is
     set-semantics — but wasteful); re-write ``{store_path}/hashes``
-    DISTINCT and swap generations via the shared
-    :func:`_write_and_swap_store` quiet-window contract. Membership —
-    and therefore every subsequent batch's result — is invariant
-    under compaction (pytest-pinned)."""
-    store_path = _local_store_path(store_path)
-    merged = read_store(
-        spark, f"{store_path}/hashes", required="para_hash string"
-    ).distinct()
-    _write_and_swap_store(
-        merged, store_path, bytes_per_file, subdir="hashes"
+    DISTINCT under the :func:`stores.compact` quiet-window contract.
+    Membership — and therefore every subsequent batch's result — is
+    invariant under compaction (pytest-pinned)."""
+    stores.compact(
+        spark, store_path, {"hashes": {"required": "para_hash string"}},
+        lambda live, _: {"hashes": live["hashes"].distinct()},
+        bytes_per_file=bytes_per_file,
     )
 
 
@@ -1571,26 +1569,19 @@ def incremental_minhash_dedup(
     # surface — swallowing it would dedup against an empty store and
     # silently re-admit the whole corpus's duplicates. Typed FS probe,
     # not exception-message matching (round-11 ADVICE).
+    # Tombstoned docs stop suppressing new near-dups immediately;
+    # their physical rows go at compaction.
     mh_ddl = ", ".join(f"mh_{i} string" for i in range(num_hashes))
-    if hadoop_path_exists(spark, f"{store_path}/sigs"):
-        store_sig = read_store(
-            spark,
-            f"{store_path}/sigs",
-            required=mh_ddl,
-            required_names=(id_col,),
-            merge=False,  # query read; compaction keeps mergeSchema
-        )
-    else:
+    store_sig = stores.read_live(
+        spark, store_path, "sigs", id_col, required=mh_ddl,
+        required_names=(id_col,), missing_ok=True,
+    )
+    if store_sig is None:
         # bootstrap schema mirrors the batch's own signature frame so a
         # non-bigint id column types the store correctly from batch one
         # (round-6 ADVICE: never hardcode the id type)
         id_type = sig.schema[id_col].dataType.simpleString()
         store_sig = spark.createDataFrame([], f"{id_col} {id_type}, {mh_ddl}")
-    # takedowns (round 15): tombstoned docs stop suppressing new
-    # near-dups immediately — their physical rows go at compaction
-    tomb = read_tombstones(spark, store_path, id_col)
-    if tomb is not None:
-        store_sig = store_sig.join(tomb, id_col, "left_anti")
     store_banded = band_keys(store_sig, id_col, num_hashes, bands)
 
     def n_eq(a: str, b: str):
@@ -1721,28 +1712,20 @@ def soft_dedup_admit(
         new_docs, text_col, id_col, num_hashes, shingle_k
     ).localCheckpoint(eager=True)
     banded = band_keys(sig, id_col, num_hashes, bands)
-    # typed FS probe (round-11 ADVICE) — same bootstrap-only contract
-    # as incremental_minhash_dedup above
+    # Same bootstrap-only contract as incremental_minhash_dedup.
+    # Tombstoned members leave their clusters logically here;
+    # compact_soft_store re-derives labels without them, so
+    # counts/weights reconcile at the next compaction.
     mh_ddl = ", ".join(f"mh_{i} string" for i in range(num_hashes))
-    if hadoop_path_exists(spark, f"{store_path}/sigs"):
-        store_sig = read_store(
-            spark,
-            f"{store_path}/sigs",
-            required=mh_ddl,
-            required_names=(id_col, "cluster_id"),
-            merge=False,  # query read; compaction keeps mergeSchema
-        )
-    else:
+    store_sig = stores.read_live(
+        spark, store_path, "sigs", id_col, required=mh_ddl,
+        required_names=(id_col, "cluster_id"), missing_ok=True,
+    )
+    if store_sig is None:
         id_type = sig.schema[id_col].dataType.simpleString()
         store_sig = spark.createDataFrame(
             [], f"{id_col} {id_type}, {mh_ddl}, cluster_id {id_type}"
         )
-    # takedowns (round 15): tombstoned members leave their clusters
-    # logically here; compact_soft_store re-derives labels without
-    # them, so counts/weights reconcile at the next compaction
-    tomb = read_tombstones(spark, store_path, id_col)
-    if tomb is not None:
-        store_sig = store_sig.join(tomb, id_col, "left_anti")
     # The store is referenced three times (band keys, verification
     # join, cluster counts) but deliberately NOT checkpointed: each
     # reference is a plain column-pruned parquet re-scan, which at
@@ -1880,17 +1863,14 @@ def soft_dedup_finalize(
     text-bearing stage anywhere.
 
     Returns (id_col, cluster_id, n_cluster, weight)."""
-    raw = read_store(
+    sigs = stores.read_live(  # takedowns: finalize over survivors only
         spark,
-        f"{store_path}/sigs",
+        store_path,
+        "sigs",
+        id_col,
         required=", ".join(f"mh_{i} string" for i in range(num_hashes)),
         required_names=(id_col, "cluster_id"),
-        merge=False,  # derives labels only; compaction keeps mergeSchema
-    ).drop("cluster_id")
-    tomb = read_tombstones(spark, store_path, id_col)
-    if tomb is not None:  # takedowns: finalize over survivors only
-        raw = raw.join(tomb, id_col, "left_anti")
-    sigs = raw.localCheckpoint(eager=True)
+    ).drop("cluster_id").localCheckpoint(eager=True)
     cand = minhash_lsh_pairs(sigs, id_col=id_col, num_hashes=num_hashes,
                              bands=bands, precomputed_sig=sigs)
 
@@ -1944,186 +1924,25 @@ def compact_minhash_store(
     ``{store_path}/sigs``, so after thousands of batches the store is
     thousands of small files and every candidate lookup pays the
     file-listing + tiny-scan tax. Rewrite the store into
-    ⌈size/``bytes_per_file``⌉ right-sized files in a fresh generation
-    directory, then swap generations. The REWRITE never touches the
-    live directory, but the SWAP is two local renames with a gap in
-    between — run compaction in the pipeline's quiet window, not
-    concurrently with ``incremental_minhash_dedup`` batches: a batch
-    reading inside the gap sees PATH_NOT_FOUND, which its bootstrap
-    handler would treat as an empty store (silently re-admitting that
-    batch's duplicates), and the old generation is deleted at the end
-    rather than left for in-flight readers. An object-store / table-
-    format deployment swaps atomically and has neither hazard. The
-    row set is IDENTICAL so candidate lookup across a compaction is
-    invariant (pinned by ``tests/test_dedup.py::
+    ⌈size/``bytes_per_file``⌉ right-sized files under the
+    :func:`stores.compact` quiet-window contract. The row set is
+    IDENTICAL so candidate lookup across a compaction is invariant
+    (pinned by ``tests/test_dedup.py::
     test_minhash_store_compaction_lookup_invariance``) — except rows
     tombstoned by :func:`delete_from_minhash_store`, which this pass
-    physically drops (tombstones cleared strictly AFTER the swap —
-    see :func:`_clear_tombstones` for the crash window).
+    physically drops.
     """
-    store_path = _local_store_path(store_path)
-    # mergeSchema (via read_store) is load-bearing on a COMPACTION read:
-    # a bare read sampling one old footer would drop any newer columns
-    # and the rewrite would destroy them permanently
-    sigs = read_store(spark, f"{store_path}/sigs")
-    tomb = read_tombstones(spark, store_path, sigs.columns[0])
-    if tomb is not None:
-        sigs = sigs.join(tomb, tomb.columns[0], "left_anti")
-    _write_and_swap_store(sigs, store_path, bytes_per_file)
-    if tomb is not None:
-        _clear_tombstones(store_path)
-
-
-def _local_store_path(store_path: str) -> str:
-    """Validate that a signature-store path is local-filesystem (the
-    generation swap below is os.rename) and strip a file:// scheme.
-    The batch writer accepts any Hadoop URI, so fail LOUDLY before
-    writing anything rather than leaving an orphaned sigs__compacting
-    directory on s3://-style stores after the rename raises."""
-    from urllib.parse import urlparse
-
-    scheme = urlparse(store_path).scheme
-    if scheme not in ("", "file"):
-        raise ValueError(
-            f"store compaction swaps generations with local "
-            f"renames; store_path {store_path!r} (scheme {scheme!r}) "
-            "is not a local filesystem path. Compact object-store / "
-            "table-format deployments with their native atomic rewrite."
-        )
-    if scheme == "file":
-        return urlparse(store_path).path
-    return store_path
-
-
-def _write_and_swap_store(
-    frame: DataFrame, store_path: str, bytes_per_file: int,
-    stats_frame: DataFrame | None = None, subdir: str = "sigs",
-) -> None:
-    """Rewrite ``{store_path}/{subdir}`` as ``frame`` in right-sized
-    files via a fresh generation directory + two renames (see
-    compact_minhash_store's docstring for the quiet-window contract).
-    ``frame``'s lineage may read the live store dir — the write lands
-    in ``{subdir}__compacting`` first, and the source generation is
-    untouched until the swap. ``stats_frame`` supplies the size
-    estimate when ``frame``'s own lineage has no usable stats (a
-    localCheckpoint reports Long.MaxValue-ish sizeInBytes, which
-    would explode the file count). ``subdir`` defaults to the minhash
-    family's ``sigs``; the BM25 postings store compacts through the
-    same swap with ``subdir="postings"``."""
-    import os
-    import shutil
-
-    sigs_dir = os.path.join(store_path, subdir)
-    try:
-        est = int(
-            str(
-                (stats_frame if stats_frame is not None else frame)
-                ._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        )
-    except Exception:
-        est = bytes_per_file
-    # belt-and-braces: an unknown-stats frame must not fan out into
-    # millions of shuffle partitions
-    n_files = min(max(1, -(-est // bytes_per_file)), 100_000)
-    tmp = os.path.join(store_path, f"{subdir}__compacting")
-    frame.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    old = os.path.join(store_path, f"{subdir}__old")
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(sigs_dir, old)
-    os.rename(tmp, sigs_dir)
-    shutil.rmtree(old)
-
-
-def append_tombstones(
-    ids: DataFrame, store_path: str, id_col: str = "doc_id"
-) -> None:
-    """Record document/vector DELETIONS against a lifetime store
-    (round 15 — the takedown path the append-only store family was
-    missing: a right-to-be-forgotten or licensing takedown at 100 TB
-    cannot rewrite a multi-TB postings/signature/graph store inline).
-    The ids land as an append-only ``{store}/tombstones`` parquet set;
-    every store READER anti-joins it (deleted docs vanish from
-    results AND from derived statistics immediately), and the store's
-    COMPACTION physically drops the rows and clears the tombstones —
-    the same logical-delete → physical-rewrite-in-the-quiet-window
-    split as Delta/Iceberg delete files.
-
-    Replay/crash contract: appending the same ids again is harmless
-    (readers go through an anti-join, which is idempotent in the
-    tombstone multiset), so an at-least-once delete feed needs no
-    upstream dedup. Tombstones are expected to be ≪ the store (a
-    takedown stream, not a churn stream) — readers let AQE broadcast
-    the set when it is small.
-
-    Tombstones are by ID and win over ANY row bearing that id —
-    including one appended after the delete — until a compaction
-    physically drops the rows and clears the set. Takedown ids are
-    content identities here; legitimately re-adding one means
-    compact first (or mint a new id), never resurrect-by-append."""
-    ids.select(id_col).distinct().write.mode("append").parquet(
-        f"{store_path}/tombstones"
+    stores.compact(
+        spark, store_path, {"sigs": {}}, id_col=lambda df: df.columns[0],
+        bytes_per_file=bytes_per_file,
     )
 
 
-def read_tombstones(
-    spark, store_path: str, id_col: str = "doc_id"
-) -> DataFrame | None:
-    """Read a store's tombstone set (None when no delete was ever
-    recorded — the fast path skips the anti-join entirely). Goes
-    through the guarded reader so a tombstone file written with a
-    renamed id column fails loudly instead of anti-joining nothing.
-
-    Round 16 (guide §3.1, the r15 VERDICT's anti-join placement item):
-    the returned frame carries a BROADCAST hint — a tombstone set is
-    takedown-sized (ids only, bounded by deletes since the last
-    compaction), so every consumer's anti-join should stream the
-    store/postings side and never shuffle it against the tombstones;
-    without the hint a cold-stats store read planned sort-merge
-    anti-joins at scale. merge=False: ids-only reads never rewrite
-    the store (compaction reads the tombstones through this same
-    path, but only projects the pinned id column)."""
-    from ..session import read_store
-
-    if not hadoop_path_exists(spark, f"{store_path}/tombstones"):
-        return None
-    return F.broadcast(
-        read_store(
-            spark,
-            f"{store_path}/tombstones",
-            required_names=(id_col,),
-            merge=False,
-        )
-        .select(id_col)
-        .distinct()
-    )
-
-
-def _clear_tombstones(store_path: str) -> None:
-    """Drop the tombstone set after a compaction has physically
-    removed the tombstoned rows. Called strictly AFTER the store
-    generation swap: a crash between swap and clear leaves tombstones
-    pointing at already-absent ids, and the readers' anti-join of an
-    absent id is a no-op — the store converges on the next compaction
-    instead of resurrecting deleted rows."""
-    import shutil
-
-    shutil.rmtree(
-        f"{_local_store_path(store_path)}/tombstones", ignore_errors=True
-    )
-
-
-def delete_from_minhash_store(
-    ids: DataFrame, store_path: str, id_col: str = "doc_id"
-) -> None:
-    """Logical delete from the minhash signature store: tombstoned
-    docs stop suppressing future near-duplicates at the next
-    :func:`incremental_minhash_dedup` batch — the correct takedown
-    semantics: once the original is gone from the corpus, a fresh
-    copy of its content is a fresh admit, not a duplicate of a ghost.
-    :func:`compact_minhash_store` makes the delete physical."""
-    append_tombstones(ids, store_path, id_col)
+# Logical delete from the minhash signature store: tombstoned docs
+# stop suppressing near-duplicates at the next incremental_minhash_dedup
+# batch (a fresh copy of removed content is a fresh admit, not a
+# duplicate of a ghost); compact_minhash_store makes it physical.
+delete_from_minhash_store = stores.delete
 
 
 def compact_soft_store(
@@ -2155,60 +1974,56 @@ def compact_soft_store(
     mh_* columns are untouched); ``soft_dedup_finalize`` output is
     invariant too, since it re-derives labels from signatures alone.
     """
-    store_path = _local_store_path(store_path)
-    raw = read_store(
-        spark,
-        f"{store_path}/sigs",
-        required=", ".join(f"mh_{i} string" for i in range(num_hashes)),
-        required_names=(id_col, "cluster_id"),
-    )
-    tomb = read_tombstones(spark, store_path, id_col)
-    if tomb is not None:  # takedowns go physical here (cleared below)
-        raw = raw.join(tomb, id_col, "left_anti")
-    sigs = raw.localCheckpoint(eager=True)
-    bare = sigs.drop("cluster_id")
-    cand = minhash_lsh_pairs(
-        bare, id_col=id_col, num_hashes=num_hashes, bands=bands,
-        precomputed_sig=bare,
-    )
-
-    def n_eq(a: str, b: str):
-        out = F.lit(0)
-        for i in range(num_hashes):
-            out = out + F.when(
-                F.col(f"{a}.mh_{i}") == F.col(f"{b}.mh_{i}"), 1
-            ).otherwise(0)
-        return out
-
-    pairs = (
-        cand.join(bare.alias("a"), F.col("id_a") == F.col(f"a.{id_col}"))
-        .join(bare.alias("b"), F.col("id_b") == F.col(f"b.{id_col}"))
-        .select("id_a", "id_b", n_eq("a", "b").alias("n_eq"))
-        .filter(F.col("n_eq") * F.lit(eq_den) >= F.lit(eq_num * num_hashes))
-        .select("id_a", "id_b")
-    )
-    cc = connected_components_star(pairs).select(
-        F.col("doc_id").alias("__node"), F.col("cluster_id").alias("__cl")
-    )
-    relabeled = (
-        bare.join(cc, F.col(id_col) == F.col("__node"), "left")
-        .withColumn(
-            "cluster_id", F.coalesce(F.col("__cl"), F.col(id_col))
+    def relabel(live, _tomb):
+        sigs = live["sigs"].localCheckpoint(eager=True)
+        bare = sigs.drop("cluster_id")
+        cand = minhash_lsh_pairs(
+            bare, id_col=id_col, num_hashes=num_hashes, bands=bands,
+            precomputed_sig=bare,
         )
-        .select(*sigs.columns)
+
+        def n_eq(a: str, b: str):
+            out = F.lit(0)
+            for i in range(num_hashes):
+                out = out + F.when(
+                    F.col(f"{a}.mh_{i}") == F.col(f"{b}.mh_{i}"), 1
+                ).otherwise(0)
+            return out
+
+        pairs = (
+            cand.join(bare.alias("a"), F.col("id_a") == F.col(f"a.{id_col}"))
+            .join(bare.alias("b"), F.col("id_b") == F.col(f"b.{id_col}"))
+            .select("id_a", "id_b", n_eq("a", "b").alias("n_eq"))
+            .filter(F.col("n_eq") * F.lit(eq_den) >= F.lit(eq_num * num_hashes))
+            .select("id_a", "id_b")
+        )
+        cc = connected_components_star(pairs).select(
+            F.col("doc_id").alias("__node"), F.col("cluster_id").alias("__cl")
+        )
+        relabeled = (
+            bare.join(cc, F.col(id_col) == F.col("__node"), "left")
+            .withColumn(
+                "cluster_id", F.coalesce(F.col("__cl"), F.col(id_col))
+            )
+            .select(*sigs.columns)
+        )
+        return {"sigs": relabeled}
+
+    stores.compact(
+        spark,
+        store_path,
+        {"sigs": {
+            "required": ", ".join(f"mh_{i} string" for i in range(num_hashes)),
+            "required_names": (id_col, "cluster_id"),
+        }},
+        relabel,
+        id_col=id_col,
+        bytes_per_file=bytes_per_file,
     )
-    _write_and_swap_store(relabeled, store_path, bytes_per_file, stats_frame=raw)
-    if tomb is not None:
-        _clear_tombstones(store_path)
 
 
-def delete_from_soft_store(
-    ids: DataFrame, store_path: str, id_col: str = "doc_id"
-) -> None:
-    """Logical delete from the soft-dedup store: tombstoned members
-    leave candidate lookup and cluster counts at the next
-    :func:`soft_dedup_admit` / :func:`soft_dedup_finalize`;
-    :func:`compact_soft_store` drops them physically and re-derives
-    every cluster label from the surviving signatures (its normal
-    reconcile pass), so weights converge with no special casing."""
-    append_tombstones(ids, store_path, id_col)
+# Logical delete from the soft-dedup store: tombstoned members leave
+# candidate lookup and cluster counts at the next soft_dedup_admit /
+# soft_dedup_finalize; compact_soft_store drops them physically and
+# re-derives every cluster label from the surviving signatures.
+delete_from_soft_store = stores.delete

@@ -114,13 +114,3 @@ def compact_generation(
     df = spark.read.parquet(src).repartition(n_files)
     return write_generation(df, table_path, keep_generations=keep_generations)
 
-
-def read_evolving(spark: SparkSession, *paths: str) -> DataFrame:
-    """Read parquet written under an EVOLVING schema (columns added
-    over time) as one frame: ``mergeSchema`` unions the file footers'
-    schemas, older files surface NULL for later-added columns — the
-    schema-drift posture a long-lived ingest directory needs (the
-    reference's fixed DDL sidesteps drift by dropping unknown fields;
-    a lake keeps them). Column RENAMES/type changes still need a
-    migration rewrite — mergeSchema only handles additive drift."""
-    return spark.read.option("mergeSchema", "true").parquet(*paths)

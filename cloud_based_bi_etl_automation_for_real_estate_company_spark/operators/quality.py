@@ -16,7 +16,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import read_store
+from . import stores
 
 
 def not_null(col: str) -> tuple[str, Column]:
@@ -1263,8 +1263,6 @@ def psi_admit(
     rows) per batch; no compaction needed at any realistic cadence.
     Returns one row: (n_batch, n_hist, psi, shifted).
     """
-    from ..session import hadoop_path_exists
-
     spark = batch_df.sparkSession
     width = hi - lo + 1
     nb = F.lit(n_buckets)
@@ -1287,14 +1285,12 @@ def psi_admit(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=True)
     )
-    # typed FS probe (not exception-message matching): only a missing
-    # store means bootstrap; any real read failure still raises
-    if hadoop_path_exists(spark, f"{store_path}/hist"):
-        hist = read_store(
-            spark, f"{store_path}/hist", required="bucket bigint, cnt bigint",
-            merge=False,  # scoring read; appends only ADD rows
-        )
-    else:
+    # only a missing store means bootstrap; any real read failure raises
+    hist = stores.read_live(
+        spark, store_path, "hist", required="bucket bigint, cnt bigint",
+        missing_ok=True,
+    )
+    if hist is None:
         hist = spark.createDataFrame([], "bucket bigint, cnt bigint")
     hcounts = hist.groupBy("bucket").agg(
         F.sum("cnt").cast("bigint").alias("ch")
@@ -1370,8 +1366,6 @@ def chi2_admit(
     categories) per batch. Returns one row:
     (n_batch, n_hist, df_chi2, chi2, chi2_defined, reject_95).
     """
-    from ..session import hadoop_path_exists
-
     spark = batch_df.sparkSession
     bcounts = (
         batch_df.filter(F.col(cat_col).isNotNull())
@@ -1380,14 +1374,12 @@ def chi2_admit(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=True)
     )
-    # typed FS probe (not exception-message matching) — round-11
-    # ADVICE: only a missing store means bootstrap
-    if hadoop_path_exists(spark, f"{store_path}/cats"):
-        hist = read_store(
-            spark, f"{store_path}/cats", required="c string, cnt bigint",
-            merge=False,  # scoring read; appends only ADD rows
-        )
-    else:
+    # only a missing store means bootstrap; any real read failure raises
+    hist = stores.read_live(
+        spark, store_path, "cats", required="c string, cnt bigint",
+        missing_ok=True,
+    )
+    if hist is None:
         hist = spark.createDataFrame([], "c string, cnt bigint")
     hcounts = hist.groupBy("c").agg(F.sum("cnt").cast("bigint").alias("ch"))
     cells = (
@@ -1475,7 +1467,6 @@ def _digest_scored_grid(
     batch's OWN centroid set — which the CALLER must append to
     ``{store_path}/centroids`` AFTER its score row is materialized
     (the family's score-before-append crash contract)."""
-    from ..session import hadoop_path_exists
     from .sketches import tdigest_centroids
 
     spark = batch_df.sparkSession
@@ -1483,14 +1474,11 @@ def _digest_scored_grid(
     # the batch digest appends AFTER scoring; built here so the schema
     # exists for the cold-start branch too
     sig = tdigest_centroids(clean, [], value_col, delta=delta)
-    if hadoop_path_exists(spark, f"{store_path}/centroids"):
-        hist = read_store(
-            spark,
-            f"{store_path}/centroids",
-            required="mean double, weight double",
-            merge=False,  # scoring read; appends only ADD rows
-        )
-    else:
+    hist = stores.read_live(
+        spark, store_path, "centroids", required="mean double, weight double",
+        missing_ok=True,
+    )
+    if hist is None:
         hist = spark.createDataFrame([], "mean double, weight double")
 
     counts = (
@@ -1626,9 +1614,8 @@ def ks_admit(
     upstream if cold-start admission must be manual.
 
     Returns one row: (n_batch, n_hist, ks_stat, reject_95). Compaction:
-    ``tdigest_merge`` the centroid store through
-    dedup._write_and_swap_store(subdir="centroids") in a quiet window;
-    the merged digest is a (deterministic) re-clustering, so scores
+    :func:`compact_ks_store` re-merges the centroid store in a quiet
+    window; the merged digest is a (deterministic) re-clustering, so scores
     across a compaction agree within digest accuracy, not bitwise.
     """
     scored, tot, w_tot, sig = _digest_scored_grid(
@@ -1684,21 +1671,20 @@ def compact_ks_store(
 ) -> None:
     """Store-lifecycle companion to :func:`ks_admit`: re-merge the
     appended per-batch centroid sets into one ≤2δ-row digest via
-    tdigest_merge and swap generations (shared
-    dedup._write_and_swap_store; same quiet-window contract). Total
-    weight is preserved exactly; subsequent KS scores agree within
-    digest accuracy (a merge is a deterministic re-clustering, not a
-    row-identical rewrite — the documented t-digest trade)."""
-    from .dedup import _local_store_path, _write_and_swap_store
+    tdigest_merge under the :func:`stores.compact` quiet-window
+    contract. Total weight is preserved exactly; subsequent KS scores
+    agree within digest accuracy (a merge is a deterministic
+    re-clustering, not a row-identical rewrite — the documented
+    t-digest trade)."""
     from .sketches import tdigest_merge
 
-    store_path = _local_store_path(store_path)
-    cents = read_store(
-        spark, f"{store_path}/centroids", required="mean double, weight double"
-    )
-    merged = tdigest_merge(cents, [], delta=delta)
-    _write_and_swap_store(
-        merged, store_path, bytes_per_file, subdir="centroids"
+    stores.compact(
+        spark, store_path,
+        {"centroids": {"required": "mean double, weight double"}},
+        lambda live, _: {
+            "centroids": tdigest_merge(live["centroids"], [], delta=delta)
+        },
+        bytes_per_file=bytes_per_file,
     )
 
 

@@ -27,9 +27,8 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import read_store
-
 from ..functions.vectors import as_double, cosine, dot, sign_bucket
+from . import stores
 from .cacheutil import release_checkpoint
 from .partitioning import spread
 
@@ -615,22 +614,9 @@ def load_ivf_index(spark, path: str) -> dict[str, DataFrame]:
     corpus): the lists hold full vectors partitioned by bucket, so a
     periodic rebuild IS the store's compaction — there is no separate
     rewrite path to keep tombstones alive in."""
-    import os
-
-    from ..session import read_store
-    from .dedup import read_tombstones
-
-    lists = read_store(
-        spark, os.path.join(path, "lists.parquet"), merge=False
-    )  # query read; IVF's 'compaction' is a full rebuild, no merge risk
-    tomb = read_tombstones(spark, path, _ivf_id_col(lists))
-    if tomb is not None:
-        lists = lists.join(tomb, tomb.columns[0], "left_anti")
     return {
-        "centroids": read_store(
-            spark, os.path.join(path, "centroids.parquet"), merge=False
-        ),
-        "lists": lists,
+        "centroids": stores.read_live(spark, path, "centroids.parquet"),
+        "lists": stores.read_live(spark, path, "lists.parquet", _ivf_id_col),
     }
 
 
@@ -646,13 +632,10 @@ def _ivf_id_col(lists: DataFrame) -> str:
 def ivf_delete(
     ids: DataFrame, store_path: str, id_col: str = "vec_id"
 ) -> None:
-    """Logical delete from the persisted IVF index: tombstoned ids
-    vanish from every query through :func:`load_ivf_index` at the
-    next load. Physical removal = periodic index rebuild (see
-    load_ivf_index). Append-only, replay-idempotent."""
-    from .dedup import append_tombstones
-
-    append_tombstones(ids, store_path, id_col)
+    """Logical delete from the persisted IVF index (:func:`stores.delete`):
+    tombstoned ids vanish from every query through
+    :func:`load_ivf_index`; physical removal is an index rebuild."""
+    stores.delete(ids, store_path, id_col)
 
 
 def ivf_index_append(
@@ -690,16 +673,15 @@ def ivf_index_append(
     silently)."""
     import os
 
-    from ..session import hadoop_path_exists
-
     spark = new_vectors.sparkSession
-    cpath = os.path.join(store_path, "centroids.parquet")
-    if not hadoop_path_exists(spark, cpath):
+    cents = stores.read_live(
+        spark, store_path, "centroids.parquet", missing_ok=True
+    )
+    if cents is None:
         raise FileNotFoundError(
             f"no IVF index at {store_path} — build with "
             "build_ivf_index + save_ivf_index before appending"
         )
-    cents = read_store(spark, cpath, merge=False)
     assigned = _coarse_assign(
         spread(new_vectors), cents, id_col, vec_col, "bucket", 1
     )
@@ -1551,24 +1533,18 @@ def nsw_index_append(
     nsw_build_graph + save_nsw_index). At-least-once replays
     duplicate edges — same caveat and upstream remedy as
     bm25_index_append."""
-    from ..session import hadoop_path_exists
-
     spark = new_vectors.sparkSession
-    if not hadoop_path_exists(spark, f"{store_path}/graph"):
+    graph = stores.read_live(
+        spark, store_path, "graph", required="level int, sim double",
+        required_names=("src", "dst"), missing_ok=True,
+    )
+    if graph is None:
         raise FileNotFoundError(
             f"no NSW index at {store_path} — build with "
             "nsw_build_graph + save_nsw_index before appending"
         )
-    old_vecs = read_store(
-        spark, f"{store_path}/vectors", required_names=(id_col, vec_col),
-        merge=False,  # search-then-connect read; appends only ADD rows
-    )
-    graph = read_store(
-        spark,
-        f"{store_path}/graph",
-        required="level int, sim double",
-        required_names=("src", "dst"),
-        merge=False,
+    old_vecs = stores.read_live(
+        spark, store_path, "vectors", required_names=(id_col, vec_col)
     )
     newv = new_vectors.select(
         F.col(id_col), F.col(vec_col),
@@ -1627,23 +1603,17 @@ def nsw_query_index(
     stored graph, exact-cosine scoring against the stored vectors —
     a corpus ingested one-shot or over many appends serves the same
     query API (bm25_query_store's posture for graph ANN)."""
-    from .dedup import read_tombstones
-
-    vecs = read_store(
-        spark, f"{store_path}/vectors", required_names=(id_col, vec_col),
-        merge=False,  # query read; compaction keeps mergeSchema
+    # Tombstoned vectors are read, excluded from the top-k, and still
+    # route (nsw_topk's soft-delete contract); the physical drop
+    # happens at compact_nsw_graph.
+    vecs = stores.read_live(
+        spark, store_path, "vectors", required_names=(id_col, vec_col)
     )
-    graph = read_store(
-        spark,
-        f"{store_path}/graph",
-        required="level int, sim double",
+    graph = stores.read_live(
+        spark, store_path, "graph", required="level int, sim double",
         required_names=("src", "dst"),
-        merge=False,
     )
-    # takedowns (round 15): tombstoned vectors are excluded from the
-    # top-k but still route (nsw_topk's soft-delete contract); the
-    # physical drop happens at compact_nsw_graph
-    tomb = read_tombstones(spark, store_path, id_col)
+    tomb = stores.read_tombstones(spark, store_path, id_col)
     # pin_graph=False (round 16): the store graph's lineage is already
     # a flat parquet scan — the eager checkpoint only added one full
     # graph materialization job per query call
@@ -1656,16 +1626,11 @@ def nsw_query_index(
 def nsw_delete(
     ids: DataFrame, store_path: str, id_col: str = "vec_id"
 ) -> None:
-    """Logical delete from the persisted NSW index: tombstoned ids
-    vanish from :func:`nsw_query_index` results immediately (while
-    still routing — see nsw_topk's ``exclude``); the next
-    :func:`compact_nsw_graph` drops their vectors and incident edges
-    physically and lets the NN-descent refresh re-link the
-    neighborhoods around the holes. Append-only, replay-idempotent —
-    dedup.append_tombstones' contract."""
-    from .dedup import append_tombstones
-
-    append_tombstones(ids, store_path, id_col)
+    """Logical delete from the persisted NSW index (:func:`stores.delete`):
+    tombstoned ids vanish from :func:`nsw_query_index` results at once
+    while still routing (nsw_topk's ``exclude``); the next
+    :func:`compact_nsw_graph` drops their vectors and incident edges."""
+    stores.delete(ids, store_path, id_col)
 
 
 def _select_neighbors_heuristic(
@@ -1803,9 +1768,8 @@ def compact_nsw_graph(
     """Store-lifecycle companion to :func:`nsw_index_append`: dedupe
     replayed edges and re-prune every (level, src) adjacency to its
     top-``M`` by similarity (reverse-edge appends deliberately
-    overflow the cap), then swap generations via the shared
-    dedup._write_and_swap_store. Same quiet-window contract as the
-    other stores.
+    overflow the cap), then swap generations under the
+    :func:`stores.compact` quiet-window contract.
 
     ``select`` (round 14 — the depth soak showed recall@5 dipping
     from ~1.0 to ~0.76 right after a compaction): ``"topm"`` prunes
@@ -1835,108 +1799,76 @@ def compact_nsw_graph(
     vectors and every incident edge are dropped before the prune, so
     the refresh's NN-descent re-links the neighborhoods around the
     holes; the vectors table is rewritten through the same generation
-    swap and the tombstones are cleared strictly AFTER both swaps
-    (the crash window leaves only no-op tombstones)."""
-    from .dedup import (
-        _clear_tombstones,
-        _local_store_path,
-        _write_and_swap_store,
-        read_tombstones,
-    )
-
-    store_path = _local_store_path(store_path)
-    g = read_store(
-        spark,
-        f"{store_path}/graph",
-        required="level int, sim double",
-        required_names=("src", "dst"),
-    ).dropDuplicates(
-        ["level", "src", "dst"]
-    )
-    vecs = None
-    tomb = read_tombstones(spark, store_path, id_col)
-    vecs_raw = None
-    if tomb is not None:
-        tomb = tomb.localCheckpoint(eager=True)
-        g = g.join(
-            tomb.select(F.col(id_col).alias("src")), "src", "left_anti"
-        ).join(tomb.select(F.col(id_col).alias("dst")), "dst", "left_anti")
-        vecs_raw = read_store(
-            spark, f"{store_path}/vectors", required_names=(id_col, vec_col)
-        )
-        vecs = vecs_raw.join(tomb, id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-    if select == "heuristic":
-        if vecs is None:  # the tombstone path already read+filtered them
-            vecs = read_store(
-                spark, f"{store_path}/vectors",
-                required_names=(id_col, vec_col),
+    swap."""
+    def rewrite(live, tomb):
+        g = live["graph"].dropDuplicates(["level", "src", "dst"])
+        vecs = live["vectors"]
+        if tomb is not None:
+            # the edge table is keyed by src/dst, not the id column
+            g = g.join(
+                tomb.select(F.col(id_col).alias("src")), "src", "left_anti"
+            ).join(tomb.select(F.col(id_col).alias("dst")), "dst", "left_anti")
+            vecs = vecs.localCheckpoint(eager=True)
+        if select == "heuristic":
+            pruned = _select_neighbors_heuristic(g, vecs, M, id_col, vec_col)
+        else:
+            w = Window.partitionBy("level", "src").orderBy(
+                F.desc("sim"), F.asc("dst")
             )
-        pruned = _select_neighbors_heuristic(g, vecs, M, id_col, vec_col)
-    else:
-        w = Window.partitionBy("level", "src").orderBy(
-            F.desc("sim"), F.asc("dst")
-        )
-        pruned = (
-            g.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= M)
-            .select("level", "src", "dst", "sim")
-        )
-    if refresh_iters > 0:
-        if vecs is None:  # reuse the heuristic path's read (ADVICE r14)
-            vecs = read_store(
-                spark,
-                f"{store_path}/vectors",
-                required_names=(id_col, vec_col),
+            pruned = (
+                g.withColumn("rnk", F.row_number().over(w))
+                .filter(F.col("rnk") <= M)
+                .select("level", "src", "dst", "sim")
             )
-        pruned = pruned.localCheckpoint(eager=True)
-        # bounded scalar collect: one row per populated layer.
-        # An EMPTY pruned graph (store compacted before any edge
-        # landed) has no layers — skip the refresh and write the
-        # empty frame rather than indexing parts[0] (ADVICE r14).
-        levels = [
-            r["level"]
-            for r in pruned.select("level").distinct().collect()
-        ]
-        parts = []
-        for lvl in sorted(levels):
-            e = pruned.filter(F.col("level") == lvl).select(
-                "src", "dst", "sim"
-            )
-            e = _nn_descent_rounds(
-                e, vecs, M, refresh_iters, id_col, vec_col
-            )
-            parts.append(
-                e.select(
-                    F.lit(lvl).cast("int").alias("level"),
-                    "src",
-                    "dst",
-                    "sim",
+        if refresh_iters > 0:
+            pruned = pruned.localCheckpoint(eager=True)
+            # bounded scalar collect: one row per populated layer.
+            # An EMPTY pruned graph (store compacted before any edge
+            # landed) has no layers — skip the refresh and write the
+            # empty frame rather than indexing parts[0] (ADVICE r14).
+            levels = [
+                r["level"]
+                for r in pruned.select("level").distinct().collect()
+            ]
+            parts = []
+            for lvl in sorted(levels):
+                e = pruned.filter(F.col("level") == lvl).select(
+                    "src", "dst", "sim"
                 )
-            )
-        if parts:
-            pruned = parts[0]
-            for p in parts[1:]:
-                pruned = pruned.unionByName(p)
-    # stats_frame=g is LOAD-BEARING: the refresh path localCheckpoints
-    # `pruned`, whose Long.MaxValue-ish sizeInBytes would explode the
-    # rewrite into the 100k-file guard ceiling — after which every
-    # append/query pays a 100k-file listing+scan (the round-15 depth
-    # soak measured 54 s → ~500 s per append before this fix). `g` is
-    # the pre-prune store scan: real stats, a slight overestimate.
-    _write_and_swap_store(
-        pruned, store_path, bytes_per_file, subdir="graph", stats_frame=g
+                e = _nn_descent_rounds(
+                    e, vecs, M, refresh_iters, id_col, vec_col
+                )
+                parts.append(
+                    e.select(
+                        F.lit(lvl).cast("int").alias("level"),
+                        "src",
+                        "dst",
+                        "sim",
+                    )
+                )
+            if parts:
+                pruned = parts[0]
+                for p in parts[1:]:
+                    pruned = pruned.unionByName(p)
+        out = {"graph": pruned}
+        if tomb is not None:  # physical vector drop
+            out["vectors"] = vecs
+        return out
+
+    stores.compact(
+        spark,
+        store_path,
+        {
+            "graph": {
+                "required": "level int, sim double",
+                "required_names": ("src", "dst"),
+            },
+            "vectors": {"required_names": (id_col, vec_col)},
+        },
+        rewrite,
+        id_col=id_col,
+        bytes_per_file=bytes_per_file,
     )
-    if tomb is not None:
-        # physical vector drop through the same generation swap; the
-        # tombstones clear only after BOTH tables have swapped.
-        # stats_frame: same checkpointed-stats hazard as the graph.
-        _write_and_swap_store(
-            vecs, store_path, bytes_per_file, subdir="vectors",
-            stats_frame=vecs_raw,
-        )
-        _clear_tombstones(store_path)
 
 
 def embedding_near_dup_pairs(

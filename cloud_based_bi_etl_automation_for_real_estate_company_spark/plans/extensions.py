@@ -355,7 +355,7 @@ def q_x_bm25_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_x_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver row for STORE TAKEDOWNS on the retrieval index (round
     15 — operators/corpus.bm25_delete_docs over the append-only
-    tombstone set, dedup.append_tombstones): index the FULL corpus
+    tombstone set, operators/stores.delete): index the FULL corpus
     into a per-call temp store, tombstone every doc_id % 7 == 0, then
     retrieve. The tombstone anti-join re-derives N, avgdl and
     doc_freq from the surviving postings, so the post-delete store

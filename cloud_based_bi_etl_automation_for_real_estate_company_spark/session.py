@@ -136,95 +136,6 @@ def prewarm_python_workers(spark: SparkSession, block: bool = False) -> None:
         threading.Thread(target=run, daemon=True, name="py-worker-prewarm").start()
 
 
-def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Typed existence probe for a storage path via the Hadoop
-    FileSystem API — the store-bootstrap check for the incremental
-    admission family (minhash/soft-dedup/PSI/KS stores).
-
-    Replaces substring-matching ``AnalysisException`` messages
-    (PATH_NOT_FOUND / 'Path does not exist'), which is brittle across
-    Spark versions and locales (round-11 ADVICE): a changed message
-    would raise on every cold start. The probe itself still surfaces
-    real storage failures — a permissions or connectivity error raises
-    here, and a present-but-corrupt store raises on the read that
-    follows, so 'missing store' remains the ONLY path into bootstrap.
-    Works on any Hadoop-supported filesystem (local, HDFS, S3A) — the
-    Path resolves its own FileSystem from the session's Hadoop conf.
-    """
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
-def read_store(
-    spark: SparkSession,
-    path: str,
-    required: str | None = None,
-    required_names: tuple[str, ...] = (),
-    merge: bool = True,
-):
-    """Shared GUARDED reader for the lifetime stores (round 15 — the
-    r14 verdict's task 4: ``read_monitor`` got a mergeSchema reader
-    when the monitor row widened from 8 to 10 columns, but the other
-    stores — minhash/soft sigs, paragraph hashes, BM25 postings, NSW
-    graph/vectors, PSI/chi2/KS state — were read bare, so any future
-    column widening would reproduce the silently-dropped-column
-    hazard: a bare parquet read infers the schema from ONE footer and
-    drops either the new columns or the old rows' view of them
-    depending on which file it samples).
-
-    - ``mergeSchema=true`` unions every footer, so ADDITIVE evolution
-      surfaces NULL-backfilled columns instead of losing them;
-    - ``required`` (a DDL string) pins name AND type of the columns
-      the downstream math depends on — a rename or type change raises
-      loudly here instead of corrupting scores three operators later;
-    - ``required_names`` pins presence-only for caller-typed columns
-      (id / vector columns whose types are store-specific by design).
-
-    ``merge`` (round 16 — the r15 VERDICT's read_store item, guide
-    §6): footer-merging every file on every read is a per-read cost
-    that grows with store file count (a 100k-file store pays a 100k-
-    footer listing+merge per QUERY). Merging is load-bearing only
-    where dropping a newer column would LOSE it — compaction reads,
-    which rewrite the store. Query paths pass ``merge=False``: the
-    single-footer schema still carries every pinned column (the guard
-    still raises on rename/retype/missing), the query reads only
-    pinned columns, and a mid-evolution store remains the compaction
-    reader's problem, not the query's. Results are identical either
-    way on the single-vintage stores every writer here produces.
-    """
-    from pyspark.sql.types import StructType
-
-    reader = spark.read
-    if merge:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(path)
-    have = {f.name: f.dataType for f in df.schema.fields}
-    problems: list[str] = []
-    if required:
-        for f in StructType.fromDDL(required).fields:
-            if f.name not in have:
-                problems.append(
-                    f"missing column {f.name} {f.dataType.simpleString()}"
-                )
-            elif have[f.name] != f.dataType:
-                problems.append(
-                    f"column {f.name}: expected {f.dataType.simpleString()},"
-                    f" store has {have[f.name].simpleString()}"
-                )
-    for n in required_names:
-        if n not in have:
-            problems.append(f"missing column {n}")
-    if problems:
-        raise ValueError(
-            f"store schema violation at {path}: "
-            + "; ".join(problems)
-            + f" (observed: {df.schema.simpleString()})"
-        )
-    return df
-
-
 def read_events(spark: SparkSession, path: str):
     """Read an events fixture, normalizing ``ts`` to TimestampType.
 

@@ -56,21 +56,6 @@ def materialize_gold(
     return out
 
 
-def compact(
-    spark: SparkSession, in_path: str, out_path: str, target_files: int
-) -> DataFrame:
-    """Small-files compaction — the operational counterpart of a
-    micro-batch sink: thousands of per-batch files kill scan planning
-    and NameNode/listing at scale. Rewrites the dataset into
-    ``target_files`` outputs via coalesce (no shuffle: partitions are
-    merged, not redistributed). Writes to a NEW directory; callers swap
-    directories atomically (rename) so concurrent readers never see a
-    half-compacted table."""
-    df = spark.read.parquet(in_path)
-    df.coalesce(target_files).write.mode("overwrite").parquet(out_path)
-    return spark.read.parquet(out_path)
-
-
 def write_jdbc(
     df: DataFrame, url: str, table: str, mode: str = "append", **options: str
 ) -> None:

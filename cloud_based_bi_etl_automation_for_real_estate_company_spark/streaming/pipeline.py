@@ -838,12 +838,12 @@ def read_monitor(spark: SparkSession, store_path: str) -> DataFrame:
     columns or the old rows' view of them depending on which file it
     samples. Old rows surface NULL in the W1 columns, which is also
     their correct meaning (the scorer wasn't armed when they were
-    written). Round 15: routed through the shared guarded reader
-    (session.read_store) with the 8 round-12-era columns pinned
-    name+type — the family-wide close of the same hazard."""
+    written). Read through the shared guarded reader
+    (operators.stores.read_store) with the 8 round-12-era columns
+    pinned name+type — the family-wide close of the same hazard."""
     import os
 
-    from ..session import read_store
+    from ..operators.stores import read_store
 
     return read_store(
         spark,

@@ -1,10 +1,10 @@
-"""Machine-check for the driver-gate staleness rotation (round 11 —
-VERDICT r10 item 2): the 50-name gate front in ``__spark_entry__`` is
-hand-staged each round, and its invariant — after the round runs, no
-registered catalog name's newest driver row is older than the
-previously-oldest tier — was only ever verified by eye. This script
-derives the staleness tiers from the recorded ``CORRECTNESS_r*.json``
-artifacts and asserts the staged front:
+"""Machine-check for the correctness-gate staleness rotation: the 50-name
+gate front of ``__spark_entry__.queries()`` must keep the invariant
+that, after the round runs, no registered catalog name's newest gate
+row is older than the previously-oldest tier. ``queries()`` derives
+its order from the recorded ``CORRECTNESS_r*.json`` artifacts
+(``gate.staleness_order``); this script re-derives the staleness tiers
+from the same artifacts and asserts the front:
 
   1. contains every REGISTERED catalog name that has never appeared in
      any driver correctness file (a new query that misses its debut
@@ -25,23 +25,14 @@ Usage: python scripts/check_rotation.py [repo_root]
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.gate import load_latest
+
 GATE_N = 50
-
-
-def load_latest(root: str) -> dict[str, int]:
-    """Newest driver-correctness round per catalog name, unioned over
-    every CORRECTNESS_r*.json in ``root``."""
-    latest: dict[str, int] = {}
-    for fp in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(fp).split("_r")[1].split(".")[0])
-        for name in json.load(open(fp)):
-            latest[name] = max(latest.get(name, 0), rnd)
-    return latest
 
 
 def check_front(

@@ -1,4 +1,4 @@
-"""Full-catalog plan audit (optimization round 15): build every
+"""Full-catalog plan audit: build every
 declared query's DataFrame and scan its formatted physical plan for
 anti-patterns:
 
@@ -12,7 +12,7 @@ anti-patterns:
 Emits one TSV row per query: name, exchanges, python_nodes,
 cartesian, nested_loop, smj, bhj, shj, scans, build_s.
 
-Usage: python scripts/plan_audit_r15.py [sf_dir] [out_tsv]
+Usage: python scripts/plan_audit.py [sf_dir] [out_tsv]
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ import __spark_entry__ as entrymod
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    out_fp = sys.argv[2] if len(sys.argv) > 2 else "/tmp/plan_audit_r15.tsv"
+    out_fp = sys.argv[2] if len(sys.argv) > 2 else "/tmp/plan_audit.tsv"
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
@@ -51,7 +51,14 @@ def main() -> None:
         el = round(time.time() - t0, 2)
         # count only numbered physical operators, not prose mentions
         ops = re.findall(r"^\s*[*]?\(?\d*\)?\s*([A-Za-z]+[A-Za-z0-9]*)", plan, re.M)
-        n_ex = len(re.findall(r"^\s*\S*\s*Exchange\b", plan, re.M))
+        # anchor on the numbered operator header of the formatted
+        # details section ("(12) Exchange"), which appears exactly once
+        # per physical operator; an unanchored pattern would also count
+        # ReusedExchange nodes as shuffles, so reuse is reported apart
+        n_ex = len(re.findall(r"^\(\d+\)\s+Exchange\b", plan, re.M))
+        n_reuse = len(
+            re.findall(r"^\(\d+\)\s+ReusedExchange\b", plan, re.M)
+        )
         n_py = sum(
             plan.count(t)
             for t in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
@@ -66,6 +73,7 @@ def main() -> None:
             smj=plan.count("SortMergeJoin"),
             bhj=plan.count("BroadcastHashJoin"),
             shj=plan.count("ShuffledHashJoin"),
+            reused=n_reuse,
             scans=plan.count("Scan parquet"),
             build_s=el,
             err=err,

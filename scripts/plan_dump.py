@@ -1,8 +1,9 @@
 """Dump `explain('formatted')` for the bench headline queries (and
-any extra names given) into plans/r15/<name>_<tag>.txt — the
-before/after plan evidence for the optimization round.
+any extra names given) into plans/<subdir>/<name>_<tag>.txt — the
+before/after plan evidence for an optimization change.
 
-Usage: python scripts/plan_dump_r15.py <tag> [name ...]
+Usage: python scripts/plan_dump.py <subdir> <tag> [name ...]
+  subdir: output directory under plans/ (e.g. r16)
   tag: 'before' or 'after'
   names: default = bench HEADLINE set
 """
@@ -20,9 +21,12 @@ from bench import HEADLINE, stage_fixtures
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or list(HEADLINE)
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15")
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    subdir = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or list(HEADLINE)
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", subdir)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")

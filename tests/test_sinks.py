@@ -61,22 +61,6 @@ def test_materialize_gold_leaves_session_overwrite_mode(spark, tmp_path):
     assert spark.conf.get(key) == before
 
 
-def test_compact_small_files(spark, tmp_path):
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.sinks import (
-        compact,
-    )
-    import glob
-
-    src = str(tmp_path / "many")
-    spark.range(10000).repartition(32).write.parquet(src)
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 32
-
-    out = str(tmp_path / "few")
-    compacted = compact(spark, src, out, target_files=2)
-    assert len(glob.glob(f"{out}/part-*.parquet")) == 2
-    assert compacted.count() == 10000
-
-
 def test_generation_atomic_swap(spark, tmp_path):
     import os
 
@@ -135,24 +119,6 @@ def test_compact_generation_reduces_files_preserves_rows(spark, tmp_path):
     got = read_current(spark, table)
     assert got.count() == 20000
     assert got.selectExpr("sum(id)").first()[0] == sum(range(20000))
-
-
-def test_read_evolving_schema_merges_additive_columns(spark, tmp_path):
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.generations import (
-        read_evolving,
-    )
-
-    p = str(tmp_path / "drift")
-    spark.createDataFrame([(1, "a")], "id bigint, name string").write.parquet(
-        p + "/batch1"
-    )
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id bigint, name string, score double"
-    ).write.parquet(p + "/batch2")
-    got = read_evolving(spark, p + "/batch1", p + "/batch2")
-    assert set(got.columns) == {"id", "name", "score"}
-    rows = {r["id"]: r for r in got.collect()}
-    assert rows[1]["score"] is None and rows[2]["score"] == 9.5
 
 
 def test_corrupt_parquet_file_tolerance(spark, tmp_path):

@@ -6,7 +6,7 @@ monitor row widened from 8 to 10 columns; every OTHER lifetime store
 graph/vectors, PSI hist / chi2 cats / KS-W1 centroids, IVF lists) was
 still read bare — one old-footer sample and a later-added column
 silently vanishes, or worse, a compaction rewrite destroys it
-permanently. ``session.read_store`` closes the hazard family-wide:
+permanently. ``stores.read_store`` closes the hazard family-wide:
 mergeSchema unions every footer (additive evolution surfaces
 NULL-backfilled columns), ``required`` pins name+type of the columns
 the math depends on, ``required_names`` pins presence of caller-typed
@@ -24,7 +24,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cloud_based_bi_etl_automation_for_real_estate_company_spark.session import (
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.stores import (
     read_store,
 )
 

@@ -1,5 +1,5 @@
 """Round 15 — store takedown family (tombstones over the append-only
-lifetime stores: dedup.append_tombstones / read_tombstones +
+lifetime stores: stores.delete / stores.read_tombstones +
 bm25_delete_docs, delete_from_minhash_store, nsw_delete).
 
 The append-only stores had no delete path: a takedown
@@ -100,6 +100,41 @@ def test_bm25_delete_matches_reduced_one_shot(spark, tmp_path):
     left = spark.read.parquet(f"{full}/postings")
     assert left.filter(F.col("doc_id") % 7 == 0).count() == 0
     assert _rows(bm25_query_store(spark, full, q, k=5)) == want
+
+
+def test_tombstone_broadcast_keys_on_size(spark, tmp_path, monkeypatch):
+    """The tombstone set is broadcast into every anti-join while its
+    on-disk size is under the module constant; above it the frame is
+    unhinted, and the answer is the same either way."""
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import (
+        stores,
+    )
+
+    d = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 60)
+        .localCheckpoint(eager=True)
+    )
+    store = str(tmp_path / "s")
+    bm25_index_append(d, store)
+    bm25_delete_docs(d.filter(F.col("doc_id") % 7 == 0).select("doc_id"), store)
+    q = corpus_bigram_queries(d.filter(F.col("doc_id") % 7 != 0))
+
+    def anti_joins(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return [l for l in plan.splitlines() if "Join LeftAnti" in l]
+
+    hinted = bm25_query_store(spark, store, q, k=5)
+    assert anti_joins(hinted)
+    assert all("rightHint=(strategy=broadcast)" in l for l in anti_joins(hinted))
+    want = _rows(hinted)
+
+    monkeypatch.setattr(stores, "TOMBSTONE_BROADCAST_MAX_BYTES", 1)
+    plain = bm25_query_store(spark, store, q, k=5)
+    assert anti_joins(plain)
+    assert not any("strategy=broadcast" in l for l in anti_joins(plain))
+    assert _rows(plain) == want and len(want) > 0
 
 
 def test_minhash_delete_readmits_fresh_copy(spark, tmp_path):
