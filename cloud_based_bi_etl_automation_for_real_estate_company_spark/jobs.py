@@ -185,8 +185,9 @@ def run_curation_pipeline(
     """
     from pyspark.sql import functions as F
 
-    from .operators.cacheutil import release_cached
+    from .operators.cacheutil import Frames
     from .operators.dedup import (
+        connected_components_star,
         exact_dedup,
         minhash_estimate_pairs,
     )
@@ -291,153 +292,118 @@ def run_curation_pipeline(
         )
     canon = exact_dedup(gated).select(F.col("keep_id").alias("doc_id"))
     uniq = gated.join(canon, "doc_id", "left_semi")
-    # lsh_max_bucket (round 12): the defensive band-bucket bound for
-    # unattended runs over degenerate corpora — the curation soak's
-    # shared-shingle-pool staging drove the candidate set to 9.1e7
-    # pairs from 1.2e5 docs (one bucket = b^2/2 pairs). Docs in a
-    # skipped mega-bucket still pair through their other bands;
+    # lsh_max_bucket: the defensive band-bucket bound for unattended
+    # runs over degenerate corpora (one bucket = b^2/2 pairs; docs in a
+    # skipped mega-bucket still pair through their other bands);
     # default None keeps exact recall.
-    near = minhash_estimate_pairs(
-        uniq, threshold=0.5, max_bucket=lsh_max_bucket
-    )
-    near_pairs = near.select("id_a", "id_b")
-    # Both dedup modes cluster with star contraction (round 10): a
-    # drifting-text CHAIN longer than min-label's propagation bound
-    # would silently under-merge — ship duplicates into the training
-    # set — which round 9 guarded with require_convergence's loud
-    # raise; star converges on any diameter, so the failure mode is
-    # gone rather than detected.
-    components = None
-    if soft_dedup:
-        from .operators.dedup import connected_components_star
-
-        # KEEP near-dups (soft dedup): no pruning here — the cluster
-        # components are computed once (star CC always converges, so
-        # no require_convergence knob) and reused below both as the
-        # leakage-safe split key and as the 1/|cluster| weight key.
-        # Weights are assigned at the END, over the documents that
-        # actually survive decontamination + sampling, so per-cluster
-        # probability mass in the DELIVERED corpus sums to exactly 1.
-        components = connected_components_star(near_pairs).select(
+    # One scope owns every frame the pipeline materializes: freed after
+    # the final write, or on the error path.
+    with Frames() as frames:
+        near = frames.own(minhash_estimate_pairs(
+            uniq, threshold=0.5, max_bucket=lsh_max_bucket
+        ))
+        near_pairs = near.select("id_a", "id_b")
+        # Both dedup modes cluster with star contraction: it converges
+        # on any chain diameter, where min-label propagation would
+        # silently under-merge a drifting-text CHAIN (shipping
+        # duplicates into the training set).
+        components = frames.own(connected_components_star(near_pairs)).select(
             "doc_id", "cluster_id"
         )
-        pruned = uniq
-    else:
-        from .operators.dedup import connected_components_star as _star
-
-        # round 10: star contraction replaces the strict min-label
-        # loop — it converges on ANY chain diameter (the failure mode
-        # require_convergence existed to catch) and the size-gated
-        # local finish makes the post-LSH graph cheap. Same output
-        # contract (cluster_id = component min), so losers are
-        # identical rows.
-        losers = (
-            _star(near_pairs)
-            .filter(F.col("doc_id") != F.col("cluster_id"))
-            .select("doc_id")
+        if soft_dedup:
+            # KEEP near-dups (soft dedup): no pruning here — the
+            # components are reused below both as the leakage-safe split
+            # key and as the 1/|cluster| weight key. Weights are
+            # assigned at the END, over the documents that actually
+            # survive decontamination + sampling, so per-cluster
+            # probability mass in the DELIVERED corpus sums to exactly 1.
+            pruned = uniq
+        else:
+            losers = components.filter(
+                F.col("doc_id") != F.col("cluster_id")
+            ).select("doc_id")
+            pruned = uniq.join(losers, "doc_id", "left_anti")
+        # pseudo eval split: the held-out benchmark the training set must
+        # not leak (same doc_id % 50 convention as x_decontaminate)
+        eval_docs = d.filter(F.col("doc_id") % 50 == 0)
+        # 8-gram overlap, not 3-gram: long shingles keep the false-positive
+        # rate of common phrases near zero (the usual 8–13-gram practice)
+        pruned = decontaminate(
+            pruned.filter(F.col("doc_id") % 50 != 0), eval_docs, k=8
         )
-        pruned = uniq.join(losers, "doc_id", "left_anti")
-    # pseudo eval split: the held-out benchmark the training set must
-    # not leak (same doc_id % 50 convention as x_decontaminate)
-    eval_docs = d.filter(F.col("doc_id") % 50 == 0)
-    # 8-gram overlap, not 3-gram: long shingles keep the false-positive
-    # rate of common phrases near zero (the usual 8–13-gram practice)
-    pruned = decontaminate(
-        pruned.filter(F.col("doc_id") % 50 != 0), eval_docs, k=8
-    )
-    if domain_cap_per_source is not None:
-        from .operators.quality import domain_cap
+        if domain_cap_per_source is not None:
+            from .operators.quality import domain_cap
 
-        pruned = domain_cap(
-            pruned.withColumn("__len", F.length("text")),
-            domain_cap_per_source,
-            order_by=[F.col("__len").desc(), F.col("doc_id").asc()],
-        ).drop("__len", "rk")
-    pruned = pruned.withColumn("text", redact_pii(F.col("text")))
-    if mixture_alpha is not None:
-        from .operators.corpus import mixture_apply, source_mixture
+            pruned = domain_cap(
+                pruned.withColumn("__len", F.length("text")),
+                domain_cap_per_source,
+                order_by=[F.col("__len").desc(), F.col("doc_id").asc()],
+            ).drop("__len", "rk")
+        pruned = pruned.withColumn("text", redact_pii(F.col("text")))
+        if mixture_alpha is not None:
+            from .operators.corpus import mixture_apply, source_mixture
 
-        audit_path = out_path + "__mixture_audit"
-        source_mixture(pruned, alpha=mixture_alpha).write.mode(
-            "overwrite"
-        ).parquet(audit_path)
-        pruned = mixture_apply(pruned, spark.read.parquet(audit_path))
-    sampled = stratified_sample(
-        pruned, "lang", {"en": 100, "zh": 50}, default_rate=50
-    )
-    if soft_dedup:
-        from pyspark import StorageLevel
-
-        from .operators.corpus import cluster_split
-
-        # near-dups were RETAINED above — a per-doc modulus would put
-        # two near-identical documents on opposite sides of the
-        # train/test boundary. Split by the near-dup CLUSTER instead
-        # (corpus.cluster_split), reusing the components star CC
-        # already produced, then weight each doc 1/|cluster ∩ final
-        # corpus|. The labeled frame is referenced twice (size agg +
-        # join-back), so pin it once — unpersisted with the signature
-        # cache below.
-        labeled = cluster_split(sampled, near_pairs, cc=components)
-        labeled = labeled.persist(StorageLevel.MEMORY_AND_DISK)
-        sizes = labeled.groupBy("cluster_id").agg(
-            F.count(F.lit(1)).alias("__n_dups")
+            audit_path = out_path + "__mixture_audit"
+            source_mixture(pruned, alpha=mixture_alpha).write.mode(
+                "overwrite"
+            ).parquet(audit_path)
+            pruned = mixture_apply(pruned, spark.read.parquet(audit_path))
+        sampled = stratified_sample(
+            pruned, "lang", {"en": 100, "zh": 50}, default_rate=50
         )
-        curated = (
-            labeled.join(sizes, "cluster_id")
-            .withColumn("weight", F.round(F.lit(1.0) / F.col("__n_dups"), 9))
-            .drop("__n_dups")
-        )
-    else:
-        # losers were dropped at the near-dup stage, so no surviving
-        # pair of near-identical docs exists to straddle the boundary
-        # and the cheap per-doc modulus is leakage-safe here
-        bucket = F.pmod(F.col("doc_id"), F.lit(100))
-        curated = sampled.withColumn(
-            "split",
-            F.when(bucket < 80, F.lit("train"))
-            .when(bucket < 90, F.lit("val"))
-            .otherwise(F.lit("test")),
-        )
-    if sort_output_by is not None:
-        from .operators.ranking import sorted_write
+        if soft_dedup:
+            from .operators.corpus import cluster_split
 
-        # sorted_write runs ~2 actions per split (cuts aggregate +
-        # write); without a pin the whole curation lineage — exact
-        # dedup, connected components, decontamination — recomputes
-        # each time (only the MinHash signature cache is persisted).
-        # persist + eager count pins it once; unlike localCheckpoint
-        # (whose RDD blocks DataFrame.unpersist cannot release), the
-        # finally-block unpersist below actually frees the storage.
-        from pyspark import StorageLevel
+            # near-dups were RETAINED above — a per-doc modulus would put
+            # two near-identical documents on opposite sides of the
+            # train/test boundary. Split by the near-dup CLUSTER instead
+            # (corpus.cluster_split), reusing the components star CC
+            # already produced, then weight each doc 1/|cluster ∩ final
+            # corpus|. The labeled frame is referenced twice (size agg +
+            # join-back), so pin it once.
+            labeled = frames.pin(
+                cluster_split(sampled, near_pairs, cc=components), eager=False
+            )
+            sizes = labeled.groupBy("cluster_id").agg(
+                F.count(F.lit(1)).alias("__n_dups")
+            )
+            curated = (
+                labeled.join(sizes, "cluster_id")
+                .withColumn("weight", F.round(F.lit(1.0) / F.col("__n_dups"), 9))
+                .drop("__n_dups")
+            )
+        else:
+            # losers were dropped at the near-dup stage, so no surviving
+            # pair of near-identical docs exists to straddle the boundary
+            # and the cheap per-doc modulus is leakage-safe here
+            bucket = F.pmod(F.col("doc_id"), F.lit(100))
+            curated = sampled.withColumn(
+                "split",
+                F.when(bucket < 80, F.lit("train"))
+                .when(bucket < 90, F.lit("val"))
+                .otherwise(F.lit("test")),
+            )
+        if sort_output_by is not None:
+            from .operators.ranking import sorted_write
 
-        curated = curated.persist(StorageLevel.MEMORY_AND_DISK)
-        curated.count()
-        try:
+            # sorted_write runs ~2 actions per split (cuts aggregate +
+            # write); without a pin the whole curation lineage — exact
+            # dedup, connected components, decontamination — recomputes
+            # each time (only the MinHash signatures are pinned). One eager
+            # pin materializes it once.
+            curated = frames.pin(curated, eager=True)
             for split in ("train", "val", "test"):
-                part = curated.filter(F.col("split") == split).drop(
-                    "split"
-                )
+                part = curated.filter(F.col("split") == split).drop("split")
                 sorted_write(
                     part,
                     sort_output_by,
                     os.path.join(out_path, f"split={split}"),
-                    tiebreaks=(
-                        ["doc_id"] if sort_output_by != "doc_id" else ()
-                    ),
+                    tiebreaks=(["doc_id"] if sort_output_by != "doc_id" else ()),
                 )
-        finally:
-            curated.unpersist()
-    else:
-        curated.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("split").parquet(out_path)
-    # the write above is the last action over the near-dup candidates;
-    # release the MinHash signature cache they pinned (and the soft-
-    # dedup path's pinned labeled frame)
-    release_cached(near)
-    if soft_dedup:
-        labeled.unpersist()
+        else:
+            curated.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("split").parquet(out_path)
     return spark.read.parquet(out_path)
 
 

@@ -1,57 +1,94 @@
-"""Cache-lifetime bookkeeping for operators that persist an
-intermediate table (MinHash signatures, distinct shingle sets).
+"""The one owner of materialized-frame lifetimes.
 
-A returned DataFrame's plan references the persisted intermediate
-lazily, so the operator cannot unpersist before the caller's action —
-and in a long-lived session (the 8×/day job cadence this repo
-targets) leaked caches accumulate until executor storage evicts
-them. Operators therefore attach their cached dependencies to the
-result (``cached_deps``) and callers release them after their final
-action with :func:`release_cached`.
+A checkpoint nobody frees holds executor storage until JVM GC happens
+to run, so every managed materialization goes through a :class:`Frames`
+scope, which frees what it still holds on exit (error path too):
+
+- ``frames.pin(df, eager=...)`` is ``df.localCheckpoint(eager=...)``;
+- ``frames.pin(df, eager=True, replaces=(old, ...))`` is the loop-round
+  step: the new frame materializes first, then ``old`` is freed;
+- ``frames.attach(result, *frames)`` hands frames a returned lazy
+  ``result`` still reads to the caller, who frees them with
+  :func:`release` (``result``) after the last action over it;
+- ``frames.own(result)`` takes them over into this scope instead.
+
+A checkpoint that is itself the returned lineage cut, with no owner to
+end it, stays a direct ``localCheckpoint(eager=...)`` call.
 """
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame
 
-
-def attach_cached(df: DataFrame, *deps: DataFrame) -> DataFrame:
-    """Record ``deps`` (persisted DataFrames the plan of ``df`` reads)
-    on the result so the caller can release them."""
-    existing = list(getattr(df, "cached_deps", []))
-    df.cached_deps = existing + list(deps)
-    return df
+# result frame -> RDDs holding the blocks of the frames it still reads
+_ATTACHED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def release_cached(df: DataFrame, blocking: bool = False) -> None:
-    """Unpersist every cached dependency attached by the operator that
-    produced ``df``. Call after the last action over ``df`` (or any
-    frame derived from it before the cache was needed again)."""
-    for dep in getattr(df, "cached_deps", []):
-        dep.unpersist(blocking=blocking)
-    df.cached_deps = []
+def _blocks(df: DataFrame):
+    """A checkpoint's analyzed plan is a ``LogicalRDD`` over the RDD
+    holding its blocks."""
+    return df._jdf.queryExecution().analyzed().rdd()
 
 
-def release_checkpoint(df: DataFrame | None) -> None:
-    """Free the block-manager storage behind a ``localCheckpoint``'d
-    DataFrame (round 16 — the r15 ADVICE leak flag on the iterative
-    loops: every peel/contraction/hop round checkpoints a new frame
-    and the previous round's blocks sat pinned until JVM GC got around
-    to them, so a deep loop's storage grows linearly with rounds).
+def _free(rdds) -> None:
+    for rdd in rdds:
+        rdd.unpersist(False)
 
-    A checkpointed frame's analyzed plan is a ``LogicalRDD`` holding
-    the cached RDD; unpersisting that RDD drops its blocks NOW instead
-    of at some future ContextCleaner pass. The lineage was truncated
-    at checkpoint time, so the data is unrecoverable afterwards — call
-    this ONLY on a frame no live plan will scan again (the loop
-    contract: round N's frames are dead once round N+1's checkpoint
-    has materialized). Non-checkpointed frames and API drift degrade
-    to the old leak-until-GC behavior, never to an error."""
-    if df is None:
-        return
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
+
+def release(result: DataFrame | None) -> None:
+    """Free the frames attached to ``result``; a no-op on None and on
+    frames with nothing attached."""
+    if result is not None:
+        _free(_ATTACHED.pop(result, ()))
+
+
+class Frames:
+    """A scope owning the frames pinned through it (module docstring)."""
+
+    def __init__(self) -> None:
+        self._held: list[tuple[DataFrame | None, object]] = []
+
+    def __enter__(self) -> Frames:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        held, self._held = self._held, []
+        _free(rdd for _, rdd in held)
+
+    def pin(self, df: DataFrame, *, eager: bool, replaces=()) -> DataFrame:
+        """Checkpoint ``df``, then free the held frames in ``replaces``
+        (others, and None, are left alone; needs ``eager=True``)."""
+        if replaces and not eager:
+            raise ValueError("replaces= needs eager=True: a lazy pin has "
+                             "not materialized when the old frames go")
+        out = df.localCheckpoint(eager=eager)
+        keep, dead = [], []
+        for f, rdd in self._held:
+            if f is not None and any(f is r for r in replaces):
+                dead.append(rdd)
+            else:
+                keep.append((f, rdd))
+        self._held = keep + [(out, _blocks(out))]
+        _free(dead)
+        return out
+
+    def attach(self, result: DataFrame, *frames: DataFrame | None) -> DataFrame:
+        """Hand held ``frames`` (default: ``result`` itself; None is
+        skipped) to ``result`` until :func:`release` (``result``)."""
+        handed = []
+        for fr in frames or (result,):
+            if fr is None or any(fr is f for f, _ in handed):
+                continue
+            i = next((i for i, (f, _) in enumerate(self._held) if f is fr), None)
+            if i is None:
+                raise ValueError("attach: frame is not held by this scope")
+            handed.append(self._held.pop(i))
+        _ATTACHED.setdefault(result, []).extend(rdd for _, rdd in handed)
+        return result
+
+    def own(self, result: DataFrame) -> DataFrame:
+        """Take over the frames attached to ``result``."""
+        self._held.extend((None, rdd) for rdd in _ATTACHED.pop(result, ()))
+        return result

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
 from . import stores
+from .cacheutil import Frames
 
 
 def tfidf_by_group(
@@ -399,48 +400,43 @@ def source_overlap(
     Zero-overlap pairs are absent by construction (inner join).
 
     The distinct (group, shingle) set feeds three consumers (both
-    self-join sides and the size aggregate), so it is persisted —
-    one shingle explosion over the text instead of three. The cache is
-    attached to the result as ``cached_deps``; long-lived sessions
-    release it after the final action via
-    ``operators.cacheutil.release_cached(result)``.
+    self-join sides and the size aggregate), so it is pinned — one
+    shingle explosion over the text instead of three. The pin is
+    attached to the result; long-lived sessions free it after the
+    final action via ``operators.cacheutil.release(result)``.
     """
-    from pyspark import StorageLevel
-
-    from .cacheutil import attach_cached
-
-    sh = (
-        df.select(
-            F.col(group_col).alias("g"),
-            F.explode(F.array_distinct(shingles(text_col, shingle_k))).alias("sh"),
+    with Frames() as frames:
+        sh = frames.pin(
+            df.select(
+                F.col(group_col).alias("g"),
+                F.explode(F.array_distinct(shingles(text_col, shingle_k))).alias("sh"),
+            ).distinct(),
+            eager=False,
         )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sizes = sh.groupBy("g").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), "sh")
-        .filter(F.col("a.g") < F.col("b.g"))
-        .groupBy(F.col("a.g").alias("source_a"), F.col("b.g").alias("source_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return attach_cached(
-        inter.join(F.broadcast(sizes).withColumnRenamed("g", "source_a"), "source_a")
-        .withColumnRenamed("n_sh", "n_a")
-        .join(F.broadcast(sizes).withColumnRenamed("g", "source_b"), "source_b")
-        .withColumnRenamed("n_sh", "n_b")
-        .select(
-            "source_a",
-            "source_b",
-            "n_common",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-        ),
-        sh,
-    )
+        sizes = sh.groupBy("g").agg(F.count(F.lit(1)).alias("n_sh"))
+        inter = (
+            sh.alias("a")
+            .join(sh.alias("b"), "sh")
+            .filter(F.col("a.g") < F.col("b.g"))
+            .groupBy(F.col("a.g").alias("source_a"), F.col("b.g").alias("source_b"))
+            .agg(F.count(F.lit(1)).alias("n_common"))
+        )
+        return frames.attach(
+            inter.join(F.broadcast(sizes).withColumnRenamed("g", "source_a"), "source_a")
+            .withColumnRenamed("n_sh", "n_a")
+            .join(F.broadcast(sizes).withColumnRenamed("g", "source_b"), "source_b")
+            .withColumnRenamed("n_sh", "n_b")
+            .select(
+                "source_a",
+                "source_b",
+                "n_common",
+                (
+                    F.col("n_common").cast("double")
+                    / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+                ).alias("jaccard"),
+            ),
+            sh,
+        )
 
 
 def token_spectrum(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -886,8 +882,9 @@ def bpe_train(
     counts, every merge iteration then runs over the vocabulary).
     Per ROUND (not per merge): one weighted pair-count aggregation,
     one ``batch``-row top-k collect, and a map-side regexp rewrite
-    chain applying every merge the round accepted; localCheckpoint
-    keeps lineage flat across rounds. Ties break on (count desc,
+    chain applying every merge the round accepted; each round's
+    working set replaces the last (one ``cacheutil.Frames`` scope),
+    keeping lineage flat and one round's blocks held. Ties break on (count desc,
     pair asc) so the learned merge list is deterministic.
 
     Batching is EXACT, not approximate: a round accepts the sorted
@@ -929,65 +926,67 @@ def _bpe_train_rounds(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    cur = words.select(
-        "freq", F.concat_ws(" ", F.split(F.col("w"), "")).alias("s")
-    ).localCheckpoint()
-    merges: list[tuple[int, str, str, int]] = []
-    rounds = 0
-    while len(merges) < num_merges:
-        rounds += 1
-        pair_counts = (
-            cur.select(
-                "freq", F.explode(shingles(F.col("s"), 2)).alias("pair")
+    with Frames() as frames:
+        cur = frames.pin(
+            words.select("freq", F.concat_ws(" ", F.split(F.col("w"), "")).alias("s")),
+            eager=True,
+        )
+        merges: list[tuple[int, str, str, int]] = []
+        rounds = 0
+        while len(merges) < num_merges:
+            rounds += 1
+            pair_counts = (
+                cur.select(
+                    "freq", F.explode(shingles(F.col("s"), 2)).alias("pair")
+                )
+                .groupBy("pair")
+                .agg(F.sum("freq").alias("n"))
             )
-            .groupBy("pair")
-            .agg(F.sum("freq").alias("n"))
-        )
-        top = (
-            pair_counts.orderBy(F.desc("n"), F.asc("pair"))
-            .limit(batch)
-            .collect()
-        )
-        if not top or top[0]["n"] < min_count:
-            break
-        # greedy non-interacting prefix: symbols seen in accepted
-        # pairs plus their merged outputs (a later pair touching a
-        # merged STRING could gain count mid-batch — exclude it)
-        seen: set[str] = set()
-        accepted: list[tuple[str, int]] = []
-        bound = None  # count of the first interacting pair
-        hit_min = False
-        for r in top:
-            a, b = r["pair"].split(" ")
-            if int(r["n"]) < min_count:
-                hit_min = True
+            top = (
+                pair_counts.orderBy(F.desc("n"), F.asc("pair"))
+                .limit(batch)
+                .collect()
+            )
+            if not top or top[0]["n"] < min_count:
                 break
-            if a in seen or b in seen:
-                bound = int(r["n"])
-                break
-            accepted.append((r["pair"], int(r["n"])))
-            seen.update((a, b, a + b))
-        # everything not collected is bounded by the smallest
-        # collected count; fold it into the dominance bound
-        if len(top) == batch and not hit_min and bound is None:
-            bound = int(top[-1]["n"])
-        if bound is not None:
-            safe = [p for p in accepted if p[1] > bound]
-            # the global top-1 is the exact argmax unconditionally
-            accepted = safe if safe else accepted[:1]
-        accepted = accepted[: num_merges - len(merges)]
-        col = F.col("s")
-        for pair, n in accepted:
-            a, b = pair.split(" ")
-            pat = f"(^|(?<= )){_re.escape(a)} {_re.escape(b)}($|(?= ))"
-            # replacement escaping: backslash first, then $ (group refs)
-            repl = (a + b).replace("\\", "\\\\").replace("$", "\\$")
-            col = F.regexp_replace(col, pat, repl)
-            merges.append((len(merges) + 1, pair, a + b, n))
-        cur = cur.withColumn("s", col).localCheckpoint()
-        # no explicit early-stop on hit_min: merges can CREATE pairs
-        # above min_count, so the next round's aggregation decides
-    return merges, rounds
+            # greedy non-interacting prefix: symbols seen in accepted
+            # pairs plus their merged outputs (a later pair touching a
+            # merged STRING could gain count mid-batch — exclude it)
+            seen: set[str] = set()
+            accepted: list[tuple[str, int]] = []
+            bound = None  # count of the first interacting pair
+            hit_min = False
+            for r in top:
+                a, b = r["pair"].split(" ")
+                if int(r["n"]) < min_count:
+                    hit_min = True
+                    break
+                if a in seen or b in seen:
+                    bound = int(r["n"])
+                    break
+                accepted.append((r["pair"], int(r["n"])))
+                seen.update((a, b, a + b))
+            # everything not collected is bounded by the smallest
+            # collected count; fold it into the dominance bound
+            if len(top) == batch and not hit_min and bound is None:
+                bound = int(top[-1]["n"])
+            if bound is not None:
+                safe = [p for p in accepted if p[1] > bound]
+                # the global top-1 is the exact argmax unconditionally
+                accepted = safe if safe else accepted[:1]
+            accepted = accepted[: num_merges - len(merges)]
+            col = F.col("s")
+            for pair, n in accepted:
+                a, b = pair.split(" ")
+                pat = f"(^|(?<= )){_re.escape(a)} {_re.escape(b)}($|(?= ))"
+                # replacement escaping: backslash first, then $ (group refs)
+                repl = (a + b).replace("\\", "\\\\").replace("$", "\\$")
+                col = F.regexp_replace(col, pat, repl)
+                merges.append((len(merges) + 1, pair, a + b, n))
+            cur = frames.pin(cur.withColumn("s", col), eager=True, replaces=(cur,))
+            # no explicit early-stop on hit_min: merges can CREATE pairs
+            # above min_count, so the next round's aggregation decides
+        return merges, rounds
 
 
 def bpe_encode(
@@ -1491,9 +1490,9 @@ def more_like_this(
     via broadcast for the query side. Top-k per query is the
     rank-filtered window → two-phase WindowGroupLimit. The weighted
     postings frame feeds THREE consumers (norms, query sliver, dots) —
-    it is persisted memory-and-disk so the corpus scan + tf/df aggs
-    run once, not three times (the minhash_estimate_pairs idiom,
-    released the same way via cacheutil.release_cached; 32 → 13
+    it is pinned (a lazy local checkpoint) so the corpus scan + tf/df
+    aggs run once, not three times (the minhash_estimate_pairs idiom,
+    freed the same way via cacheutil.release(result); 32 → 13
     exchanges). At 100 TB that is the materialize-the-index trade
     every IR system makes — O(postings) executor storage against two
     saved corpus passes.
@@ -1535,82 +1534,78 @@ def _mlt_score_postings(
     callers derive it differently (corpus count vs distinct store
     docs; identical under the tokenizer convention, see
     mlt_query_store). Plan/exactness notes on more_like_this."""
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
-    from .cacheutil import attach_cached
-
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
-    w = (
-        tf.join(dfreq, "term")
-        .join(F.broadcast(n_docs))
-        .filter(
-            F.col("doc_freq").cast("double")
-            <= F.lit(max_df_frac) * F.col("n_docs").cast("double")
+    with Frames() as frames:
+        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
+        w = frames.pin(
+            tf.join(dfreq, "term")
+            .join(F.broadcast(n_docs))
+            .filter(
+                F.col("doc_freq").cast("double")
+                <= F.lit(max_df_frac) * F.col("n_docs").cast("double")
+            )
+            .select(
+                id_col,
+                "term",
+                (
+                    F.col("tf").cast("double")
+                    * F.log(
+                        F.col("n_docs").cast("double")
+                        / F.col("doc_freq").cast("double")
+                    )
+                ).alias("w"),
+            ),
+            eager=False,
         )
-        .select(
-            id_col,
-            "term",
-            (
-                F.col("tf").cast("double")
-                * F.log(
-                    F.col("n_docs").cast("double")
-                    / F.col("doc_freq").cast("double")
-                )
-            ).alias("w"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    norm2 = w.groupBy(id_col).agg(
-        F.sum(
-            F.round(F.col("w") * F.col("w"), 12).cast("decimal(28,12)")
-        ).alias("n2")
-    )
-    qw = (
-        w.join(query_docs.select(id_col), id_col, "left_semi")
-        .select(
-            F.col(id_col).alias("query_id"),
-            "term",
-            F.col("w").alias("wq"),
-        )
-    )
-    dots = (
-        w.join(F.broadcast(qw), "term")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", id_col)
-        .agg(
+        norm2 = w.groupBy(id_col).agg(
             F.sum(
-                F.round(F.col("wq") * F.col("w"), 12).cast("decimal(28,12)")
-            ).alias("dot")
+                F.round(F.col("w") * F.col("w"), 12).cast("decimal(28,12)")
+            ).alias("n2")
         )
-    )
-    nq = norm2.select(
-        F.col(id_col).alias("query_id"), F.col("n2").alias("nq2")
-    )
-    cos = (
-        dots.join(F.broadcast(nq), "query_id")
-        .join(norm2, id_col)
-        .select(
-            "query_id",
-            id_col,
-            (
-                F.col("dot").cast("double")
-                / F.sqrt(
-                    F.col("nq2").cast("double") * F.col("n2").cast("double")
-                )
-            ).alias("cosine"),
+        qw = (
+            w.join(query_docs.select(id_col), id_col, "left_semi")
+            .select(
+                F.col(id_col).alias("query_id"),
+                "term",
+                F.col("w").alias("wq"),
+            )
         )
-    )
-    rank_key = F.round(F.col("cosine"), 12).cast("decimal(28,12)")
-    win = Window.partitionBy("query_id").orderBy(
-        rank_key.desc(), F.col(id_col).asc()
-    )
-    return attach_cached(
-        cos.withColumn("rnk", F.row_number().over(win))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", id_col, "cosine"),
-        w,
-    )
+        dots = (
+            w.join(F.broadcast(qw), "term")
+            .filter(F.col(id_col) != F.col("query_id"))
+            .groupBy("query_id", id_col)
+            .agg(
+                F.sum(
+                    F.round(F.col("wq") * F.col("w"), 12).cast("decimal(28,12)")
+                ).alias("dot")
+            )
+        )
+        nq = norm2.select(
+            F.col(id_col).alias("query_id"), F.col("n2").alias("nq2")
+        )
+        cos = (
+            dots.join(F.broadcast(nq), "query_id")
+            .join(norm2, id_col)
+            .select(
+                "query_id",
+                id_col,
+                (
+                    F.col("dot").cast("double")
+                    / F.sqrt(
+                        F.col("nq2").cast("double") * F.col("n2").cast("double")
+                    )
+                ).alias("cosine"),
+            )
+        )
+        rank_key = F.round(F.col("cosine"), 12).cast("decimal(28,12)")
+        win = Window.partitionBy("query_id").orderBy(
+            rank_key.desc(), F.col(id_col).asc()
+        )
+        return frames.attach(
+            cos.withColumn("rnk", F.row_number().over(win))
+            .filter(F.col("rnk") <= k)
+            .select("query_id", "rnk", id_col, "cosine"),
+            w,
+        )
 
 
 def mlt_query_store(

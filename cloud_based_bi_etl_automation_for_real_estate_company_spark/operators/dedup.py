@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
 from . import stores
-from .cacheutil import release_checkpoint
+from .cacheutil import Frames
 
 
 from .partitioning import spread as _spread
@@ -177,61 +177,71 @@ def connected_components(
     is the right tool for long-chain graphs.
 
     Returns (node, label) = (doc_id, cluster_id) for every doc that
-    appears in at least one edge.
+    appears in at least one edge; the final label table it reads is
+    attached to it (``operators.cacheutil.release(result)``).
     """
     # materialize the (tiny) edge list once — without this, every
     # iteration's join re-evaluates the upstream pair-generation
     # lineage (for LSH pairs, the whole shingle→signature pipeline)
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    ).localCheckpoint()
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
+    with Frames() as frames:
+        sym = frames.pin(
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
+                edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+            ),
+            eager=True,
+        )
+        labels = frames.pin(
+            sym.select(F.col("u").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node")),
+            eager=True,
+        )
 
-    def _sum(df: DataFrame) -> int:
-        return df.agg(F.sum("label")).collect()[0][0]
+        def _sum(df: DataFrame) -> int:
+            return df.agg(F.sum("label")).collect()[0][0]
 
-    # the label sum is strictly decreasing until fixpoint, so an
-    # unchanged sum IS convergence — one cheap scan per round instead
-    # of an old-vs-new join
-    prev_sum = _sum(labels)
-    converged = False
-    for _ in range(max_iter):
-        nbr = sym.join(labels, sym.v == labels.node).select(
-            F.col("u").alias("node"), "label"
-        )
-        labels = (
-            labels.union(nbr).groupBy("node").agg(F.min("label").alias("label"))
-        ).localCheckpoint()
-        cur_sum = _sum(labels)
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if require_convergence and not converged:
-        # a propagation that lands on the fixpoint exactly at round
-        # max_iter exits without observing the unchanged sum — confirm
-        # with one extra neighbor-min pass before raising
-        nbr = sym.join(labels, sym.v == labels.node).select(
-            F.col("u").alias("node"), "label"
-        )
-        nxt = labels.union(nbr).groupBy("node").agg(
-            F.min("label").alias("label")
-        )
-        if _sum(nxt) != prev_sum:
-            raise ValueError(
-                f"min-label propagation did not converge within "
-                f"{max_iter} rounds (graph diameter exceeds the bound); "
-                "labels would under-merge components — use "
-                "connected_components_star for long-chain graphs"
+        # the label sum is strictly decreasing until fixpoint, so an
+        # unchanged sum IS convergence — one cheap scan per round
+        # instead of an old-vs-new join
+        prev_sum = _sum(labels)
+        converged = False
+        for _ in range(max_iter):
+            nbr = sym.join(labels, sym.v == labels.node).select(
+                F.col("u").alias("node"), "label"
             )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
+            labels = frames.pin(
+                labels.union(nbr).groupBy("node").agg(F.min("label").alias("label")),
+                eager=True,
+                replaces=(labels,),
+            )
+            cur_sum = _sum(labels)
+            if cur_sum == prev_sum:
+                converged = True
+                break
+            prev_sum = cur_sum
+        if require_convergence and not converged:
+            # a propagation that lands on the fixpoint exactly at round
+            # max_iter exits without observing the unchanged sum —
+            # confirm with one extra neighbor-min pass before raising
+            nbr = sym.join(labels, sym.v == labels.node).select(
+                F.col("u").alias("node"), "label"
+            )
+            nxt = labels.union(nbr).groupBy("node").agg(
+                F.min("label").alias("label")
+            )
+            if _sum(nxt) != prev_sum:
+                raise ValueError(
+                    f"min-label propagation did not converge within "
+                    f"{max_iter} rounds (graph diameter exceeds the bound); "
+                    "labels would under-merge components — use "
+                    "connected_components_star for long-chain graphs"
+                )
+        return frames.attach(
+            labels.select(
+                F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+            ),
+            labels,
+        )
 
 
 def _local_cc(cur: DataFrame, spark, id_type) -> DataFrame:
@@ -314,37 +324,31 @@ def connected_components_star(
     component's smallest id).
 
     Per round both stars are one groupBy + one join over the edge
-    list; the edge list shrinks toward a star forest and is
-    ``localCheckpoint``ed so lineage stays flat. Dedup/self-loop
-    canonicalization happens once per ROUND (after both stars), not
-    per star — min aggregates are multiplicity-immune and each
-    directed edge rewires to at most one output edge, so the
-    intermediate can't blow up, and the skipped distinct saves an
-    exchange per round. Convergence is the exact structural fixpoint
-    — the edge list IS a star forest (every child has exactly one
-    parent and no parent is also a child; Kiveris et al.'s fixpoint
-    characterization). Round-10 constant-factor pass: the fixpoint
-    check is FUSED into the large star's neighborhood-min aggregation
-    — one keyed agg over the flagged symmetrized list yields both the
-    per-node (parent-count, child-count) degree stats the check needs
-    and the neighborhood minimum the rewire needs, saving a full
-    edge-list pass + exchange per round vs the round-9 separate
-    check. The node-sized stats frame is checkpointed once and read
-    by the check and by both join sides.
+    list; the edge list shrinks toward a star forest and each round's
+    pin replaces the last, so lineage stays flat and one round's
+    blocks are held. Dedup/self-loop canonicalization happens once per
+    ROUND (after both stars): min aggregates are multiplicity-immune
+    and each directed edge rewires to at most one output edge, so the
+    intermediate can't blow up. Convergence is the exact structural
+    fixpoint — the edge list IS a star forest (every child has exactly
+    one parent and no parent is also a child; Kiveris et al.'s
+    characterization), checked by the SAME keyed agg that computes the
+    large star's neighborhood minimum: the flagged symmetrized list
+    yields per-node (parent-count, child-count) stats too, pinned once
+    and read by the check and both join sides.
 
-    Local finish (round 10): star contraction shrinks the edge list
-    geometrically, so the LAST rounds are always tiny — and a tiny
-    distributed round is pure overhead (4 jobs, ~6 exchanges). When
-    the checkpointed canon list is ≤ ``local_finish_max_edges`` rows
-    (checked per round on the already-materialized frame — a count,
-    no shuffle), the components are finished with one driver-side
-    union-find over a provably bounded collect, the same last-mile
-    switch GraphX-style CC implementations make. The default bound
-    (``None``) resolves via ``local_finish_budget`` — 1% of driver
-    heap at ~100 B/edge, clamped to [100k, 2M] ≈ a few–tens of MB on
-    the driver; pass an explicit int to pin it, or 0 to force the
-    all-distributed fixpoint (the CC soak does, to measure the loop
-    itself).
+    Local finish: star contraction shrinks the edge list
+    geometrically, so the LAST rounds are tiny and pure overhead (4
+    jobs, ~6 exchanges each). Once the canon list is ≤
+    ``local_finish_max_edges`` rows (a count on the pinned frame), one
+    driver-side union-find over a provably bounded collect finishes
+    the components — GraphX-style CC's last-mile switch. ``None``
+    resolves via ``local_finish_budget`` (1% of driver heap at
+    ~100 B/edge, clamped to [100k, 2M]); 0 forces the all-distributed
+    fixpoint (the CC soak's setting).
+
+    The distributed fixpoint's result reads the final edge list, which
+    is attached to it: ``operators.cacheutil.release(result)`` frees it.
     """
     spark = edges.sparkSession
     id_type = edges.schema[src].dataType
@@ -374,90 +378,68 @@ def connected_components_star(
         anchors = mins.select(F.col("u"), F.col("m").alias("v"))
         return rewired.union(anchors)
 
-    cur = _canon(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    ).localCheckpoint()
-
     if local_finish_max_edges is None:
         local_finish_max_edges = local_finish_budget(spark)
 
-    # round 16 (r15 ADVICE leak flag, closed for every iterative loop):
-    # each round's stats/mid/cur frames die as soon as their single
-    # downstream consumer has materialized — release their blocks then,
-    # instead of leaking three checkpoints per contraction round until
-    # JVM GC. Every checkpoint here is eager (``localCheckpoint()``
-    # defaults to eager=True), so mid_{r-1} is dead as soon as the
-    # statement building cur_{r-1} returns; stats_r and cur_{r-1} are
-    # dead once mid_r materialized.
-    prev_mid = None
-    for _ in range(max_iter):
-        if local_finish_max_edges and cur.count() <= local_finish_max_edges:
-            release_checkpoint(prev_mid)  # cur is already materialized
-            return _local_cc(cur, spark, id_type)
-        # ONE flagged pass over the symmetrized canon list computes
-        # the fixpoint degree stats AND the large star's neighborhood
-        # minimum: for node n, flag-sum = #canon edges with n as
-        # parent (u side), count − flag-sum = #child appearances.
-        sym = cur.select("u", "v", F.lit(1).alias("pf")).union(
-            cur.select(
-                F.col("v").alias("u"), F.col("u").alias("v"), F.lit(0).alias("pf")
+    with Frames() as frames:
+        cur = frames.pin(
+            _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))),
+            eager=True,
+        )
+        for _ in range(max_iter):
+            if local_finish_max_edges and cur.count() <= local_finish_max_edges:
+                return _local_cc(cur, spark, id_type)
+            # for node n: flag-sum = #canon edges with n as parent (u
+            # side), count − flag-sum = #child appearances
+            sym = cur.select("u", "v", F.lit(1).alias("pf")).union(
+                cur.select(
+                    F.col("v").alias("u"), F.col("u").alias("v"), F.lit(0).alias("pf")
+                )
             )
-        )
-        stats = (
-            sym.groupBy("u")
-            .agg(
-                F.min("v").alias("mv"),
-                F.sum("pf").alias("np"),
-                F.count(F.lit(1)).alias("nd"),
+            stats = frames.pin(
+                sym.groupBy("u").agg(
+                    F.min("v").alias("mv"),
+                    F.sum("pf").alias("np"),
+                    F.count(F.lit(1)).alias("nd"),
+                ),
+                eager=True,
             )
-            .localCheckpoint(eager=True)
+            # star forest ⟺ no child has 2 parents and no node is both
+            # parent and child — an isEmpty over the checkpointed
+            # node-sized stats, no extra edge-list pass
+            if stats.filter(
+                (F.col("nd") - F.col("np") > 1)
+                | ((F.col("np") > 0) & (F.col("nd") > F.col("np")))
+            ).isEmpty():
+                break
+            mins = stats.select("u", F.least("u", "mv").alias("m"))
+            rewired = (
+                sym.filter(F.col("v") > F.col("u"))
+                .join(mins, "u")
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            )
+            anchors = mins.select(F.col("u"), F.col("m").alias("v"))
+            # pin BETWEEN the stars: the small star reads its input
+            # twice, so chaining the stars lazily re-expands the
+            # large-star subtree ~4× (43 exchanges/round observed).
+            # Mid-round output stays raw (duplicates + self-loops): the
+            # small star's symmetrize + min-agg is immune to both. Once
+            # mid materialized, cur and stats are dead.
+            mid = frames.pin(rewired.union(anchors), eager=True, replaces=(cur, stats))
+            cur = frames.pin(_canon(_small_star(mid)), eager=True, replaces=(mid,))
+        # fixpoint is a star forest: every edge points (root=min) ← node
+        members = cur.select(
+            F.col("v").alias("doc_id"), F.col("u").alias("cluster_id")
         )
-        # cur is an eager localCheckpoint, materialized when the
-        # previous round built it, so that round's mid has no live
-        # reader left
-        release_checkpoint(prev_mid)
-        prev_mid = None
-        # star forest ⟺ no child has 2 parents and no node is both
-        # parent and child — an isEmpty over the checkpointed
-        # node-sized stats, no extra edge-list pass
-        if stats.filter(
-            (F.col("nd") - F.col("np") > 1)
-            | ((F.col("np") > 0) & (F.col("nd") > F.col("np")))
-        ).isEmpty():
-            release_checkpoint(stats)  # final agg reads only cur
-            break
-        mins = stats.select("u", F.least("u", "mv").alias("m"))
-        rewired = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        roots = cur.select(F.col("u").alias("doc_id")).distinct().withColumn(
+            "cluster_id", F.col("doc_id")
         )
-        anchors = mins.select(F.col("u"), F.col("m").alias("v"))
-        # materialize BETWEEN the stars: the small star references its
-        # input twice (neighborhood-min agg + rewire filter), so
-        # chaining the two stars lazily re-expands the large-star
-        # subtree ~4× in one plan (43 exchanges/round observed — the
-        # same multi-reference blowup the unrolled CTE oracles guard
-        # against with AS MATERIALIZED); a checkpoint pins it to one
-        # execution read twice. Mid-round output stays raw (duplicates
-        # + self-loops allowed): the small star symmetrizes and
-        # min-aggregates, neither of which multiplicity or (x, x)
-        # rows can perturb.
-        mid = rewired.union(anchors).localCheckpoint(eager=True)
-        # mid materialized: the pre-round edge list and this round's
-        # stats (read via mins inside mid's plan) are both dead
-        release_checkpoint(cur)
-        release_checkpoint(stats)
-        cur = _canon(_small_star(mid)).localCheckpoint()
-        prev_mid = mid
-    # fixpoint is a star forest: every edge points (root=min) ← node
-    members = cur.select(F.col("v").alias("doc_id"), F.col("u").alias("cluster_id"))
-    roots = cur.select(F.col("u").alias("doc_id")).distinct().withColumn(
-        "cluster_id", F.col("doc_id")
-    )
-    return members.union(roots).groupBy("doc_id").agg(
-        F.min("cluster_id").alias("cluster_id")
-    )
+        return frames.attach(
+            members.union(roots).groupBy("doc_id").agg(
+                F.min("cluster_id").alias("cluster_id")
+            ),
+            cur,
+        )
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -690,14 +672,14 @@ def minhash_estimate_pairs(
     gate the exact ``ngram_jaccard_pairs`` verification.
 
     Returns (id_a, id_b, est_jaccard ≥ threshold). The signature table
-    is derived ONCE from text and persisted (memory-and-disk — it is
-    ~K×8 bytes/doc, orders of magnitude smaller than the corpus), then
+    is derived ONCE from text and pinned (a lazy local checkpoint — it
+    is ~K×8 bytes/doc, orders of magnitude smaller than the corpus), then
     reused for banding and both id-joins; the expensive shingle
     explosion runs a single pass over the text.
 
-    The persisted signature table is attached to the result as
-    ``cached_deps`` — long-lived sessions should release it after the
-    final action via ``operators.cacheutil.release_cached(result)``.
+    The pinned signature table is attached to the result — long-lived
+    sessions free it after the final action via
+    ``operators.cacheutil.release(result)``.
 
     ``max_bucket`` passes through to :func:`minhash_lsh_pairs` — the
     defensive band-bucket bound for degenerate corpora (round 12: the
@@ -705,38 +687,36 @@ def minhash_estimate_pairs(
     candidate pairs from 1.2e5 docs; a b-doc bucket is b²/2 pairs, so
     one hot band key OOMs its reducer without the cap).
     """
-    from pyspark import StorageLevel
-
-    from .cacheutil import attach_cached
-
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    pairs = minhash_lsh_pairs(
-        df, text_col, id_col, num_hashes, bands, shingle_k,
-        precomputed_sig=sig, max_bucket=max_bucket,
-    )
-    sa = sig.select(
-        F.col(id_col).alias("id_a"), *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(num_hashes)]
-    )
-    sb = sig.select(
-        F.col(id_col).alias("id_b"), *[F.col(f"mh_{i}").alias(f"b_{i}") for i in range(num_hashes)]
-    )
-    n_match = sum(
-        F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    )
-    return attach_cached(
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (n_match.cast("double") / F.lit(num_hashes)).alias("est_jaccard"),
+    with Frames() as frames:
+        sig = frames.pin(
+            minhash_signatures(df, text_col, id_col, num_hashes, shingle_k),
+            eager=False,
         )
-        .filter(F.col("est_jaccard") >= threshold),
-        sig,
-    )
+        pairs = minhash_lsh_pairs(
+            df, text_col, id_col, num_hashes, bands, shingle_k,
+            precomputed_sig=sig, max_bucket=max_bucket,
+        )
+        sa = sig.select(
+            F.col(id_col).alias("id_a"), *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(num_hashes)]
+        )
+        sb = sig.select(
+            F.col(id_col).alias("id_b"), *[F.col(f"mh_{i}").alias(f"b_{i}") for i in range(num_hashes)]
+        )
+        n_match = sum(
+            F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0)
+            for i in range(num_hashes)
+        )
+        return frames.attach(
+            pairs.join(sa, "id_a")
+            .join(sb, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                (n_match.cast("double") / F.lit(num_hashes)).alias("est_jaccard"),
+            )
+            .filter(F.col("est_jaccard") >= threshold),
+            sig,
+        )
 
 
 def incremental_dedup(
@@ -786,7 +766,7 @@ def incremental_dedup(
     # pin the admitted set before any writes so the sink, the store
     # append, and the returned frame all see the identical rows (and
     # re-evaluating the result can't re-trigger the joins)
-    admitted = admitted.localCheckpoint()
+    admitted = admitted.localCheckpoint(eager=True)
     if sink is not None:
         sink(admitted.drop("__h"))
     new_hashes = admitted.select(F.col("__h").alias("content_hash"))

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cacheutil import release_checkpoint
+from .cacheutil import Frames
 
 
 def pagerank(
@@ -130,42 +130,48 @@ def label_propagation(
     Synchronous update is the determinism-friendly variant — the
     async/semi-synchronous forms converge faster but depend on visit
     order, which has no cross-engine replay. Each round's label table
-    is ``localCheckpoint``ed (the CC-loop pattern, dedup.py:244) so
-    plan lineage stays one round deep at any iteration count."""
+    replaces the last through one ``cacheutil.Frames`` scope (the
+    CC-loop pattern), so plan lineage stays one round deep at any
+    iteration count and only one round's blocks are held; the returned
+    table is attached to itself (``cacheutil.release(result)``)."""
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("bigint").alias("w"),
     )
-    # pinned: every round's vote join re-reads sym, so without the
-    # checkpoint the caller's edge-builder lineage re-executes once
-    # per iteration (plus once for the label init)
-    sym = e.unionByName(
-        e.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-        )
-    ).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
     from pyspark.sql import Window
 
-    for _ in range(iterations):
-        votes = (
-            sym.join(labels, sym.src == labels.node)
-            .groupBy(F.col("dst"), F.col("label"))
-            .agg(F.sum("w").alias("v"))
+    with Frames() as frames:
+        # pinned: every round's vote join re-reads sym, so without the
+        # checkpoint the caller's edge-builder lineage re-executes once
+        # per iteration (plus once for the label init)
+        sym = frames.pin(
+            e.unionByName(
+                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+            ),
+            eager=True,
         )
-        wr = Window.partitionBy("dst").orderBy(F.desc("v"), F.asc("label"))
         labels = (
-            votes.withColumn("__rn", F.row_number().over(wr))
-            .filter(F.col("__rn") == 1)
-            .select(F.col("dst").alias("node"), "label")
-            .localCheckpoint()
+            sym.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("label"))
         )
-    return labels
+        for _ in range(iterations):
+            votes = (
+                sym.join(labels, sym.src == labels.node)
+                .groupBy(F.col("dst"), F.col("label"))
+                .agg(F.sum("w").alias("v"))
+            )
+            wr = Window.partitionBy("dst").orderBy(F.desc("v"), F.asc("label"))
+            labels = frames.pin(
+                votes.withColumn("__rn", F.row_number().over(wr))
+                .filter(F.col("__rn") == 1)
+                .select(F.col("dst").alias("node"), "label"),
+                eager=True,
+                replaces=(labels,),
+            )
+        # zero rounds: the lazy init labels still read sym
+        return frames.attach(labels, labels if iterations else sym)
 
 
 def triangles(
@@ -319,16 +325,10 @@ def kcore(
     return a strict superset of the k-core; pass
     ``require_convergence=True`` to get a loud ValueError instead of
     a silent superset when the bound might bind. Returns (node, deg)
-    for surviving nodes with their final in-core degree."""
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    for surviving nodes with their final in-core degree; the
+    distributed path's result reads the final edge list, which is
+    attached to it (``cacheutil.release(result)``)."""
+
     def _degrees(ed: DataFrame) -> DataFrame:
         return (
             ed.select(F.col("a").alias("n"))
@@ -339,82 +339,73 @@ def kcore(
 
     # fixpoint is checked structurally BEFORE each round — the edge
     # set is stable iff no surviving node is under-degree — so a
-    # converged peel never pays a confirmation round of semi-joins +
-    # checkpoint to observe an unchanged count (round-9, the same
-    # change as the star-CC loop), and an input already inside its
-    # k-core does zero rounds. The check is one degree agg + isEmpty
-    # over the checkpointed edges; the round recomputes the same agg
-    # for `keep` (one exchange over a checkpoint scan — cheaper than
-    # materializing deg itself).
+    # converged peel never pays a confirmation round to observe an
+    # unchanged count, and an input already inside its k-core does
+    # zero rounds.
     if local_finish_max_edges is None:
-        # round 11: None resolves to the driver-memory-aware budget
-        # (1% of heap at ~100 B/edge, clamped [100k, 2M]); explicit
-        # ints — including the soak's 0 — always win
+        # the driver-memory-aware budget; explicit ints (the soak's 0
+        # included) always win
         from .dedup import local_finish_budget
 
         local_finish_max_edges = local_finish_budget(edges.sparkSession)
     converged = False
-    for i in range(rounds):
-        # local finish (round 10, same move as connected_components_
-        # star): peeling shrinks the surviving edge list monotonically,
-        # so once it fits a constant driver budget the remaining
-        # rounds are job-launch overhead — collect (provably bounded
-        # by the count gate) and bulk-peel locally, honoring the SAME
-        # remaining-round bound so a deep-peel graph returns exactly
-        # what the distributed loop would (the fixed-round oracle
-        # contract). Pass local_finish_max_edges=0 for all-distributed.
-        n_e = e.count()
-        if local_finish_max_edges and n_e <= local_finish_max_edges:
-            return _local_kcore(
-                e, k, rounds - i, require_convergence, rounds
+    with Frames() as frames:
+        e = frames.pin(
+            edges.select(
+                F.least(F.col(src_col), F.col(dst_col)).alias("a"),
+                F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
             )
-        if n_e == 0:
-            converged = True
-            break
-        # round 15 (guide §2.4): materialize the node-sized degree
-        # table ONCE per round and read it from both the fixpoint
-        # check and the keep filter — the old form ran the full
-        # edge-list degree aggregation TWICE per round (once inside
-        # the check's isEmpty, once again inside the peel job); the
-        # isEmpty(e) probe is likewise folded into the count the
-        # local-finish gate already pays
-        deg = _degrees(e).localCheckpoint(eager=True)
-        if deg.filter(F.col("deg") < k).isEmpty():
-            converged = True
-            break
-        keep = deg.filter(F.col("deg") >= k).select("n")
-        prev_e = e
-        e = (
-            e.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
-            .localCheckpoint(eager=True)
+            .filter(F.col("a") != F.col("b"))
+            .distinct(),
+            eager=True,
         )
-        # round 16 (r15 ADVICE leak flag): round i's edge list and
-        # degree table are dead once round i+1's edges materialized —
-        # drop their blocks now instead of leaking one node-sized +
-        # one edge-sized cache per peel round until JVM GC
-        release_checkpoint(prev_e)
-        release_checkpoint(deg)
-    if require_convergence and not converged:
-        # a peel that lands on the fixpoint exactly at round `rounds`
-        # exits the loop without the pre-round check — confirm with
-        # one extra degree pass before raising (round-6 ADVICE)
-        converged = (
-            _degrees(e).filter(F.col("deg") < k).limit(1).count() == 0
+        for i in range(rounds):
+            # local finish (connected_components_star's move): once the
+            # shrinking edge list fits the driver budget, collect it
+            # (bounded by the count gate) and bulk-peel locally under
+            # the SAME remaining-round bound (the fixed-round oracle
+            # contract). local_finish_max_edges=0 stays distributed.
+            n_e = e.count()
+            if local_finish_max_edges and n_e <= local_finish_max_edges:
+                return _local_kcore(
+                    e, k, rounds - i, require_convergence, rounds
+                )
+            if n_e == 0:
+                converged = True
+                break
+            # the node-sized degree table is materialized once per
+            # round and read by both the fixpoint check and the keep
+            # filter (one edge-list degree aggregation, not two)
+            deg = frames.pin(_degrees(e), eager=True)
+            if deg.filter(F.col("deg") < k).isEmpty():
+                converged = True
+                break
+            keep = deg.filter(F.col("deg") >= k).select("n")
+            e = frames.pin(
+                e.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
+                .join(keep.withColumnRenamed("n", "b"), "b", "left_semi"),
+                eager=True,
+                replaces=(e, deg),
+            )
+        if require_convergence and not converged:
+            # a peel landing on the fixpoint exactly at round `rounds`
+            # skipped the pre-round check — confirm before raising
+            converged = (
+                _degrees(e).filter(F.col("deg") < k).limit(1).count() == 0
+            )
+        if require_convergence and not converged:
+            raise ValueError(
+                f"k-core peel did not reach a fixpoint within {rounds} rounds; "
+                "the result would be a superset of the k-core"
+            )
+        return frames.attach(
+            e.select(F.col("a").alias("node"))
+            .unionByName(e.select(F.col("b").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= k),
+            e,
         )
-    if require_convergence and not converged:
-        raise ValueError(
-            f"k-core peel did not reach a fixpoint within {rounds} rounds; "
-            "the result would be a superset of the k-core"
-        )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .filter(F.col("deg") >= k)
-    )
-    return deg
 
 
 def copurchase_edges(

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import stores
+from .cacheutil import Frames
 
 
 def not_null(col: str) -> tuple[str, Column]:
@@ -1261,7 +1262,8 @@ def psi_admit(
     append — the sink-before-append crash contract of the admission
     family. Store growth is one aggregated row-set (≤ ``n_buckets``
     rows) per batch; no compaction needed at any realistic cadence.
-    Returns one row: (n_batch, n_hist, psi, shifted).
+    Returns one row: (n_batch, n_hist, psi, shifted), a checkpoint
+    attached to itself (``cacheutil.release(result)`` frees it).
     """
     spark = batch_df.sparkSession
     width = hi - lo + 1
@@ -1278,61 +1280,62 @@ def psi_admit(
             ),
         ),
     )
-    bcounts = (
-        batch_df.filter(F.col(value_col).isNotNull())
-        .select(bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
-    # only a missing store means bootstrap; any real read failure raises
-    hist = stores.read_live(
-        spark, store_path, "hist", required="bucket bigint, cnt bigint",
-        missing_ok=True,
-    )
-    if hist is None:
-        hist = spark.createDataFrame([], "bucket bigint, cnt bigint")
-    hcounts = hist.groupBy("bucket").agg(
-        F.sum("cnt").cast("bigint").alias("ch")
-    )
-    spine = spark.range(0, n_buckets).select(F.col("id").alias("bucket"))
-    cells = (
-        spine.join(bcounts.withColumnRenamed("cnt", "cg"), "bucket", "left")
-        .join(hcounts, "bucket", "left")
-        .select(
-            F.coalesce(F.col("cg"), F.lit(0)).alias("cg"),
-            F.coalesce(F.col("ch"), F.lit(0)).alias("ch"),
+    with Frames() as frames:
+        bcounts = frames.pin(
+            batch_df.filter(F.col(value_col).isNotNull())
+            .select(bucket.alias("bucket"))
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("cnt")),
+            eager=True,
         )
-    )
-    tot = cells.agg(
-        F.sum("cg").cast("bigint").alias("n_batch"),
-        F.sum("ch").cast("bigint").alias("n_hist"),
-    )
-    p = (F.col("cg") + F.lit(1)).cast("double") / (
-        F.col("n_batch") + nb
-    ).cast("double")
-    q = (F.col("ch") + F.lit(1)).cast("double") / (
-        F.col("n_hist") + nb
-    ).cast("double")
-    term = (p - q) * F.log(p / q)
-    out = (
-        cells.join(F.broadcast(tot))
-        .groupBy("n_batch", "n_hist")
-        .agg(
-            F.sum(F.round(term, 12).cast("decimal(28,12)"))
-            .cast("double")
-            .alias("psi")
+        # only a missing store means bootstrap; any real read failure raises
+        hist = stores.read_live(
+            spark, store_path, "hist", required="bucket bigint, cnt bigint",
+            missing_ok=True,
         )
-        .select(
-            "n_batch",
-            "n_hist",
-            "psi",
-            (F.col("psi") > F.lit(0.25)).alias("shifted"),
+        if hist is None:
+            hist = spark.createDataFrame([], "bucket bigint, cnt bigint")
+        hcounts = hist.groupBy("bucket").agg(
+            F.sum("cnt").cast("bigint").alias("ch")
         )
-        .localCheckpoint(eager=True)
-    )
-    bcounts.write.mode("append").parquet(f"{store_path}/hist")
-    return out
+        spine = spark.range(0, n_buckets).select(F.col("id").alias("bucket"))
+        cells = (
+            spine.join(bcounts.withColumnRenamed("cnt", "cg"), "bucket", "left")
+            .join(hcounts, "bucket", "left")
+            .select(
+                F.coalesce(F.col("cg"), F.lit(0)).alias("cg"),
+                F.coalesce(F.col("ch"), F.lit(0)).alias("ch"),
+            )
+        )
+        tot = cells.agg(
+            F.sum("cg").cast("bigint").alias("n_batch"),
+            F.sum("ch").cast("bigint").alias("n_hist"),
+        )
+        p = (F.col("cg") + F.lit(1)).cast("double") / (
+            F.col("n_batch") + nb
+        ).cast("double")
+        q = (F.col("ch") + F.lit(1)).cast("double") / (
+            F.col("n_hist") + nb
+        ).cast("double")
+        term = (p - q) * F.log(p / q)
+        out = frames.pin(
+            cells.join(F.broadcast(tot))
+            .groupBy("n_batch", "n_hist")
+            .agg(
+                F.sum(F.round(term, 12).cast("decimal(28,12)"))
+                .cast("double")
+                .alias("psi")
+            )
+            .select(
+                "n_batch",
+                "n_hist",
+                "psi",
+                (F.col("psi") > F.lit(0.25)).alias("shifted"),
+            ),
+            eager=True,
+        )
+        bcounts.write.mode("append").parquet(f"{store_path}/hist")
+        return frames.attach(out)
 
 
 def chi2_admit(
@@ -1364,87 +1367,89 @@ def chi2_admit(
     BEFORE the store append (sink-before-append, like the rest of
     the family). Store growth is one aggregated row-set (≤ distinct
     categories) per batch. Returns one row:
-    (n_batch, n_hist, df_chi2, chi2, chi2_defined, reject_95).
+    (n_batch, n_hist, df_chi2, chi2, chi2_defined, reject_95), a
+    checkpoint attached to itself (``cacheutil.release(result)``).
     """
     spark = batch_df.sparkSession
-    bcounts = (
-        batch_df.filter(F.col(cat_col).isNotNull())
-        .select(F.col(cat_col).alias("c"))
-        .groupBy("c")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
-    # only a missing store means bootstrap; any real read failure raises
-    hist = stores.read_live(
-        spark, store_path, "cats", required="c string, cnt bigint",
-        missing_ok=True,
-    )
-    if hist is None:
-        hist = spark.createDataFrame([], "c string, cnt bigint")
-    hcounts = hist.groupBy("c").agg(F.sum("cnt").cast("bigint").alias("ch"))
-    cells = (
-        bcounts.withColumnRenamed("cnt", "cg")
-        .join(hcounts, "c", "full_outer")
-        .select(
-            F.coalesce(F.col("cg"), F.lit(0)).cast("bigint").alias("cg"),
-            F.coalesce(F.col("ch"), F.lit(0)).cast("bigint").alias("ch"),
+    with Frames() as frames:
+        bcounts = frames.pin(
+            batch_df.filter(F.col(cat_col).isNotNull())
+            .select(F.col(cat_col).alias("c"))
+            .groupBy("c")
+            .agg(F.count(F.lit(1)).alias("cnt")),
+            eager=True,
         )
-    )
-    tot = cells.agg(
-        F.sum("cg").cast("bigint").alias("n_batch"),
-        F.sum("ch").cast("bigint").alias("n_hist"),
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-    )
-    n = F.col("n_batch") + F.col("n_hist")
-    d = F.col("cg") * n - F.col("n_batch") * (F.col("cg") + F.col("ch"))
-    term = F.round(
-        (d * d).cast("double")
-        / (F.col("cg") + F.col("ch")).cast("double"),
-        12,
-    ).cast("decimal(38,12)")
-    chi2 = F.try_divide(
-        F.col("s"),
-        F.col("n_batch").cast("double") * F.col("n_hist").cast("double"),
-    )
-    dof = (F.col("k") - F.lit(1)).cast("double")
-    dofc = F.greatest(dof, F.lit(1.0))
-    wh = F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofc) + F.lit(
-        1.6448536269514722
-    ) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofc))
-    crit = dof * wh * wh * wh
-    # round-13 ADVICE fix: the output row derives from two ALWAYS-
-    # one-row global aggregates (tot × term-sum) instead of a groupBy
-    # over ``cells`` — a batch whose cat_col is all NULL on an empty
-    # history produces zero cells, and the old groupBy then emitted
-    # ZERO rows, so stream_drift_gated_ingest's collect()[0] raised
-    # IndexError inside foreachBatch and the checkpoint replayed the
-    # poisoned batch forever. Degenerate row: n_batch=n_hist=0,
-    # df_chi2 NULL, chi2 NULL, chi2_defined false (admit).
-    ssum = (
-        cells.join(F.broadcast(tot))
-        .agg(F.sum(term).cast("double").alias("s"))
-    )
-    out = (
-        tot.select(
-            F.coalesce(F.col("n_batch"), F.lit(0)).alias("n_batch"),
-            F.coalesce(F.col("n_hist"), F.lit(0)).alias("n_hist"),
-            "k",
+        # only a missing store means bootstrap; any real read failure raises
+        hist = stores.read_live(
+            spark, store_path, "cats", required="c string, cnt bigint",
+            missing_ok=True,
         )
-        .join(F.broadcast(ssum))
-        .select(
-            "n_batch",
-            "n_hist",
-            F.when(F.col("k") > 0, F.col("k") - F.lit(1)).alias("df_chi2"),
-            chi2.alias("chi2"),
-            (
-                (F.col("n_batch") > 0) & (F.col("n_hist") > 0)
-            ).alias("chi2_defined"),
-            (chi2 > crit).alias("reject_95"),
+        if hist is None:
+            hist = spark.createDataFrame([], "c string, cnt bigint")
+        hcounts = hist.groupBy("c").agg(F.sum("cnt").cast("bigint").alias("ch"))
+        cells = (
+            bcounts.withColumnRenamed("cnt", "cg")
+            .join(hcounts, "c", "full_outer")
+            .select(
+                F.coalesce(F.col("cg"), F.lit(0)).cast("bigint").alias("cg"),
+                F.coalesce(F.col("ch"), F.lit(0)).cast("bigint").alias("ch"),
+            )
         )
-        .localCheckpoint(eager=True)
-    )
-    bcounts.write.mode("append").parquet(f"{store_path}/cats")
-    return out
+        tot = cells.agg(
+            F.sum("cg").cast("bigint").alias("n_batch"),
+            F.sum("ch").cast("bigint").alias("n_hist"),
+            F.count(F.lit(1)).cast("bigint").alias("k"),
+        )
+        n = F.col("n_batch") + F.col("n_hist")
+        d = F.col("cg") * n - F.col("n_batch") * (F.col("cg") + F.col("ch"))
+        term = F.round(
+            (d * d).cast("double")
+            / (F.col("cg") + F.col("ch")).cast("double"),
+            12,
+        ).cast("decimal(38,12)")
+        chi2 = F.try_divide(
+            F.col("s"),
+            F.col("n_batch").cast("double") * F.col("n_hist").cast("double"),
+        )
+        dof = (F.col("k") - F.lit(1)).cast("double")
+        dofc = F.greatest(dof, F.lit(1.0))
+        wh = F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofc) + F.lit(
+            1.6448536269514722
+        ) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofc))
+        crit = dof * wh * wh * wh
+        # round-13 ADVICE fix: the output row derives from two ALWAYS-
+        # one-row global aggregates (tot × term-sum) instead of a groupBy
+        # over ``cells`` — a batch whose cat_col is all NULL on an empty
+        # history produces zero cells, and the old groupBy then emitted
+        # ZERO rows, so stream_drift_gated_ingest's collect()[0] raised
+        # IndexError inside foreachBatch and the checkpoint replayed the
+        # poisoned batch forever. Degenerate row: n_batch=n_hist=0,
+        # df_chi2 NULL, chi2 NULL, chi2_defined false (admit).
+        ssum = (
+            cells.join(F.broadcast(tot))
+            .agg(F.sum(term).cast("double").alias("s"))
+        )
+        out = frames.pin(
+            tot.select(
+                F.coalesce(F.col("n_batch"), F.lit(0)).alias("n_batch"),
+                F.coalesce(F.col("n_hist"), F.lit(0)).alias("n_hist"),
+                "k",
+            )
+            .join(F.broadcast(ssum))
+            .select(
+                "n_batch",
+                "n_hist",
+                F.when(F.col("k") > 0, F.col("k") - F.lit(1)).alias("df_chi2"),
+                chi2.alias("chi2"),
+                (
+                    (F.col("n_batch") > 0) & (F.col("n_hist") > 0)
+                ).alias("chi2_defined"),
+                (chi2 > crit).alias("reject_95"),
+            ),
+            eager=True,
+        )
+        bcounts.write.mode("append").parquet(f"{store_path}/cats")
+        return frames.attach(out)
 
 
 def _digest_scored_grid(
@@ -1726,7 +1731,8 @@ def w1_admit(
     cold-start admission is required. Zero-row-proof like the whole
     family post-round-13: global aggs + 1-row scalar joins, ONE row
     out per batch always — (n_batch, n_hist, w1_dist, w1_defined,
-    shifted)."""
+    shifted), a checkpoint attached to itself
+    (``cacheutil.release(result)``)."""
     scored, tot, w_tot, sig = _digest_scored_grid(
         batch_df, store_path, value_col, delta
     )
@@ -1750,37 +1756,38 @@ def w1_admit(
     w1 = seg.agg(
         F.sum(F.coalesce(piece, F.lit(0.0))).alias("w1_raw")
     )
-    out = (
-        tot.join(F.broadcast(w_tot))
-        .join(F.broadcast(w1))
-        .select(
-            "n_batch",
-            F.round("w_hist", 0).cast("bigint").alias("n_hist"),
-            # gated on BOTH sides being populated (round-14, ADVICE):
-            # an all-NULL batch on a seeded store integrates NULL gaps
-            # to a misleading 0.0 — report NULL and let w1_defined
-            # carry the verdict
-            F.when(
-                (F.col("w_hist") > 0) & (F.col("n_batch") > 0),
-                F.col("w1_raw"),
-            ).alias("w1_dist"),
-            ((F.col("w_hist") > 0) & (F.col("n_batch") > 0)).alias(
-                "w1_defined"
-            ),
-            (
-                F.coalesce(
-                    F.when(
-                        (F.col("w_hist") > 0) & (F.col("n_batch") > 0),
-                        F.col("w1_raw"),
+    with Frames() as frames:
+        out = frames.pin(
+            tot.join(F.broadcast(w_tot))
+            .join(F.broadcast(w1))
+            .select(
+                "n_batch",
+                F.round("w_hist", 0).cast("bigint").alias("n_hist"),
+                # gated on BOTH sides being populated (round-14, ADVICE):
+                # an all-NULL batch on a seeded store integrates NULL gaps
+                # to a misleading 0.0 — report NULL and let w1_defined
+                # carry the verdict
+                F.when(
+                    (F.col("w_hist") > 0) & (F.col("n_batch") > 0),
+                    F.col("w1_raw"),
+                ).alias("w1_dist"),
+                ((F.col("w_hist") > 0) & (F.col("n_batch") > 0)).alias(
+                    "w1_defined"
+                ),
+                (
+                    F.coalesce(
+                        F.when(
+                            (F.col("w_hist") > 0) & (F.col("n_batch") > 0),
+                            F.col("w1_raw"),
+                        )
+                        > F.lit(threshold),
+                        F.lit(False),
                     )
-                    > F.lit(threshold),
-                    F.lit(False),
-                )
-                if threshold is not None
-                else F.lit(False)
-            ).alias("shifted"),
+                    if threshold is not None
+                    else F.lit(False)
+                ).alias("shifted"),
+            ),
+            eager=True,
         )
-        .localCheckpoint(eager=True)
-    )
-    sig.write.mode("append").parquet(f"{store_path}/centroids")
-    return out
+        sig.write.mode("append").parquet(f"{store_path}/centroids")
+        return frames.attach(out)

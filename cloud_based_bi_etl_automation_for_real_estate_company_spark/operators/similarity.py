@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, cosine, dot, sign_bucket
 from . import stores
-from .cacheutil import release_checkpoint
+from .cacheutil import Frames
 from .partitioning import spread
 
 
@@ -418,14 +418,17 @@ def kmeans_centroids(
         .select(F.col(id_col), as_double(vec_col).alias("cent_emb"))
     )
     w = Window.orderBy(id_col)
-    cents = seeds.select(
-        (F.row_number().over(w) - 1).alias("cent_id"), "cent_emb"
-    ).localCheckpoint()
-    vecs = spread(base.select(F.col(id_col), as_double(vec_col).alias("__v")))
-    return _lloyd(vecs, cents, iters, [], id_col)
+    with Frames() as frames:
+        cents = frames.pin(
+            seeds.select((F.row_number().over(w) - 1).alias("cent_id"), "cent_emb"),
+            eager=True,
+        )
+        vecs = spread(base.select(F.col(id_col), as_double(vec_col).alias("__v")))
+        return frames.attach(_lloyd(frames, vecs, cents, iters, [], id_col))
 
 
 def _lloyd(
+    frames: Frames,
     vecs: DataFrame,
     cents: DataFrame,
     iters: int,
@@ -435,19 +438,14 @@ def _lloyd(
     """Shared Lloyd's iteration: ``vecs`` (group_cols..., id, __v)
     against broadcast ``cents`` (group_cols..., cent_id, cent_emb).
     With group_cols, runs an independent k-means per group in the same
-    jobs — how the PQ codebooks train all ``m`` subspaces in one pass."""
+    jobs — how the PQ codebooks train all ``m`` subspaces in one pass.
+    Each round's centroids replace the last in ``frames``."""
     for _ in range(iters):
-        # round 15: ROW-LOCAL argmin over the broadcast centroid array
-        # (guide §2.4) — the old join-multiply + windowed-argmin form
-        # shuffled |vecs| × k rows (vector payload included) by row id
-        # EVERY iteration; comparator == Window.orderBy(asc(d2),
-        # asc(cent_id)) so assignments are unchanged
+        # ROW-LOCAL argmin over the broadcast centroid array (no
+        # |vecs| × k shuffle); the comparator orders (d2, cent_id) asc
         carr = _choices_array(cents, group_cols, ["cent_id", "cent_emb"])
-        # F.get (0-based, NULL on out-of-range) instead of
-        # element_at(.., 1), which throws INVALID_ARRAY_INDEX on an
-        # empty choice array under ANSI mode (r15 ADVICE — unreachable
-        # from current callers, but a latent edge); identical value on
-        # every non-empty array
+        # F.get (0-based, NULL on out-of-range): element_at(.., 1)
+        # throws on an empty choice array under ANSI mode
         best = F.get(
             F.array_sort(
                 F.transform(
@@ -487,14 +485,14 @@ def _lloyd(
                 ).alias("new_emb")
             )
         )
-        cents = (
-            cents.join(upd, [*group_cols, "cent_id"], "left")
-            .select(
+        cents = frames.pin(
+            cents.join(upd, [*group_cols, "cent_id"], "left").select(
                 *group_cols,
                 "cent_id",
                 F.coalesce(F.col("new_emb"), F.col("cent_emb")).alias("cent_emb"),
-            )
-            .localCheckpoint()
+            ),
+            eager=True,
+            replaces=(cents,),
         )
     return cents
 
@@ -595,25 +593,37 @@ def save_ivf_index(index: dict[str, DataFrame], path: str) -> None:
     """Persist the index with the inverted lists PARTITIONED BY bucket:
     a query probing ``n_probes`` buckets then reads only those buckets'
     files (partition pruning at the storage layer — the on-disk form of
-    IVF's candidate pruning). Centroids are a tiny single file."""
+    IVF's candidate pruning). Centroids are a tiny single file.
+
+    Saving over an existing store is its compaction: ids tombstoned
+    there (:func:`ivf_delete`) are dropped from the lists written, and
+    the tombstone set is cleared once both tables are written — the
+    :func:`stores.compact` rule."""
     import os
 
+    lists = index["lists"]
+    spark = lists.sparkSession
+    tomb = stores.read_tombstones(spark, path, _ivf_id_col(lists))
+    if tomb is not None:
+        lists = lists.join(tomb, _ivf_id_col(lists), "left_anti")
     index["centroids"].write.mode("overwrite").parquet(
         os.path.join(path, "centroids.parquet")
     )
-    index["lists"].write.mode("overwrite").partitionBy("bucket").parquet(
+    lists.write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(path, "lists.parquet")
     )
+    if tomb is not None:
+        stores.clear_tombstones(spark, path)
 
 
 def load_ivf_index(spark, path: str) -> dict[str, DataFrame]:
     """Load a persisted IVF index. Tombstoned ids (:func:`ivf_delete`)
     are anti-joined out of the lists here — queries and appends
     through the loaded index never see them. IVF's physical delete is
-    a REBUILD (build_ivf_index + save_ivf_index over the surviving
-    corpus): the lists hold full vectors partitioned by bucket, so a
-    periodic rebuild IS the store's compaction — there is no separate
-    rewrite path to keep tombstones alive in."""
+    a REBUILD (build_ivf_index + save_ivf_index): the lists hold full
+    vectors partitioned by bucket, so a periodic rebuild IS the store's
+    compaction — save_ivf_index drops the tombstoned ids and clears
+    the set."""
     return {
         "centroids": stores.read_live(spark, path, "centroids.parquet"),
         "lists": stores.read_live(spark, path, "lists.parquet", _ivf_id_col),
@@ -866,23 +876,27 @@ def pq_codebooks(
     w = dim // m
     subs = _pq_subspaces(spread(base), id_col, id_col, vec_col, m, w)
     sw = Window.partitionBy("sub_j").orderBy(id_col)
-    seeds = (
-        subs.withColumn("__rn", F.row_number().over(sw))
-        .filter(F.col("__rn") <= ks)
-        .select(
-            "sub_j",
-            (F.col("__rn") - 1).alias("cent_id"),
-            F.col("sub").alias("cent_emb"),
+    with Frames() as frames:
+        seeds = frames.pin(
+            subs.withColumn("__rn", F.row_number().over(sw))
+            .filter(F.col("__rn") <= ks)
+            .select(
+                "sub_j",
+                (F.col("__rn") - 1).alias("cent_id"),
+                F.col("sub").alias("cent_emb"),
+            ),
+            eager=True,
         )
-        .localCheckpoint()
-    )
-    vecs = subs.select("sub_j", F.col(id_col), F.col("sub").alias("__v"))
-    cents = _lloyd(vecs, seeds, iters, ["sub_j"], id_col)
-    return cents.select(
-        "sub_j",
-        F.col("cent_id").alias("code_id"),
-        F.col("cent_emb").alias("codeword"),
-    )
+        vecs = subs.select("sub_j", F.col(id_col), F.col("sub").alias("__v"))
+        cents = _lloyd(frames, vecs, seeds, iters, ["sub_j"], id_col)
+        return frames.attach(
+            cents.select(
+                "sub_j",
+                F.col("cent_id").alias("code_id"),
+                F.col("cent_emb").alias("codeword"),
+            ),
+            cents,
+        )
 
 
 def _pq_encode(subs: DataFrame, cb: DataFrame, id_col: str) -> DataFrame:
@@ -1121,6 +1135,7 @@ def _nsw_level(id_col: str, max_level: int) -> "F.Column":
 
 
 def _knn_edges(
+    frames: Frames,
     sub: DataFrame,
     M: int,
     iters: int,
@@ -1135,9 +1150,9 @@ def _knn_edges(
     NN-descent exchange — my neighbor's neighbors are my candidates —
     keeping the top-``M`` by cosine per node. Every round is
     spine-bounded: ≤ (2M)² candidates per node, embeddings re-joined
-    id-keyed only for NEW pairs; localCheckpoint truncates the
-    iterative lineage (the t21 re-expansion lesson). Returns directed
-    edges (src, dst, sim)."""
+    id-keyed only for NEW pairs; every round is pinned in ``frames``,
+    replacing the last (the t21 re-expansion lesson). Returns directed
+    edges (src, dst, sim), held by ``frames``."""
     ids = sub.select(F.col(id_col), F.col(vec_col))
     bucket_tbl = F.posexplode(
         F.array(*[sign_bucket(vec_col, bits, t * bits) for t in range(tables)])
@@ -1164,16 +1179,17 @@ def _knn_edges(
         .distinct()
     )
     w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
-    edges = (
+    edges = frames.pin(
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= M)
-        .select("src", "dst", "sim")
-        .localCheckpoint(eager=True)
+        .select("src", "dst", "sim"),
+        eager=True,
     )
-    return _nn_descent_rounds(edges, ids, M, iters, id_col, vec_col)
+    return _nn_descent_rounds(frames, edges, ids, M, iters, id_col, vec_col)
 
 
 def _nn_descent_rounds(
+    frames: Frames,
     edges: DataFrame,
     ids: DataFrame,
     M: int,
@@ -1187,8 +1203,9 @@ def _nn_descent_rounds(
     (round 14): each round expands neighbor-of-neighbor candidates,
     scores only never-seen pairs id-keyed against ``ids``' vectors,
     and re-prunes to top-``M`` per src. Spine-bounded per round
-    (≤ (2M)² candidates per node); localCheckpoint truncates the
-    iterative lineage. ``edges`` must carry (src, dst, sim)."""
+    (≤ (2M)² candidates per node); each round's pin in ``frames``
+    truncates the iterative lineage and replaces the last round's.
+    ``edges`` must carry (src, dst, sim)."""
     w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
     av = ids.select(F.col(id_col).alias("src"), F.col(vec_col).alias("__a"))
     cv = ids.select(F.col(id_col).alias("dst"), F.col(vec_col).alias("__c"))
@@ -1216,12 +1233,13 @@ def _nn_descent_rounds(
             .join(cv, "dst")
             .select("src", "dst", _sim("__a", "__c").alias("sim"))
         )
-        edges = (
+        edges = frames.pin(
             edges.unionByName(fresh)
             .withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= M)
-            .select("src", "dst", "sim")
-            .localCheckpoint(eager=True)
+            .select("src", "dst", "sim"),
+            eager=True,
+            replaces=(edges,),
         )
     return edges
 
@@ -1256,41 +1274,48 @@ def nsw_build_graph(
     cheaper than 4 checkpointed NN-descent rounds and strictly better
     edges). The graph is an id-keyed table that partitions like any
     other (persist it next to the embeddings; rebuild cadence is the
-    same trade as compact_minhash_store)."""
-    levels = base.select(
-        F.col(id_col), F.col(vec_col),
-        _nsw_level(id_col, max_level).alias("__lvl"),
-    ).localCheckpoint(eager=True)
-    # layer sizes: one (max_level+1)-row agg — bounded
-    sizes = {
-        r["__lvl"]: r["n"]
-        for r in levels.groupBy("__lvl").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    out = None
-    for l in range(0, max_level + 1):
-        sub = levels.filter(F.col("__lvl") >= l)
-        n_layer = sum(n for lv, n in sizes.items() if lv >= l)
-        if n_layer == 0:
-            continue
-        if n_layer <= exact_threshold:
-            a = sub.select(F.col(id_col).alias("src"), F.col(vec_col).alias("__a"))
-            b = sub.select(F.col(id_col).alias("dst"), F.col(vec_col).alias("__b"))
-            scored = a.join(b, F.col("src") != F.col("dst")).select(
-                "src", "dst", _sim("__a", "__b").alias("sim")
-            )
-            w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
-            e = (
-                scored.withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= M)
-                .select("src", "dst", "sim")
-            )
-        else:
-            e = _knn_edges(sub, M, iters, id_col, vec_col, bits, tables)
-        e = e.select(
-            F.lit(l).cast("int").alias("level"), "src", "dst", "sim"
+    same trade as compact_minhash_store). The pins the returned graph
+    reads are attached to it (``cacheutil.release(result)``)."""
+    with Frames() as frames:
+        levels = frames.pin(
+            base.select(
+                F.col(id_col), F.col(vec_col),
+                _nsw_level(id_col, max_level).alias("__lvl"),
+            ),
+            eager=True,
         )
-        out = e if out is None else out.unionByName(e)
-    return out
+        read = [levels]  # the pins the returned union reads
+        # layer sizes: one (max_level+1)-row agg — bounded
+        sizes = {
+            r["__lvl"]: r["n"]
+            for r in levels.groupBy("__lvl").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        out = None
+        for l in range(0, max_level + 1):
+            sub = levels.filter(F.col("__lvl") >= l)
+            n_layer = sum(n for lv, n in sizes.items() if lv >= l)
+            if n_layer == 0:
+                continue
+            if n_layer <= exact_threshold:
+                a = sub.select(F.col(id_col).alias("src"), F.col(vec_col).alias("__a"))
+                b = sub.select(F.col(id_col).alias("dst"), F.col(vec_col).alias("__b"))
+                scored = a.join(b, F.col("src") != F.col("dst")).select(
+                    "src", "dst", _sim("__a", "__b").alias("sim")
+                )
+                w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
+                e = (
+                    scored.withColumn("rnk", F.row_number().over(w))
+                    .filter(F.col("rnk") <= M)
+                    .select("src", "dst", "sim")
+                )
+            else:
+                e = _knn_edges(frames, sub, M, iters, id_col, vec_col, bits, tables)
+                read.append(e)
+            e = e.select(
+                F.lit(l).cast("int").alias("level"), "src", "dst", "sim"
+            )
+            out = e if out is None else out.unionByName(e)
+        return out if out is None else frames.attach(out, *read)
 
 
 def nsw_topk(
@@ -1314,172 +1339,144 @@ def nsw_topk(
     HNSW zoom-out phase), ``hops`` beam-search hops at layer 0 — each
     hop expanding the current beam's out-edges, exact-cosine scoring
     candidate (query, node) pairs (re-scores of already-seen pairs are
-    bit-identical and dedup away — round 16), and keeping the best ``beam``
-    per query as the next frontier. Returns the brute-force-shaped
-    (q_id, vec_id, sim, rnk) top-``k`` from everything visited.
+    bit-identical and dedup away), and keeping the best ``beam`` per
+    query as the next frontier. Returns the brute-force-shaped
+    (q_id, vec_id, sim, rnk) top-``k`` from everything visited; the
+    final visited set it reads is attached to it
+    (``cacheutil.release(result)``).
 
-    Spark shape: queries broadcast everywhere; candidate expansion is
-    frontier ⋈ edges (≤ beam·2M rows per query per hop); scoring
-    joins raw vectors id-keyed for the candidate sliver only (the
-    ann_refine discipline); each hop localCheckpoints the visited set
-    so the driver loop's plan stays flat. Search cost is
-    O(queries · beam · M · hops) — independent of N given the graph,
-    which is the point of graph ANN at 100 TB.
-
-    Round 15 (optimization): every per-hop frame that is bounded by
-    the QUERY batch (frontier, candidate sliver, visited keys) is
-    broadcast explicitly, so the two N-sized tables — the edge list
-    and the vector store — are joined as the STREAM side and never
-    shuffled (before, the planner picked sort-merge joins at store
-    scale and re-shuffled both every hop). The per-hop edge
-    ``distinct`` is gone outright: the candidate frame is distinct-ed
-    after the frontier join anyway, so dedup-ing the undirected edge
-    list first only added a full-graph exchange per hop with no
-    effect on results. Everything broadcast here is
-    O(queries · beam · M · hops) rows of ids — the same sliver the
-    docstring above already commits to broadcasting (q itself); for a
-    query batch too large for that posture, fall back to brute/IVF
-    routing, not beam search — and since round 16 the broadcast hints
-    are GUARDED (r15 ADVICE): a batch whose estimated per-hop state
-    exceeds ``SPARK_GRAFT_NSW_BCAST_ROWS`` (default 4M rows) degrades
-    to planner-chosen joins instead of failing on the broadcast cap.
-    Recall is audited
-    (≥ floor vs brute force) in tests and the x_ann_hnsw gate; like
-    every ANN op here the trade is recall-vs-scan, never exactness of
+    Spark shape: candidate expansion is frontier ⋈ edges (≤ beam·2M
+    rows per query per hop); scoring joins raw vectors id-keyed for
+    the candidate sliver only (the ann_refine discipline); each hop's
+    visited set is pinned and replaces the last, so the driver loop's
+    plan stays flat. Search cost is O(queries · beam · M · hops) —
+    independent of N given the graph, the point of graph ANN at
+    100 TB. Every per-hop frame bounded by the QUERY batch (frontier,
+    candidate sliver, visited keys) is broadcast, so the two N-sized
+    tables — edge list and vector store — stream and are never
+    shuffled; a batch whose estimated per-hop state exceeds
+    ``SPARK_GRAFT_NSW_BCAST_ROWS`` (default 4M rows) degrades to
+    planner-chosen joins instead of failing on the broadcast cap.
+    Recall is audited (≥ floor vs brute force) in tests and the
+    x_ann_hnsw gate; the trade is recall-vs-scan, never exactness of
     the arithmetic (6-dp cosine, id tie-breaks).
 
-    ``exclude`` (round 15 — the persisted index's takedown path):
+    ``exclude`` (the persisted index's takedown path):
     ids in this frame are dropped from the FINAL top-k but still
     ROUTE — they stay scoreable beam members whose out-edges expand,
     the classic HNSW soft-delete: physically severing a deleted hub's
     edges at query time would disconnect its neighborhood and silently
     crater recall; the physical removal belongs to compact_nsw_graph,
     whose NN-descent refresh re-links around the hole."""
-    if graph is None:
-        graph = nsw_build_graph(
-            base, M=M, iters=iters, max_level=max_level,
-            id_col=id_col, vec_col=vec_col,
+    with Frames() as frames:
+        if graph is None:
+            graph = frames.own(nsw_build_graph(
+                base, M=M, iters=iters, max_level=max_level,
+                id_col=id_col, vec_col=vec_col,
+            ))
+        if pin_graph:
+            # derived graphs must be pinned or every hop re-runs the
+            # build; STORE-read graphs pass pin_graph=False (a flat
+            # parquet scan needs no materialization job per query)
+            graph = frames.pin(graph, eager=True)
+        # pin the query sliver once: every hop broadcasts it (scoring) and
+        # derives per-hop state from it — without the checkpoint each
+        # broadcast build re-runs the caller's query-frame lineage
+        # (round 16; also makes the guard count below a ~free job)
+        q = frames.pin(
+            queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")),
+            eager=True,
         )
-    if pin_graph:
-        # derived graphs (one-shot build) must be pinned or every hop
-        # re-runs the whole NN-descent build; STORE-read graphs pass
-        # pin_graph=False (round 16) — their lineage is already a flat
-        # parquet scan, and the eager checkpoint only added a full
-        # graph materialization job per query call
-        graph = graph.localCheckpoint(eager=True)
-    # pin the query sliver once: every hop broadcasts it (scoring) and
-    # derives per-hop state from it — without the checkpoint each
-    # broadcast build re-runs the caller's query-frame lineage
-    # (round 16; also makes the guard count below a ~free job)
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")
-    ).localCheckpoint(eager=True)
-    # broadcast-posture guard (round-15 ADVICE, enforced): everything
-    # hinted below is O(n_q · beam · M · hops) rows of ids/sims — fine
-    # for the query batches this operator is FOR, but a caller feeding
-    # a corpus-sized batch must degrade to planner-chosen joins (which
-    # shuffle but never exceed memory) instead of failing on the
-    # broadcast size cap / driver heap. The estimate deliberately
-    # overcounts (every hop fully fresh).
-    n_q = q.count()
-    est_rows = n_q * beam * (M + 1) * (hops + max_level + 1)
-    bcast_budget = int(os.environ.get("SPARK_GRAFT_NSW_BCAST_ROWS", "4000000"))
-    hint = F.broadcast if est_rows <= bcast_budget else (lambda df: df)
-    bvec = base.select(F.col(id_col).alias("node"), F.col(vec_col).alias("__b"))
+        # broadcast-posture guard: everything hinted below is
+        # O(n_q · beam · M · hops) rows; a corpus-sized batch degrades to
+        # planner-chosen joins instead of failing on the broadcast cap.
+        # The estimate deliberately overcounts (every hop fully fresh).
+        n_q = q.count()
+        est_rows = n_q * beam * (M + 1) * (hops + max_level + 1)
+        bcast_budget = int(os.environ.get("SPARK_GRAFT_NSW_BCAST_ROWS", "4000000"))
+        hint = F.broadcast if est_rows <= bcast_budget else (lambda df: df)
+        bvec = base.select(F.col(id_col).alias("node"), F.col(vec_col).alias("__b"))
 
-    def score(cand: DataFrame) -> DataFrame:
-        # broadcast the candidate sliver so the vector table streams
-        # (scanned, never shuffled) — the ann_refine discipline. The
-        # sliver CARRIES q_emb (round 16), so scoring needs no second
-        # broadcast of the query frame per hop.
-        return (
-            bvec.join(hint(cand), "node")
-            .filter(F.col("node") != F.col("q_id"))
-            .select("q_id", "node", _sim("q_emb", "__b").alias("sim"), "q_emb")
-        )
-
-    # enter at the highest NON-EMPTY layer (a tiny corpus may draw no
-    # node at max_level); 1-row bounded scalar collect
-    top_lvl = graph.agg(F.max("level")).collect()[0][0]
-    top_nodes = graph.filter(F.col("level") == top_lvl).select(
-        F.col("src").alias("node")
-    ).distinct()
-    # visited rows are (q_id, node, sim, q_emb, rnk): sim-scored pairs
-    # with the query vector riding along and the per-query beam rank
-    # PRE-COMPUTED into the checkpoint, so every per-hop frame is
-    # self-contained. Round 16 hop-state restructure (guide §2.6, the
-    # r15 VERDICT's nsw_query_index job-count item) — the r15 hop paid
-    # 4 broadcast builds + window exchange + distinct exchange + dedup
-    # per hop; this shape pays ONE shuffle (repartition by q_id, which
-    # the dedup aggregate AND the rank window then both satisfy via
-    # the subset rule) and TWO broadcast builds per hop:
-    # - q_emb rides inside frontier/cand (no per-hop query-frame
-    #   broadcast);
-    # - the seen-set anti-join and the candidate distinct are replaced
-    #   by ONE post-union dropDuplicates((q_id, node, sim)): exact
-    #   cosine is deterministic, so a re-scored already-seen or
-    #   duplicate candidate row is BIT-IDENTICAL to its stored twin
-    #   and dedup yields exactly the visited set the anti-join form
-    #   maintained (same rows each hop ⇒ same frontier trajectory ⇒
-    #   same result; equivalence pinned in test_similarity);
-    # - the beam rank lands in the checkpoint, so the next frontier is
-    #   a FILTER over the materialized state — no window re-shuffle.
-    wbeam = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("node"))
-
-    def finish_state(vframe: DataFrame) -> DataFrame:
-        return (
-            vframe.repartition("q_id")
-            .dropDuplicates(["q_id", "node", "sim"])
-            .withColumn("rnk", F.row_number().over(wbeam))
-            .localCheckpoint(eager=True)
-        )
-
-    visited = finish_state(score(q.crossJoin(hint(top_nodes))))
-    # descend from the graph's OWN top layer, not the max_level
-    # parameter (round-14 ADVICE): a prebuilt/persisted graph built
-    # deeper than the default would otherwise have its upper layers'
-    # edges never expanded — entry-point scoring only — silently
-    # degrading the coarse-to-fine routing
-    for l in range((-1 if top_lvl is None else top_lvl), -1, -1):
-        # no edge-level distinct: duplicate directed edges only make
-        # duplicate candidates, which dedup away after scoring
-        edges = graph.filter(F.col("level") == l).select("src", "dst")
-        edges = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        for _ in range(hops if l == 0 else 1):
-            frontier = visited.filter(F.col("rnk") <= beam).select(
-                "q_id", F.col("node").alias("src"), "q_emb"
+        def score(cand: DataFrame) -> DataFrame:
+            # broadcast the candidate sliver so the vector table streams
+            # (never shuffled); the sliver carries q_emb, so the query
+            # frame is not broadcast again per hop
+            return (
+                bvec.join(hint(cand), "node")
+                .filter(F.col("node") != F.col("q_id"))
+                .select("q_id", "node", _sim("q_emb", "__b").alias("sim"), "q_emb")
             )
-            cand = edges.join(hint(frontier), "src").select(
-                "q_id", F.col("dst").alias("node"), "q_emb"
+
+        # enter at the highest NON-EMPTY layer (a tiny corpus may draw no
+        # node at max_level); 1-row bounded scalar collect
+        top_lvl = graph.agg(F.max("level")).collect()[0][0]
+        top_nodes = graph.filter(F.col("level") == top_lvl).select(
+            F.col("src").alias("node")
+        ).distinct()
+        # visited rows are (q_id, node, sim, q_emb, rnk): scored pairs with
+        # the query vector riding along and the beam rank PRE-COMPUTED
+        # into the pin, so the next frontier is a filter, not a window
+        # re-shuffle. Per hop: ONE shuffle (repartition by q_id, which the
+        # dedup aggregate and the rank window both satisfy) and two
+        # broadcast builds. One post-union dropDuplicates((q_id, node,
+        # sim)) replaces a seen-set anti-join: exact cosine is
+        # deterministic, so a re-scored pair is BIT-IDENTICAL to its
+        # stored twin (equivalence pinned in test_similarity).
+        wbeam = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("node"))
+
+        def finish_state(vframe: DataFrame, prev: DataFrame | None) -> DataFrame:
+            # the union subsumed every row of the previous hop's state
+            return frames.pin(
+                vframe.repartition("q_id")
+                .dropDuplicates(["q_id", "node", "sim"])
+                .withColumn("rnk", F.row_number().over(wbeam)),
+                eager=True,
+                replaces=(prev,),
             )
-            prev_visited = visited
-            visited = finish_state(
-                visited.select("q_id", "node", "sim", "q_emb").unionByName(
-                    score(cand)
+
+        visited = finish_state(score(q.crossJoin(hint(top_nodes))), None)
+        # descend from the graph's OWN top layer, not the max_level
+        # parameter: a prebuilt graph built deeper would otherwise never
+        # expand its upper layers' edges
+        for l in range((-1 if top_lvl is None else top_lvl), -1, -1):
+            # no edge-level distinct: duplicate directed edges only make
+            # duplicate candidates, which dedup away after scoring
+            edges = graph.filter(F.col("level") == l).select("src", "dst")
+            edges = edges.unionByName(
+                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            )
+            for _ in range(hops if l == 0 else 1):
+                frontier = visited.filter(F.col("rnk") <= beam).select(
+                    "q_id", F.col("node").alias("src"), "q_emb"
                 )
+                cand = edges.join(hint(frontier), "src").select(
+                    "q_id", F.col("dst").alias("node"), "q_emb"
+                )
+                visited = finish_state(
+                    visited.select("q_id", "node", "sim", "q_emb").unionByName(
+                        score(cand)
+                    ),
+                    visited,
+                )
+        found = visited
+        if exclude is not None:
+            found = found.join(
+                exclude.select(F.col(id_col).alias("node")).distinct(),
+                "node",
+                "left_anti",
             )
-            # the union subsumed every previous row — the prior hop's
-            # blocks are dead (r15 ADVICE leak flag)
-            release_checkpoint(prev_visited)
-    if exclude is not None:
-        visited = visited.join(
-            exclude.select(F.col(id_col).alias("node")).distinct(),
-            "node",
-            "left_anti",
+        return frames.attach(
+            found.drop("q_emb")  # internal hop-state column
+            .withColumnRenamed("node", id_col)
+            .withColumn(
+                "rnk",
+                F.row_number()
+                .over(Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc(id_col)))
+                .cast("bigint"),
+            )
+            .filter(F.col("rnk") <= k),
+            visited,
         )
-    return (
-        visited.drop("q_emb")  # internal hop-state column
-        .withColumnRenamed("node", id_col)
-        .withColumn(
-            "rnk",
-            F.row_number()
-            .over(Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc(id_col)))
-            .cast("bigint"),
-        )
-        .filter(F.col("rnk") <= k)
-    )
 
 
 def save_nsw_index(
@@ -1546,47 +1543,54 @@ def nsw_index_append(
     old_vecs = stores.read_live(
         spark, store_path, "vectors", required_names=(id_col, vec_col)
     )
-    newv = new_vectors.select(
-        F.col(id_col), F.col(vec_col),
-        _nsw_level(id_col, max_level).alias("__lvl"),
-    ).localCheckpoint(eager=True)
-    old_lvl = old_vecs.select(
-        F.col(id_col), F.col(vec_col),
-        _nsw_level(id_col, max_level).alias("__lvl"),
-    )
-    edges = None
-    for l in range(0, max_level + 1):
-        nq = newv.filter(F.col("__lvl") >= l).drop("__lvl")
-        if nq.isEmpty():
-            continue
-        old_l = old_lvl.filter(F.col("__lvl") >= l).drop("__lvl")
-        graph_l = graph.filter(F.col("level") >= l)
-        batch_edges = _knn_edges(
-            nq, M, 1, id_col, vec_col, bits=4, tables=3
-        ).select(F.lit(l).cast("int").alias("level"), "src", "dst", "sim")
-        edges = (
-            batch_edges if edges is None else edges.unionByName(batch_edges)
+    with Frames() as frames:
+        newv = frames.pin(
+            new_vectors.select(
+                F.col(id_col), F.col(vec_col),
+                _nsw_level(id_col, max_level).alias("__lvl"),
+            ),
+            eager=True,
         )
-        if old_l.isEmpty() or graph_l.isEmpty():
-            continue
-        found = nsw_topk(
-            old_l, nq, k=M, graph=graph_l, beam=beam, hops=hops,
-            id_col=id_col, vec_col=vec_col,
-        ).select(
-            F.lit(l).cast("int").alias("level"),
-            F.col("q_id").alias("src"),
-            F.col(id_col).alias("dst"),
-            "sim",
+        old_lvl = old_vecs.select(
+            F.col(id_col), F.col(vec_col),
+            _nsw_level(id_col, max_level).alias("__lvl"),
         )
-        found = found.localCheckpoint(eager=True)
-        rev = found.select(
-            "level", F.col("dst").alias("src"), F.col("src").alias("dst"),
-            "sim",
-        )
-        edges = edges.unionByName(found).unionByName(rev)
-    newv.drop("__lvl").write.mode("append").parquet(f"{store_path}/vectors")
-    if edges is not None:
-        edges.write.mode("append").parquet(f"{store_path}/graph")
+        edges = None
+        for l in range(0, max_level + 1):
+            nq = newv.filter(F.col("__lvl") >= l).drop("__lvl")
+            if nq.isEmpty():
+                continue
+            old_l = old_lvl.filter(F.col("__lvl") >= l).drop("__lvl")
+            graph_l = graph.filter(F.col("level") >= l)
+            batch_edges = _knn_edges(
+                frames, nq, M, 1, id_col, vec_col, bits=4, tables=3
+            ).select(F.lit(l).cast("int").alias("level"), "src", "dst", "sim")
+            edges = (
+                batch_edges if edges is None else edges.unionByName(batch_edges)
+            )
+            if old_l.isEmpty() or graph_l.isEmpty():
+                continue
+            found = frames.own(nsw_topk(
+                old_l, nq, k=M, graph=graph_l, beam=beam, hops=hops,
+                id_col=id_col, vec_col=vec_col,
+            ))
+            found = frames.pin(
+                found.select(
+                    F.lit(l).cast("int").alias("level"),
+                    F.col("q_id").alias("src"),
+                    F.col(id_col).alias("dst"),
+                    "sim",
+                ),
+                eager=True,
+            )
+            rev = found.select(
+                "level", F.col("dst").alias("src"), F.col("src").alias("dst"),
+                "sim",
+            )
+            edges = edges.unionByName(found).unionByName(rev)
+        newv.drop("__lvl").write.mode("append").parquet(f"{store_path}/vectors")
+        if edges is not None:
+            edges.write.mode("append").parquet(f"{store_path}/graph")
 
 
 def nsw_query_index(
@@ -1771,11 +1775,11 @@ def compact_nsw_graph(
     overflow the cap), then swap generations under the
     :func:`stores.compact` quiet-window contract.
 
-    ``select`` (round 14 — the depth soak showed recall@5 dipping
-    from ~1.0 to ~0.76 right after a compaction): ``"topm"`` prunes
-    each (level, src) adjacency to the M most-similar neighbors —
-    cheap, but it collapses the adjacency toward one tight cluster
-    and drops the long-range edges beam search navigates by;
+    ``select``: ``"topm"`` prunes each (level, src) adjacency to the
+    M most-similar neighbors — cheap, but it collapses the adjacency
+    toward one tight cluster and drops the long-range edges beam
+    search navigates by (recall@5 dipped ~1.0 → ~0.76 right after a
+    compaction in the depth soak);
     ``"heuristic"`` prunes with HNSW's diversity rule instead
     (:func:`_select_neighbors_heuristic` — keep a candidate only if
     it is closer to the node than to every already-kept neighbor,
@@ -1808,7 +1812,7 @@ def compact_nsw_graph(
             g = g.join(
                 tomb.select(F.col(id_col).alias("src")), "src", "left_anti"
             ).join(tomb.select(F.col(id_col).alias("dst")), "dst", "left_anti")
-            vecs = vecs.localCheckpoint(eager=True)
+            vecs = frames.pin(vecs, eager=True)
         if select == "heuristic":
             pruned = _select_neighbors_heuristic(g, vecs, M, id_col, vec_col)
         else:
@@ -1821,7 +1825,7 @@ def compact_nsw_graph(
                 .select("level", "src", "dst", "sim")
             )
         if refresh_iters > 0:
-            pruned = pruned.localCheckpoint(eager=True)
+            pruned = frames.pin(pruned, eager=True)
             # bounded scalar collect: one row per populated layer.
             # An EMPTY pruned graph (store compacted before any edge
             # landed) has no layers — skip the refresh and write the
@@ -1836,7 +1840,7 @@ def compact_nsw_graph(
                     "src", "dst", "sim"
                 )
                 e = _nn_descent_rounds(
-                    e, vecs, M, refresh_iters, id_col, vec_col
+                    frames, e, vecs, M, refresh_iters, id_col, vec_col
                 )
                 parts.append(
                     e.select(
@@ -1855,20 +1859,22 @@ def compact_nsw_graph(
             out["vectors"] = vecs
         return out
 
-    stores.compact(
-        spark,
-        store_path,
-        {
-            "graph": {
-                "required": "level int, sim double",
-                "required_names": ("src", "dst"),
+    # the rewrite's pins live until the generation swap has written them
+    with Frames() as frames:
+        stores.compact(
+            spark,
+            store_path,
+            {
+                "graph": {
+                    "required": "level int, sim double",
+                    "required_names": ("src", "dst"),
+                },
+                "vectors": {"required_names": (id_col, vec_col)},
             },
-            "vectors": {"required_names": (id_col, vec_col)},
-        },
-        rewrite,
-        id_col=id_col,
-        bytes_per_file=bytes_per_file,
-    )
+            rewrite,
+            id_col=id_col,
+            bytes_per_file=bytes_per_file,
+        )
 
 
 def embedding_near_dup_pairs(
@@ -2156,7 +2162,8 @@ def power_iteration_top(
     iterations touch d² = 4096 rows. Quantization costs ~3 decimal
     digits of input precision — fine for a parity-checkable reference
     eigenvector; production fits stay on ``pca_fit``'s float eigh.
-    Returns (dim, loading) with Σ loading² ≈ 1.
+    Returns (dim, loading) with Σ loading² ≈ 1; the last product it
+    reads is attached to it (``cacheutil.release(result)``).
     """
     q = df.select(
         F.col(id_col),
@@ -2201,38 +2208,44 @@ def power_iteration_top(
         .cast("bigint")
         .alias("mq"),
     )
-    mq = mq.localCheckpoint(eager=True)  # truncate the moment lineage once
     spark = df.sparkSession
-    v = spark.range(dims).select(
-        F.col("id").cast("int").alias("i"),
-        F.lit(125000000).cast("bigint").alias("vq"),
-    )
-    for _ in range(iters):
-        # each round references w twice (norm² and the update), so
-        # without a cut the lazy plan doubles per round — checkpoint
-        # the 64-row product once per iteration (label_propagation's
-        # loop pattern) to keep the plan linear in iters
-        w = (
-            mq.join(v, mq["mj"] == v["i"])
-            .groupBy(F.col("mi").alias("wi"))
-            .agg(F.sum(F.col("mq") * F.col("vq")).alias("wq"))
-        ).localCheckpoint(eager=True)
-        n2 = w.agg(
-            F.sum(
-                F.col("wq").cast("decimal(38,0)") * F.col("wq").cast("decimal(38,0)")
-            ).alias("n2")
+    with Frames() as frames:
+        mq = frames.pin(mq, eager=True)  # truncate the moment lineage once
+        v = spark.range(dims).select(
+            F.col("id").cast("int").alias("i"),
+            F.lit(125000000).cast("bigint").alias("vq"),
         )
-        v = w.crossJoin(F.broadcast(n2)).select(
-            F.col("wi").alias("i"),
-            F.round(
-                F.col("wq").cast("double")
-                / F.sqrt(F.col("n2").cast("double"))
-                * F.lit(1000000000.0)
+        w = None
+        for _ in range(iters):
+            # w is read twice per round (norm² and the update): pin the
+            # 64-row product so the plan stays linear in iters
+            w = frames.pin(
+                mq.join(v, mq["mj"] == v["i"])
+                .groupBy(F.col("mi").alias("wi"))
+                .agg(F.sum(F.col("mq") * F.col("vq")).alias("wq")),
+                eager=True,
+                replaces=(w,),
             )
-            .cast("bigint")
-            .alias("vq"),
+            n2 = w.agg(
+                F.sum(
+                    F.col("wq").cast("decimal(38,0)")
+                    * F.col("wq").cast("decimal(38,0)")
+                ).alias("n2")
+            )
+            v = w.crossJoin(F.broadcast(n2)).select(
+                F.col("wi").alias("i"),
+                F.round(
+                    F.col("wq").cast("double")
+                    / F.sqrt(F.col("n2").cast("double"))
+                    * F.lit(1000000000.0)
+                )
+                .cast("bigint")
+                .alias("vq"),
+            )
+        return frames.attach(
+            v.select(
+                F.col("i").cast("bigint").alias("dim"),
+                (F.col("vq").cast("double") / F.lit(1000000000.0)).alias("loading"),
+            ),
+            w,
         )
-    return v.select(
-        F.col("i").cast("bigint").alias("dim"),
-        (F.col("vq").cast("double") / F.lit(1000000000.0)).alias("loading"),
-    )

@@ -19,7 +19,8 @@ Three verbs, one rule set:
   delete-file design of Delta/Iceberg.
 - :func:`compact` — the quiet-window rewrite: mergeSchema read of
   every subdir, a family rewrite, a generation swap per subdir, and
-  the tombstones cleared only after every swap.
+  the tombstones cleared (:func:`clear_tombstones`) only after every
+  swap.
 """
 
 from __future__ import annotations
@@ -187,6 +188,13 @@ def delete(ids: DataFrame, store_path: str, id_col: str = "doc_id") -> None:
     )
 
 
+def clear_tombstones(spark, store_path: str) -> None:
+    """Drop a store's tombstone set — strictly after every table that
+    dropped the tombstoned rows is written (see :func:`compact`)."""
+    fs, jpath = _fs_path(spark, f"{store_path}/tombstones")
+    fs.delete(jpath, True)
+
+
 def _local_store_path(store_path: str) -> str:
     """The generation swap is two local renames: refuse a non-local
     URI before anything is written (no orphaned ``__compacting``
@@ -277,4 +285,4 @@ def compact(
     for s, frame in out.items():
         _swap(frame, store_path, s, bytes_per_file, raw[s])
     if tomb is not None:
-        shutil.rmtree(f"{store_path}/tombstones", ignore_errors=True)
+        clear_tombstones(spark, store_path)

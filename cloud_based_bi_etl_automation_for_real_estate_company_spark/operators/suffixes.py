@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .cacheutil import Frames
 from .ranking import global_dense_rank, global_dense_rank_pair, global_row_number
 
 # Largest total suffix-position count n for which the doubling-round
@@ -77,9 +78,11 @@ def suffix_ranks(
     """Dense corpus-wide suffix ranks by prefix doubling: returns
     ``(id, pos, rank)`` where equal ranks mean IDENTICAL suffixes
     (cross-document included) and rank order is suffix string order.
-    Every round localCheckpoints (the frame is referenced twice per
-    round — the CC-loop rule); the only driver-side values are the
-    max suffix length, the convergence scalar, and the ALPHABET.
+    Every round is pinned (it is read twice per round) and replaces the
+    last; the result holds the final table (with ``keep_history``,
+    every level's) until ``cacheutil.release(result)``. The only
+    driver-side values are the max suffix length, the convergence
+    scalar, and the ALPHABET.
 
     Round 0 uses the classic pack-w shortcut: the distinct characters
     are a bounded artifact (collected, dense-ranked driver-side into
@@ -153,54 +156,59 @@ def suffix_ranks(
             .groupBy(id_col, "pos")
             .agg(F.sum("v").alias("__key"))
         )
-    cur = (
-        global_dense_rank(key0, "__key", rank_col="rank", n_buckets=n_buckets)
-        .select(id_col, "pos", "rank")
-        .localCheckpoint(eager=True)
-    )
-    history = [(w, cur)]
-    stats = cur.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max("rank").alias("r"),
-        F.max(F.col("pos")).alias("p"),
-    ).collect()[0]
-    n, prev_r = stats["n"], stats["r"]
-    maxlen = (stats["p"] or 0) + 1
-    use_pack = (n <= _PACK_SAFE_N) if pair_rank is None else (not pair_rank)
-    k = w
-    while prev_r is not None and prev_r < n and k < maxlen:
-        shifted = cur.select(
-            id_col,
-            (F.col("pos") - F.lit(k)).alias("pos"),
-            F.col("rank").alias("__r2"),
+    with Frames() as frames:
+        cur = frames.pin(
+            global_dense_rank(key0, "__key", rank_col="rank", n_buckets=n_buckets)
+            .select(id_col, "pos", "rank"),
+            eager=True,
         )
-        paired = cur.join(shifted, [id_col, "pos"], "left")
-        if use_pack:
-            keyed = paired.withColumn(
-                "__key",
-                F.col("rank") * F.lit(n + 1) + F.coalesce(F.col("__r2"), F.lit(0)),
+        history = [(w, cur)]
+        stats = cur.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max("rank").alias("r"),
+            F.max(F.col("pos")).alias("p"),
+        ).collect()[0]
+        n, prev_r = stats["n"], stats["r"]
+        maxlen = (stats["p"] or 0) + 1
+        use_pack = (n <= _PACK_SAFE_N) if pair_rank is None else (not pair_rank)
+        k = w
+        while prev_r is not None and prev_r < n and k < maxlen:
+            shifted = cur.select(
+                id_col,
+                (F.col("pos") - F.lit(k)).alias("pos"),
+                F.col("rank").alias("__r2"),
             )
-            reranked = global_dense_rank(
-                keyed, "__key", rank_col="__nr", n_buckets=n_buckets
+            paired = cur.join(shifted, [id_col, "pos"], "left")
+            if use_pack:
+                keyed = paired.withColumn(
+                    "__key",
+                    F.col("rank") * F.lit(n + 1) + F.coalesce(F.col("__r2"), F.lit(0)),
+                )
+                reranked = global_dense_rank(
+                    keyed, "__key", rank_col="__nr", n_buckets=n_buckets
+                )
+            else:
+                # pair rank orders (rank asc, __r2 asc nulls first) —
+                # exactly the packed key's order, since coalesce(r2,0)=0
+                # sorts before every real rank >= 1
+                reranked = global_dense_rank_pair(
+                    paired, "rank", "__r2", rank_col="__nr", n_buckets=n_buckets
+                )
+            # history levels stay held for the LCP descent
+            cur = frames.pin(
+                reranked.select(id_col, "pos", F.col("__nr").alias("rank")),
+                eager=True,
+                replaces=() if keep_history else (cur,),
             )
-        else:
-            # pair rank orders (rank asc, __r2 asc nulls first) —
-            # exactly the packed key's order, since coalesce(r2,0)=0
-            # sorts before every real rank >= 1
-            reranked = global_dense_rank_pair(
-                paired, "rank", "__r2", rank_col="__nr", n_buckets=n_buckets
-            )
-        cur = (
-            reranked.select(id_col, "pos", F.col("__nr").alias("rank"))
-            .localCheckpoint(eager=True)
-        )
-        new_r = cur.agg(F.max("rank")).collect()[0][0]
-        if new_r == prev_r:  # partition stopped refining: fixpoint
-            break
-        history.append((2 * k, cur))
-        prev_r = new_r
-        k *= 2
-    return (cur, history) if keep_history else cur
+            new_r = cur.agg(F.max("rank")).collect()[0][0]
+            if new_r == prev_r:  # partition stopped refining: fixpoint
+                break
+            history.append((2 * k, cur))
+            prev_r = new_r
+            k *= 2
+        if keep_history:
+            return frames.attach(cur, cur, *(f for _, f in history)), history
+        return frames.attach(cur)
 
 
 def suffix_array(

@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.cacheutil import Frames
 from ..sources.webhook import (
-    ingest_batch,
     project_silver,
     read_webhook_json,
     unwrap_events,
@@ -475,50 +475,56 @@ def stream_drift_gated_ingest(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # the batch feeds the scorers + the routed write — pin it so
-        # the source JSON parse runs once
-        b = batch_df.localCheckpoint(eager=True)
-        psi_row = psi_admit(b, os.path.join(store_path, "psi")).collect()[0]
-        chi_row = chi2_admit(b, os.path.join(store_path, "chi2")).collect()[0]
-        shifted = bool(psi_row["shifted"]) or bool(
-            chi_row["reject_95"] or False
-        )
-        # optional third scorer (round 13): Wasserstein-1 vs its own
-        # t-digest centroid history — value-units "how far did the
-        # distribution move", catching slow location drift PSI's
-        # coarse buckets can smear; enabled by passing a threshold.
-        # Cold start (w1 NULL) admits, like the rest of the family.
-        w1_val, w1_shift = None, None
-        if w1_threshold is not None:
-            w1_row = w1_admit(
-                b, os.path.join(store_path, "w1"), threshold=w1_threshold
+        # the source JSON parse runs once; the batch's pins (and the
+        # scorers' checkpointed score rows) are freed when it ends
+        with Frames() as frames:
+            b = frames.pin(batch_df, eager=True)
+            psi_row = frames.own(
+                psi_admit(b, os.path.join(store_path, "psi"))
             ).collect()[0]
-            w1_val = w1_row["w1_dist"]
-            w1_shift = bool(w1_row["shifted"])
-            shifted = shifted or w1_shift
-        spark.createDataFrame(
-            [
-                (
-                    batch_id,
-                    psi_row["n_batch"],
-                    psi_row["psi"],
-                    bool(psi_row["shifted"]),
-                    chi_row["chi2"],
-                    bool(chi_row["chi2_defined"]),
-                    chi_row["reject_95"],
-                    w1_val,
-                    w1_shift,
-                    "quarantine" if shifted else "out",
-                )
-            ],
-            "batch_id bigint, n_batch bigint, psi double, "
-            "psi_shifted boolean, lang_chi2 double, chi2_defined boolean, "
-            "lang_reject_95 boolean, w1_dist double, w1_shifted boolean, "
-            "route string",
-        ).write.mode("append").parquet(os.path.join(store_path, "monitor"))
-        dest = quarantine_path if shifted else out_path
-        b.withColumn("__batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(dest)
+            chi_row = frames.own(
+                chi2_admit(b, os.path.join(store_path, "chi2"))
+            ).collect()[0]
+            shifted = bool(psi_row["shifted"]) or bool(
+                chi_row["reject_95"] or False
+            )
+            # optional third scorer: Wasserstein-1 vs a t-digest history
+            # catches slow location drift PSI's coarse buckets smear;
+            # armed by a threshold, cold start (w1 NULL) admits
+            w1_val, w1_shift = None, None
+            if w1_threshold is not None:
+                w1_row = frames.own(
+                    w1_admit(
+                        b, os.path.join(store_path, "w1"), threshold=w1_threshold
+                    )
+                ).collect()[0]
+                w1_val = w1_row["w1_dist"]
+                w1_shift = bool(w1_row["shifted"])
+                shifted = shifted or w1_shift
+            spark.createDataFrame(
+                [
+                    (
+                        batch_id,
+                        psi_row["n_batch"],
+                        psi_row["psi"],
+                        bool(psi_row["shifted"]),
+                        chi_row["chi2"],
+                        bool(chi_row["chi2_defined"]),
+                        chi_row["reject_95"],
+                        w1_val,
+                        w1_shift,
+                        "quarantine" if shifted else "out",
+                    )
+                ],
+                "batch_id bigint, n_batch bigint, psi double, "
+                "psi_shifted boolean, lang_chi2 double, chi2_defined boolean, "
+                "lang_reject_95 boolean, w1_dist double, w1_shifted boolean, "
+                "route string",
+            ).write.mode("append").parquet(os.path.join(store_path, "monitor"))
+            dest = quarantine_path if shifted else out_path
+            b.withColumn("__batch_id", F.lit(batch_id)).write.mode(
+                "append"
+            ).parquet(dest)
 
     writer = raw.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint
@@ -584,36 +590,38 @@ def drift_dashboard_batch(
 
     from pyspark.sql import functions as F
 
-    b = batch_df.localCheckpoint(eager=True)
-    _write_batch_partition(
-        b, os.path.join(gold_path, "events_silver"), batch_id
-    )
-    week = F.date_trunc("week", F.col("ts")).cast("date").alias("week")
-    num_delta = (
-        b.withColumn("value", F.floor("value"))
-        .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .groupBy(
-            F.col("event_type"),
-            week,
-            F.col("value").cast("bigint").alias("v"),
+    with Frames() as frames:
+        # the batch feeds three writes; freed once they landed
+        b = frames.pin(batch_df, eager=True)
+        _write_batch_partition(
+            b, os.path.join(gold_path, "events_silver"), batch_id
         )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    _write_batch_partition(
-        num_delta,
-        os.path.join(gold_path, "panel_state", "num_counts"),
-        batch_id,
-    )
-    cat_delta = (
-        b.filter(F.col("event_type").isNotNull() & F.col("ts").isNotNull())
-        .groupBy(week, F.col("event_type").alias("c"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    _write_batch_partition(
-        cat_delta,
-        os.path.join(gold_path, "panel_state", "cat_counts"),
-        batch_id,
-    )
+        week = F.date_trunc("week", F.col("ts")).cast("date").alias("week")
+        num_delta = (
+            b.withColumn("value", F.floor("value"))
+            .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
+            .groupBy(
+                F.col("event_type"),
+                week,
+                F.col("value").cast("bigint").alias("v"),
+            )
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        _write_batch_partition(
+            num_delta,
+            os.path.join(gold_path, "panel_state", "num_counts"),
+            batch_id,
+        )
+        cat_delta = (
+            b.filter(F.col("event_type").isNotNull() & F.col("ts").isNotNull())
+            .groupBy(week, F.col("event_type").alias("c"))
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        _write_batch_partition(
+            cat_delta,
+            os.path.join(gold_path, "panel_state", "cat_counts"),
+            batch_id,
+        )
     if refresh:
         return refresh_drift_panels_incremental(
             spark,
@@ -697,75 +705,74 @@ def refresh_drift_panels_incremental(
         "cat_counts",
         "week date, c string, cnt bigint, __batch_id bigint",
     )
-    num = (
-        num_raw.groupBy("event_type", "week", "v")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
-    cat = cat_raw.groupBy("week", "c").agg(F.sum("cnt").alias("cnt"))
-    hrow = num.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).collect()[0]
-    lo, hi = hrow["lo"], hrow["hi"]
-    lo = int(lo) if lo is not None else None
-    hi = int(hi) if hi is not None else None
-    incremental = (
-        prior is not None and prior["lo"] == lo and prior["hi"] == hi
-    )
+    # the state pins are freed once both panels are published
+    with Frames() as frames:
+        num = frames.pin(
+            num_raw.groupBy("event_type", "week", "v").agg(F.sum("cnt").alias("cnt")),
+            eager=True,
+        )
+        cat = cat_raw.groupBy("week", "c").agg(F.sum("cnt").alias("cnt"))
+        hrow = num.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).collect()[0]
+        lo, hi = hrow["lo"], hrow["hi"]
+        lo = int(lo) if lo is not None else None
+        hi = int(hi) if hi is not None else None
+        incremental = (
+            prior is not None and prior["lo"] == lo and prior["hi"] == hi
+        )
 
-    if incremental:
-        last = int(prior["batch_id"])
-        horizon = F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(ref_weeks)),
-                lambda k: F.date_add(F.col("week"), (k * 7).cast("int")),
+        if incremental:
+            last = int(prior["batch_id"])
+            horizon = F.explode(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(ref_weeks)),
+                    lambda k: F.date_add(F.col("week"), (k * 7).cast("int")),
+                )
+            ).alias("w")
+            aff_num = frames.pin(
+                num_raw.filter(F.col("__batch_id") > last)
+                .select("event_type", horizon)
+                .distinct(),
+                eager=True,
             )
-        ).alias("w")
-        aff_num = (
-            num_raw.filter(F.col("__batch_id") > last)
-            .select("event_type", horizon)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        aff_cat = (
-            cat_raw.filter(F.col("__batch_id") > last)
-            .select(horizon)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        old_drift = read_current(spark, os.path.join(gold_path, "drift_panel"))
-        drift = old_drift.join(
-            aff_num,
-            old_drift["event_type"].eqNullSafe(aff_num["event_type"])
-            & (old_drift["week_start"] == aff_num["w"]),
-            "left_anti",
-        ).unionByName(
-            rolling_drift_from_counts(
-                num,
-                ref_weeks=ref_weeks,
-                n_buckets=n_buckets,
-                out_weeks=aff_num,
+            aff_cat = frames.pin(
+                cat_raw.filter(F.col("__batch_id") > last).select(horizon).distinct(),
+                eager=True,
             )
-        )
-        old_mix = read_current(spark, os.path.join(gold_path, "mix_panel"))
-        mix = old_mix.join(
-            aff_cat, old_mix["week_start"] == aff_cat["w"], "left_anti"
-        ).unionByName(
-            rolling_chi2_from_counts(
-                cat, ref_weeks=ref_weeks, out_weeks=aff_cat
+            old_drift = read_current(spark, os.path.join(gold_path, "drift_panel"))
+            drift = old_drift.join(
+                aff_num,
+                old_drift["event_type"].eqNullSafe(aff_num["event_type"])
+                & (old_drift["week_start"] == aff_num["w"]),
+                "left_anti",
+            ).unionByName(
+                rolling_drift_from_counts(
+                    num,
+                    ref_weeks=ref_weeks,
+                    n_buckets=n_buckets,
+                    out_weeks=aff_num,
+                )
             )
-        )
-    else:
-        drift = rolling_drift_from_counts(
-            num, ref_weeks=ref_weeks, n_buckets=n_buckets
-        )
-        mix = rolling_chi2_from_counts(cat, ref_weeks=ref_weeks)
+            old_mix = read_current(spark, os.path.join(gold_path, "mix_panel"))
+            mix = old_mix.join(
+                aff_cat, old_mix["week_start"] == aff_cat["w"], "left_anti"
+            ).unionByName(
+                rolling_chi2_from_counts(
+                    cat, ref_weeks=ref_weeks, out_weeks=aff_cat
+                )
+            )
+        else:
+            drift = rolling_drift_from_counts(
+                num, ref_weeks=ref_weeks, n_buckets=n_buckets
+            )
+            mix = rolling_chi2_from_counts(cat, ref_weeks=ref_weeks)
 
-    out: dict[str, DataFrame] = {}
-    for name, df in (("drift_panel", drift), ("mix_panel", mix)):
-        path = os.path.join(gold_path, name)
-        write_generation(df, path)
-        cur = read_current(spark, path)
-        cur.createOrReplaceTempView(f"{prefix}{name}")
-        out[name] = cur
+        out: dict[str, DataFrame] = {}
+        for name, df in (("drift_panel", drift), ("mix_panel", mix)):
+            path = os.path.join(gold_path, name)
+            write_generation(df, path)
+            cur = read_current(spark, path)
+            cur.createOrReplaceTempView(f"{prefix}{name}")
+            out[name] = cur
     tmp = pub_file + ".tmp"
     with open(tmp, "w") as f:
         json.dump({"batch_id": upto_batch_id, "lo": lo, "hi": hi}, f)
@@ -852,19 +859,6 @@ def read_monitor(spark: SparkSession, store_path: str) -> DataFrame:
         "psi_shifted boolean, lang_chi2 double, chi2_defined boolean, "
         "lang_reject_95 boolean, route string",
     )
-
-
-def replay_batch_equals_stream(
-    spark: SparkSession, in_path: str, batch_out: str, stream_out: str, checkpoint: str
-) -> tuple[DataFrame, DataFrame]:
-    """Determinism harness (test support): run the same input through
-    the batch pipeline and the streaming pipeline; both outputs should
-    agree on the deduped id set (ST2/ST4)."""
-    batch_silver, _metrics = ingest_batch(spark, in_path, batch_out)
-    q = stream_silver(spark, in_path, stream_out, checkpoint, available_now=True)
-    q.awaitTermination()
-    stream_silver_df = spark.read.parquet(stream_out)
-    return batch_silver, stream_silver_df
 
 
 def stream_dedup_within_watermark(

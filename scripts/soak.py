@@ -20,7 +20,27 @@ Copy construction keeps the data model honest:
 - embeddings keep query vectors (vec_id < 5) only in copy 0 —
   fixed query set against a growing base, the ANN scaling story.
 
-Usage: python scripts/soak.py [N]
+Scenario sets (first positional argument; default ``headline``):
+
+- ``headline``: the bench HEADLINE queries.
+- ``drift``: w1/chi2 drift, t20 seasonal, t21 Theil-Sen, a45 ABC and
+  hybrid MLT+dense retrieval with a FIXED copy-0 query set. Corpus-grain
+  aggs feeding grid-, calendar- or month-spine-sized frames: ratio ≈ the
+  agg's (sub-)linear cost, the downstream frames constant in N.
+- ``index``: sentence chunking (map-only), rolling KS/χ² panels, the
+  two-batch w1_admit replay, the MLT postings store with fixed queries,
+  the NSW graph build (~linear), beam search on the prebuilt graph
+  (independent of N given the graph) and the half-seed/half-append NSW
+  insert path.
+- ``store``: paragraph dedup (one window shuffle + one reassembly
+  groupBy), nsw_query_index over a persisted store built outside the
+  timing, and the three-slice drift-dashboard drain (week-grain panels:
+  cost is the accumulated-events scans).
+
+Every case is timed as the best of two runs (index builds: one) of
+``fn(spark, sf_dir).count()`` at 1× and N×.
+
+Usage: python scripts/soak.py [SET] [N]   (N defaults to 8)
 Writes staged data under /tmp/spark_graft_soak/; prints one JSON line.
 """
 
@@ -28,14 +48,37 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.jobs import (
+    refresh_drift_dashboard,
+)
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import (
+    corpus as C,
+    quality as Q,
+    similarity as S,
+)
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.cacheutil import (
+    release,
+)
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.dedup import (
+    paragraph_dedup,
+)
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.plans.analytics import (
+    q_a45_abc,
+)
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.plans.measures import t
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.plans.temporal import (
+    q_t20_seasonal,
+    q_t21_theil_sen,
+)
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.session import get_spark
 import __spark_entry__ as entrymod
 from bench import HEADLINE
@@ -100,13 +143,147 @@ def stage(spark, n_copies: int) -> str:
     return dst
 
 
-def run_set(spark, qs, sf_dir: str) -> dict[str, float]:
+def _fixed_copy0(df, id_col: str):
+    # the gate's %29 query set, restricted to copy 0: fixed queries
+    # against a growing corpus
+    return df.filter((F.col(id_col) % 29 == 0) & (F.col(id_col) < OFF))
+
+
+def _hybrid(spark, sf_dir: str):
+    d = t(spark, sf_dir, "documents")
+    e = t(spark, sf_dir, "embeddings")
+    sparse = C.more_like_this(d, _fixed_copy0(d, "doc_id").select("doc_id"), k=10)
+    dense = S.brute_force_topk(e, _fixed_copy0(e, "vec_id"), k=10).select(
+        F.col("q_id").alias("query_id"), F.col("vec_id").alias("doc_id"), "rnk"
+    )
+    return S.rrf_fuse(sparse.select("query_id", "doc_id", "rnk"), dense, k=5)
+
+
+def _with_periods(spark, sf_dir: str):
+    # sentence boundaries the fixture text lacks
+    return t(spark, sf_dir, "documents").withColumn(
+        "text", F.regexp_replace(F.col("text"), r"\b(batch|data|join) ", "$1. ")
+    )
+
+
+def _scratch(prefix: str) -> str:
+    path = tempfile.mkdtemp(prefix=f"spark_graft_soak_{prefix}_")
+    _SCRATCH.append(path)
+    return path
+
+
+_SCRATCH: list[str] = []  # removed when main exits
+_GRAPHS: dict[str, object] = {}  # sf_dir -> pinned NSW graph
+_NSW_STORES: dict[str, str] = {}  # sf_dir -> persisted NSW store
+
+
+def _w1_two_batch(spark, sf_dir: str):
+    d = t(spark, sf_dir, "documents")
+    store = _scratch("w1")
+    release(Q.w1_admit(d.filter(F.col("doc_id") % 2 == 0), store, delta=500))
+    return Q.w1_admit(d.filter(F.col("doc_id") % 2 == 1), store, delta=500)
+
+
+def _mlt_store(spark, sf_dir: str):
+    d = t(spark, sf_dir, "documents")
+    store = _scratch("mlt")
+    C.bm25_index_append(d.filter(F.col("doc_id") % 2 == 0), store)
+    C.bm25_index_append(d.filter(F.col("doc_id") % 2 == 1), store)
+    return C.mlt_query_store(spark, store, _fixed_copy0(d, "doc_id").select("doc_id"))
+
+
+def _nsw_build(spark, sf_dir: str):
+    graph = S.nsw_build_graph(t(spark, sf_dir, "embeddings"))
+    _GRAPHS[sf_dir] = graph.localCheckpoint(eager=True)
+    release(graph)
+    return _GRAPHS[sf_dir]
+
+
+def _nsw_query(spark, sf_dir: str):
+    # needs the same-dir graph: the index set times nsw_build first
+    e = t(spark, sf_dir, "embeddings")
+    return S.nsw_topk(e, e.filter(F.col("vec_id") < 5), k=5, graph=_GRAPHS[sf_dir])
+
+
+def _save_nsw(base, store: str) -> None:
+    graph = S.nsw_build_graph(base)
+    S.save_nsw_index(base, graph, store)
+    release(graph)
+
+
+def _nsw_append(spark, sf_dir: str):
+    e = t(spark, sf_dir, "embeddings")
+    store = _scratch("nswapp")
+    _save_nsw(e.filter(F.col("vec_id") % 2 == 0), store)
+    S.nsw_index_append(e.filter(F.col("vec_id") % 2 == 1), store)
+    return spark.read.parquet(f"{store}/graph").groupBy("level").count()
+
+
+def _nsw_store_query(spark, sf_dir: str):
+    e = t(spark, sf_dir, "embeddings")
+    if sf_dir not in _NSW_STORES:  # built once, outside the timing
+        store = _scratch("nsw")
+        _save_nsw(e.filter(F.col("vec_id") % 2 == 0), store)
+        S.nsw_index_append(e.filter(F.col("vec_id") % 2 == 1), store)
+        _NSW_STORES[sf_dir] = store
+    return S.nsw_query_index(
+        spark, _NSW_STORES[sf_dir], e.filter(F.col("vec_id") < 5), k=5
+    )
+
+
+def _dashboard_drain(spark, sf_dir: str):
+    ev = t(spark, sf_dir, "events")
+    tmp = _scratch("dash")
+    silver = f"{tmp}/events_silver"
+    for s in range(3):
+        ev.filter(
+            F.coalesce(F.pmod(F.col("event_id"), F.lit(3)), F.lit(0)) == s
+        ).write.mode("append").parquet(silver)
+        panels = refresh_drift_dashboard(spark, spark.read.parquet(silver), tmp)
+    return panels["drift_panel"]
+
+
+SETS = {
+    "drift": {
+        "w1_drift": lambda spark, sf: Q.w1_drift(t(spark, sf, "documents")),
+        "chi2_drift": lambda spark, sf: Q.chi2_drift(t(spark, sf, "documents")),
+        "t20_seasonal": q_t20_seasonal,
+        "t21_theil_sen": q_t21_theil_sen,
+        "a45_abc": q_a45_abc,
+        "hybrid_rrf_fixed_queries": _hybrid,
+    },
+    "index": {
+        "chunk_sentences": lambda spark, sf: C.chunk_sentences(
+            _with_periods(spark, sf), max_tokens=32
+        ),
+        "rolling_drift": lambda spark, sf: Q.rolling_drift(
+            t(spark, sf, "events").withColumn("value", F.floor("value")), "value"
+        ),
+        "rolling_chi2": lambda spark, sf: Q.rolling_chi2(t(spark, sf, "events")),
+        "w1_admit_2batch": _w1_two_batch,
+        "mlt_store_fixed_queries": _mlt_store,
+        "nsw_build": _nsw_build,
+        "nsw_query_prebuilt": _nsw_query,
+        "nsw_append_half": _nsw_append,
+    },
+    "store": {
+        "paragraph_dedup": lambda spark, sf: paragraph_dedup(
+            _with_periods(spark, sf), sep=r"\. ", joiner=". "
+        ).agg(F.sum("n_paras_kept"), F.sum("n_paras")),
+        "nsw_store_query": _nsw_store_query,
+        "t24_dashboard_drain": _dashboard_drain,
+    },
+}
+ONE_REP = {"nsw_build", "nsw_append_half"}  # index builds
+
+
+def run_set(spark, cases, sf_dir: str) -> dict[str, float]:
     times = {}
-    for name in HEADLINE:
+    for name, fn in cases.items():
         best = None
-        for _ in range(2):
+        for _ in range(1 if name in ONE_REP else 2):
             t0 = time.time()
-            qs[name](spark, sf_dir).count()
+            fn(spark, sf_dir).count()
             el = time.time() - t0
             best = el if best is None or el < best else best
         times[name] = round(best, 3)
@@ -114,14 +291,26 @@ def run_set(spark, qs, sf_dir: str) -> dict[str, float]:
 
 
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 8
+    args = sys.argv[1:]
+    which = args.pop(0) if args and not args[0].isdigit() else "headline"
+    if which != "headline" and which not in SETS:
+        sys.exit(f"unknown scenario set {which!r}; one of headline, {', '.join(SETS)}")
+    n = int(args[0]) if args else 8
     spark = get_spark("soak")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    if which == "headline":
+        qs = entrymod.queries()
+        cases = {name: qs[name] for name in HEADLINE}
+    else:
+        cases = SETS[which]
     big_dir = stage(spark, n)
     one_dir = stage(spark, 1)
-    base = run_set(spark, qs, one_dir)
-    big = run_set(spark, qs, big_dir)
+    try:
+        base = run_set(spark, cases, one_dir)
+        big = run_set(spark, cases, big_dir)
+    finally:
+        for path in _SCRATCH:
+            shutil.rmtree(path, ignore_errors=True)
     ratios = {
         k: round(big[k] / base[k], 2) if base[k] > 0 else None for k in base
     }
@@ -129,6 +318,7 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "soak_runtime_ratio",
+                "set": which,
                 "n_copies": n,
                 "total_1x": round(sum(base.values()), 2),
                 "total_nx": round(sum(big.values()), 2),

@@ -136,7 +136,7 @@ def frontier_times(spark, sf_dir: str) -> dict[str, float]:
         exact_dedup,
         minhash_estimate_pairs,
     )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.cacheutil import release_cached
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.cacheutil import release
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.quality import (
         decontaminate,
         quality_gate,
@@ -193,7 +193,7 @@ def frontier_times(spark, sf_dir: str) -> dict[str, float]:
         default_rate=50,
     )
     clock("f5_redact_sample", final)
-    release_cached(near)
+    release(near)
     return {"walls_s": walls, "rows": rows}
 
 

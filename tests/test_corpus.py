@@ -186,20 +186,24 @@ def test_pack_sequences_ntokens_col(spark):
 
 
 def test_source_overlap_cache_released(spark):
+    """The pinned shingle set outlives the operator (the result reads
+    it lazily) and release(result) frees its blocks."""
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.cacheutil import (
-        release_cached,
+        release,
     )
 
+    jsc = spark.sparkContext._jsc
     df = spark.createDataFrame(
         [(1, "x y z w", "a"), (2, "x y z", "b")], DOCS
     )
+    before = set(jsc.getPersistentRDDs().keySet())
     out = C.source_overlap(df, group_col="source")
     out.collect()
-    deps = getattr(out, "cached_deps", [])
-    assert deps and all(d.storageLevel.useMemory for d in deps)
-    release_cached(out)
-    assert not getattr(out, "cached_deps", [])
-    assert all(not d.storageLevel.useMemory for d in deps)
+    pinned = set(jsc.getPersistentRDDs().keySet()) - before
+    assert pinned
+    release(out)
+    assert not (pinned & set(jsc.getPersistentRDDs().keySet()))
+    release(out)  # already released: no-op
 
 
 def test_token_spectrum_counts(spark):

@@ -311,35 +311,10 @@ def test_copurchase_lift_respects_basket_cap(spark):
     assert r["lift"] == 1.0 and r["support"] == 1.0
 
 
-def test_release_checkpoint_frees_blocks_and_tolerates_noncheckpoint(spark):
-    """Round-16 loop-hygiene helper: releasing a materialized
-    localCheckpoint drops its cached RDD blocks; calling it on None or
-    a plain (non-checkpointed) frame is a harmless no-op."""
-    from pyspark.sql import functions as F
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.cacheutil import (
-        release_checkpoint,
-    )
-
-    df = spark.range(1000).withColumn("v", F.col("id") * 2)
-    ck = df.localCheckpoint(eager=True)
-    assert ck.count() == 1000
-    jsc = spark.sparkContext._jsc.sc()
-    n_before = jsc.getRDDStorageInfo()
-    release_checkpoint(ck)
-    n_after = jsc.getRDDStorageInfo()
-    assert len(n_after) <= len(n_before)
-    # dead-frame contract: nothing reads ck after release; independent
-    # computation is unaffected
-    assert df.count() == 1000
-    release_checkpoint(None)
-    release_checkpoint(df)  # non-checkpointed: no-op, no raise
-
-
 def test_kcore_deep_peel_releases_round_frames(spark):
     """The kcore loop must stay correct with the per-round block
     releases in place: a path graph peels two endpoints per round at
-    k=2, exercising several rounds of release_checkpoint before the
+    k=2, exercising several rounds of ``replaces=`` frees before the
     empty fixpoint (all-distributed path forced)."""
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.graph import (
         kcore,

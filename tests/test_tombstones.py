@@ -243,6 +243,54 @@ def test_ivf_delete_logical(spark, tmp_path):
     assert not ({r["vec_id"] for r in rows} & del_ids)
 
 
+def test_ivf_rebuild_drops_tombstoned_ids_and_clears_set(spark, tmp_path):
+    """A rebuild through save_ivf_index is the IVF store's compaction:
+    ids tombstoned there are dropped from the lists it writes (even
+    when the rebuild base still carries them), the tombstone set is
+    cleared after both tables are written, and queries equal a fresh
+    build over the surviving vectors."""
+    import os
+
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_delete,
+        ivf_query_index,
+        load_ivf_index,
+        save_ivf_index,
+    )
+
+    base = (
+        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        .filter(F.col("vec_id") < 80)
+        .localCheckpoint(eager=True)
+    )
+    # deleted ids sit above the 8 smallest (the default centroid seeds),
+    # so the rebuild's quantizer equals the survivors-only build's
+    deleted = base.filter(
+        (F.col("vec_id") % 10 == 3) & (F.col("vec_id") > 10)
+    ).select("vec_id")
+    del_ids = {r["vec_id"] for r in deleted.collect()}
+    survivors = base.join(deleted, "vec_id", "left_anti")
+    store, fresh = str(tmp_path / "ivf"), str(tmp_path / "fresh")
+    save_ivf_index(build_ivf_index(base), store)
+    ivf_delete(deleted, store)
+    # rebuild over the FULL base, deleted vectors included
+    save_ivf_index(build_ivf_index(base), store)
+    assert not os.path.exists(f"{store}/tombstones")
+    listed = {r["vec_id"] for r in spark.read.parquet(f"{store}/lists.parquet").collect()}
+    assert not (listed & del_ids)
+    assert listed == {r["vec_id"] for r in survivors.collect()}
+    save_ivf_index(build_ivf_index(survivors), fresh)
+    q = base.filter(F.col("vec_id") < 3)
+    got = sorted(
+        map(tuple, ivf_query_index(load_ivf_index(spark, store), q, k=5, n_probes=2).collect())
+    )
+    want = sorted(
+        map(tuple, ivf_query_index(load_ivf_index(spark, fresh), q, k=5, n_probes=2).collect())
+    )
+    assert got and got == want
+
+
 def test_nsw_delete_soft_then_physical(spark, tmp_path):
     store = str(tmp_path / "nsw")
     base = (
