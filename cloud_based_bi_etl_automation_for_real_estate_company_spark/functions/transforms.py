@@ -84,13 +84,6 @@ def json_get_int(col: Column | str, path: str) -> Column:
     return F.get_json_object(c, path).try_cast("int")
 
 
-def reserialize_json(*cols: Column | str, names: list[str] | None = None) -> Column:
-    """P14 — raw-payload retention: re-serialize fields to a JSON string
-    (webhook_app.py:61,94,120,145 `json.dumps(...)` → raw_data)."""
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.to_json(F.struct(*cs))
-
-
 def ratio(num: Column, den: Column) -> Column:
     """A4 helper — NULL-safe divide for conversion-rate measures
     (zero denominator → NULL, like DAX DIVIDE)."""

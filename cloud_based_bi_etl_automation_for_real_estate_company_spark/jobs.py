@@ -17,6 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators.cacheutil import Frames
 from .operators.generations import generation_path, read_current, write_generation
 from .operators.snapshot import upsert_merge
 from .plans import gold
@@ -185,7 +186,6 @@ def run_curation_pipeline(
     """
     from pyspark.sql import functions as F
 
-    from .operators.cacheutil import Frames
     from .operators.dedup import (
         connected_components_star,
         exact_dedup,
@@ -440,67 +440,17 @@ def refresh_drift_dashboard(
         return materialize_gold(df, path, view_name=f"{prefix}{name}")
 
     out: dict[str, DataFrame] = {}
-    out["drift_panel"] = _publish(
-        rolling_drift(
-            events.withColumn("value", F.floor("value")),
-            "value",
-            ref_weeks=ref_weeks,
-        ),
-        "drift_panel",
-    )
-    out["mix_panel"] = _publish(
-        rolling_chi2(events, ref_weeks=ref_weeks), "mix_panel"
-    )
-    return out
-
-
-def run_packing_pipeline(
-    curated: DataFrame,
-    window: int = 64,
-    stride: int = 48,
-    budget: int = 512,
-    partitions: int = 8,
-) -> DataFrame:
-    """Curated corpus → model-ready sequences: the composition that
-    follows ``run_curation_pipeline`` in a training-data build.
-
-    1. context-window chunking (map-only; window/stride token spans);
-    2. greedy packing of the chunks into ``budget``-token bins inside
-       md5 pack-groups (one hash shuffle + per-group local sort — no
-       global order at any scale).
-
-    Returns one row per chunk: (doc_id, chunk_id, n_chunk_tokens,
-    chunk_text, pack_group, bin_id). A writer partitions by
-    (pack_group, bin_id) to lay sequences out contiguously.
-    """
-    from pyspark.sql import functions as F
-
-    from .operators.corpus import chunk_documents, pack_sequences
-
-    chunks = chunk_documents(curated, window, stride)
-    # zero-padded chunk_id: packing orders by the string chunk_key, and
-    # unpadded '1:10' would sort before '1:2', interleaving the bins of
-    # any document with >= 10 chunks
-    keyed = chunks.withColumn(
-        "chunk_key",
-        F.format_string("%s:%012d", F.col("doc_id"), F.col("chunk_id")),
-    )
-    packed = pack_sequences(
-        keyed,
-        budget,
-        text_col="chunk_text",
-        id_col="chunk_key",
-        partitions=partitions,
-        ntokens_col="n_chunk_tokens",
-    )
-    return (
-        keyed.join(packed.select("chunk_key", "pack_group", "bin_id"), "chunk_key")
-        .select(
-            "doc_id",
-            "chunk_id",
-            "n_chunk_tokens",
-            "chunk_text",
-            "pack_group",
-            "bin_id",
+    # the panels' count pins are freed once both are published
+    with Frames() as frames:
+        out["drift_panel"] = _publish(
+            frames.own(rolling_drift(
+                events.withColumn("value", F.floor("value")),
+                "value",
+                ref_weeks=ref_weeks,
+            )),
+            "drift_panel",
         )
-    )
+        out["mix_panel"] = _publish(
+            frames.own(rolling_chi2(events, ref_weeks=ref_weeks)), "mix_panel"
+        )
+    return out

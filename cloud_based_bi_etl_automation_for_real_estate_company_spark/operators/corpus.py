@@ -179,55 +179,6 @@ def chunk_documents(
     )
 
 
-_UDTF_SEQ = 0
-
-
-def chunk_documents_udtf(df: DataFrame, window: int = 64, stride: int = 48) -> DataFrame:
-    """The same context-window chunking as ``chunk_documents``, written
-    as a Spark 4 Python UDTF (one input row → N chunk rows) and applied
-    via a LATERAL join.
-
-    Exists as the worked example of the *imperative escape hatch* tier
-    for custom operators — when per-row fan-out logic stops being
-    expressible with sequence/explode/slice, this is the shape it takes.
-    For this operator the declarative form is strictly better (JVM-side,
-    codegen, zero Python) — tests assert both produce identical rows,
-    and production code should call ``chunk_documents``.
-
-    Tokenization strips *spaces only* (``strip(' ')``), matching the
-    declarative path's ``split(trim(text), ' ')`` — Spark ``trim``
-    removes spaces, not all whitespace, so a full Python ``strip()``
-    would diverge on text with leading/trailing newlines or tabs.
-    Registration names are unique per call so concurrent/nested
-    invocations with different window/stride never clobber each other.
-    """
-    from pyspark.sql.functions import udtf
-
-    if not 0 < stride <= window:
-        raise ValueError("need 0 < stride <= window")
-
-    @udtf(returnType="doc_id bigint, chunk_id bigint, n_chunk_tokens bigint, chunk_text string")
-    class Chunker:
-        def eval(self, doc_id, text):
-            toks = (text or "").strip(" ").split(" ")
-            overlap = window - stride
-            n_chunks = max(1, -(-(len(toks) - overlap) // stride))
-            for ci in range(n_chunks):
-                piece = toks[ci * stride : ci * stride + window]
-                yield doc_id, ci, len(piece), " ".join(piece)
-
-    global _UDTF_SEQ
-    _UDTF_SEQ += 1
-    fn, view = f"__chunker_{_UDTF_SEQ}", f"__chunk_in_{_UDTF_SEQ}"
-    spark = df.sparkSession
-    spark.udtf.register(fn, Chunker)
-    df.select("doc_id", "text").createOrReplaceTempView(view)
-    return spark.sql(
-        f"SELECT c.doc_id, c.chunk_id, c.n_chunk_tokens, c.chunk_text "
-        f"FROM {view}, LATERAL {fn}(doc_id, text) AS c"
-    )
-
-
 _SENT_BOUNDARY = r"([.!?])\s+"
 # US (unit separator) — a control char no tokenizable text contains;
 # the post-delimiter split marker in both engines (chr(30) in SQL)
@@ -1390,8 +1341,7 @@ def bm25_index_append(
     retrieval AND to N/avgdl — identical to the one-shot
     :func:`bm25_topk`, whose scalars also derive from the token
     stream. At-least-once replays of the SAME batch would double its
-    tf rows — dedup batch ids upstream (incremental_dedup is the
-    sibling designed for exactly that) or re-run
+    tf rows — dedup batch ids upstream or re-run
     :func:`compact_bm25_store` after a known replay.
 
     Store growth is O(distinct (doc, term)) per batch; postings are

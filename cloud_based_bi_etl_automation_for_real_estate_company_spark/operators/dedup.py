@@ -719,61 +719,6 @@ def minhash_estimate_pairs(
         )
 
 
-def incremental_dedup(
-    new_docs: DataFrame,
-    store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sink=None,
-) -> DataFrame:
-    """Continuous-pipeline dedup: admit only documents whose content
-    hash has never been seen, then fold the admitted hashes back into
-    the store. The store is a single-column parquet of md5 hashes —
-    at 100 TB of corpus it is ~32 bytes per distinct doc, partitioned
-    and bucketed by hash prefix if it outgrows one machine's worth of
-    shuffle; the membership check is one left-anti join against it
-    (no full-corpus rescan, unlike re-running global dedup per batch).
-    First call bootstraps an empty store. Returns the admitted rows.
-
-    ``sink`` (optional ``Callable[[DataFrame], None]``) persists the
-    admitted rows and runs BEFORE the hash-store append. Ordering is
-    the crash-safety contract for at-least-once callers (streaming
-    foreachBatch retries): failing after the sink but before the store
-    append re-admits the batch on retry — duplicates, which downstream
-    content dedup absorbs — whereas store-first would record hashes
-    for rows never sunk, i.e. silent data loss.
-    """
-    spark = new_docs.sparkSession
-    hashed = new_docs.withColumn("__h", F.md5(F.col(text_col)))
-    try:
-        seen = spark.read.parquet(store_path)
-    except Exception:
-        seen = spark.createDataFrame([], "content_hash string")
-    admitted = (
-        hashed.join(
-            seen.select(F.col("content_hash").alias("__h")), "__h", "left_anti"
-        )
-        # batch-internal dups: same rule as exact_dedup, min id survives
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("__h").orderBy(F.col(id_col).asc())
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    # pin the admitted set before any writes so the sink, the store
-    # append, and the returned frame all see the identical rows (and
-    # re-evaluating the result can't re-trigger the joins)
-    admitted = admitted.localCheckpoint(eager=True)
-    if sink is not None:
-        sink(admitted.drop("__h"))
-    new_hashes = admitted.select(F.col("__h").alias("content_hash"))
-    new_hashes.write.mode("append").parquet(store_path)
-    return admitted.drop("__h")
-
-
 def span_dedup(
     df: DataFrame,
     span: int = 8,
@@ -928,10 +873,9 @@ def incremental_paragraph_dedup(
     sink=None,
 ) -> DataFrame:
     """STREAMING sibling of :func:`paragraph_dedup` (round 14 — the
-    CCNet paragraph pass under continuous ingest, the same
-    batch→incremental promotion exact_dedup got in
-    :func:`incremental_dedup`): a paragraph survives iff its md5 has
-    never been seen in the store NOR earlier in this batch (first
+    CCNet paragraph pass under continuous ingest): a paragraph
+    survives iff its md5 has never been seen in the store NOR earlier
+    in this batch (first
     occurrence by ``(doc_id, pos)``, the one-shot rule); documents
     reassemble from survivors; the surviving hashes fold back into
     the store. When batches arrive in ``(doc_id)`` order the drained
@@ -950,7 +894,7 @@ def incremental_paragraph_dedup(
     key; one (id, pos) join-back; one reassembly groupBy — all
     batch-sized frames except the store side of the anti-join, which
     shuffles only the batch's hashes against the bucketed store.
-    ``sink`` runs BEFORE the store append (the incremental_dedup
+    ``sink`` runs BEFORE the store append (the admission family's
     crash contract: an at-least-once retry re-admits — duplicates the
     next batch's anti-join absorbs — rather than recording hashes for
     rows never sunk). Returns the per-doc result
@@ -1508,8 +1452,8 @@ def incremental_minhash_dedup(
     sink=None,
 ) -> DataFrame:
     """Continuous-pipeline NEAR-dup admission — the MinHash sibling of
-    ``incremental_dedup``: admit a new batch's documents unless they
-    are near-duplicates of the ALREADY-ADMITTED corpus, without ever
+    :func:`incremental_paragraph_dedup`: admit a new batch's documents
+    unless they are near-duplicates of the ALREADY-ADMITTED corpus, without ever
     rescanning that corpus's text. The store keeps only the sketch:
     ONE parquet table of per-doc minhash signatures — O(corpus) small
     rows, the thing that makes per-batch dedup against 100 TB
@@ -1532,7 +1476,7 @@ def incremental_minhash_dedup(
         full LSH clustering first anyway, and the rule stays
         deterministic without an iterative closure).
 
-    Crash contract matches ``incremental_dedup``: optional ``sink``
+    Crash contract matches the siblings: optional ``sink``
     (admitted original rows) runs BEFORE the store append, so a retry
     re-admits rather than silently losing rows. Returns the FLAGGED
     batch: (id_col, admitted, max_eq_store) — max matching components
@@ -1678,9 +1622,9 @@ def soft_dedup_admit(
     The running labels/weights are PROVISIONAL: the store is
     append-only, so when one new doc BRIDGES two existing clusters the
     old rows keep their labels (the new doc takes the merged min) and
-    their counts split until ``soft_dedup_finalize`` — the exact
+    their counts split until :func:`compact_soft_store` — the exact
     re-clustering from signatures alone — reconciles them. That is the
-    deliberate trade: exact-at-finalize, one-pass-cheap-while-
+    deliberate trade: exact-at-compaction, one-pass-cheap-while-
     streaming. Crash contract matches the siblings: optional ``sink``
     (admitted rows + cluster/weight) runs BEFORE the store append, so
     an at-least-once retry re-admits rather than silently losing rows.
@@ -1817,85 +1761,6 @@ def soft_dedup_admit(
     return flagged
 
 
-def soft_dedup_finalize(
-    spark,
-    store_path: str,
-    delivered: DataFrame | None = None,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    bands: int = 4,
-    eq_num: int = 1,
-    eq_den: int = 2,
-) -> DataFrame:
-    """EXACT soft-dedup labels/weights from the signature store alone
-    (no text rescan): band keys re-derived over ALL stored signatures,
-    candidate pairs verified by signature agreement, star-CC, weight =
-    1/|cluster ∩ delivered| (pass ``delivered`` — a one-column id
-    frame — to weight over the ids that actually shipped, the
-    ``run_curation_pipeline(soft_dedup=True)`` semantics; omit it to
-    weight over the full store). This is the reconciliation step the
-    append-only store needs after ``soft_dedup_admit``'s provisional
-    running labels: a bridging doc merges clusters here exactly as the
-    batch pipeline would have — parity is pinned in
-    tests/test_streaming.py. Cost at 100 TB: signatures are ~K×8
-    bytes/doc, the pair step is the same banded bucket expansion the
-    batch LSH uses, and the CC is star contraction — no quadratic or
-    text-bearing stage anywhere.
-
-    Returns (id_col, cluster_id, n_cluster, weight)."""
-    sigs = stores.read_live(  # takedowns: finalize over survivors only
-        spark,
-        store_path,
-        "sigs",
-        id_col,
-        required=", ".join(f"mh_{i} string" for i in range(num_hashes)),
-        required_names=(id_col, "cluster_id"),
-    ).drop("cluster_id").localCheckpoint(eager=True)
-    cand = minhash_lsh_pairs(sigs, id_col=id_col, num_hashes=num_hashes,
-                             bands=bands, precomputed_sig=sigs)
-
-    def n_eq(a: str, b: str):
-        out = F.lit(0)
-        for i in range(num_hashes):
-            out = out + F.when(
-                F.col(f"{a}.mh_{i}") == F.col(f"{b}.mh_{i}"), 1
-            ).otherwise(0)
-        return out
-
-    pairs = (
-        cand.join(sigs.alias("a"), F.col("id_a") == F.col(f"a.{id_col}"))
-        .join(sigs.alias("b"), F.col("id_b") == F.col(f"b.{id_col}"))
-        .select("id_a", "id_b", n_eq("a", "b").alias("n_eq"))
-        .filter(F.col("n_eq") * F.lit(eq_den) >= F.lit(eq_num * num_hashes))
-        .select("id_a", "id_b")
-    )
-    cc = connected_components_star(pairs).select(
-        F.col("doc_id").alias("__node"), F.col("cluster_id").alias("__cl")
-    )
-    labeled = (
-        sigs.select(id_col)
-        .join(cc, F.col(id_col) == F.col("__node"), "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("__cl"), F.col(id_col)).alias("cluster_id"),
-        )
-    )
-    if delivered is not None:
-        labeled = labeled.join(
-            delivered.select(F.col(delivered.columns[0]).alias(id_col)),
-            id_col,
-            "left_semi",
-        )
-    sizes = labeled.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_cluster")
-    )
-    return (
-        labeled.join(sizes, "cluster_id")
-        .withColumn("weight", F.round(F.lit(1.0) / F.col("n_cluster"), 9))
-        .select(id_col, "cluster_id", "n_cluster", "weight")
-    )
-
-
 def compact_minhash_store(
     spark, store_path: str, bytes_per_file: int = 128 << 20
 ) -> None:
@@ -1939,20 +1804,19 @@ def compact_soft_store(
     provisional admission-time cluster labels: besides rewriting
     ``{store_path}/sigs`` into right-sized files (same generation-swap
     contract as :func:`compact_minhash_store`), every row's
-    ``cluster_id`` is replaced by the EXACT label — the same
-    band-bucket → signature-agreement → star-CC clustering
-    :func:`soft_dedup_finalize` computes, so a bridge doc that merged
+    ``cluster_id`` is replaced by the EXACT label — the
+    band-bucket → signature-agreement → star-CC clustering of the
+    signatures alone, so a bridge doc that merged
     two clusters after its members were admitted stops splitting their
     running counts. After this, :func:`soft_dedup_admit`'s running
     sizes/labels are exact AS OF the compaction point (later batches
     can of course bridge again — run compaction periodically in the
-    quiet window, finalize for the last word).
+    quiet window).
 
-    Cost: one finalize-shaped clustering pass over signatures (~K×8
-    bytes/doc — no text anywhere) folded into a rewrite the store
-    needed anyway. Candidate-lookup invariance still holds (the id and
-    mh_* columns are untouched); ``soft_dedup_finalize`` output is
-    invariant too, since it re-derives labels from signatures alone.
+    Cost: one clustering pass over signatures (~K×8 bytes/doc — no
+    text anywhere) folded into a rewrite the store needed anyway.
+    Candidate-lookup invariance still holds (the id and mh_* columns
+    are untouched).
     """
     def relabel(live, _tomb):
         sigs = live["sigs"].localCheckpoint(eager=True)
@@ -2003,7 +1867,7 @@ def compact_soft_store(
 
 
 # Logical delete from the soft-dedup store: tombstoned members leave
-# candidate lookup and cluster counts at the next soft_dedup_admit /
-# soft_dedup_finalize; compact_soft_store drops them physically and
+# candidate lookup and cluster counts at the next soft_dedup_admit;
+# compact_soft_store drops them physically and
 # re-derives every cluster label from the surviving signatures.
 delete_from_soft_store = stores.delete

@@ -83,34 +83,3 @@ def read_current(spark: SparkSession, table_path: str) -> DataFrame:
     if gen is None:
         raise FileNotFoundError(f"no published generation under {table_path}")
     return spark.read.parquet(generation_path(table_path, gen))
-
-
-def compact_generation(
-    spark: SparkSession,
-    table_path: str,
-    target_mb: int = 128,
-    keep_generations: int = 2,
-) -> int:
-    """Small-file compaction: rewrite the current generation with
-    file count sized from the data's actual bytes (~``target_mb`` per
-    file) and publish atomically as the next generation — the
-    OPTIMIZE/maintenance job every streaming or micro-batch sink
-    eventually needs (thousands of kilobyte files turn every scan
-    into a listing+open storm; at 100 TB the metadata cost alone
-    dominates). Readers are never disturbed: they follow the manifest
-    and see old-or-new, the generation mechanism's whole point.
-    Returns the new generation number."""
-    gen = current_generation(table_path)
-    if gen is None:
-        raise FileNotFoundError(f"no published generation under {table_path}")
-    src = generation_path(table_path, gen)
-    n_bytes = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(src)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, -(-n_bytes // (target_mb << 20)))
-    df = spark.read.parquet(src).repartition(n_files)
-    return write_generation(df, table_path, keep_generations=keep_generations)
-

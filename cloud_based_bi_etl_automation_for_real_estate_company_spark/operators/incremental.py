@@ -71,100 +71,3 @@ def incremental_sync(
     if new_max is not None:
         write_watermark(target_path, str(new_max))
     return out
-
-
-def merge_aggregate_state(
-    state: DataFrame | None,
-    delta: DataFrame,
-    keys: list[str],
-    sum_cols: list[str] | None = None,
-    count_col: str = "n_rows",
-    min_cols: list[str] | None = None,
-    max_cols: list[str] | None = None,
-) -> DataFrame:
-    """Incremental maintenance of an exact aggregate table: fold a new
-    delta batch into the persisted per-key state WITHOUT re-reading
-    history — the exact-sum analog of the HLL sketch rollup
-    (operators/sketches.py), and the batch analog of streaming update
-    state.
-
-    Works for any algebraic aggregate: the state stores the mergeable
-    partials (sum / count / min / max per key), `delta` is aggregated
-    alone (its facts are the only thing scanned), and the merge is a
-    key-aligned union + re-aggregation of TWO key-sized frames. At
-    100 TB the daily refresh therefore touches the new partition plus
-    a keys-sized table, never the full history; averages and ratios
-    derive from the partials at read time.
-
-    Sum columns must already be exact types (decimal/long) — the whole
-    point of maintaining state incrementally is that the result equals
-    the from-scratch aggregation bit-for-bit, which double partial
-    sums would break.
-    """
-    sum_cols = list(sum_cols or [])
-    min_cols = list(min_cols or [])
-    max_cols = list(max_cols or [])
-
-    def _agg(df: DataFrame) -> DataFrame:
-        return df.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias(count_col),
-            *[F.sum(c).alias(c) for c in sum_cols],
-            *[F.min(c).alias(c) for c in min_cols],
-            *[F.max(c).alias(c) for c in max_cols],
-        )
-
-    d = _agg(delta)
-    if state is None:
-        return d
-    merged = state.unionByName(d)
-    return merged.groupBy(*keys).agg(
-        F.sum(count_col).alias(count_col),
-        *[F.sum(c).alias(c) for c in sum_cols],
-        *[F.min(c).alias(c) for c in min_cols],
-        *[F.max(c).alias(c) for c in max_cols],
-    )
-
-
-def merge_join_view(
-    view: DataFrame | None,
-    left_old: DataFrame | None,
-    delta_left: DataFrame,
-    right_new: DataFrame,
-    delta_right: DataFrame | None,
-    on: list[str],
-) -> DataFrame:
-    """Incremental maintenance of an inner-join view V = L ⋈ R under
-    append-only deltas — the delta-join rule of classic IVM
-    (Blakeley et al., SIGMOD 1986):
-
-        V_new = V_old ∪ (ΔL ⋈ R_new) ∪ (L_old ⋈ ΔR)
-
-    where R_new = R_old ∪ ΔR, so the ΔL⋈ΔR cross term lands in the
-    first union arm and is never double-counted. The refresh scans the
-    DELTAS against one full side each — at 100 TB the daily increment
-    touches |ΔL|·selectivity + |ΔR|·selectivity rows, never the full
-    L⋈R recompute. Updates/deletes are the CDC layer's job
-    (``cdc_apply`` upstream compacts to effective appends per key
-    before the view merge).
-
-    Pass ``view=None``/``left_old=None``/``delta_right=None`` for the
-    initial build / single-sided refresh. Equality with the
-    from-scratch join is property-tested in
-    tests/test_incremental_quality.py.
-    """
-    if delta_right is not None and left_old is None:
-        raise ValueError(
-            "delta_right without left_old would silently drop the "
-            "L_old ⋈ ΔR arm — pass left_old or fold the "
-            "right delta into right_new with delta_right=None"
-        )
-    arms = []
-    if view is not None:
-        arms.append(view)
-    arms.append(delta_left.join(right_new, on))
-    if left_old is not None and delta_right is not None:
-        arms.append(left_old.join(delta_right, on))
-    out = arms[0]
-    for a in arms[1:]:
-        out = out.unionByName(a)
-    return out

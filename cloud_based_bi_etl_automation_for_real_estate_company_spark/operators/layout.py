@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -57,144 +57,6 @@ def interleave_bits(cols: Sequence[Column], bits: int = 16) -> Column:
     for t in terms[1:]:
         out = out + t
     return out.cast("bigint")
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    ranges: Sequence[tuple[float, float]],
-    bits: int = 16,
-    n_files: int | None = None,
-) -> None:
-    """Write ``df`` as parquet clustered on the Morton key of ``cols``:
-    range-repartition on the key (equal-size files, since the range
-    partitioner samples the key distribution) then sort within each
-    partition so row groups inside a file are tight too. ``ranges``
-    supplies each column's (lo, hi) — at scale these come from table
-    stats, passed in so the write plan needs no extra aggregation
-    pass."""
-    zkey = interleave_bits(
-        [
-            scale_to_bits(F.col(c), lo, hi, bits)
-            for c, (lo, hi) in zip(cols, ranges)
-        ],
-        bits,
-    )
-    keyed = df.withColumn("__zkey", zkey)
-    n = n_files or df.sparkSession.sparkContext.defaultParallelism
-    (
-        keyed.repartitionByRange(n, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def build_manifest(spark, path: str, cols: Sequence[str]) -> DataFrame:
-    """File-level min/max statistics manifest — the Iceberg/Delta
-    manifest analog for a plain parquet directory: one row per data
-    file with each tracked column's (lo, hi) and row count, built in
-    ONE scan via input_file_name grouping. The manifest is
-    file-count-sized (KBs for TBs of data) and is what makes
-    predicate-driven file skipping explicit and testable rather than
-    an engine internal."""
-    df = spark.read.parquet(path).withColumn("__file", F.input_file_name())
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
-    return df.groupBy(F.col("__file").alias("file")).agg(*aggs)
-
-
-def prune_files(manifest: DataFrame, ranges: dict[str, tuple]) -> list[str]:
-    """Data files whose stats interval intersects EVERY queried range
-    — the file-skipping step a catalog runs before handing Spark the
-    scan list. Interval-overlap test per column: keep file unless
-    hi < q_lo or lo > q_hi. Collecting is correct here: the manifest
-    is file-count-sized metadata, not data."""
-    cond = F.lit(True)
-    for c, (q_lo, q_hi) in ranges.items():
-        cond = cond & ~(
-            (F.col(f"hi_{c}") < F.lit(q_lo)) | (F.col(f"lo_{c}") > F.lit(q_hi))
-        )
-    return [r["file"] for r in manifest.filter(cond).select("file").collect()]
-
-
-def read_pruned(spark, manifest: DataFrame, ranges: dict[str, tuple]) -> DataFrame:
-    """Read only the files surviving :func:`prune_files` (callers
-    still apply the row-level filter — file skipping is a superset
-    guarantee, not an exact one)."""
-    files = prune_files(manifest, ranges)
-    if not files:
-        raise ValueError("no files match the queried ranges")
-    return spark.read.parquet(*files)
-
-
-def build_manifest_bloom(
-    spark,
-    path: str,
-    col: str,
-    m_bits: int = 8192,
-    k: int = 4,
-) -> DataFrame:
-    """Per-FILE Bloom filter manifest over a high-cardinality column —
-    the data-skipping companion to :func:`build_manifest`: min/max
-    intervals prune RANGE predicates but are useless for point lookups
-    on a uniformly distributed key (every file's [lo, hi] covers the
-    probe); a per-file Bloom answers "might this file contain key v?"
-    in O(k) with no false negatives. This is the manifest analog of
-    parquet's bloom_filter_enabled / Delta's bloom index, made
-    explicit and testable.
-
-    One scan: each value hashes to k positions (Kirsch–Mitzenmacher
-    double hashing off one md5 — engine-portable, replayable in
-    Python), positions collect_set per file into a sorted sparse
-    position array (≤ m_bits ints, file-count-sized metadata total).
-    """
-    from .quality import _bloom_hashes
-
-    df = spark.read.parquet(path).withColumn("__file", F.input_file_name())
-    h1, h2 = _bloom_hashes(F.col(col).cast("string"))
-    pos = F.explode(
-        F.array(
-            *[
-                F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)).cast("int")
-                for i in range(k)
-            ]
-        )
-    )
-    return (
-        df.select(F.col("__file").alias("file"), pos.alias("pos"))
-        .groupBy("file")
-        .agg(F.array_sort(F.collect_set("pos")).alias("bloom_pos"))
-    )
-
-
-def _bloom_positions_py(value, m_bits: int, k: int) -> list[int]:
-    """Driver-side replay of the Spark-side hash (same md5-derived
-    double hashing) for probe values."""
-    import hashlib
-
-    d = hashlib.md5(str(value).encode()).hexdigest()
-    h1 = int(d[:8], 16)
-    h2 = int(d[8:16], 16) * 2 + 1
-    return [(h1 + i * h2) % m_bits for i in range(k)]
-
-
-def prune_files_bloom(
-    manifest: DataFrame, value, m_bits: int = 8192, k: int = 4
-) -> list[str]:
-    """Files that MIGHT contain ``value``: keep a file iff every one
-    of the probe's k bit positions is present in its Bloom position
-    array. No false negatives (the containing file always survives);
-    false-positive rate falls exponentially in k for a given fill.
-    The filter evaluates on the file-count-sized manifest; collecting
-    the survivor list is metadata, not data."""
-    cond = F.lit(True)
-    for p in _bloom_positions_py(value, m_bits, k):
-        cond = cond & F.array_contains(F.col("bloom_pos"), p)
-    return [r["file"] for r in manifest.filter(cond).select("file").collect()]
 
 
 def _hilbert_tables():

@@ -146,94 +146,6 @@ def decode_metadata(df: DataFrame, blob_col: str = "blob",
     return df.mapInPandas(run, DECODE_META_SCHEMA)
 
 
-def frame_sample_stub(df: DataFrame, blob_col: str = "blob",
-                      id_col: str = "doc_id", every_n: int = 10,
-                      fps: int = 30) -> DataFrame:
-    """Video frame sampler, mapInPandas 1→N row-explosion. The frame
-    COUNT is real for ISO-BMFF payloads since round 9 — derived from
-    the parsed mvhd duration at a nominal ``fps`` (no decoder in this
-    container, so the pixel DECODE stays stubbed; a real sampler
-    replaces the emit loop body, not the Spark contract). Payloads
-    that aren't parseable video keep the byte-length-derived fake
-    count so non-media fixtures stay deterministic."""
-    from .partitioning import spread
-
-    df = spread(df.select(id_col, blob_col), bytes_per_partition=8 << 20)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs = [], []
-            for doc_id, blob in zip(pdf[id_col], pdf[blob_col]):
-                vid = parse_video_header(blob)
-                # real-duration frame counts ONLY for containers with
-                # at least one vide track — an audio-only ISO-BMFF
-                # (m4a) has no video frames to sample, so it keeps the
-                # byte-length stub path like any other non-video blob
-                if vid is not None and vid[2] >= 0 and vid[3] > 0:
-                    n_frames = max(1, vid[2] * fps // 1000)
-                else:
-                    n_frames = max(1, len(blob) // 100)
-                for i in range(0, n_frames, every_n):
-                    ids.append(doc_id)
-                    idxs.append(i)
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs})
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("frame_idx", IntegerType())]
-    )
-    return df.mapInPandas(run, schema)
-
-
-def embed_stub(df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id",
-               dim: int = 64) -> DataFrame:
-    """STUB media embedder: binary → ``array<float>`` feature vector in
-    Arrow batches — the third mapInPandas shape (1→1, payload→vector)
-    alongside decode (1→1, payload→metadata) and frame-sample (1→N).
-    This is the bridge from multimodal columns into the ANN operators:
-    the output schema matches the ``embeddings`` table contract, so
-    ``brute_force_topk`` / ``ivf_topk`` / near-dup consume it directly.
-
-    The fake features are deterministic byte statistics (chunk sums),
-    so identical payloads embed identically — a real CLIP/encoder call
-    replaces ``_embed_one`` without touching the Spark contract."""
-    import numpy as np
-
-    def _embed_one(blob: bytes) -> list[float]:
-        arr = np.frombuffer(blob, dtype=np.uint8)
-        if arr.size == 0:
-            return [0.0] * dim
-        chunks = np.array_split(arr.astype(np.float32), dim)
-        return [float(c.sum() % 997.0) if c.size else 0.0 for c in chunks]
-
-    from pyspark.sql.types import ArrayType, FloatType
-    from .partitioning import spread
-
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-        ]
-    )
-    src = spread(df.select(id_col, blob_col), bytes_per_partition=8 << 20)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].values,
-                    "embedding": [_embed_one(b) for b in pdf[blob_col]],
-                }
-            )
-
-    return src.mapInPandas(run, schema)
-
-
-def with_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Materialize a binary column from text (utf-8) — the fixture
-    stand-in for real media bytes."""
-    return df.withColumn("blob", F.encode(F.col(text_col), "utf-8"))
-
-
 def with_media_blob(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     frag_mod: int | None = None,
@@ -273,110 +185,6 @@ def with_media_blob(
         return pd.Series(out)
 
     return df.withColumn("blob", _build(F.col(id_col), F.col(text_col)))
-
-
-def read_binary_dir(spark, path: str, pattern: str = "*") -> DataFrame:
-    """Ingest a directory of media files as binary rows via Spark's
-    binaryFile source: (path, modificationTime, length, content).
-    The natural bronze for image/audio corpora — downstream
-    decode_metadata/frame_sample consume the ``content`` column.
-    Large-file caveat: each file must fit in one task's memory; shard
-    oversized media upstream."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(path)
-        .withColumnRenamed("content", "blob")
-    )
-
-
-AUDIO_META_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("channels", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("bits", IntegerType()),
-        StructField("n_frames", LongType()),
-        StructField("duration_ms", LongType()),
-        StructField("format", StringType()),
-    ]
-)
-
-
-def parse_wav_header(
-    blob: bytes,
-) -> tuple[int, int, int, int, int] | None:
-    """Pure-Python RIFF/WAVE chunk walk — real channels / sample rate /
-    bit depth / frame count / duration from the fmt and data chunks,
-    no audio library required (the audio sibling of
-    ``parse_image_header``; PCM and any fmt-chunked codec whose frame
-    size is channels·bits/8). Chunks are word-aligned per the RIFF
-    spec. Returns (channels, sample_rate, bits, n_frames, duration_ms)
-    or None when the container doesn't parse."""
-    import struct
-
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        return None
-    i = 12
-    fmt = None
-    data_size = None
-    while i + 8 <= len(blob):
-        cid = blob[i : i + 4]
-        size = struct.unpack("<I", blob[i + 4 : i + 8])[0]
-        if cid == b"fmt " and size >= 16 and i + 24 <= len(blob):
-            _, ch, rate = struct.unpack("<HHI", blob[i + 8 : i + 16])
-            bits = struct.unpack("<H", blob[i + 22 : i + 24])[0]
-            fmt = (ch, rate, bits)
-        elif cid == b"data":
-            data_size = size
-        i += 8 + size + (size & 1)
-    if fmt is None or data_size is None:
-        return None
-    ch, rate, bits = fmt
-    if ch == 0 or rate == 0 or bits < 8 or bits % 8 != 0:
-        # Packed (non-byte-aligned) depths like 12-bit PCM would make
-        # frame_bytes undercount; report unknown rather than a wrong duration.
-        return None
-    frame_bytes = ch * (bits // 8)
-    n_frames = data_size // frame_bytes
-    duration_ms = n_frames * 1000 // rate
-    return int(ch), int(rate), int(bits), int(n_frames), int(duration_ms)
-
-
-def decode_audio_metadata(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id"
-) -> DataFrame:
-    """Arrow-batched audio-metadata extraction over a binary column —
-    same spread + mapInPandas contract as ``decode_metadata``.
-    Unrecognized payloads keep honest NULL metadata with
-    format='unknown' (no synthetic fallback: audio consumers branch on
-    format, they don't need a fake duration)."""
-    from .partitioning import spread
-
-    df = spread(df.select(id_col, blob_col), bytes_per_partition=8 << 20)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf[id_col].values, pdf[blob_col]):
-                parsed = parse_wav_header(b)
-                if parsed is None:
-                    rows.append((int(i), len(b), None, None, None, None,
-                                 None, "unknown"))
-                else:
-                    ch, rate, bits, nf, ms = parsed
-                    rows.append((int(i), len(b), ch, rate, bits, nf, ms,
-                                 "wav"))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_bytes", "channels", "sample_rate",
-                    "bits", "n_frames", "duration_ms", "format",
-                ],
-            )
-
-    return df.mapInPandas(run, AUDIO_META_SCHEMA)
 
 
 VIDEO_META_SCHEMA = StructType(
@@ -425,8 +233,7 @@ def parse_video_header(
     blob: bytes,
 ) -> tuple[int, int, int, int, int, str, int] | None:
     """Pure-Python ISO-BMFF (MP4/MOV/M4A) box walk — the video sibling
-    of ``parse_image_header``/``parse_wav_header``, completing the
-    multimodal header trio with no media library: sniff the ``ftyp``
+    of ``parse_image_header``, with no media library: sniff the ``ftyp``
     (or a media segment's ``styp``) box, then walk ``moov`` for
     ``mvhd`` (movie timescale + duration), each ``trak``'s ``tkhd``
     (16.16 fixed-point presentation width/height) and ``mdia``/
@@ -567,9 +374,8 @@ def build_minimal_mp4(
     pad: int = 0,
     track_kind: bytes = b"vide",
 ) -> bytes:
-    """Deterministic minimal-but-valid ISO-BMFF builder — the video
-    counterpart of ``with_blob``'s utf-8 stand-in, used by tests and
-    the mp4 fixture rows of x_multimodal_meta (no media libs in this
+    """Deterministic minimal-but-valid ISO-BMFF builder, used by tests
+    and the mp4 fixture rows of x_multimodal_meta (no media libs in this
     container, so fixtures are built, not decoded). Fixed layout:
     ftyp(20) + moov(8 + mvhd(108) + trak(8 + tkhd(92) + mdia(8 +
     mdhd(32) + hdlr(33)))) + mdat(8 + pad) = 317 + pad bytes — the
@@ -655,10 +461,9 @@ def decode_video_metadata(
     df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id"
 ) -> DataFrame:
     """Arrow-batched video-metadata extraction over a binary column —
-    same spread + mapInPandas contract as ``decode_metadata`` /
-    ``decode_audio_metadata``. Unrecognized payloads keep honest NULL
-    metadata with format='unknown' (no synthetic fallback, matching
-    the audio path)."""
+    same spread + mapInPandas contract as ``decode_metadata``.
+    Unrecognized payloads keep honest NULL metadata with
+    format='unknown' (no synthetic fallback)."""
     from .partitioning import spread
 
     df = spread(df.select(id_col, blob_col), bytes_per_partition=8 << 20)

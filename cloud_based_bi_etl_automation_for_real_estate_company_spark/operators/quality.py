@@ -4,9 +4,7 @@ inserts; SURVEY.md §5 "runtime guards").
 
 Each expectation is a (name, predicate) pair; ``check`` evaluates ALL
 of them in ONE aggregation pass over the data (conditional counts —
-no per-rule scans) and returns a tidy violations report. ``enforce``
-splits the frame into (good, bad) without recomputing lineage twice
-in the same action.
+no per-rule scans) and returns a tidy violations report.
 """
 
 from __future__ import annotations
@@ -71,24 +69,6 @@ def check(df: DataFrame, expectations: Sequence[tuple[str, Column]]) -> DataFram
     return spark.createDataFrame(
         data, "expectation string, n_violations bigint, n_rows bigint"
     )
-
-
-def enforce(
-    df: DataFrame, expectations: Sequence[tuple[str, Column]]
-) -> tuple[DataFrame, DataFrame]:
-    """Split into (passing, violating) frames; violating rows carry the
-    list of failed expectation names for quarantine triage."""
-    fails = F.array_compact(
-        F.array(
-            *[F.when(~pred, F.lit(name)) for name, pred in expectations]
-        )
-    )
-    tagged = df.withColumn("__failed", fails)
-    good = tagged.filter(F.size("__failed") == 0).drop("__failed")
-    bad = tagged.filter(F.size("__failed") > 0).withColumnRenamed(
-        "__failed", "failed_expectations"
-    )
-    return good, bad
 
 
 def stratified_sample(
@@ -968,139 +948,144 @@ def rolling_drift_from_counts(
     upserts the result into the published panel. The reference side
     still draws on the FULL spine (a restricted week needs its trailing
     weeks' counts), and the PSI hull stays global, so restricted rows
-    are bit-identical to the same rows of an unrestricted run."""
+    are bit-identical to the same rows of an unrestricted run.
+
+    ``counts`` is read several times, so it is pinned once; the pin is
+    attached to the result (``cacheutil.release(result)`` frees it)."""
     if ref_weeks < 1:
         raise ValueError("need ref_weeks >= 1")
     g = group_col
-    counts = counts.localCheckpoint(eager=True)
-    weeks = counts.select(g, F.col("week").alias("w")).distinct()
-    if out_weeks is not None:
-        weeks = weeks.join(out_weeks, [g, "w"], "left_semi")
-    hull = counts.agg(
-        F.min("v").alias("lo"), F.max("v").alias("hi")
-    )
-    ref = (
-        counts.select(
-            g,
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(ref_weeks)),
-                    lambda k: F.date_add(F.col("week"), (k * 7).cast("int")),
-                )
-            ).alias("w"),
-            "v",
-            "cnt",
+    with Frames() as frames:
+        counts = frames.pin(counts, eager=True)
+        weeks = counts.select(g, F.col("week").alias("w")).distinct()
+        if out_weeks is not None:
+            weeks = weeks.join(out_weeks, [g, "w"], "left_semi")
+        hull = counts.agg(
+            F.min("v").alias("lo"), F.max("v").alias("hi")
         )
-        .groupBy(g, "w", "v")
-        .agg(F.sum("cnt").alias("ref"))
-    )
-    cur = counts.select(g, F.col("week").alias("w"), "v", F.col("cnt").alias("cur"))
-    cells = (
-        cur.join(ref, [g, "w", "v"], "full_outer")
-        .join(weeks, [g, "w"], "left_semi")
-        .select(
+        ref = (
+            counts.select(
+                g,
+                F.explode(
+                    F.transform(
+                        F.sequence(F.lit(1), F.lit(ref_weeks)),
+                        lambda k: F.date_add(F.col("week"), (k * 7).cast("int")),
+                    )
+                ).alias("w"),
+                "v",
+                "cnt",
+            )
+            .groupBy(g, "w", "v")
+            .agg(F.sum("cnt").alias("ref"))
+        )
+        cur = counts.select(g, F.col("week").alias("w"), "v", F.col("cnt").alias("cur"))
+        cells = (
+            cur.join(ref, [g, "w", "v"], "full_outer")
+            .join(weeks, [g, "w"], "left_semi")
+            .select(
+                g,
+                "w",
+                "v",
+                F.coalesce(F.col("cur"), F.lit(0)).cast("bigint").alias("cur"),
+                F.coalesce(F.col("ref"), F.lit(0)).cast("bigint").alias("ref"),
+            )
+        )
+        win = Window.partitionBy(g, "w").orderBy("v")
+        seq = win.rowsBetween(Window.unboundedPreceding, 0)
+        tot = win.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        cums = cells.select(
             g,
             "w",
             "v",
-            F.coalesce(F.col("cur"), F.lit(0)).cast("bigint").alias("cur"),
-            F.coalesce(F.col("ref"), F.lit(0)).cast("bigint").alias("ref"),
+            F.sum("cur").over(seq).cast("bigint").alias("cum_cur"),
+            F.sum("ref").over(seq).cast("bigint").alias("cum_ref"),
+            F.sum("cur").over(tot).cast("bigint").alias("n_cur"),
+            F.sum("ref").over(tot).cast("bigint").alias("n_ref"),
+            (F.lead("v").over(win) - F.col("v")).alias("dv"),
+            "cur",
+            "ref",
         )
-    )
-    win = Window.partitionBy(g, "w").orderBy("v")
-    seq = win.rowsBetween(Window.unboundedPreceding, 0)
-    tot = win.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cums = cells.select(
-        g,
-        "w",
-        "v",
-        F.sum("cur").over(seq).cast("bigint").alias("cum_cur"),
-        F.sum("ref").over(seq).cast("bigint").alias("cum_ref"),
-        F.sum("cur").over(tot).cast("bigint").alias("n_cur"),
-        F.sum("ref").over(tot).cast("bigint").alias("n_ref"),
-        (F.lead("v").over(win) - F.col("v")).alias("dv"),
-        "cur",
-        "ref",
-    )
-    d_int = F.abs(
-        F.col("cum_cur").cast("decimal(38,0)") * F.col("n_ref")
-        - F.col("cum_ref").cast("decimal(38,0)") * F.col("n_cur")
-    )
-    ksw1 = cums.groupBy(g, "w", "n_cur", "n_ref").agg(
-        F.max(d_int).alias("ks_int"),
-        F.sum(d_int * F.coalesce(F.col("dv"), F.lit(0)))
-        .cast("decimal(38,0)")
-        .alias("w1_int"),
-    )
-    # PSI leg: same cells folded to frozen global equal-width buckets
-    nb = F.lit(n_buckets)
-    # integer DIV (the psi_admit/psi_drift edge convention — no float
-    # in the bucket id); v ≥ lo always, so no negative truncation case
-    bucket = F.least(
-        F.lit(n_buckets - 1).cast("bigint"),
-        F.expr(f"(v - lo) * {n_buckets} DIV (hi - lo + 1)"),
-    )
-    bsums = (
-        cells.join(F.broadcast(hull))
-        .groupBy(g, "w", bucket.alias("bucket"))
-        .agg(
-            F.sum("cur").cast("bigint").alias("bc"),
-            F.sum("ref").cast("bigint").alias("br"),
+        d_int = F.abs(
+            F.col("cum_cur").cast("decimal(38,0)") * F.col("n_ref")
+            - F.col("cum_ref").cast("decimal(38,0)") * F.col("n_cur")
         )
-    )
-    bspine = weeks.crossJoin(
-        F.broadcast(
-            counts.sparkSession.range(0, n_buckets).select(
-                F.col("id").alias("bucket")
+        ksw1 = cums.groupBy(g, "w", "n_cur", "n_ref").agg(
+            F.max(d_int).alias("ks_int"),
+            F.sum(d_int * F.coalesce(F.col("dv"), F.lit(0)))
+            .cast("decimal(38,0)")
+            .alias("w1_int"),
+        )
+        # PSI leg: same cells folded to frozen global equal-width buckets
+        nb = F.lit(n_buckets)
+        # integer DIV (the psi_admit/psi_drift edge convention — no float
+        # in the bucket id); v ≥ lo always, so no negative truncation case
+        bucket = F.least(
+            F.lit(n_buckets - 1).cast("bigint"),
+            F.expr(f"(v - lo) * {n_buckets} DIV (hi - lo + 1)"),
+        )
+        bsums = (
+            cells.join(F.broadcast(hull))
+            .groupBy(g, "w", bucket.alias("bucket"))
+            .agg(
+                F.sum("cur").cast("bigint").alias("bc"),
+                F.sum("ref").cast("bigint").alias("br"),
             )
         )
-    )
-    bcells = bspine.join(bsums, [g, "w", "bucket"], "left").select(
-        g,
-        "w",
-        F.coalesce(F.col("bc"), F.lit(0)).cast("bigint").alias("bc"),
-        F.coalesce(F.col("br"), F.lit(0)).cast("bigint").alias("br"),
-    )
-    btot = bcells.groupBy(g, "w").agg(
-        F.sum("bc").cast("bigint").alias("tc"),
-        F.sum("br").cast("bigint").alias("tr"),
-    )
-    p = (F.col("bc") + F.lit(1)).cast("double") / (F.col("tc") + nb).cast(
-        "double"
-    )
-    q = (F.col("br") + F.lit(1)).cast("double") / (F.col("tr") + nb).cast(
-        "double"
-    )
-    psi = (
-        bcells.join(btot, [g, "w"])
-        .groupBy(g, "w", "tc", "tr")
-        .agg(
-            F.sum(F.round((p - q) * F.log(p / q), 12).cast("decimal(28,12)"))
-            .cast("double")
-            .alias("psi")
+        bspine = weeks.crossJoin(
+            F.broadcast(
+                counts.sparkSession.range(0, n_buckets).select(
+                    F.col("id").alias("bucket")
+                )
+            )
         )
-        .select(g, "w", "psi")
-    )
-    defined = (F.col("n_cur") > 0) & (F.col("n_ref") > 0)
-    denom = F.col("n_cur").cast("double") * F.col("n_ref").cast("double")
-    return (
-        ksw1.join(psi, [g, "w"])
-        .select(
+        bcells = bspine.join(bsums, [g, "w", "bucket"], "left").select(
             g,
-            F.col("w").alias("week_start"),
-            "n_cur",
-            "n_ref",
-            F.when(defined, F.col("ks_int").cast("double") / denom).alias(
-                "ks_stat"
-            ),
-            F.when(defined, F.col("w1_int").cast("double") / denom).alias(
-                "w1_dist"
-            ),
-            F.when(defined, F.col("psi")).alias("psi"),
-            defined.alias("drift_defined"),
+            "w",
+            F.coalesce(F.col("bc"), F.lit(0)).cast("bigint").alias("bc"),
+            F.coalesce(F.col("br"), F.lit(0)).cast("bigint").alias("br"),
         )
-    )
+        btot = bcells.groupBy(g, "w").agg(
+            F.sum("bc").cast("bigint").alias("tc"),
+            F.sum("br").cast("bigint").alias("tr"),
+        )
+        p = (F.col("bc") + F.lit(1)).cast("double") / (F.col("tc") + nb).cast(
+            "double"
+        )
+        q = (F.col("br") + F.lit(1)).cast("double") / (F.col("tr") + nb).cast(
+            "double"
+        )
+        psi = (
+            bcells.join(btot, [g, "w"])
+            .groupBy(g, "w", "tc", "tr")
+            .agg(
+                F.sum(F.round((p - q) * F.log(p / q), 12).cast("decimal(28,12)"))
+                .cast("double")
+                .alias("psi")
+            )
+            .select(g, "w", "psi")
+        )
+        defined = (F.col("n_cur") > 0) & (F.col("n_ref") > 0)
+        denom = F.col("n_cur").cast("double") * F.col("n_ref").cast("double")
+        return frames.attach(
+            ksw1.join(psi, [g, "w"])
+            .select(
+                g,
+                F.col("w").alias("week_start"),
+                "n_cur",
+                "n_ref",
+                F.when(defined, F.col("ks_int").cast("double") / denom).alias(
+                    "ks_stat"
+                ),
+                F.when(defined, F.col("w1_int").cast("double") / denom).alias(
+                    "w1_dist"
+                ),
+                F.when(defined, F.col("psi")).alias("psi"),
+                defined.alias("drift_defined"),
+            ),
+            counts,
+        )
 
 
 def rolling_chi2(
@@ -1155,82 +1140,85 @@ def rolling_chi2_from_counts(
     panel rows are computed, while the reference side still draws on
     the full spine — restricted rows are bit-identical to the same
     rows of an unrestricted run (no global coupling in the chi2
-    panel, unlike the numeric panel's PSI hull)."""
+    panel, unlike the numeric panel's PSI hull). The pinned ``counts``
+    is attached to the result, as in :func:`rolling_drift_from_counts`."""
     if ref_weeks < 1:
         raise ValueError("need ref_weeks >= 1")
-    counts = counts.localCheckpoint(eager=True)
-    weeks = counts.select(F.col("week").alias("w")).distinct()
-    if out_weeks is not None:
-        weeks = weeks.join(out_weeks, ["w"], "left_semi")
-    ref = (
-        counts.select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(ref_weeks)),
-                    lambda k: F.date_add(F.col("week"), (k * 7).cast("int")),
-                )
-            ).alias("w"),
-            "c",
-            "cnt",
+    with Frames() as frames:
+        counts = frames.pin(counts, eager=True)
+        weeks = counts.select(F.col("week").alias("w")).distinct()
+        if out_weeks is not None:
+            weeks = weeks.join(out_weeks, ["w"], "left_semi")
+        ref = (
+            counts.select(
+                F.explode(
+                    F.transform(
+                        F.sequence(F.lit(1), F.lit(ref_weeks)),
+                        lambda k: F.date_add(F.col("week"), (k * 7).cast("int")),
+                    )
+                ).alias("w"),
+                "c",
+                "cnt",
+            )
+            .groupBy("w", "c")
+            .agg(F.sum("cnt").alias("ref"))
         )
-        .groupBy("w", "c")
-        .agg(F.sum("cnt").alias("ref"))
-    )
-    cur = counts.select(
-        F.col("week").alias("w"), "c", F.col("cnt").alias("cur")
-    )
-    cells = (
-        cur.join(ref, ["w", "c"], "full_outer")
-        .join(weeks, ["w"], "left_semi")
-        .select(
-            "w",
-            F.coalesce(F.col("cur"), F.lit(0)).cast("bigint").alias("cg"),
-            F.coalesce(F.col("ref"), F.lit(0)).cast("bigint").alias("ch"),
+        cur = counts.select(
+            F.col("week").alias("w"), "c", F.col("cnt").alias("cur")
         )
-    )
-    tot = cells.groupBy("w").agg(
-        F.sum("cg").cast("bigint").alias("n_cur"),
-        F.sum("ch").cast("bigint").alias("n_ref"),
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-    )
-    n = F.col("n_cur") + F.col("n_ref")
-    # the cross-multiplied residual squares in DECIMAL(38,0) — d ~ n²,
-    # so d² in BIGINT would wrap past n ≈ 55k rows/week (the round-13
-    # w1_drift ADVICE lesson applied at birth); decimal holds to 1e19
-    d = (
-        F.col("cg") * n - F.col("n_cur") * (F.col("cg") + F.col("ch"))
-    ).cast("decimal(38,0)")
-    term = F.round(
-        (d * d).cast("double") / (F.col("cg") + F.col("ch")).cast("double"),
-        12,
-    ).cast("decimal(38,12)")
-    chi2 = F.try_divide(
-        F.col("s"),
-        F.col("n_cur").cast("double") * F.col("n_ref").cast("double"),
-    )
-    dof = (F.col("k") - F.lit(1)).cast("double")
-    dofc = F.greatest(dof, F.lit(1.0))
-    wh = F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofc) + F.lit(
-        1.6448536269514722
-    ) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofc))
-    crit = dof * wh * wh * wh
-    defined = (F.col("n_cur") > 0) & (F.col("n_ref") > 0)
-    return (
-        cells.join(tot, "w")
-        .groupBy("w", "n_cur", "n_ref", "k")
-        .agg(F.sum(term).cast("double").alias("s"))
-        .select(
-            F.col("w").alias("week_start"),
-            "n_cur",
-            "n_ref",
-            F.when(defined, F.col("k") - F.lit(1)).alias("df_chi2"),
-            F.when(defined, chi2).alias("chi2"),
-            F.coalesce(
-                F.when(defined, chi2 > crit), F.lit(False)
-            ).alias("reject_95"),
-            defined.alias("drift_defined"),
+        cells = (
+            cur.join(ref, ["w", "c"], "full_outer")
+            .join(weeks, ["w"], "left_semi")
+            .select(
+                "w",
+                F.coalesce(F.col("cur"), F.lit(0)).cast("bigint").alias("cg"),
+                F.coalesce(F.col("ref"), F.lit(0)).cast("bigint").alias("ch"),
+            )
         )
-    )
+        tot = cells.groupBy("w").agg(
+            F.sum("cg").cast("bigint").alias("n_cur"),
+            F.sum("ch").cast("bigint").alias("n_ref"),
+            F.count(F.lit(1)).cast("bigint").alias("k"),
+        )
+        n = F.col("n_cur") + F.col("n_ref")
+        # the cross-multiplied residual squares in DECIMAL(38,0) — d ~ n²,
+        # so d² in BIGINT would wrap past n ≈ 55k rows/week (the round-13
+        # w1_drift ADVICE lesson applied at birth); decimal holds to 1e19
+        d = (
+            F.col("cg") * n - F.col("n_cur") * (F.col("cg") + F.col("ch"))
+        ).cast("decimal(38,0)")
+        term = F.round(
+            (d * d).cast("double") / (F.col("cg") + F.col("ch")).cast("double"),
+            12,
+        ).cast("decimal(38,12)")
+        chi2 = F.try_divide(
+            F.col("s"),
+            F.col("n_cur").cast("double") * F.col("n_ref").cast("double"),
+        )
+        dof = (F.col("k") - F.lit(1)).cast("double")
+        dofc = F.greatest(dof, F.lit(1.0))
+        wh = F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofc) + F.lit(
+            1.6448536269514722
+        ) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofc))
+        crit = dof * wh * wh * wh
+        defined = (F.col("n_cur") > 0) & (F.col("n_ref") > 0)
+        return frames.attach(
+            cells.join(tot, "w")
+            .groupBy("w", "n_cur", "n_ref", "k")
+            .agg(F.sum(term).cast("double").alias("s"))
+            .select(
+                F.col("w").alias("week_start"),
+                "n_cur",
+                "n_ref",
+                F.when(defined, F.col("k") - F.lit(1)).alias("df_chi2"),
+                F.when(defined, chi2).alias("chi2"),
+                F.coalesce(
+                    F.when(defined, chi2 > crit), F.lit(False)
+                ).alias("reject_95"),
+                defined.alias("drift_defined"),
+            ),
+            counts,
+        )
 
 
 def psi_admit(
@@ -1421,9 +1409,9 @@ def chi2_admit(
         # one-row global aggregates (tot × term-sum) instead of a groupBy
         # over ``cells`` — a batch whose cat_col is all NULL on an empty
         # history produces zero cells, and the old groupBy then emitted
-        # ZERO rows, so stream_drift_gated_ingest's collect()[0] raised
-        # IndexError inside foreachBatch and the checkpoint replayed the
-        # poisoned batch forever. Degenerate row: n_batch=n_hist=0,
+        # ZERO rows, so a caller's collect()[0] raised IndexError (inside
+        # a foreachBatch, the checkpoint replayed the poisoned batch
+        # forever). Degenerate row: n_batch=n_hist=0,
         # df_chi2 NULL, chi2 NULL, chi2_defined false (admit).
         ssum = (
             cells.join(F.broadcast(tot))

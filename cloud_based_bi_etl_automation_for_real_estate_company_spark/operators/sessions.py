@@ -32,26 +32,3 @@ def sessionize(
     return df.withColumn("__new", is_new).withColumn(
         "session_id", F.sum("__new").over(w).cast("bigint")
     ).drop("__new")
-
-
-def session_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Per-session rollup: bounds, event count, value sum, duration.
-    The value sum goes through decimal accumulation (dsum) so the
-    result is partition-order invariant, like every money sum."""
-    from ..functions.transforms import dsum
-
-    s = sessionize(df, user_col, ts_col, gap_minutes)
-    return s.groupBy(user_col, "session_id").agg(
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-        dsum("value").alias("session_value"),
-        (F.max(F.col(ts_col).cast("double")) - F.min(F.col(ts_col).cast("double"))).alias(
-            "duration_s"
-        ),
-    )

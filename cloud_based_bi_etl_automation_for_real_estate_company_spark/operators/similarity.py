@@ -22,8 +22,6 @@ so Spark and the oracle emit bit-identical values.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -31,6 +29,11 @@ from ..functions.vectors import as_double, cosine, dot, sign_bucket
 from . import stores
 from .cacheutil import Frames
 from .partitioning import spread
+
+# NSW search broadcasts its per-hop state while the estimated rows
+# (queries × beam × (max out-degree + 1) × hops over every layer) stay
+# at or below this; a larger batch is joined unhinted.
+NSW_BROADCAST_MAX_ROWS = 4_000_000
 
 
 def _sim(qcol: str, bcol: str):
@@ -424,7 +427,7 @@ def kmeans_centroids(
             eager=True,
         )
         vecs = spread(base.select(F.col(id_col), as_double(vec_col).alias("__v")))
-        return frames.attach(_lloyd(frames, vecs, cents, iters, [], id_col))
+        return frames.attach(_lloyd(frames, vecs, cents, iters, id_col))
 
 
 def _lloyd(
@@ -432,18 +435,15 @@ def _lloyd(
     vecs: DataFrame,
     cents: DataFrame,
     iters: int,
-    group_cols: list[str],
     id_col: str,
 ) -> DataFrame:
-    """Shared Lloyd's iteration: ``vecs`` (group_cols..., id, __v)
-    against broadcast ``cents`` (group_cols..., cent_id, cent_emb).
-    With group_cols, runs an independent k-means per group in the same
-    jobs — how the PQ codebooks train all ``m`` subspaces in one pass.
-    Each round's centroids replace the last in ``frames``."""
+    """Lloyd's iteration: ``vecs`` (id, __v) against broadcast ``cents``
+    (cent_id, cent_emb). Each round's centroids replace the last in
+    ``frames``."""
     for _ in range(iters):
         # ROW-LOCAL argmin over the broadcast centroid array (no
         # |vecs| × k shuffle); the comparator orders (d2, cent_id) asc
-        carr = _choices_array(cents, group_cols, ["cent_id", "cent_emb"])
+        carr = _choices_array(cents, [], ["cent_id", "cent_emb"])
         # F.get (0-based, NULL on out-of-range): element_at(.., 1)
         # throws on an empty choice array under ANSI mode
         best = F.get(
@@ -463,21 +463,14 @@ def _lloyd(
             ),
             F.lit(0),
         )
-        joined = (
-            vecs.join(F.broadcast(carr), group_cols)
-            if group_cols
-            else vecs.crossJoin(F.broadcast(carr))
-        )
-        assigned = joined.select(
-            *group_cols, id_col, "__v", best["cent_id"].alias("cent_id")
+        assigned = vecs.crossJoin(F.broadcast(carr)).select(
+            id_col, "__v", best["cent_id"].alias("cent_id")
         )
         upd = (
-            assigned.select(
-                *group_cols, "cent_id", F.posexplode("__v").alias("dim", "val")
-            )
-            .groupBy(*group_cols, "cent_id", "dim")
+            assigned.select("cent_id", F.posexplode("__v").alias("dim", "val"))
+            .groupBy("cent_id", "dim")
             .agg(F.avg("val").alias("m"))
-            .groupBy(*group_cols, "cent_id")
+            .groupBy("cent_id")
             .agg(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("dim", "m"))),
@@ -486,8 +479,7 @@ def _lloyd(
             )
         )
         cents = frames.pin(
-            cents.join(upd, [*group_cols, "cent_id"], "left").select(
-                *group_cols,
+            cents.join(upd, "cent_id", "left").select(
                 "cent_id",
                 F.coalesce(F.col("new_emb"), F.col("cent_emb")).alias("cent_emb"),
             ),
@@ -537,190 +529,6 @@ def ivf_topk(
     )
     scored = (
         b.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("q_bucket")) & (F.col(id_col) != F.col("q_id")),
-        )
-        .select("q_id", id_col, _sim("q_emb", vec_col).alias("sim"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-    )
-
-
-def build_ivf_index(
-    base: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 8,
-    centroids: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """Materialize the two IVF index tables: the coarse quantizer
-    (cent_id, cent_emb) and the inverted lists (every base vector
-    routed to its nearest centroid). Splitting index BUILD from QUERY
-    is what production ANN serving needs — the base-corpus assignment
-    scan runs once at ingest, not per query batch."""
-    if centroids is not None:
-        cents = centroids
-    else:
-        # Deterministic default seeding: the n_centroids SMALLEST ids
-        # (not an id-range filter, which silently under-seeds a sparse
-        # or offset id space). sharded_topk keeps the selection a
-        # per-shard prune, never a full-corpus single-partition sort;
-        # for dense 0-based ids this picks exactly the same rows as
-        # the old `id < n` filter, so existing oracles replay it.
-        from .partitioning import sharded_topk
-
-        cents = (
-            sharded_topk(
-                base.select(F.col(id_col), F.col(vec_col)),
-                k=n_centroids,
-                order_by=[F.asc(id_col)],
-                rank_col="__seed_rnk",
-                shard_cols=[id_col],
-            )
-            .select(
-                F.col(id_col).alias("cent_id"),
-                F.col(vec_col).alias("cent_emb"),
-            )
-        )
-    lists = _coarse_assign(spread(base), cents, id_col, vec_col, "bucket", 1)
-    return {"centroids": cents, "lists": lists}
-
-
-def save_ivf_index(index: dict[str, DataFrame], path: str) -> None:
-    """Persist the index with the inverted lists PARTITIONED BY bucket:
-    a query probing ``n_probes`` buckets then reads only those buckets'
-    files (partition pruning at the storage layer — the on-disk form of
-    IVF's candidate pruning). Centroids are a tiny single file.
-
-    Saving over an existing store is its compaction: ids tombstoned
-    there (:func:`ivf_delete`) are dropped from the lists written, and
-    the tombstone set is cleared once both tables are written — the
-    :func:`stores.compact` rule."""
-    import os
-
-    lists = index["lists"]
-    spark = lists.sparkSession
-    tomb = stores.read_tombstones(spark, path, _ivf_id_col(lists))
-    if tomb is not None:
-        lists = lists.join(tomb, _ivf_id_col(lists), "left_anti")
-    index["centroids"].write.mode("overwrite").parquet(
-        os.path.join(path, "centroids.parquet")
-    )
-    lists.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, "lists.parquet")
-    )
-    if tomb is not None:
-        stores.clear_tombstones(spark, path)
-
-
-def load_ivf_index(spark, path: str) -> dict[str, DataFrame]:
-    """Load a persisted IVF index. Tombstoned ids (:func:`ivf_delete`)
-    are anti-joined out of the lists here — queries and appends
-    through the loaded index never see them. IVF's physical delete is
-    a REBUILD (build_ivf_index + save_ivf_index): the lists hold full
-    vectors partitioned by bucket, so a periodic rebuild IS the store's
-    compaction — save_ivf_index drops the tombstoned ids and clears
-    the set."""
-    return {
-        "centroids": stores.read_live(spark, path, "centroids.parquet"),
-        "lists": stores.read_live(spark, path, "lists.parquet", _ivf_id_col),
-    }
-
-
-def _ivf_id_col(lists: DataFrame) -> str:
-    """The lists table is (id_col, vec_col, bucket) — the id column is
-    whatever non-bucket scalar the builder used (vec_id by default)."""
-    for f in lists.schema.fields:
-        if f.name != "bucket" and not str(f.dataType).startswith("Array"):
-            return f.name
-    return lists.columns[0]
-
-
-def ivf_delete(
-    ids: DataFrame, store_path: str, id_col: str = "vec_id"
-) -> None:
-    """Logical delete from the persisted IVF index (:func:`stores.delete`):
-    tombstoned ids vanish from every query through
-    :func:`load_ivf_index`; physical removal is an index rebuild."""
-    stores.delete(ids, store_path, id_col)
-
-
-def ivf_index_append(
-    new_vectors: DataFrame,
-    store_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """STREAMING ANN-index maintenance: fold one micro-batch of new
-    vectors into a persisted IVF index (:func:`save_ivf_index`
-    layout) — the dense-retrieval sibling of
-    corpus.bm25_index_append, closing the incremental-ingest story
-    for similarity search: new embeddings become searchable as they
-    arrive, without a corpus re-index.
-
-    The coarse quantizer is FROZEN (same contract as psi_admit's
-    frozen bucket edges: an appender must never re-train centroids or
-    every prior assignment would be against a different quantizer) —
-    assignment of a vector depends only on the stored centroids, so
-    a corpus ingested in any number of batches yields EXACTLY the
-    inverted lists of a one-shot build with the same centroids
-    (test-pinned). Re-train by rebuilding to a new path and swapping.
-
-    The append lands partitioned by bucket like the initial save, so
-    query-time partition pruning keeps working; growth is one file
-    set per touched bucket per batch — compact in a quiet window by
-    re-saving the loaded index. At-least-once replays duplicate
-    vectors (same caveat and upstream remedy as bm25_index_append).
-    Raises FileNotFoundError when no index exists at ``store_path`` —
-    an appender bootstrapping an empty index would silently freeze an
-    EMPTY quantizer; the initial build must come from
-    build_ivf_index/save_ivf_index. The batch's ``vec_col`` element
-    type must match the seeded lists' (float vs double mix fails
-    LOUDLY at read time with a parquet type mismatch, never
-    silently)."""
-    import os
-
-    spark = new_vectors.sparkSession
-    cents = stores.read_live(
-        spark, store_path, "centroids.parquet", missing_ok=True
-    )
-    if cents is None:
-        raise FileNotFoundError(
-            f"no IVF index at {store_path} — build with "
-            "build_ivf_index + save_ivf_index before appending"
-        )
-    assigned = _coarse_assign(
-        spread(new_vectors), cents, id_col, vec_col, "bucket", 1
-    )
-    assigned.write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(store_path, "lists.parquet")
-    )
-
-
-def ivf_query_index(
-    index: dict[str, DataFrame],
-    queries: DataFrame,
-    k: int = 5,
-    n_probes: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a prebuilt/loaded IVF index: route queries to their
-    ``n_probes`` nearest centroids, equi-join the probed inverted
-    lists (bucket is a partition column of the persisted lists, so the
-    scan prunes to the probed buckets' files), exact-score candidates.
-    Identical results to :func:`ivf_topk` on the same base — asserted
-    in tests — with zero base-corpus work at query time."""
-    cents = index["centroids"]
-    q = _coarse_assign(queries, cents, id_col, vec_col, "q_bucket", n_probes).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb"), "q_bucket"
-    )
-    scored = (
-        index["lists"]
-        .join(
             F.broadcast(q),
             (F.col("bucket") == F.col("q_bucket")) & (F.col(id_col) != F.col("q_id")),
         )
@@ -857,48 +665,6 @@ def _pq_subspaces(
     )
 
 
-def pq_codebooks(
-    base: DataFrame,
-    m: int = 8,
-    ks: int = 64,
-    iters: int = 3,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Trained PQ codebooks: an independent ``ks``-means per subspace,
-    all ``m`` subspaces in the same Lloyd jobs (grouped ``_lloyd`` on
-    sub_j). Quantization error — the thing PQ recall hinges on — drops
-    versus the deterministic slice-seeded stand-in; measured on the
-    random fixture in test_similarity. Returns (sub_j, code_id,
-    codeword) ready for ``pq_topk(codebooks=...)``. Iterative → no SQL
-    oracle (rows-only gate class)."""
-    w = dim // m
-    subs = _pq_subspaces(spread(base), id_col, id_col, vec_col, m, w)
-    sw = Window.partitionBy("sub_j").orderBy(id_col)
-    with Frames() as frames:
-        seeds = frames.pin(
-            subs.withColumn("__rn", F.row_number().over(sw))
-            .filter(F.col("__rn") <= ks)
-            .select(
-                "sub_j",
-                (F.col("__rn") - 1).alias("cent_id"),
-                F.col("sub").alias("cent_emb"),
-            ),
-            eager=True,
-        )
-        vecs = subs.select("sub_j", F.col(id_col), F.col("sub").alias("__v"))
-        cents = _lloyd(frames, vecs, seeds, iters, ["sub_j"], id_col)
-        return frames.attach(
-            cents.select(
-                "sub_j",
-                F.col("cent_id").alias("code_id"),
-                F.col("cent_emb").alias("codeword"),
-            ),
-            cents,
-        )
-
-
 def _pq_encode(subs: DataFrame, cb: DataFrame, id_col: str) -> DataFrame:
     """Encode each subvector as its nearest codeword's id (min L2,
     ties to the lower code). Returns (id_col, sub_j, code_id) — the
@@ -974,9 +740,8 @@ def pq_topk(
     Partials accumulate in DECIMAL so the group-sum is order-exact and
     replayable in the SQL oracle. Output shape matches the other ANN
     strategies: (q_id, vec_id, sim, rnk). Pass ``codebooks`` (sub_j,
-    code_id, codeword — e.g. from ``pq_codebooks``) to search with a
-    trained quantizer; the default slice-seeded stand-in keeps the SQL
-    oracle replayable.
+    code_id, codeword) to search with a trained quantizer; the default
+    slice-seeded stand-in keeps the SQL oracle replayable.
     """
     w = dim // m
 
@@ -1037,8 +802,8 @@ def ivf_pq_topk(
     Recall dials: ``n_probes`` (routing) × ``ks``/``m`` (quantization
     error). Defaults use the deterministic slice-seeded stand-ins so
     the SQL oracle replays exactly; pass ``centroids`` (from
-    ``kmeans_centroids``) and/or ``codebooks`` (from ``pq_codebooks``)
-    for trained quantizers — both only swap tiny broadcast sides.
+    ``kmeans_centroids``) and/or ``codebooks`` (sub_j, code_id,
+    codeword) for trained quantizers — both only swap tiny broadcast sides.
     Output matches the other ANN strategies: (q_id, vec_id, sim, rnk).
     """
     w = dim // m
@@ -1355,8 +1120,10 @@ def nsw_topk(
     candidate sliver, visited keys) is broadcast, so the two N-sized
     tables — edge list and vector store — stream and are never
     shuffled; a batch whose estimated per-hop state exceeds
-    ``SPARK_GRAFT_NSW_BCAST_ROWS`` (default 4M rows) degrades to
-    planner-chosen joins instead of failing on the broadcast cap.
+    ``NSW_BROADCAST_MAX_ROWS`` degrades to planner-chosen joins instead
+    of failing on the broadcast cap. The estimate reads the graph's own
+    max out-degree and top layer, so a graph grown past ``M`` by
+    appends is sized as it is.
     Recall is audited (≥ floor vs brute force) in tests and the
     x_ann_hnsw gate; the trade is recall-vs-scan, never exactness of
     the arithmetic (6-dp cosine, id tie-breaks).
@@ -1387,14 +1154,19 @@ def nsw_topk(
             queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")),
             eager=True,
         )
+        # enter at the highest NON-EMPTY layer (a tiny corpus may draw no
+        # node at max_level); the same 1-row collect reads the graph's
+        # max out-degree for the broadcast guard below
+        top_lvl, degree = graph.groupBy("level", "src").count().agg(
+            F.max("level"), F.max("count")
+        ).collect()[0]
         # broadcast-posture guard: everything hinted below is
-        # O(n_q · beam · M · hops) rows; a corpus-sized batch degrades to
-        # planner-chosen joins instead of failing on the broadcast cap.
+        # O(n_q · beam · degree · hops) rows; a corpus-sized batch degrades
+        # to planner-chosen joins instead of failing on the broadcast cap.
         # The estimate deliberately overcounts (every hop fully fresh).
         n_q = q.count()
-        est_rows = n_q * beam * (M + 1) * (hops + max_level + 1)
-        bcast_budget = int(os.environ.get("SPARK_GRAFT_NSW_BCAST_ROWS", "4000000"))
-        hint = F.broadcast if est_rows <= bcast_budget else (lambda df: df)
+        est_rows = n_q * beam * ((degree or 0) + 1) * (hops + (top_lvl or 0) + 1)
+        hint = F.broadcast if est_rows <= NSW_BROADCAST_MAX_ROWS else (lambda df: df)
         bvec = base.select(F.col(id_col).alias("node"), F.col(vec_col).alias("__b"))
 
         def score(cand: DataFrame) -> DataFrame:
@@ -1407,9 +1179,6 @@ def nsw_topk(
                 .select("q_id", "node", _sim("q_emb", "__b").alias("sim"), "q_emb")
             )
 
-        # enter at the highest NON-EMPTY layer (a tiny corpus may draw no
-        # node at max_level); 1-row bounded scalar collect
-        top_lvl = graph.agg(F.max("level")).collect()[0][0]
         top_nodes = graph.filter(F.col("level") == top_lvl).select(
             F.col("src").alias("node")
         ).distinct()
@@ -1488,8 +1257,8 @@ def save_nsw_index(
 ) -> None:
     """Persist a layered-NSW index: ``{store}/graph`` (level, src,
     dst, sim) + ``{store}/vectors`` (the raw vectors — graph search
-    scores candidates exactly, so the index must carry them; same
-    reasoning as the IVF lists storing vectors). Overwrites."""
+    scores candidates exactly, so the index must carry them).
+    Overwrites."""
     base.select(F.col(id_col), F.col(vec_col)).write.mode(
         "overwrite"
     ).parquet(f"{store_path}/vectors")
@@ -1506,13 +1275,11 @@ def nsw_index_append(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """STREAMING graph-ANN maintenance (round 13 — the NSW sibling of
-    :func:`ivf_index_append`, completing the incremental story for
-    every index family: postings, IVF lists, and now the neighbor
-    graph): fold one micro-batch of new vectors into a persisted NSW
-    index by the REAL HNSW insert recipe, search-then-connect — each
-    new vector beam-searches the EXISTING layer-l graph for its
-    top-``M`` neighbors at every layer its deterministic hash draw
+    """STREAMING graph-ANN maintenance (round 13 — the graph sibling of
+    ``corpus.bm25_index_append``): fold one micro-batch of new vectors
+    into a persisted NSW index by the REAL HNSW insert recipe,
+    search-then-connect — each new vector beam-searches the EXISTING
+    layer-l graph for its top-``M`` neighbors at every layer its deterministic hash draw
     reaches, and both edge directions append (new→nbr and nbr→new),
     plus LSH-seeded NN-descent edges among the batch itself so
     intra-batch neighbors link without waiting for a rebuild.

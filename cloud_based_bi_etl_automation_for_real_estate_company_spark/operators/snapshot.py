@@ -49,15 +49,6 @@ def upsert_merge(
     return latest_per_key(current.unionByName(updates), keys, order_by)
 
 
-def dedup_by_id(df: DataFrame, id_col: str = "id") -> DataFrame:
-    """S8 — idempotent-insert semantics: first-writer-wins by id
-    (ON CONFLICT (id) DO NOTHING, reference webhook_app.py:48,83,112,138).
-    ``dropDuplicates`` keeps an arbitrary row — correct here because
-    retried webhook deliveries carry identical payloads.
-    """
-    return df.dropDuplicates([id_col])
-
-
 def cdc_apply(
     changes: DataFrame,
     keys: Sequence[str],

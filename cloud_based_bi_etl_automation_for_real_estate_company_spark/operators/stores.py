@@ -5,8 +5,8 @@ Families and their subdirectories under one ``store_path``:
 
 - BM25/MLT postings (``postings``), minhash and soft-dedup signatures
   (``sigs``), paragraph hashes (``hashes``), NSW graph ANN (``graph``,
-  ``vectors``), IVF (``lists.parquet``, ``centroids.parquet``) and the
-  PSI/chi²/KS-W1 drift state (``hist``, ``cats``, ``centroids``);
+  ``vectors``) and the PSI/chi²/KS-W1 drift state (``hist``, ``cats``,
+  ``centroids``);
 - deletions of any family land in ``{store_path}/tombstones``.
 
 Three verbs, one rule set:
@@ -39,9 +39,6 @@ from pyspark.sql import functions as F
 # planner picks the strategy. Compaction clears the backlog.
 TOMBSTONE_BROADCAST_MAX_BYTES = 16 << 20
 
-# A tombstone key: a column name, or a function of the store frame
-# that names it (IVF lists carry build_ivf_index's id column).
-IdCol = str | Callable[[DataFrame], str] | None
 # A compaction rewrite: (live tables, tombstone set) -> tables to swap.
 Rewrite = Callable[[dict[str, DataFrame], DataFrame | None], dict[str, DataFrame]]
 
@@ -141,15 +138,11 @@ def read_tombstones(
     return tomb
 
 
-def _key(id_col: IdCol, df: DataFrame) -> str | None:
-    return id_col(df) if callable(id_col) else id_col
-
-
 def read_live(
     spark,
     store_path: str,
     subdir: str,
-    id_col: IdCol = None,
+    id_col: str | None = None,
     required: str | None = None,
     required_names: tuple[str, ...] = (),
     missing_ok: bool = False,
@@ -166,9 +159,8 @@ def read_live(
         spark, path, required=required, required_names=required_names,
         merge=False,
     )
-    key = _key(id_col, df)
-    tomb = read_tombstones(spark, store_path, key) if key else None
-    return df if tomb is None else df.join(tomb, key, "left_anti")
+    tomb = read_tombstones(spark, store_path, id_col) if id_col else None
+    return df if tomb is None else df.join(tomb, id_col, "left_anti")
 
 
 def delete(ids: DataFrame, store_path: str, id_col: str = "doc_id") -> None:
@@ -249,7 +241,7 @@ def compact(
     store_path: str,
     subdirs: dict[str, dict],
     rewrite: Rewrite | None = None,
-    id_col: IdCol = None,
+    id_col: str | Callable[[DataFrame], str] | None = None,
     bytes_per_file: int = 128 << 20,
 ) -> None:
     """Rewrite a store's tables into right-sized files in its quiet
@@ -273,7 +265,7 @@ def compact(
         s: read_store(spark, f"{store_path}/{s}", **guards)
         for s, guards in subdirs.items()
     }
-    key = _key(id_col, next(iter(raw.values())))
+    key = id_col(next(iter(raw.values()))) if callable(id_col) else id_col
     tomb = read_tombstones(spark, store_path, key) if key else None
     live = {
         s: df.join(tomb, key, "left_anti")

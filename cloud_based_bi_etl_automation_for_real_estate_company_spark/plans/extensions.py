@@ -1407,8 +1407,8 @@ def q_x_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_x_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) layout key over (user_id, value) — the
-    multi-dimensional clustering key zorder_write ranges/sorts on so
-    parquet min/max stats prune scans on EITHER column. The key is
+    multi-dimensional clustering key a clustered write ranges/sorts on
+    so parquet min/max stats prune scans on EITHER column. The key is
     pure bit arithmetic; the oracle replays it with shift/mask SQL,
     proving the quantization grid and interleave are engine-exact."""
     from ..operators.layout import interleave_bits, scale_to_bits
@@ -1785,8 +1785,7 @@ def q_x_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_x_softdedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver row for the STREAMING soft-dedup admission (round 11,
-    operators/dedup.soft_dedup_admit — the state math behind
-    streaming/pipeline.stream_soft_dedup_documents): replay two
+    operators/dedup.soft_dedup_admit): replay two
     micro-batches one-shot — even doc_ids bootstrap the store, odd
     doc_ids arrive second — and emit each doc's provisional cluster
     and RUNNING 1/|cluster seen so far| weight. Store lives in a
@@ -1856,8 +1855,7 @@ def q_x_paragraph_dedup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_x_paragraph_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STORE-BACKED incremental paragraph dedup drained to the gate
-    (operators/dedup.incremental_paragraph_dedup behind
-    streaming.pipeline.stream_paragraph_dedup, round 14): replay a
+    (operators/dedup.incremental_paragraph_dedup, round 14): replay a
     two-batch ingest — doc_ids at or below the range midpoint first,
     the rest second, so arrival order equals the global (doc_id, pos)
     order and first-occurrence ownership matches the one-shot rule —
@@ -2328,18 +2326,14 @@ def q_x_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_x_kmv_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver row for the KMV stream-state operator (ST5): run
-    ``streaming.stateful.streaming_kmv_distinct``'s exact state math —
+    """Driver row for the KMV state fold: run the exact state math —
     JVM-side ``_hash_frac`` then the Python ``_kmv_finalize`` merge —
-    as a one-shot batch group-map, emitting the drained FINAL row per
-    event type: (event_type, n_seen, n_kept, theta, estimate). The
-    sketch's insert-order invariance makes this one-shot drain
-    bit-identical to the drained stream (pinned in
-    tests/test_stateful_streaming.py), and the oracle replays the md5
-    arithmetic relationally — so the streaming code path gets a full
-    DuckDB hash check, not just a pytest. Differs from x_kmv_distinct
-    (the batch kmv_kept/kmv_stats plan) in the code under test: this
-    row executes the streaming update's own merge."""
+    as a one-shot batch group-map, emitting the FINAL row per event
+    type: (event_type, n_seen, n_kept, theta, estimate). The oracle
+    replays the md5 arithmetic relationally, so the Python merge gets
+    a full DuckDB hash check. Differs from x_kmv_distinct (the batch
+    kmv_kept/kmv_stats plan) in the code under test: this row
+    executes the ``_kmv_finalize`` merge."""
     from ..streaming.stateful import kmv_drain_batch
 
     ev = t(spark, sf_dir, "events")
@@ -2347,17 +2341,12 @@ def q_x_kmv_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_x_tdigest_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver row for the t-digest stream-state operator (ST5): run
-    ``streaming.stateful.streaming_tdigest``'s exact per-group math
+    """Driver row for the t-digest state fold: run the per-group math
     (``_tdigest_cluster`` + ``_tdigest_quantile_rows``) as a one-shot
     batch group-map, then audit it in the x_tdigest_quantiles
     tolerance form — per (event_type, q): exact n_seen (hash-checked
     against COUNT(*)), centroids_ok (≤ 2δ bounded state), and rank_ok
-    (|rank(est) − q| ≤ max(0.05, 1/n)). The t-digest's incremental
-    re-clustering is micro-batch-boundary SENSITIVE, so unlike the
-    KMV/CUSUM drains this is not bitwise the drained stream — both are
-    valid digests of the same rows; the stream side's bounded state
-    and accuracy are pinned in tests/test_stateful_streaming.py."""
+    (|rank(est) − q| ≤ max(0.05, 1/n))."""
     from ..streaming.stateful import tdigest_drain_batch
 
     ev = t(spark, sf_dir, "events")
@@ -2839,9 +2828,9 @@ def q_x_tdigest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_x_spacesaving_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver row for the SpaceSaving heavy-hitter stream state
-    (streaming.stateful.streaming_spacesaving — Metwally et al. 2005):
-    the one-shot batch drain runs the same deterministic fold, then
+    """Driver row for the SpaceSaving heavy-hitter summary (Metwally
+    et al. 2005): the one-shot batch drain runs the deterministic fold
+    (streaming.stateful._spacesaving_fold), then
     the audit checks the sketch's THEOREMS against exact counts — per
     event_type: exact n_seen and counter count (both hash-checked:
     n_counters = min(m, distinct items)), every true heavy hitter

@@ -20,7 +20,7 @@ seller_example.png):
 
 Every builder takes the silver events DataFrame (schema
 schemas.SILVER_EVENT_SCHEMA) plus optional slicer predicates (A14) and
-returns a DataFrame; register as views for SQL consumers.
+returns a DataFrame.
 
 The funnel is cumulative — a signed lead counts in every earlier stage
 (Referidos ⊇ … ⊇ Firmados), matching the funnel chart's monotone
@@ -188,16 +188,3 @@ def detail_listing(snapshot: DataFrame, limit: int = 100) -> DataFrame:
         .orderBy(F.desc("updated_at_utc"), F.asc("lead_id"))
         .limit(limit)
     )
-
-
-def register_views(snapshot: DataFrame, prefix: str = "gold_") -> None:
-    """Expose the measure library to SQL consumers as temp views
-    (the Spark equivalent of the Power BI dataset surface)."""
-    snapshot.createOrReplaceTempView(f"{prefix}lead_snapshot")
-    funnel(snapshot).createOrReplaceTempView(f"{prefix}funnel")
-    conversion_rates(snapshot).createOrReplaceTempView(f"{prefix}conversion_rates")
-    sales_totals(snapshot).createOrReplaceTempView(f"{prefix}sales_totals")
-    agent_table(snapshot).createOrReplaceTempView(f"{prefix}agent_table")
-    agent_ranking(snapshot).createOrReplaceTempView(f"{prefix}agent_ranking")
-    monthly_trend(snapshot).createOrReplaceTempView(f"{prefix}monthly_trend")
-    detail_listing(snapshot).createOrReplaceTempView(f"{prefix}detail_listing")

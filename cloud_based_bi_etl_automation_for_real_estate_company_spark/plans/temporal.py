@@ -320,18 +320,13 @@ def q_t15_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_t16_cusum_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver row for the CUSUM stream-state operator (ST5): run
-    ``streaming.stateful.streaming_cusum``'s exact Python scalar fold
-    (the shared ``_cusum_fold``) as a one-shot batch group-map and
-    emit the drained FINAL row per series — (series, n_seen, cusum,
-    alarm), the shape a monitor reads after the stream ends. Daily
-    grain and the decimal-exact per-series mean target are identical
-    to t14_cusum, so the oracle reuses t14's recursive replay and
-    keeps only the last recursion row; pytest separately pins
-    drained-stream == batch-drain on the same rows
-    (tests/test_stateful_streaming.py). CUSUM's fold is micro-batch-
-    boundary invariant, which is what makes this one-shot drain THE
-    stream's final answer and not merely similar to it."""
+    """Driver row for the CUSUM fold: run the Python scalar fold
+    (``streaming.stateful._cusum_fold``) as a one-shot batch group-map
+    and emit the FINAL row per series — (series, n_seen, cusum,
+    alarm), the shape a monitor reads. Daily grain and the
+    decimal-exact per-series mean target are identical to t14_cusum,
+    so the oracle reuses t14's recursive replay and keeps only the
+    last recursion row."""
     from ..streaming.stateful import cusum_drain_batch
 
     ev = t(spark, sf_dir, "events")
@@ -1157,9 +1152,8 @@ ORACLES["t22_rolling_drift"] = """
 
 def q_t24_drift_dashboard_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-ACCUMULATED drift dashboard drained to the gate
-    (jobs.refresh_drift_dashboard behind streaming.pipeline.
-    stream_drift_dashboard, round 14): replay the foreachBatch sink's
-    exact body over three deterministic event slices — append each
+    (jobs.refresh_drift_dashboard, round 14): replay the refresh
+    over three deterministic event slices — append each
     slice to the silver store, republish the gold numeric panel behind
     the generation manifest — then return the FINAL published
     drift_panel read back through read_current. The accumulated
@@ -1167,8 +1161,7 @@ def q_t24_drift_dashboard_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL values included) and the generation swap must publish a
     readable current table, so the drained panel equals the one-shot
     t22 computation — the oracle IS t22's SQL verbatim (the
-    x_mlt_drain convention). The streaming-machinery leg (checkpoint,
-    triggers, generation-per-batch) is pinned by the pytest e2e."""
+    x_mlt_drain convention)."""
     import shutil
     import tempfile
 

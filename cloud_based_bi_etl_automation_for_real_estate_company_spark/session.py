@@ -19,8 +19,6 @@ import threading
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 TABLES = (
     "region",
     "nation",
@@ -159,22 +157,3 @@ def read_events(spark: SparkSession, path: str):
         # unix_micros()/from_utc_timestamp() require TIMESTAMP (LTZ).
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "SparkSession"]:
-    """Read every fixture parquet in ``sf_dir`` and register temp views.
-
-    Returns {name: DataFrame}. Reads are lazy; Catalyst prunes columns
-    and pushes filters into the parquet scan per-query.
-    """
-    dfs = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            if name == "events":
-                df = read_events(spark, path)
-            else:
-                df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            dfs[name] = df
-    return dfs

@@ -60,89 +60,6 @@ def read_webhook_json(
     )
 
 
-def synthetic_webhook_events(ticks: DataFrame) -> DataFrame:
-    """S5 push parity (reference webhook_app.py:152–164): turn a stream
-    of (timestamp, value) ticks — Spark's ``rate`` source, the stand-in
-    for a live HTTP push edge in a harness with no network — into raw
-    webhook rows with EXACTLY the schema ``read_webhook_json`` yields.
-
-    Each tick deterministically becomes one envelope (account, event
-    type, lead payload all derived from ``value``), serialized with
-    ``to_json`` and re-parsed through the same permissive
-    envelope-schema parse as the file route — so whitelist, unwrap,
-    projection, dedup, and sink are byte-for-byte the shared path and
-    the only difference between push and file ingestion is the source.
-    """
-    v = F.col("value").cast("long")
-
-    def pick(options: tuple[str, ...], key) -> F.Column:
-        return F.element_at(
-            F.array(*[F.lit(o) for o in options]),
-            (F.pmod(key, F.lit(len(options))) + 1).cast("int"),
-        )
-
-    steps = ("Referidos", "Ingresados", "Autorizados", "Rechazados", "Firmados")
-    data = F.struct(
-        F.pmod(v, F.lit(500)).alias("id"),
-        F.concat(F.lit("Lead "), F.pmod(v, F.lit(500))).alias("title"),
-        pick(steps, v * 31).alias("step"),
-        (F.pmod(v * 7919, F.lit(1000000)) / 100.0).alias("amount"),
-        F.date_format(
-            F.col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
-        ).alias("created_at"),
-        F.date_format(
-            F.col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
-        ).alias("updated_at"),
-        F.struct(
-            F.concat(F.lit("agent"), F.pmod(v, F.lit(25)), F.lit("@example.com"))
-            .alias("email")
-        ).alias("user"),
-        F.struct(
-            F.pmod(v, F.lit(200)).alias("id"),
-            F.concat(F.lit("folder-"), F.pmod(v, F.lit(200))).alias("name"),
-        ).alias("client_folder"),
-        F.array(F.lit("synthetic"), pick(("hot", "cold"), v)).alias("tags"),
-    )
-    envelope = F.struct(
-        v.alias("id"),
-        pick(HANDLED_EVENTS, v * 17).alias("event"),
-        F.md5(v.cast("string")).alias("signature"),
-        F.lit(True).alias("has_succeeded"),
-        F.lit(1).alias("try_count"),
-        F.lit(200).alias("last_returned_code"),
-        data.alias("data"),
-    )
-    line = F.to_json(
-        F.struct(
-            envelope.alias("webhook_event"),
-            pick(ALLOWED_ACCOUNTS, v).alias("account"),
-        )
-    )
-    schema = StructType(
-        list(WEBHOOK_ENVELOPE_SCHEMA.fields)
-        + [StructField("account", StringType()), StructField(CORRUPT_COL, StringType())]
-    )
-    return ticks.select(line.alias("__line")).select(
-        F.from_json("__line", schema).alias("r")
-    ).select("r.*")
-
-
-def rate_webhook_source(
-    spark: SparkSession, rows_per_second: int = 100, num_partitions: int | None = None
-) -> DataFrame:
-    """Live push-source adapter: Spark's ``rate`` source driving
-    ``synthetic_webhook_events`` — a continuously running stand-in for
-    the reference's Flask POST endpoint (webhook_app.py:152) that needs
-    no network. Feed the result to ``streaming.pipeline.stream_silver``
-    via its ``raw`` parameter."""
-    reader = (
-        spark.readStream.format("rate").option("rowsPerSecond", rows_per_second)
-    )
-    if num_partitions is not None:
-        reader = reader.option("numPartitions", num_partitions)
-    return synthetic_webhook_events(reader.load())
-
-
 def quarantine(raw: DataFrame) -> DataFrame:
     """Rows that failed JSON parsing — kept for audit, never dropped
     silently (the reference 400s them; we retain them).

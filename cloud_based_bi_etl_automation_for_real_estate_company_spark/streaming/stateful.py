@@ -11,15 +11,14 @@ without re-scanning history.
 State size: one small tuple per live lead; keys partition across
 executors by hash, and the timeout knob can retire idle leads.
 
-``streaming_windowed_counts`` is the ST4 tumbling-window aggregation
-(event-time + watermark): the monthly-trend measure computed
-incrementally instead of by the reference's 8×/day full refresh.
+The ``*_drain_batch`` group-maps run the KMV, CUSUM, t-digest and
+SpaceSaving sketch folds over whole batch groups; each backs a
+registered query that the DuckDB oracle checks.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
@@ -47,19 +46,14 @@ LEAD_STATE_SCHEMA = StructType(
 
 _STATE_SCHEMA = "ts double, step string, n bigint"
 
-# the t-digest query half lives in operators.sketches — ONE copy for
-# batch, stream, and drain (review finding: a third copy here could
-# silently drift from the batch operator)
+# the t-digest query half lives in operators.sketches — one copy for
+# the batch operator and the drain
 from ..operators.sketches import _tdigest_quantile_rows  # noqa: E402
 
 
-# -- shared per-group folds -------------------------------------------------
-# The sketch-as-state trio (KMV, CUSUM, t-digest) keeps its per-group
-# math in these module-level pure functions so the STREAMING update and
-# the BATCH drain operator below run the exact same code — the drain
-# queries give the driver's DuckDB gate a row that exercises the
-# streaming code path (the t11_interval_join_batch precedent), while
-# pytest pins drained-stream == batch-drain on the same rows.
+# -- per-group sketch folds ------------------------------------------------
+# Pure functions over one group's values, applied by the batch drains
+# below.
 
 
 def _kmv_finalize(kept: set, k: int):
@@ -126,63 +120,6 @@ def streaming_lead_state(events: DataFrame) -> DataFrame:
     )
 
 
-def streaming_lead_state_tws(events: DataFrame) -> DataFrame:
-    """events(lead_id, ts, step) stream → live current-state stream via
-    ``transformWithStateInPandas`` with a ValueState per lead.
-
-    Requires the RocksDB state store provider AND the protobuf package
-    (the TWS state-server protocol); environments lacking protobuf
-    should use ``streaming_lead_state`` (applyInPandasWithState), which
-    is behaviorally identical for this operator."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "lead", "best_ts double, best_step string, n bigint"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            (lead_id,) = key
-            if self._state.exists():
-                best_ts, best_step, n = self._state.get()
-            else:
-                best_ts, best_step, n = float("-inf"), None, 0
-            for pdf in rows:
-                n += len(pdf)
-                ts_s = pdf["ts"].astype("int64") / 1e9
-                i = ts_s.idxmax()
-                if ts_s[i] > best_ts:
-                    best_ts = float(ts_s[i])
-                    best_step = str(pdf["step"][i])
-            self._state.update((best_ts, best_step, n))
-            yield pd.DataFrame(
-                {
-                    "lead_id": [lead_id],
-                    "current_step": [best_step],
-                    "updated_at": [pd.Timestamp(best_ts, unit="s")],
-                    "n_events_seen": [n],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("lead_id", "ts", "step")
-        .groupBy("lead_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Proc(),
-            outputStructType=LEAD_STATE_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def stream_stream_interval_join(
     purchases: DataFrame,
     clicks: DataFrame,
@@ -210,342 +147,11 @@ def stream_stream_interval_join(
     )
 
 
-def streaming_session_stats(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """ST4 (session mode) — streaming ``session_window`` aggregation:
-    per-key sessions that close when no event arrives within ``gap``.
-    The watermark is what lets Spark FINALIZE a session (append-mode
-    output emits a session only once the watermark passes its end), so
-    state per key is bounded by the gap + watermark horizon. Must agree
-    with the batch ``t4_session_window`` query on drained input —
-    asserted in tests/test_stateful_streaming.py."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def streaming_windowed_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """ST4 — event-time tumbling-window counts with a watermark
-    bounding state (the incremental monthly-trend measure)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("win"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
-def streaming_ohlc(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    val_col: str = "value",
-    seq_col: str = "event_id",
-    bucket: str = "5 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """ST4 — the hypertable OHLC rollup (operators.timeseries.
-    ohlc_downsample) running incrementally on a stream: the SAME
-    aggregation plan (tumbling window × key, struct-extrema
-    open/close, decimal volume) with a watermark bounding state; in
-    append mode a bar is emitted exactly once, when the watermark
-    passes its bucket end. Batch/stream equality on drained input is
-    asserted in tests/test_stateful_streaming.py."""
-    from ..operators.timeseries import ohlc_downsample
-
-    return ohlc_downsample(
-        events.withWatermark(ts_col, watermark),
-        bucket=bucket,
-        key_col=key_col,
-        ts_col=ts_col,
-        val_col=val_col,
-        seq_col=seq_col,
-    )
-
-
-def streaming_distinct_rollup(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    col: str = "user_id",
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-    lgk: int = 12,
-) -> DataFrame:
-    """ST4/ST5 — per-(key, window) approximate distinct counts via
-    DataSketches HLL state maintained INCREMENTALLY: the sketch is the
-    aggregation state, so distinct counting — the one aggregate with
-    no exact partial form — streams with bounded memory (the sketch is
-    kilobytes regardless of cardinality) and finalizes once per window
-    in append mode. Must agree with the batch sketch of the same rows,
-    bit-for-bit (same binary state) — asserted in tests."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("__w"), F.col(key_col))
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.col(col), F.lit(lgk))
-            ).alias("approx_distinct")
-        )
-        .select(
-            key_col, F.col("__w.start").alias("window_start"), "approx_distinct"
-        )
-    )
-
-
-def streaming_kmv_distinct(
-    events: DataFrame,
-    key_col: str = "event_type",
-    col: str = "user_id",
-    k: int = 128,
-) -> DataFrame:
-    """ST5 — LIFETIME distinct-count per key via a KMV/theta sketch as
-    explicit ``applyInPandasWithState`` state (the custom-stateful
-    sibling of ``streaming_distinct_rollup``, whose HLL state lives
-    inside a windowed aggregation): per key the state is the k
-    smallest md5 hash fractions seen so far — kilobytes forever, no
-    watermark needed, because the sketch never grows — refreshed each
-    micro-batch and re-estimated with exactly the batch estimator
-    (``operators/sketches.kmv_stats``: exact below k, else
-    (k-1)/u_(k)). The hash fraction is computed BEFORE the stateful
-    groupBy with the batch ``_hash_frac`` expression itself (JVM-side
-    md5/conv, whole-stage codegen) — the Python state code only merges
-    float fractions, never hashes — so after draining the stream the
-    estimate equals the batch ``kmv_estimate`` of the same rows
-    bit-for-bit, by construction; asserted in
-    tests/test_stateful_streaming.py.
-
-    Update-mode output: one refreshed row per key per micro-batch
-    (key, n_seen, n_kept, theta, estimate). A discarded fraction is
-    always above the current theta and theta only shrinks, so
-    truncation never loses a final top-k member — insert-order
-    invariant, hence micro-batch-boundary invariant.
-    """
-    from ..operators.sketches import _hash_frac
-
-    out_schema = StructType(
-        [
-            StructField(key_col, StringType()),
-            StructField("n_seen", LongType()),
-            StructField("n_kept", LongType()),
-            StructField("theta", DoubleType()),
-            StructField("estimate", DoubleType()),
-        ]
-    )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (kv,) = key
-        if state.exists:
-            us_raw, n_seen = state.get
-            kept = set(us_raw)
-        else:
-            kept, n_seen = set(), 0
-        for pdf in pdfs:
-            n_seen += len(pdf)
-            kept.update(pdf["__u"].values.tolist())
-        us, n_kept, theta, est = _kmv_finalize(kept, k)
-        state.update((us, n_seen))
-        yield pd.DataFrame(
-            {
-                key_col: [kv],
-                "n_seen": [n_seen],
-                "n_kept": [n_kept],
-                "theta": [theta],
-                "estimate": [est],
-            }
-        )
-
-    return (
-        # NULL values contribute neither a fraction nor a row: a NULL
-        # hashes to SQL NULL -> NaN in Arrow, and NaN in the kept set
-        # would make sorted()/theta nondeterministic. Dropping them
-        # matches SQL's COUNT(DISTINCT col), which ignores NULLs.
-        events.filter(F.col(col).isNotNull())
-        .select(key_col, _hash_frac(col).alias("__u"))
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="us array<double>, n_seen bigint",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def streaming_cusum(
-    events: DataFrame,
-    key_col: str = "series",
-    val_col: str = "value",
-    target: float = 0.0,
-    threshold: float = 0.0,
-) -> DataFrame:
-    """ST5 — one-sided upward CUSUM (Page 1954) as explicit stream
-    state: per key, the scalar S_k = max(0, S_{k−1} + (x_k − target))
-    folds over every arriving value in stream order, surviving
-    micro-batch boundaries through the GroupState scalar (the
-    streaming sibling of operators/timeseries.cusum_daily, which fits
-    the in-control target in-batch; a monitor KNOWS its target, so
-    here it is a parameter). Update-mode output: one row per key per
-    micro-batch (key, n_seen, cusum, alarm). Parity with the literal
-    python fold over the same rows in arrival order is asserted in
-    tests."""
-    out_schema = StructType(
-        [
-            StructField(key_col, StringType()),
-            StructField("n_seen", LongType()),
-            StructField("cusum", DoubleType()),
-            StructField("alarm", BooleanType()),
-        ]
-    )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (kv,) = key
-        if state.exists:
-            s, n_seen = state.get
-        else:
-            s, n_seen = 0.0, 0
-        for pdf in pdfs:
-            n_seen += len(pdf)
-            s = _cusum_fold(s, pdf[val_col], target)
-        state.update((float(s), n_seen))
-        yield pd.DataFrame(
-            {
-                key_col: [kv],
-                "n_seen": [n_seen],
-                "cusum": [float(s)],
-                "alarm": [bool(s > threshold)],
-            }
-        )
-
-    return (
-        events.select(key_col, val_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="s double, n_seen bigint",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def streaming_tdigest(
-    events: DataFrame,
-    key_col: str = "event_type",
-    val_col: str = "value",
-    delta: int = 100,
-    qs: tuple = (0.5, 0.95, 0.99),
-) -> DataFrame:
-    """ST5 — t-digest as explicit stream state, completing the
-    sketch-as-state trio (KMV distinct, HLL windowed, t-digest
-    quantiles): per key the GroupState holds the O(delta) centroid
-    arrays; each micro-batch re-clusters state ∪ new values with the
-    same k-space binning as the batch operator
-    (operators/sketches._tdigest_cluster — one code path, two
-    runtimes), then re-interpolates the requested quantiles.
-    Update-mode output: one row per (key, q) per micro-batch
-    (key, n_seen, n_centroids, q, est). State stays O(delta) forever —
-    the property that makes percentile monitoring over an unbounded
-    stream possible at all."""
-    import numpy as np
-
-    from ..operators.sketches import _tdigest_cluster
-
-    out_schema = StructType(
-        [
-            StructField(key_col, StringType()),
-            StructField("n_seen", LongType()),
-            StructField("n_centroids", LongType()),
-            StructField("q", DoubleType()),
-            StructField("est", DoubleType()),
-        ]
-    )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (kv,) = key
-        if state.exists:
-            means, weights, n_seen = state.get
-            m = np.array(means, dtype=float)
-            w = np.array(weights, dtype=float)
-        else:
-            m = np.zeros(0)
-            w = np.zeros(0)
-            n_seen = 0
-        for pdf in pdfs:
-            vals = pdf[val_col].to_numpy(float)
-            n_seen += len(vals)
-            if len(vals):
-                m = np.concatenate([m, vals])
-                w = np.concatenate([w, np.ones(len(vals))])
-        if len(m):
-            m, w = _tdigest_cluster(m, w, delta)
-        state.update((list(map(float, m)), list(map(float, w)), n_seen))
-        qa, est, n_centroids = _tdigest_quantile_rows(m, w, qs)
-        yield pd.DataFrame(
-            {
-                key_col: [kv] * len(qa),
-                "n_seen": [n_seen] * len(qa),
-                "n_centroids": [n_centroids] * len(qa),
-                "q": qa,
-                "est": est,
-            }
-        )
-
-    return (
-        events.select(key_col, val_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=(
-                "means array<double>, weights array<double>, n_seen bigint"
-            ),
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-# -- batch drains of the sketch-as-state trio -------------------------------
-# applyInPandas siblings that run each streaming update's per-group
-# math (the shared fold helpers above) over a whole batch group at
-# once — semantically the drained stream collapsed to one micro-batch.
-# KMV and CUSUM are micro-batch-boundary invariant, so drained-stream
-# == batch-drain exactly (pinned in tests/test_stateful_streaming.py);
-# the t-digest's incremental re-clustering is boundary-SENSITIVE (both
-# sides are valid digests of the same rows), so its drain row is the
-# rank-tolerance audit form. Each drain backs a registered driver gate
-# query, giving the streaming code path an independent DuckDB check —
-# the t11_interval_join_batch precedent.
+# -- batch drains of the sketch folds ---------------------------------------
+# applyInPandas group-maps that run a fold over a whole batch group at
+# once. The t-digest's re-clustering depends on how rows are batched,
+# so its drain row is the rank-tolerance audit form. Each drain backs a
+# registered gate query with a DuckDB oracle.
 
 
 def kmv_drain_batch(
@@ -554,10 +160,9 @@ def kmv_drain_batch(
     col: str = "user_id",
     k: int = 128,
 ) -> DataFrame:
-    """Run ``streaming_kmv_distinct``'s exact state math (JVM-side
-    ``_hash_frac`` then the ``_kmv_finalize`` merge) as a one-shot
-    batch group-map. Returns the drained final row per key:
-    (key, n_seen, n_kept, theta, estimate)."""
+    """Run the KMV state math (JVM-side ``_hash_frac`` then the
+    ``_kmv_finalize`` merge) as a one-shot batch group-map. Returns the
+    final row per key: (key, n_seen, n_kept, theta, estimate)."""
     from ..operators.sketches import _hash_frac
 
     out_schema = StructType(
@@ -585,7 +190,7 @@ def kmv_drain_batch(
         )
 
     return (
-        df.filter(F.col(col).isNotNull())  # same NULL rule as the stream op
+        df.filter(F.col(col).isNotNull())
         .select(key_col, _hash_frac(col).alias("__u"))
         .groupBy(key_col)
         .applyInPandas(drain, schema=out_schema)
@@ -600,11 +205,10 @@ def cusum_drain_batch(
     target_col: str = "target",
     threshold_col: str = "threshold",
 ) -> DataFrame:
-    """Run ``streaming_cusum``'s exact scalar fold (``_cusum_fold``)
-    over each key's day-ordered batch rows. ``daily`` carries the
-    per-key target/threshold as columns (constant within a key) so
-    per-key in-control levels work where the streaming op — a monitor
-    with ONE configured target — takes scalars. Returns the drained
+    """Run Page's CUSUM scalar fold (``_cusum_fold``) over each key's
+    day-ordered batch rows. ``daily`` carries the per-key
+    target/threshold as columns (constant within a key), so each key
+    has its own in-control level. Returns the drained
     final row per key: (key, n_seen, cusum, alarm)."""
     out_schema = StructType(
         [
@@ -647,7 +251,7 @@ def tdigest_drain_batch(
     delta: int = 100,
     qs: tuple = (0.5, 0.95, 0.99),
 ) -> DataFrame:
-    """Run ``streaming_tdigest``'s exact per-group math
+    """Run the t-digest per-group math
     (``operators/sketches._tdigest_cluster`` then
     ``_tdigest_quantile_rows``) as a one-shot batch group-map.
     Returns one row per (key, q): (key, n_seen, n_centroids, q,
@@ -696,8 +300,7 @@ def _spacesaving_fold(counts: dict, errs: dict, items, weights, m: int):
     while room remains, else REPLACE the minimum counter, inheriting
     its count as the new item's error bound. Victims and iteration
     order are deterministic (min count, then lexicographic item; items
-    folded in sorted order), so stream and batch drain agree given the
-    same batch boundaries. Guarantees, regardless of boundaries:
+    folded in sorted order). Guarantees, in any fold order:
     est ≥ true, est − err ≤ true, and every item with true count >
     n/m is present — the properties the audit oracle checks."""
     for it, w in sorted(zip(items, weights)):
@@ -716,90 +319,15 @@ def _spacesaving_fold(counts: dict, errs: dict, items, weights, m: int):
     return counts, errs
 
 
-def streaming_spacesaving(
-    events: DataFrame,
-    key_col: str = "event_type",
-    item_col: str = "user_id",
-    m: int = 64,
-) -> DataFrame:
-    """ST5 — per-key heavy hitters via SpaceSaving as explicit stream
-    state, completing the sketch-state family (KMV cardinality, HLL
-    windowed, t-digest rank, CUSUM shift, SpaceSaving FREQUENCY): the
-    GroupState holds at most ``m`` (item, count, err) counters forever
-    while the stream is unbounded. Each micro-batch pre-aggregates
-    its rows to (item, weight) pairs pandas-side (one value_counts —
-    state code folds O(distinct), never O(rows)) and re-emits the
-    current summary. NULL items are dropped BEFORE the stateful
-    groupBy (the streaming_kmv_distinct NULL rule — a NULL must never
-    occupy a counter as the string 'None'); ``n_seen`` therefore
-    counts non-NULL rows. Update-mode output: one row per (key, item)
-    per micro-batch (key, item, est, err, n_seen)."""
-    out_schema = StructType(
-        [
-            StructField(key_col, StringType()),
-            StructField("item", StringType()),
-            StructField("est", LongType()),
-            StructField("err", LongType()),
-            StructField("n_seen", LongType()),
-        ]
-    )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (kv,) = key
-        if state.exists:
-            its, cts, ers, n_seen = state.get
-            counts = dict(zip(its, cts))
-            errs = dict(zip(its, ers))
-        else:
-            counts, errs, n_seen = {}, {}, 0
-        for pdf in pdfs:
-            n_seen += len(pdf)
-            vc = pdf[item_col].astype(str).value_counts()
-            counts, errs = _spacesaving_fold(
-                counts, errs, vc.index.tolist(), vc.values.tolist(), m
-            )
-        its = sorted(counts)
-        state.update(
-            (its, [counts[i] for i in its], [errs[i] for i in its], n_seen)
-        )
-        yield pd.DataFrame(
-            {
-                key_col: [kv] * len(its),
-                "item": its,
-                "est": [counts[i] for i in its],
-                "err": [errs[i] for i in its],
-                "n_seen": [n_seen] * len(its),
-            }
-        )
-
-    return (
-        events.select(key_col, item_col)
-        .filter(F.col(item_col).isNotNull())
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=(
-                "its array<string>, cts array<bigint>, "
-                "ers array<bigint>, n_seen bigint"
-            ),
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def spacesaving_drain_batch(
     df: DataFrame,
     key_col: str = "event_type",
     item_col: str = "user_id",
     m: int = 64,
 ) -> DataFrame:
-    """One-shot batch drain of ``streaming_spacesaving`` — the same
-    ``_spacesaving_fold`` over each group's value_counts in a single
-    'micro-batch', with the same NULL-item drop before the groupBy.
+    """One-shot batch drain of a SpaceSaving summary: ``_spacesaving_fold``
+    over each group's value_counts, NULL items dropped before the
+    groupBy.
     Returns (key, item, est, err, n_seen)."""
     out_schema = StructType(
         [

@@ -36,6 +36,12 @@ Scenario sets (first positional argument; default ``headline``):
   groupBy), nsw_query_index over a persisted store built outside the
   timing, and the three-slice drift-dashboard drain (week-grain panels:
   cost is the accumulated-events scans).
+- ``nsw_depth``: a persisted NSW index aged through generations — seeded
+  from 1/(G+1) of the embeddings, the other G slices appended in turn
+  with ``compact_nsw_graph`` every fourth. Each generation asserts
+  recall@5 of nsw_query_index against brute force over the accumulated
+  corpus, the out-degree cap M after each compaction, and a bounded
+  graph file count; the timing covers the whole aging run.
 
 Every case is timed as the best of two runs (index builds: one) of
 ``fn(spark, sf_dir).count()`` at 1× and N×.
@@ -231,6 +237,46 @@ def _nsw_store_query(spark, sf_dir: str):
     )
 
 
+NSW_M = 12
+NSW_GENERATIONS = 8
+NSW_RECALL_FLOOR = 0.6  # recall@5; append-built graphs measured 0.92-1.0
+
+
+def _nsw_depth(spark, sf_dir: str):
+    e = t(spark, sf_dir, "embeddings")
+    queries = e.filter(F.col("vec_id") < 5)
+    slot = F.pmod(F.col("vec_id"), F.lit(NSW_GENERATIONS + 1))
+    store = _scratch("nswdepth")
+    _save_nsw(e.filter(slot == 0), store)
+    recalls = []
+    for g in range(1, NSW_GENERATIONS + 1):
+        S.nsw_index_append(e.filter(slot == g), store)
+        if g % 4 == 0:
+            S.compact_nsw_graph(spark, store, M=NSW_M)
+            deg = (
+                spark.read.parquet(f"{store}/graph")
+                .groupBy("level", "src").count().agg(F.max("count"))
+                .collect()[0][0]
+            )
+            assert deg <= NSW_M, f"degree cap broken after compaction: {deg}"
+        truth = {
+            (r["q_id"], r["vec_id"])
+            for r in S.brute_force_topk(e.filter(slot <= g), queries, k=5).collect()
+        }
+        got = {
+            (r["q_id"], r["vec_id"])
+            for r in S.nsw_query_index(spark, store, queries, k=5).collect()
+        }
+        recall = len(got & truth) / len(truth)
+        assert recall >= NSW_RECALL_FLOOR, f"recall {recall} at generation {g}"
+        n_files = sum(
+            x.endswith(".parquet") for x in os.listdir(f"{store}/graph")
+        )
+        assert n_files <= 1000, f"graph file explosion at generation {g}: {n_files}"
+        recalls.append((g, recall))
+    return spark.createDataFrame(recalls, "generation int, recall double")
+
+
 def _dashboard_drain(spark, sf_dir: str):
     ev = t(spark, sf_dir, "events")
     tmp = _scratch("dash")
@@ -273,8 +319,9 @@ SETS = {
         "nsw_store_query": _nsw_store_query,
         "t24_dashboard_drain": _dashboard_drain,
     },
+    "nsw_depth": {"nsw_depth": _nsw_depth},
 }
-ONE_REP = {"nsw_build", "nsw_append_half"}  # index builds
+ONE_REP = {"nsw_build", "nsw_append_half", "nsw_depth"}  # index builds
 
 
 def run_set(spark, cases, sf_dir: str) -> dict[str, float]:

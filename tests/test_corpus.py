@@ -89,19 +89,6 @@ def test_chunk_documents_windows_and_overlap(spark):
     assert covered == {f"t{i}" for i in range(10)}
 
 
-def test_chunk_udtf_matches_declarative(spark):
-    """The UDTF escape-hatch chunker must agree row-for-row with the
-    declarative sequence/explode/slice implementation."""
-    df = spark.createDataFrame(
-        [(i, " ".join(f"w{i}_{j}" for j in range(i % 9 + 1)), "s") for i in range(30)],
-        DOCS,
-    )
-    rows = lambda d: sorted(map(tuple, d.collect()))
-    declarative = rows(C.chunk_documents(df, window=4, stride=3))
-    imperative = rows(C.chunk_documents_udtf(df, window=4, stride=3))
-    assert declarative == imperative
-
-
 def test_source_mixture_weights(spark):
     # tokens: web=9 (3 docs), books=1 → shares .9/.1; alpha=.5 weights
     # ∝ sqrt(share): .75/.25 after normalizing
@@ -149,25 +136,6 @@ def test_source_overlap_dedups_within_source(spark):
     )
     r = C.source_overlap(df, group_col="source").collect()[0]
     assert (r["n_common"], r["jaccard"]) == (1, 1.0)
-
-
-def test_chunk_udtf_whitespace_and_reuse(spark):
-    """ADVICE round 1: the UDTF must tokenize exactly like the
-    declarative path on text with leading/trailing newlines and tabs
-    (strip spaces only), and repeated calls with different
-    window/stride must not clobber each other's registrations."""
-    df = spark.createDataFrame(
-        [(1, "\na b c d e\t", "s"), (2, " x y z ", "s"), (3, "\t\n", "s")],
-        DOCS,
-    )
-    rows = lambda d: sorted(map(tuple, d.collect()))
-    a_decl = rows(C.chunk_documents(df, window=3, stride=2))
-    b_decl = rows(C.chunk_documents(df, window=2, stride=1))
-    a_udtf_df = C.chunk_documents_udtf(df, window=3, stride=2)
-    b_udtf_df = C.chunk_documents_udtf(df, window=2, stride=1)
-    # collect AFTER both registrations: unique names keep both plans valid
-    assert rows(a_udtf_df) == a_decl
-    assert rows(b_udtf_df) == b_decl
 
 
 def test_pack_sequences_ntokens_col(spark):

@@ -17,7 +17,6 @@ pinned, replaced and released through one owner.
 from __future__ import annotations
 
 import ast
-import json
 import pathlib
 
 import pytest
@@ -255,40 +254,52 @@ def test_operator_leaves_no_persisted_rdds(spark, name):
 
 
 def test_drift_gated_drain_frees_per_batch_pins(spark, tmp_path):
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_drift_gated_ingest,
+    """The admission gate's per-batch step over three batches: pin the
+    batch, score it with psi_admit, chi2_admit and w1_admit, and own
+    their score rows in the batch's scope. Nothing stays persisted."""
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.quality import (
+        chi2_admit,
+        psi_admit,
+        w1_admit,
     )
 
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    for b in range(3):
-        with open(in_dir / f"b{b}.json", "w") as f:
-            for i in range(10):
-                f.write(
-                    json.dumps(
-                        {
-                            "doc_id": b * 10 + i,
-                            "n_chars": i * 410 + 100,
-                            "lang": "en" if i % 3 else "de",
-                        }
-                    )
-                    + "\n"
-                )
+    store = str(tmp_path / "store")
     before = _persisted(spark)
-    q = stream_drift_gated_ingest(
-        spark,
-        str(in_dir),
-        str(tmp_path / "out"),
-        str(tmp_path / "quarantine"),
-        str(tmp_path / "store"),
-        str(tmp_path / "ckpt"),
-        schema="doc_id bigint, n_chars bigint, lang string",
-        max_files_per_trigger=1,
+    for b in range(3):
+        batch = spark.createDataFrame(
+            [(b * 10 + i, i * 410 + 100, "en" if i % 3 else "de") for i in range(10)],
+            "doc_id bigint, n_chars bigint, lang string",
+        )
+        with Frames() as frames:
+            pinned = frames.pin(batch, eager=True)
+            frames.own(psi_admit(pinned, f"{store}/psi")).collect()
+            frames.own(chi2_admit(pinned, f"{store}/chi2")).collect()
+            frames.own(w1_admit(pinned, f"{store}/w1", threshold=500.0)).collect()
+    assert not _persisted(spark) - before
+
+
+def test_drift_dashboard_batches_free_count_pins(spark, tmp_path):
+    """Three incremental drift-dashboard batches publish their panels
+    and leave no checkpoint of the count spine behind: the panels'
+    ``counts`` pins are owned by the refresh and freed after publish."""
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
+        drift_dashboard_batch,
     )
-    q.awaitTermination(120)
-    assert q.exception() is None
-    monitor = spark.read.parquet(str(tmp_path / "store" / "monitor"))
-    assert monitor.count() == 3
+
+    gold = str(tmp_path / "gold")
+    before = _persisted(spark)
+    for b in range(3):
+        batch = spark.createDataFrame(
+            [
+                (b * 100 + i, f"2024-0{b + 1}-0{i % 7 + 1} 00:00:00", i,
+                 "view" if i % 2 else "click", float(i % 13))
+                for i in range(40)
+            ],
+            "event_id bigint, ts string, user_id bigint, event_type string, "
+            "value double",
+        ).withColumn("ts", F.to_timestamp("ts"))
+        out = drift_dashboard_batch(spark, batch, b, gold)
+        assert out["drift_panel"].count() > 0 and out["mix_panel"].count() > 0
     assert not _persisted(spark) - before
 
 

@@ -114,8 +114,3 @@ def test_slicer_filter(silver):
     snap = gold.lead_snapshot(silver, slicer=F.col("user_email") == "a@x")
     s = gold.sales_totals(snap).collect()[0]
     assert s["monto_colocado"] == 4000.0
-
-
-def test_register_views(spark, silver):
-    gold.register_views(gold.lead_snapshot(silver))
-    assert spark.sql("SELECT Firmados FROM gold_funnel").collect()[0][0] == 3

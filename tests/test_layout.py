@@ -1,11 +1,7 @@
-"""Z-order layout: key correctness and the pruning property it exists
-for — per-file min/max ranges must be tight on BOTH clustered columns,
-where a single-column sort is tight on one and spans the full range on
-the other (oracle-checked end-to-end as x_zorder_key)."""
+"""Z-order and Hilbert layout keys: correctness against pure-Python
+references (oracle-checked end-to-end as x_zorder_key)."""
 
 from __future__ import annotations
-
-import glob
 
 from pyspark.sql import functions as F
 
@@ -50,115 +46,6 @@ def test_scale_to_bits_clamps_and_null_maps_zero(spark):
     assert got[3] == 15         # hi clamps to top
     assert got[4] == 15
     assert got[5] == 0          # NULL → 0, never NULL
-
-
-def _avg_file_spans(path: str, spark, cols):
-    """Mean per-file (max-min) span for each column, as coverage
-    fraction of the global span."""
-    full = spark.read.parquet(path)
-    glo = full.agg(
-        *[F.min(c).alias(f"lo_{c}") for c in cols],
-        *[F.max(c).alias(f"hi_{c}") for c in cols],
-    ).collect()[0]
-    spans = {c: [] for c in cols}
-    for f in glob.glob(f"{path}/part-*.parquet"):
-        st = (
-            spark.read.parquet(f)
-            .agg(
-                *[F.min(c).alias(f"lo_{c}") for c in cols],
-                *[F.max(c).alias(f"hi_{c}") for c in cols],
-            )
-            .collect()[0]
-        )
-        for c in cols:
-            width = float(glo[f"hi_{c}"]) - float(glo[f"lo_{c}"])
-            spans[c].append(
-                (float(st[f"hi_{c}"]) - float(st[f"lo_{c}"])) / width
-            )
-    return {c: sum(v) / len(v) for c, v in spans.items()}
-
-
-def test_zorder_write_tightens_both_dimensions(spark, tmp_path):
-    # synthetic uniform grid so both dims have real spread
-    df = spark.range(4096).select(
-        F.col("id"),
-        (F.col("id") % 64).alias("a"),
-        F.floor(F.col("id") / 64).alias("b"),
-    )
-    zpath = str(tmp_path / "zorder")
-    spath = str(tmp_path / "sorted")
-    L.zorder_write(df, zpath, ["a", "b"], [(0, 64), (0, 64)], bits=6, n_files=16)
-    (
-        df.repartitionByRange(16, "a")
-        .sortWithinPartitions("a")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-    z = _avg_file_spans(zpath, spark, ["a", "b"])
-    s = _avg_file_spans(spath, spark, ["a", "b"])
-    # single-col sort: near-zero span on a, full span on b
-    assert s["a"] < 0.2 and s["b"] > 0.8
-    # z-order: BOTH dims well under the full span — balanced pruning
-    assert z["a"] < 0.5 and z["b"] < 0.5
-    # and the worst dimension improves vs the sorted layout
-    assert max(z.values()) < max(s.values()) - 0.3
-    # round trip loses no rows
-    assert spark.read.parquet(zpath).count() == 4096
-
-
-def test_manifest_pruning_on_zordered_layout(spark, tmp_path):
-    df = spark.range(4096).select(
-        F.col("id"),
-        (F.col("id") % 64).alias("a"),
-        F.floor(F.col("id") / 64).alias("b"),
-    )
-    zpath = str(tmp_path / "z")
-    L.zorder_write(df, zpath, ["a", "b"], [(0, 64), (0, 64)], bits=6, n_files=16)
-    man = L.build_manifest(spark, zpath, ["a", "b"])
-    assert man.count() == 16
-    # a narrow box on BOTH dims must skip most files on a z-ordered
-    # layout...
-    ranges = {"a": (0, 7), "b": (0, 7)}
-    kept = L.prune_files(man, ranges)
-    assert 0 < len(kept) <= 4
-    # ...and the pruned read + row filter equals the full-scan filter
-    got = (
-        L.read_pruned(spark, man, ranges)
-        .filter((F.col("a") <= 7) & (F.col("b") <= 7))
-        .count()
-    )
-    want = df.filter((F.col("a") <= 7) & (F.col("b") <= 7)).count()
-    assert got == want == 64
-
-
-def test_bloom_manifest_no_false_negatives_and_skips(spark, tmp_path):
-    from pyspark.sql import functions as F
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.layout import (
-        build_manifest_bloom,
-        prune_files_bloom,
-    )
-
-    path = str(tmp_path / "bloomed")
-    # 8 files of 500 ids each, disjoint by construction
-    df = spark.range(0, 4000).select(
-        F.col("id").alias("event_id"), (F.col("id") % 97).alias("attr")
-    )
-    df.repartitionByRange(8, "event_id").write.parquet(path)
-    man = build_manifest_bloom(spark, path, "event_id").cache()
-    n_files = man.count()
-    assert n_files == 8
-
-    # every present key's true file must survive (no false negatives)
-    full = spark.read.parquet(path).withColumn("__f", F.input_file_name())
-    for probe in (0, 1234, 3999):
-        true_file = full.filter(F.col("event_id") == probe).select("__f").first()["__f"]
-        survivors = prune_files_bloom(man, probe)
-        assert true_file in survivors, probe
-
-    # absent keys prune: across many absent probes the average survivor
-    # count must be far below the file count (fp-rate bound, k=4)
-    tot = sum(len(prune_files_bloom(man, v)) for v in range(100000, 100020))
-    assert tot < 20 * n_files / 2
 
 
 def test_hilbert_key_matches_xy2d_and_is_bijective(spark):

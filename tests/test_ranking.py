@@ -253,25 +253,24 @@ def test_tie_split_rejects_wide_decimal(spark):
 
 
 def _file_spans(spark, path, col):
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.layout import (
-        build_manifest,
+    """(min, max, file, rows) of ``col`` per data file, in min order."""
+    per_file = (
+        spark.read.parquet(path)
+        .groupBy(F.input_file_name().alias("file"))
+        .agg(
+            F.min(col).alias("lo"),
+            F.max(col).alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+        )
     )
-
-    return sorted(
-        (r[f"lo_{col}"], r[f"hi_{col}"], r["file"], r["n_rows"])
-        for r in build_manifest(spark, path, [col]).collect()
-    )
+    return sorted((r["lo"], r["hi"], r["file"], r["n"]) for r in per_file.collect())
 
 
 def test_sorted_write_tiles_and_prunes(spark, tmp_path):
     """sorted_write's output files must tile the order column (file
     i's max <= file i+1's min — the TeraSort layout), preserve every
-    row, keep each file internally sorted, and make layout.prune_files
-    skip most files for a narrow range predicate."""
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.layout import (
-        build_manifest,
-        prune_files,
-    )
+    row, keep each file internally sorted, and let min/max file
+    statistics skip most files for a narrow range predicate."""
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.ranking import (
         sorted_write,
     )
@@ -296,10 +295,10 @@ def test_sorted_write_tiles_and_prunes(spark, tmp_path):
     one = spark.read.parquet(spans[3][2]).select("v").collect()
     vals = [r["v"] for r in one]
     assert vals == sorted(vals)
-    # manifest pruning: a narrow range hits few files
-    man = build_manifest(spark, path, ["v"])
+    # file skipping on min/max stats: a narrow range hits few files
     lo, hi = spans[2][0], spans[2][1]
-    kept = prune_files(man, {"v": (lo + (hi - lo) * 0.4, lo + (hi - lo) * 0.6)})
+    q_lo, q_hi = lo + (hi - lo) * 0.4, lo + (hi - lo) * 0.6
+    kept = [s for s in spans if not (s[1] < q_lo or s[0] > q_hi)]
     assert 1 <= len(kept) <= 2
     # round trip: same multiset of rows
     back = spark.read.parquet(path)

@@ -110,9 +110,6 @@ def test_results_invariant_under_partitioning(spark):
         minhash_estimate_pairs,
         ngram_containment_pairs,
     )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.sessions import (
-        session_stats,
-    )
 
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.dedup import (
         sliding_span_dedup,
@@ -129,7 +126,6 @@ def test_results_invariant_under_partitioning(spark):
         (docs, lambda d: ngram_containment_pairs(d, threshold=0.3)),
         (docs, lambda d: minhash_estimate_pairs(d)),
         (events, lambda d: ohlc_downsample(d, bucket="5 minutes")),
-        (events, lambda d: session_stats(d)),
     ]
     for src, op in cases:
         a = sorted(map(tuple, op(src.repartition(2)).collect()))

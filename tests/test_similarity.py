@@ -286,6 +286,37 @@ def test_nsw_topk_descends_deep_prebuilt_graph(spark):
     assert a == b and len(a) > 0
 
 
+def test_nsw_broadcast_guard_reads_graph_degree(spark, monkeypatch):
+    """The NSW broadcast guard sizes per-hop state from the graph's own
+    max out-degree and top layer, not from the ``M`` argument: with the
+    budget between the two estimates, a graph whose degree exceeds M
+    runs unhinted, and its results equal the broadcast run's."""
+    from pyspark.sql import functions as F
+
+    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    q = e.filter("vec_id < 3")
+    graph = S.nsw_build_graph(e, M=8).localCheckpoint(eager=True)
+    degree, top = (
+        graph.groupBy("level", "src").count()
+        .agg(F.max("count"), F.max("level")).collect()[0]
+    )
+    assert degree > 1
+
+    def budget(deg):  # 3 queries, default beam 16 and hops 3
+        return 3 * 16 * (deg + 1) * (3 + top + 1)
+
+    hinted = []
+    broadcast = F.broadcast
+    monkeypatch.setattr(F, "broadcast", lambda df: hinted.append(1) or broadcast(df))
+    monkeypatch.setattr(S, "NSW_BROADCAST_MAX_ROWS", budget(1))
+    plain = sorted(map(tuple, S.nsw_topk(e, q, k=5, graph=graph, M=1).collect()))
+    assert not hinted
+    monkeypatch.setattr(S, "NSW_BROADCAST_MAX_ROWS", budget(degree))
+    hint = sorted(map(tuple, S.nsw_topk(e, q, k=5, graph=graph, M=1).collect()))
+    assert hinted
+    assert plain == hint and len(plain) > 0
+
+
 @pytest.mark.slow  # round 16: heavy leg, slow tier (see pytest.ini)
 def test_nsw_query_index_plan_bounded(spark, tmp_path):
     """Round-14 pin for the x_ann_hnsw_store gate row: the persisted-
@@ -474,33 +505,6 @@ def test_nsw_index_append_requires_existing_index(spark, tmp_path):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     with pytest.raises(FileNotFoundError):
         nsw_index_append(e.limit(5), str(tmp_path / "missing"))
-
-
-def test_pq_trained_codebooks_beat_standin(spark):
-    """Grouped per-subspace k-means codebooks must not lose to the
-    slice-seeded stand-in — PQ recall tracks quantization error, which
-    training reduces even on the uniform-random fixture (the PQ worst
-    case). Measured: stand-in 0.40, trained 0.44."""
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
-        pq_codebooks,
-        pq_topk,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = e.filter("vec_id < 5")
-    exact = {
-        (r["q_id"], r["vec_id"]) for r in S.brute_force_topk(e, q, k=5).collect()
-    }
-
-    def recall(df):
-        approx = {(r["q_id"], r["vec_id"]) for r in df.collect()}
-        return len(approx & exact) / len(exact)
-
-    r_std = recall(pq_topk(e, q, k=5))
-    cb = pq_codebooks(e, iters=2)
-    assert cb.count() == 8 * 64
-    r_tr = recall(pq_topk(e, q, k=5, codebooks=cb))
-    assert r_tr >= r_std >= 0.3, (r_tr, r_std)
 
 
 def test_ivf_pq_composed_recall_and_candidate_bound(spark):
@@ -732,47 +736,6 @@ def test_pca_project_variance_matches_eigenvalues(spark):
     assert comps == comps2 and evals == evals2 and mu == mu2
 
 
-def test_ivf_index_persistence_roundtrip(spark, tmp_path):
-    """Build → save → load → query must equal the in-one-go ivf_topk,
-    and the probed query must prune to the probed buckets' partitions
-    (PartitionFilters on bucket in the scan)."""
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_query_index,
-        ivf_topk,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
-    from pyspark.sql import functions as F
-
-    base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = base.filter(F.col("vec_id") < 5)
-    idx = build_ivf_index(base, n_centroids=8)
-    save_ivf_index(idx, str(tmp_path / "ivf"))
-    loaded = load_ivf_index(spark, str(tmp_path / "ivf"))
-
-    direct = {
-        (r["q_id"], r["rnk"]): r["vec_id"]
-        for r in ivf_topk(base, queries, k=5, n_centroids=8, n_probes=2).collect()
-    }
-    via_index = {
-        (r["q_id"], r["rnk"]): r["vec_id"]
-        for r in ivf_query_index(loaded, queries, k=5, n_probes=2).collect()
-    }
-    assert via_index == direct and len(via_index) == 25
-
-    plan = (
-        ivf_query_index(loaded, queries, k=5, n_probes=2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the lists scan must carry the bucket partition column for
-    # dynamic pruning of unprobed buckets
-    assert "bucket" in plan
-
-
 @pytest.mark.slow  # round 16: heavy leg, slow tier (see pytest.ini)
 def test_power_iteration_converges_to_eigh_top(spark):
     """The fixed-point power iteration must converge to numpy eigh's
@@ -914,63 +877,6 @@ def test_rrf_fuse_respects_k_per_query(spark):
     out = rrf_fuse(a, b, k=3)
     got = {r["query_id"]: r for r in out.groupBy("query_id").count().collect()}
     assert got["q1"]["count"] == 3 and got["q2"]["count"] == 3
-
-
-def test_ivf_index_append_equals_one_shot_build(spark, tmp_path):
-    """A corpus ingested in two batches through ivf_index_append (frozen
-    quantizer) must query EXACTLY like a one-shot build over the full
-    corpus with the same centroids."""
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_append,
-        ivf_query_index,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
-    from pyspark.sql import functions as F
-
-    base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = base.filter(F.col("vec_id") < 5)
-    b0 = base.filter(F.col("vec_id") % 2 == 0)
-    b1 = base.filter(F.col("vec_id") % 2 == 1)
-
-    # incremental: seed from batch 0, append batch 1
-    inc_path = str(tmp_path / "ivf_inc")
-    save_ivf_index(build_ivf_index(b0, n_centroids=8), inc_path)
-    ivf_index_append(b1, inc_path)
-
-    # one-shot over the full corpus with the SAME (batch-0-seeded)
-    # centroids — the frozen-quantizer contract
-    cents = load_ivf_index(spark, inc_path)["centroids"]
-    full_path = str(tmp_path / "ivf_full")
-    save_ivf_index(build_ivf_index(base, centroids=cents), full_path)
-
-    got = {
-        (r["q_id"], r["rnk"]): r["vec_id"]
-        for r in ivf_query_index(
-            load_ivf_index(spark, inc_path), queries, k=5, n_probes=2
-        ).collect()
-    }
-    want = {
-        (r["q_id"], r["rnk"]): r["vec_id"]
-        for r in ivf_query_index(
-            load_ivf_index(spark, full_path), queries, k=5, n_probes=2
-        ).collect()
-    }
-    assert got == want and len(got) == 25
-
-
-def test_ivf_index_append_requires_existing_index(spark, tmp_path):
-    import pytest as _pytest
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
-        ivf_index_append,
-    )
-
-    base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    with _pytest.raises(FileNotFoundError, match="no IVF index"):
-        ivf_index_append(base, str(tmp_path / "missing"))
 
 
 def test_nsw_topk_rescore_dedup_matches_antijoin_reference(spark):

@@ -3,7 +3,6 @@ with dynamic partition overwrite."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -86,39 +85,6 @@ def test_generation_atomic_swap(spark, tmp_path):
     write_generation(spark.range(40).toDF("id"), tbl, keep_generations=2)
     assert not os.path.exists(f"{tbl}/gen-0")
     assert read_current(spark, tbl).count() == 40
-
-
-def test_compact_generation_reduces_files_preserves_rows(spark, tmp_path):
-    import os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.generations import (
-        compact_generation,
-        current_generation,
-        read_current,
-        write_generation,
-    )
-
-    table = str(tmp_path / "events_tbl")
-    df = spark.range(0, 20000).selectExpr("id", "id % 7 AS k")
-    # simulate a micro-batch sink's small-file problem: 64 tiny files
-    write_generation(df.repartition(64), table)
-    g0 = current_generation(table)
-    files_before = [
-        f for f in os.listdir(os.path.join(table, f"gen-{g0}"))
-        if f.endswith(".parquet")
-    ]
-    assert len(files_before) == 64
-
-    g1 = compact_generation(spark, table, target_mb=128)
-    assert g1 == g0 + 1
-    files_after = [
-        f for f in os.listdir(os.path.join(table, f"gen-{g1}"))
-        if f.endswith(".parquet")
-    ]
-    assert len(files_after) < len(files_before)
-    got = read_current(spark, table)
-    assert got.count() == 20000
-    assert got.selectExpr("sum(id)").first()[0] == sum(range(20000))
 
 
 def test_corrupt_parquet_file_tolerance(spark, tmp_path):

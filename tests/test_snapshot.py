@@ -6,7 +6,6 @@ from __future__ import annotations
 import datetime as dt
 
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.snapshot import (
-    dedup_by_id,
     latest_per_key,
     upsert_merge,
 )
@@ -47,11 +46,6 @@ def test_upsert_merge_last_write_wins(spark):
     # idempotence: merging the same updates again changes nothing
     again = upsert_merge(merged, updates, ["lead_id"], ["updated_at", "seq"])
     assert sorted(again.collect()) == sorted(merged.collect())
-
-
-def test_dedup_by_id(spark):
-    df = spark.createDataFrame([(1, "x"), (1, "x"), (2, "y")], "id bigint, v string")
-    assert dedup_by_id(df, "id").count() == 2
 
 
 def test_cdc_apply_delete_and_resurrect(spark):

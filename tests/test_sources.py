@@ -57,7 +57,8 @@ def test_multimodal_decode_metadata(spark):
     docs = spark.createDataFrame(
         [(1, "hello world"), (2, "spark")], "doc_id bigint, text string"
     )
-    out = {r["doc_id"]: r for r in M.decode_metadata(M.with_blob(docs)).collect()}
+    blobs = docs.withColumn("blob", F.encode("text", "utf-8"))
+    out = {r["doc_id"]: r for r in M.decode_metadata(blobs).collect()}
     assert out[1]["n_bytes"] == 11
     assert out[1]["width"] == 320 + 11 % 320
     assert out[1]["format"] == "unknown"
@@ -128,74 +129,6 @@ def test_multimodal_decode_real_headers(spark):
     assert out[4]["n_bytes"] == len(b"not an image at all")
 
 
-def test_multimodal_frame_sample(spark):
-    docs = spark.createDataFrame(
-        [(1, "x" * 1000)], "doc_id bigint, text string"
-    )
-    out = M.frame_sample_stub(M.with_blob(docs), every_n=3).collect()
-    # 1000 bytes → 10 fake frames → sampled at 0,3,6,9
-    assert sorted(r["frame_idx"] for r in out) == [0, 3, 6, 9]
-    # real mp4 payload: frame count comes from the parsed duration
-    # (1 s at 30 fps → 30 frames → sampled at 0,10,20), not byte length
-    vids = spark.createDataFrame(
-        [(2, bytearray(M.build_minimal_mp4(320, 240, 1000)))],
-        "doc_id bigint, blob binary",
-    )
-    vout = M.frame_sample_stub(vids, every_n=10).collect()
-    assert sorted(r["frame_idx"] for r in vout) == [0, 10, 20]
-    # audio-only ISO-BMFF (m4a): parseable container but ZERO vide
-    # tracks — there are no video frames to sample, so it must take
-    # the byte-length stub path, not duration*fps (round-10 fix)
-    m4a_bytes = M.build_minimal_mp4(0, 0, 5000, track_kind=b"soun")
-    m4a = spark.createDataFrame(
-        [(3, bytearray(m4a_bytes))], "doc_id bigint, blob binary"
-    )
-    aout = M.frame_sample_stub(m4a, every_n=1).collect()
-    assert len(aout) == max(1, len(m4a_bytes) // 100)  # not 150 (=5s*30fps)
-
-
-def test_binary_file_source(spark, tmp_path):
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.multimodal import (
-        decode_metadata,
-        read_binary_dir,
-    )
-    (tmp_path / "img1.bin").write_bytes(b"\x89PNG" + b"x" * 100)
-    (tmp_path / "img2.bin").write_bytes(b"\xff\xd8" + b"y" * 50)
-    (tmp_path / "skip.txt").write_text("not media")
-    df = read_binary_dir(spark, str(tmp_path), "*.bin")
-    assert df.count() == 2
-    meta = decode_metadata(df.withColumn("doc_id", F.length("path").cast("long")))
-    assert {r["n_bytes"] for r in meta.collect()} == {104, 52}
-
-
-def test_python_datasource_paged_api(spark):
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.rest_datasource import (
-        PagedApiDataSource,
-    )
-
-    spark.dataSource.register(PagedApiDataSource)
-    df = (
-        spark.read.format("paged_api")
-        .option("total", 257)
-        .option("page_size", 50)
-        .option("pages_per_task", 2)
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 3  # 6 pages / 2 per task
-    rows = df.collect()
-    assert len(rows) == 257
-    assert {r["id"] for r in rows} == set(range(257))
-
-    filtered = (
-        spark.read.format("paged_api")
-        .option("total", 257)
-        .option("page_size", 50)
-        .option("min_id", 200)
-        .load()
-    )
-    assert filtered.count() == 57
-
-
 def test_fetcher_retry_backoff():
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.rest import (
         with_retries,
@@ -222,144 +155,6 @@ def test_fetcher_retry_backoff():
 
     with _pytest.raises(ConnectionError):
         with_retries(dead, max_tries=2, sleep=sleeps.append)(1, 0, {})
-
-
-def test_embed_stub_feeds_ann(spark):
-    """Multimodal → similarity bridge: the stub embedder turns binary
-    payloads into the embeddings-table contract, identical payloads
-    embed identically, and the output drives the ANN operators
-    directly (exact duplicates rank as each other's nearest
-    neighbour with similarity ~1)."""
-    from pyspark.sql import functions as F
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.multimodal import (
-        embed_stub,
-        with_blob,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
-        brute_force_topk,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog " * 4),
-            (2, "the quick brown fox jumps over the lazy dog " * 4),  # dup of 1
-            (3, "entirely different payload with other bytes " * 3),
-            (4, "short"),
-        ],
-        "doc_id bigint, text string",
-    )
-    emb = embed_stub(with_blob(docs), dim=16)
-    rows = {r["vec_id"]: r["embedding"] for r in emb.collect()}
-    assert set(rows) == {1, 2, 3, 4}
-    assert all(len(v) == 16 for v in rows.values())
-    assert rows[1] == rows[2] != rows[3]  # deterministic, content-keyed
-
-    top1 = {
-        r["q_id"]: (r["vec_id"], r["sim"])
-        for r in brute_force_topk(emb, emb.filter(F.col("vec_id") == 1), k=1).collect()
-    }
-    nn, sim = top1[1]
-    assert nn == 2 and sim >= 0.999999
-
-
-def test_webhook_push_datasource_streams_and_matches_batch_parse(spark, tmp_path):
-    """The Spark 4 streaming DataSource (S5 push receiver, pull form):
-    offsets advance per micro-batch, the generator caps at max_events,
-    and the streamed+parsed rows equal a batch parse of the identical
-    bodies."""
-    import time
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.webhook_datasource import (
-        parse_push_bodies,
-        push_webhook_source,
-        synthetic_body,
-    )
-
-    parsed = push_webhook_source(spark, events_per_batch=40, max_events=120)
-    q = (
-        parsed.writeStream.format("memory")
-        .queryName("push_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_push"))
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            if spark.table("push_stream").count() >= 120:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    got = spark.table("push_stream")
-    assert got.count() == 120
-
-    batch_raw = spark.createDataFrame(
-        [(i, synthetic_body(i)) for i in range(120)], "offset bigint, body string"
-    )
-    want = parse_push_bodies(batch_raw)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    # every parsed account is in the whitelist; no corrupt rows
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.schemas import (
-        ALLOWED_ACCOUNTS,
-    )
-
-    accounts = {r["account"] for r in got.select("account").distinct().collect()}
-    assert accounts <= set(ALLOWED_ACCOUNTS)
-
-
-def _wav_bytes(ch: int, rate: int, bits: int, n_frames: int,
-               extra_chunk: bool = False) -> bytes:
-    import struct
-
-    data_size = n_frames * ch * (bits // 8)
-    fmt = struct.pack("<HHIIH H".replace(" ", ""), 1, ch, rate,
-                      rate * ch * bits // 8, ch * bits // 8, bits)
-    body = b"WAVE"
-    if extra_chunk:
-        # odd-sized LIST chunk before fmt: exercises word-alignment
-        body += b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"
-    body += b"fmt " + struct.pack("<I", 16) + fmt
-    body += b"data" + struct.pack("<I", data_size) + b"\x00" * data_size
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + body
-
-
-def test_wav_header_parse_pure_python():
-    # 2ch 16-bit 8kHz, 4000 frames = 500 ms
-    assert M.parse_wav_header(_wav_bytes(2, 8000, 16, 4000)) == (
-        2, 8000, 16, 4000, 500,
-    )
-    # word-aligned odd chunk before fmt must not derail the walk
-    assert M.parse_wav_header(
-        _wav_bytes(1, 44100, 16, 44100, extra_chunk=True)
-    ) == (1, 44100, 16, 44100, 1000)
-    assert M.parse_wav_header(b"RIFFxxxxAVI LIST") is None
-    assert M.parse_wav_header(b"plain text") is None
-    assert M.parse_wav_header(b"") is None
-    # fmt without data (or vice versa) → no metadata claim
-    import struct as _s
-
-    no_data = b"RIFF" + _s.pack("<I", 20) + b"WAVEfmt " + _s.pack("<I", 16) \
-        + _s.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    assert M.parse_wav_header(no_data) is None
-
-
-def test_decode_audio_metadata_mapinpandas(spark):
-    rows = [
-        (1, bytearray(_wav_bytes(2, 16000, 16, 1600))),
-        (2, bytearray(b"not audio at all")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, blob binary")
-    out = {r["doc_id"]: r for r in M.decode_audio_metadata(df).collect()}
-    assert out[1]["format"] == "wav"
-    assert out[1]["channels"] == 2
-    assert out[1]["sample_rate"] == 16000
-    assert out[1]["n_frames"] == 1600
-    assert out[1]["duration_ms"] == 100
-    assert out[2]["format"] == "unknown"
-    assert out[2]["channels"] is None
-    assert out[2]["n_bytes"] == 16
 
 
 def test_mp4_header_parse_pure_python():

@@ -1,6 +1,7 @@
-"""ST5/ST4 tests: the applyInPandasWithState lead-state operator and the
-tumbling-window aggregation, driven through real micro-batches
-(availableNow) and checked against their batch equivalents."""
+"""ST5/ST3 tests: the applyInPandasWithState lead-state operator, the
+stream-stream interval join and watermark behaviour, driven through
+real micro-batches (availableNow) and checked against their batch
+equivalents."""
 
 from __future__ import annotations
 
@@ -18,7 +19,6 @@ from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.snaps
 )
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
     streaming_lead_state,
-    streaming_windowed_counts,
 )
 
 SCHEMA = "lead_id bigint, ts timestamp, step string, event_type string"
@@ -75,39 +75,6 @@ def test_streaming_lead_state_matches_batch_snapshot(spark, event_dir, tmp_path)
     }
     assert {k: v[0] for k, v in got.items()} == expect
     assert got[1][1] == 3  # state counted every event for lead 1
-
-
-def test_streaming_windowed_counts_match_batch(spark, event_dir, tmp_path):
-    stream = streaming_windowed_counts(
-        _read_stream(spark, event_dir), window="1 hour"
-    )
-    q = (
-        # complete mode: append would withhold windows the watermark
-        # hasn't passed, which with a single availableNow drain is all
-        # of them — complete emits the full aggregation state
-        stream.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    batch = spark.read.schema(SCHEMA).json(event_dir)
-    expect = {
-        (r["ws"], r["event_type"]): r["n"]
-        for r in batch.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n")
-        .collect()
-    }
-    assert got == expect
 
 
 @pytest.mark.slow  # round 16: heavy leg, slow tier (see pytest.ini)
@@ -172,40 +139,6 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert got == expect == {(100, 200), (101, 201), (102, 203)}
 
 
-def test_transform_with_state_matches_apply_in_pandas(spark, event_dir, tmp_path):
-    """The transformWithState implementation must produce the same
-    final per-lead state as the applyInPandasWithState one."""
-    # the TWS state-server protocol needs protobuf, absent in this env
-    pytest.importorskip("google.protobuf.descriptor")
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        streaming_lead_state_tws,
-    )
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = streaming_lead_state_tws(_read_stream(spark, event_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("lead_state_tws")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    try:
-        got = {
-            r["lead_id"]: (r["current_step"], r["n_events_seen"])
-            for r in spark.sql("SELECT * FROM lead_state_tws").collect()
-        }
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    assert got == {1: ("Firmados", 3), 2: ("Rechazados", 2), 3: ("Ingresados", 1)}
-
-
 def test_streaming_session_window(spark, event_dir, tmp_path):
     """Streaming session_window aggregation (complete mode) equals the
     batch session_window on the same input."""
@@ -243,190 +176,6 @@ def test_streaming_session_window(spark, event_dir, tmp_path):
     assert got == expect
     # lead 1: events at 10:00/11:00/12:30 → 3 separate sessions (gaps > 30m)
     assert sum(1 for (lid, _s) in got if lid == 1) == 3
-
-
-def test_streaming_session_window_matches_batch(spark, event_dir, tmp_path):
-    """ST4 session mode (round-1 VERDICT item 4): the streaming
-    session_window aggregation must equal batch session_window on the
-    same rows. Session windows stream in APPEND mode only — a session
-    row is emitted once the watermark passes its end — so a sentinel
-    event one day later arrives in a second micro-batch to advance the
-    watermark past every real session."""
-    import json
-    import os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        streaming_session_stats,
-    )
-
-    sentinel = tmp_path / "sentinel.jsonl"
-    sentinel.write_text(
-        json.dumps(
-            {"lead_id": 999, "ts": "2025-01-02 23:00:00", "step": "x",
-             "event_type": "step"}
-        )
-        + "\n"
-    )
-    sent_dst = os.path.join(event_dir, "zz_sentinel.jsonl")
-    os.replace(str(sentinel), sent_dst)
-    # second micro-batch = strictly later modification time
-    base_mtime = os.path.getmtime(os.path.join(event_dir, "a.jsonl"))
-    os.utime(sent_dst, (base_mtime + 60, base_mtime + 60))
-
-    raw = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(event_dir)
-    )
-    stream = streaming_session_stats(
-        raw, ts_col="ts", key_col="lead_id", gap="30 minutes", watermark="1 hour"
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("sessions_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.table("sessions_stream").collect()))
-    batch = spark.read.schema(SCHEMA).json(event_dir).filter(F.col("lead_id") != 999)
-    want = sorted(
-        map(
-            tuple,
-            batch.groupBy(F.session_window("ts", "30 minutes"), F.col("lead_id"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "lead_id",
-                F.col("session_window.start").alias("session_start"),
-                F.col("session_window.end").alias("session_end"),
-                "n_events",
-            )
-            .collect(),
-        )
-    )
-    assert got == want and len(got) > 0
-
-
-def test_streaming_ohlc_matches_batch(spark, tmp_path):
-    """The OHLC rollup must produce identical bars batch and
-    streaming: append-mode bars finalize when the watermark passes
-    their bucket end, so a sentinel event a day later (second
-    micro-batch) flushes every real bar."""
-    import json
-    import os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.timeseries import (
-        ohlc_downsample,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        streaming_ohlc,
-    )
-
-    schema = "event_id bigint, ts timestamp, user_id bigint, value double"
-    src = tmp_path / "ohlc_events"
-    src.mkdir()
-    rows = [
-        {"event_id": 1, "ts": "2025-01-01 00:00:30", "user_id": 1, "value": 10.0},
-        {"event_id": 2, "ts": "2025-01-01 00:02:00", "user_id": 1, "value": 30.0},
-        {"event_id": 3, "ts": "2025-01-01 00:04:59", "user_id": 1, "value": 20.0},
-        {"event_id": 4, "ts": "2025-01-01 00:05:00", "user_id": 1, "value": 5.0},
-        {"event_id": 5, "ts": "2025-01-01 00:01:00", "user_id": 2, "value": 7.0},
-        # same-instant tie inside one bucket: seq breaks it
-        {"event_id": 7, "ts": "2025-01-01 00:06:00", "user_id": 2, "value": 9.0},
-        {"event_id": 6, "ts": "2025-01-01 00:06:00", "user_id": 2, "value": 4.0},
-    ]
-    (src / "a.jsonl").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-    sent = src / "zz_sentinel.jsonl"
-    sent.write_text(
-        json.dumps(
-            {"event_id": 999, "ts": "2025-01-02 23:00:00", "user_id": 999,
-             "value": 0.0}
-        )
-        + "\n"
-    )
-    base = os.path.getmtime(src / "a.jsonl")
-    os.utime(sent, (base + 60, base + 60))
-
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        streaming_ohlc(raw, bucket="5 minutes", watermark="30 minutes")
-        .writeStream.format("memory")
-        .queryName("ohlc_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ohlc"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.table("ohlc_stream").collect()))
-    batch = (
-        spark.read.schema(schema)
-        .json(str(src))
-        .filter(F.col("user_id") != 999)
-    )
-    want = sorted(map(tuple, ohlc_downsample(batch, bucket="5 minutes").collect()))
-    assert got == want and len(got) == 4
-
-
-def test_streaming_hll_rollup_matches_batch(spark, tmp_path):
-    """Sketch-state streaming: the per-window HLL distinct estimate of
-    a drained stream equals the batch estimate of the same rows."""
-    import json
-    import os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        streaming_distinct_rollup,
-    )
-
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string"
-    src = tmp_path / "hll_events"
-    src.mkdir()
-    rows = [
-        {"event_id": i, "ts": f"2025-01-01 00:0{i % 10}:00",
-         "user_id": i % 7, "event_type": "click" if i % 2 else "view"}
-        for i in range(40)
-    ]
-    (src / "a.jsonl").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-    sent = src / "zz_sentinel.jsonl"
-    sent.write_text(json.dumps(
-        {"event_id": 999, "ts": "2025-01-02 23:00:00", "user_id": 999,
-         "event_type": "sentinel"}) + "\n")
-    base = os.path.getmtime(src / "a.jsonl")
-    os.utime(sent, (base + 60, base + 60))
-
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        streaming_distinct_rollup(raw, window="10 minutes", watermark="30 minutes")
-        .writeStream.format("memory")
-        .queryName("hll_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_hll"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.table("hll_stream").collect()))
-    batch = (
-        spark.read.schema(schema).json(str(src)).filter(F.col("user_id") != 999)
-        .withWatermark("ts", "30 minutes")
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        streaming_distinct_rollup as _r,
-    )
-    want = sorted(map(tuple, _r(batch).collect()))
-    assert got == want and len(got) == 2
-    # 7 distinct users per type in the window; HLL exact at this size
-    assert all(v == 7 for (_, _, v) in got)
 
 
 def test_watermark_drops_late_rows_observably(spark, tmp_path):
@@ -503,307 +252,6 @@ def test_watermark_drops_late_rows_observably(spark, tmp_path):
         r["window"]["start"].hour for r in final.select("window").collect()
     }
     assert 11 not in hours
-
-
-def test_streaming_kmv_distinct_matches_batch(spark, tmp_path):
-    """Lifetime KMV-as-state: after draining the stream in single-file
-    micro-batches, each key's LAST emitted estimate must equal the
-    batch kmv_estimate of the same rows bit-for-bit (same md5 hashing,
-    same k-smallest retention, same estimator), and the small-k path
-    must actually engage the (k-1)/theta estimator."""
-    import json as _json
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.sketches import (
-        kmv_estimate,
-        kmv_kept,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        streaming_kmv_distinct,
-    )
-
-    p = tmp_path / "kmv_ev"
-    p.mkdir()
-    # 40 users for type a (> k=16 so the estimator path fires, spread
-    # across files so state must carry between micro-batches), 5 for b
-    rows = [("a", 1000 + i % 40) for i in range(80)] + [
-        ("b", 2000 + i % 5) for i in range(10)
-    ]
-    for fi in range(4):
-        with open(p / f"f{fi}.jsonl", "w") as f:
-            for et, uid in rows[fi::4]:
-                f.write(_json.dumps({"event_type": et, "user_id": uid}) + "\n")
-    schema = "event_type string, user_id bigint"
-    stream = streaming_kmv_distinct(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(p)),
-        k=16,
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("kmv_state")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_kmv"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # multiple update rows per key (one per micro-batch that touched
-    # it); the last one is the full-stream sketch
-    got_rows = spark.sql("SELECT * FROM kmv_state").collect()
-    assert len(got_rows) > len({r["event_type"] for r in got_rows})
-    last = {}
-    for r in got_rows:  # memory sink preserves batch order
-        last[r["event_type"]] = (r["n_kept"], r["theta"], r["estimate"])
-    batch = spark.read.schema(schema).json(str(p))
-    expect = {
-        r["event_type"]: (r["n_kept"], r["theta"], r["estimate"])
-        for r in kmv_estimate(
-            kmv_kept(batch, ["event_type"], "user_id", k=16),
-            ["event_type"],
-            k=16,
-        ).collect()
-    }
-    assert last == expect
-    assert last["b"][0] == 5 and last["b"][2] == 5.0  # exact below k
-    assert last["a"][0] == 16 and last["a"][2] != 40.0  # estimator path
-    # the one-shot batch drain (the x_kmv_drain driver row's operator)
-    # runs the same state math and must equal the drained stream
-    # bit-for-bit, n_seen included
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        kmv_drain_batch,
-    )
-
-    last_full = {}
-    for r in got_rows:
-        last_full[r["event_type"]] = (
-            r["n_seen"], r["n_kept"], r["theta"], r["estimate"],
-        )
-    drained = {
-        r["event_type"]: (r["n_seen"], r["n_kept"], r["theta"], r["estimate"])
-        for r in kmv_drain_batch(batch, "event_type", "user_id", k=16).collect()
-    }
-    assert drained == last_full
-
-
-def test_streaming_cusum_matches_python_fold(spark, tmp_path):
-    """CUSUM-as-state: after draining single-file micro-batches in
-    order, each key's last emitted cusum equals the literal python
-    fold over the same values in file order, state carrying across
-    batch boundaries; alarm fires only once the accumulated shift
-    crosses the threshold."""
-    import json as _json
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        streaming_cusum,
-    )
-
-    vals = [1.0, 2.0, 0.5, 3.0, 4.0, 5.0, 4.5, 6.0]
-    p = tmp_path / "cusum_ev"
-    p.mkdir()
-    schema = "series string, value double"
-    # batch ORDER is what CUSUM folds over (the zero-clamp makes it
-    # order-dependent) and the file source picks files up in
-    # MODIFICATION-TIME order, not name order — pin distinct ascending
-    # mtimes so micro-batches replay the intended sequence
-    import os as _os
-
-    for fi in range(4):
-        fp = p / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for v in vals[fi * 2 : fi * 2 + 2]:
-                f.write(_json.dumps({"series": "k", "value": v}) + "\n")
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-    stream = streaming_cusum(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(p)),
-        target=2.0,
-        threshold=5.0,
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("cusum_state")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_cusum"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM cusum_state").collect()
-    assert len(rows) == 4  # one update row per micro-batch
-    s, per_batch = 0.0, []
-    for i, v in enumerate(vals):
-        s = max(0.0, s + (v - 2.0))
-        if i % 2 == 1:
-            per_batch.append((i + 1, s, s > 5.0))
-    got = [(r["n_seen"], r["cusum"], r["alarm"]) for r in rows]
-    assert got == per_batch
-    assert got[0][2] is False and got[-1][2] is True
-    # the one-shot batch drain (the t16_cusum_drain driver row's
-    # operator) folds the same values in explicit order and must equal
-    # the stream's final row bit-for-bit
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        cusum_drain_batch,
-    )
-
-    daily = spark.createDataFrame(
-        [("k", i, v, 2.0, 5.0) for i, v in enumerate(vals)],
-        "series string, day int, v double, target double, threshold double",
-    )
-    d = cusum_drain_batch(daily).collect()
-    assert [(r["n_seen"], r["cusum"], r["alarm"]) for r in d] == [got[-1]]
-
-
-def test_streaming_tdigest_bounded_state_and_accuracy(spark, tmp_path):
-    """t-digest-as-state: after draining micro-batches, the final
-    per-q estimates must hit the exact quantiles within digest
-    accuracy (rank error < 3%), state must stay O(delta) no matter
-    how many rows streamed, and n_seen must count every row."""
-    import json as _json
-
-    import numpy as np
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        streaming_tdigest,
-    )
-
-    n = 6000
-    vals = np.exp(2.0 * ((np.arange(n) * 2654435761 % 2**32) / 2**32))
-    p = tmp_path / "td_ev"
-    p.mkdir()
-    import os as _os
-
-    for fi in range(3):
-        fp = p / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for v in vals[fi::3]:
-                f.write(_json.dumps({"event_type": "k", "value": float(v)}) + "\n")
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-    schema = "event_type string, value double"
-    stream = streaming_tdigest(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(p)),
-        delta=100,
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("td_state")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_td"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM td_state").collect()
-    assert len(rows) == 9  # 3 micro-batches × 3 quantiles
-    last = {}
-    for r in rows:  # batch order preserved; later rows overwrite
-        last[r["q"]] = (r["n_seen"], r["n_centroids"], r["est"])
-    sv = np.sort(vals)
-    for qq, (n_seen, n_cent, est) in last.items():
-        assert n_seen == n
-        assert n_cent <= 120  # O(delta) state
-        rank = np.searchsorted(sv, est, side="right") / n
-        assert abs(rank - qq) < 0.03, (qq, rank)
-    # the one-shot batch drain (the x_tdigest_drain driver row's
-    # operator) shares the cluster/interp code; the digest it builds
-    # differs from the incrementally re-clustered stream state (batch
-    # boundaries matter for t-digest) but must satisfy the same
-    # bounded-state and rank-accuracy audit on the same rows
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        tdigest_drain_batch,
-    )
-
-    batch = spark.read.schema(schema).json(str(p))
-    for r in tdigest_drain_batch(batch, "event_type", "value", delta=100).collect():
-        assert r["n_seen"] == n
-        assert r["n_centroids"] <= 120
-        rank = np.searchsorted(sv, r["est"], side="right") / n
-        assert abs(rank - r["q"]) < 0.03, (r["q"], rank)
-
-
-def test_streaming_spacesaving_guarantees_and_drain(spark, tmp_path):
-    """SpaceSaving-as-state: after draining micro-batches the final
-    per-key summary must satisfy the sketch theorems against exact
-    counts (est >= true >= est - err; every item with true count >
-    n/m present; <= m counters), and a single-batch stream must equal
-    the batch drain exactly (same fold, same boundaries)."""
-    import json as _json
-    import os as _os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.stateful import (
-        spacesaving_drain_batch,
-        streaming_spacesaving,
-    )
-
-    # skewed alphabet: item i appears ~ 200/(i+1) times (Zipf-ish),
-    # 40 distinct items, m=8 counters -> real compression
-    rows = []
-    for i in range(40):
-        rows += [f"it{i:02d}"] * max(1, 200 // (i + 1))
-    p = tmp_path / "ss_ev"
-    p.mkdir()
-    for fi in range(4):
-        fp = p / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for it in rows[fi::4]:
-                f.write(_json.dumps({"k": "a", "item": it}) + "\n")
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-    schema = "k string, item string"
-    stream = streaming_spacesaving(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(p)),
-        key_col="k", item_col="item", m=8,
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("ss_state")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ss"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM ss_state").collect()
-    last_n = max(r["n_seen"] for r in out)
-    final = {r["item"]: (r["est"], r["err"]) for r in out if r["n_seen"] == last_n}
-    n = len(rows)
-    assert last_n == n and 0 < len(final) <= 8
-    from collections import Counter
-
-    true_c = Counter(rows)
-    for it, (est, err) in final.items():
-        assert est >= true_c[it] >= est - err, (it, est, err, true_c[it])
-    for it, c in true_c.items():
-        if c * 8 > n:
-            assert it in final, (it, c)
-    # single-batch stream == batch drain (same boundaries -> same fold)
-    batch = spark.read.schema(schema).json(str(p))
-    drained = {
-        r["item"]: (r["est"], r["err"], r["n_seen"])
-        for r in spacesaving_drain_batch(batch, "k", "item", m=8).collect()
-    }
-    p2 = tmp_path / "ss_one"
-    p2.mkdir()
-    with open(p2 / "all.jsonl", "w") as f:
-        for it in rows:
-            f.write(_json.dumps({"k": "a", "item": it}) + "\n")
-    one = streaming_spacesaving(
-        spark.readStream.schema(schema).json(str(p2)), key_col="k",
-        item_col="item", m=8,
-    )
-    q2 = (
-        one.writeStream.format("memory")
-        .queryName("ss_one")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ss1"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got_one = {
-        r["item"]: (r["est"], r["err"], r["n_seen"])
-        for r in spark.sql("SELECT * FROM ss_one").collect()
-    }
-    # NOTE: the batch read's row order can differ from the stream's
-    # file order, but the fold pre-aggregates to per-batch counts and
-    # folds items in sorted order, so one-batch == one-shot drain
-    assert got_one == drained
 
 
 def test_spacesaving_drain_drops_null_items(spark):

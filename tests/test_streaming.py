@@ -52,175 +52,6 @@ def test_stream_restart_is_incremental(spark, webhook_corpus, tmp_path):
     assert n1 == n2
 
 
-def test_stream_dedup_documents_across_restarts(spark, tmp_path):
-    """Content dedup must hold across micro-batches AND across stream
-    restarts (the persistent hash store outlives the watermark horizon
-    that bounds dropDuplicates)."""
-    import json
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_dedup_documents,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out = str(tmp_path / "docs")
-    store = str(tmp_path / "hash_store")
-    ckpt = str(tmp_path / "ckpt_docs")
-
-    def write_batch(name, rows):
-        (in_dir / name).write_text(
-            "\n".join(json.dumps({"doc_id": i, "text": t}) for i, t in rows)
-        )
-
-    write_batch("b1.json", [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha beta")])
-    q = stream_dedup_documents(spark, str(in_dir), out, store, ckpt)
-    q.awaitTermination(120)
-
-    # restart with new files: one cross-restart dup, one new doc
-    write_batch("b2.json", [(10, "gamma delta"), (11, "epsilon zeta")])
-    q2 = stream_dedup_documents(spark, str(in_dir), out, store, ckpt)
-    q2.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    assert {r["doc_id"] for r in got.collect()} == {1, 2, 11}
-    texts = [r["text"] for r in got.collect()]
-    assert len(texts) == len(set(texts))  # every surviving content unique
-
-
-def test_rate_webhook_source_matches_file_route(spark, tmp_path):
-    """S5 push parity: the rate-source adapter's synthesized events,
-    replayed as JSON lines through the file route, project to the
-    identical silver rows (received_at excluded — it is arrival time)."""
-    ticks = spark.range(50).select(
-        F.col("id").alias("value"),
-        F.timestamp_seconds(F.lit(1735689600) + F.col("id")).alias("timestamp"),
-    )
-    syn_raw = W.synthetic_webhook_events(ticks)
-    lines = [
-        r[0]
-        for r in syn_raw.select(
-            F.to_json(F.struct("webhook_event", "account"))
-        ).collect()
-    ]
-    p = tmp_path / "push_replay"
-    p.mkdir()
-    (p / "events.jsonl").write_text("\n".join(lines))
-
-    drop = lambda df: df.drop("received_at")
-    syn_silver = drop(W.project_silver(W.unwrap_events(syn_raw)))
-    file_silver = drop(
-        W.project_silver(W.unwrap_events(W.read_webhook_json(spark, str(p))))
-    )
-    assert syn_silver.schema == file_silver.schema
-    assert sorted(map(tuple, syn_silver.collect())) == sorted(
-        map(tuple, file_silver.collect())
-    )
-    # the generator exercises every handled event type and account
-    kinds = {(r["account"], r["event"]) for r in syn_silver.collect()}
-    assert len({a for a, _ in kinds}) == 3 and len({e for _, e in kinds}) == 4
-
-
-def test_rate_webhook_stream_flows_to_silver(spark, tmp_path):
-    """The live push adapter drives the SAME stream_silver pipeline:
-    run the rate stream briefly, assert silver rows land partitioned
-    with dedup intact."""
-    import time
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.webhook import (
-        rate_webhook_source,
-    )
-
-    out = str(tmp_path / "push_out")
-    ckpt = str(tmp_path / "push_ckpt")
-    raw = rate_webhook_source(spark, rows_per_second=200, num_partitions=2)
-    q = stream_silver(
-        spark, in_path="", out_path=out, checkpoint=ckpt,
-        available_now=False, raw=raw,
-    )
-    try:
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(out).count() > 0:
-                    break
-            except Exception:
-                pass
-            time.sleep(1)
-    finally:
-        q.stop()
-    got = spark.read.parquet(out)
-    assert got.count() > 0
-    assert got.groupBy("id").count().filter(F.col("count") > 1).count() == 0
-    accounts = {r[0] for r in got.select("account").distinct().collect()}
-    assert accounts <= {"office_a", "office_b", "office_c"}
-
-
-def test_push_datasource_stream_flows_to_silver(spark, tmp_path):
-    """The Spark 4 streaming DataSource drives the SAME stream_silver
-    pipeline as the file and rate routes — the complete S5 story:
-    custom pull source → shared whitelist/unwrap/project/dedup/sink."""
-    import time
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.webhook_datasource import (
-        push_webhook_source,
-    )
-
-    out = str(tmp_path / "ds_out")
-    ckpt = str(tmp_path / "ds_ckpt")
-    raw = push_webhook_source(spark, events_per_batch=60, max_events=180)
-    q = stream_silver(
-        spark, in_path="", out_path=out, checkpoint=ckpt,
-        available_now=False, raw=raw,
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(out).count() >= 150:
-                    break
-            except Exception:
-                pass
-            time.sleep(1)
-    finally:
-        q.stop()
-    got = spark.read.parquet(out)
-    # 180 generated events, all accounts whitelisted, ids unique
-    assert got.count() > 0
-    assert got.groupBy("id").count().filter(F.col("count") > 1).count() == 0
-    accounts = {r[0] for r in got.select("account").distinct().collect()}
-    assert accounts <= {"office_a", "office_b", "office_c"}
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """Near-in-time redeliveries collapse; state is watermark-bounded
-    (semantics: duplicates arriving within the horizon dedup)."""
-    import json
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_dedup_within_watermark,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    rows = [
-        {"event_id": 1, "ts": "2024-01-01T10:00:00.000Z", "value": 1.0},
-        {"event_id": 1, "ts": "2024-01-01T10:00:05.000Z", "value": 1.0},  # retry
-        {"event_id": 2, "ts": "2024-01-01T10:01:00.000Z", "value": 2.0},
-        {"event_id": 2, "ts": "2024-01-01T10:01:00.000Z", "value": 2.0},  # retry
-        {"event_id": 3, "ts": "2024-01-01T10:02:00.000Z", "value": 3.0},
-    ]
-    (src / "batch.json").write_text("\n".join(json.dumps(r) for r in rows))
-    out = str(tmp_path / "out")
-    q = stream_dedup_within_watermark(
-        spark, str(src), out, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() == 3
-    assert {r["event_id"] for r in got.collect()} == {1, 2, 3}
-
-
 def test_http_receiver_post_to_silver_end_to_end(spark, tmp_path):
     """A REAL HTTP POST → spool → streaming silver: the live analogue
     of the reference's Flask receiver, end-to-end through the existing
@@ -293,137 +124,6 @@ def test_http_receiver_post_to_silver_end_to_end(spark, tmp_path):
     assert rows == {(1, "office_a"), (2, "office_b")}
 
 
-def test_stream_static_enrich_matches_batch_and_pins_dim_snapshot(spark, tmp_path):
-    """Stream-static join: draining the enriched stream equals the
-    batch join on the dimension AS OF query start — a plain parquet
-    static side pins its file listing at DataFrame creation, so rows
-    appended mid-stream are NOT seen (the documented semantic; a
-    refreshing dim needs foreachBatch + fresh read)."""
-    import json as _json
-    import os as _os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_static_enrich,
-    )
-
-    ddir = tmp_path / "dim"
-    spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "account_id bigint, account_name string"
-    ).write.parquet(str(ddir))
-    edir = tmp_path / "ev"
-    edir.mkdir()
-    batches = [
-        [{"event_id": 10, "account_id": 1}, {"event_id": 11, "account_id": 2}],
-        [{"event_id": 12, "account_id": 3}],  # no dim row at query start
-    ]
-    for fi, rows in enumerate(batches):
-        fp = edir / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-    schema = "event_id bigint, account_id bigint"
-    dim = spark.read.schema(
-        "account_id bigint, account_name string"
-    ).parquet(str(ddir))
-    out = stream_static_enrich(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(edir)),
-        dim,
-        on="account_id",
-    )
-    seen = []
-
-    def sink(bdf, bid):
-        seen.append({r["event_id"]: r["account_name"] for r in bdf.collect()})
-        if bid == 0:
-            # appended mid-stream: must NOT become visible (pinned index)
-            spark.createDataFrame(
-                [(3, "gamma")], "account_id bigint, account_name string"
-            ).write.mode("append").parquet(str(ddir))
-
-    q = (
-        out.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    merged = {}
-    for s_ in seen:
-        merged.update(s_)
-    # account 3 enriches to NULL: the dim snapshot is as of query start
-    assert merged == {10: "alpha", 11: "beta", 12: None}
-    # equals the batch left join against the SNAPSHOT dim
-    eb = spark.read.schema(schema).json(str(edir))
-    snap = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "account_id bigint, account_name string"
-    )
-    expect = {
-        r["event_id"]: r["account_name"]
-        for r in eb.join(snap, "account_id", "left").collect()
-    }
-    assert merged == expect
-
-
-def test_stream_enrich_refreshing_sees_mid_stream_dim_append(spark, tmp_path):
-    """Round-9: the refreshing-dim variant (foreachBatch + per-batch
-    fresh read) MUST see a dim row appended mid-stream — the exact
-    divergence from stream_static_enrich's pinned snapshot that the
-    sibling test pins the other way."""
-    import json as _json
-    import os as _os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_enrich_refreshing,
-    )
-
-    ddir = tmp_path / "dim"
-    spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "account_id bigint, account_name string"
-    ).write.parquet(str(ddir))
-    edir = tmp_path / "ev"
-    edir.mkdir()
-    batches = [
-        [{"event_id": 10, "account_id": 1}, {"event_id": 11, "account_id": 2}],
-        [{"event_id": 12, "account_id": 3}],  # dim row appended after batch 0
-    ]
-    for fi, rows in enumerate(batches):
-        fp = edir / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-    schema = "event_id bigint, account_id bigint"
-    seen = []
-
-    def sink(bdf, bid):
-        seen.append({r["event_id"]: r["account_name"] for r in bdf.collect()})
-        if bid == 0:
-            spark.createDataFrame(
-                [(3, "gamma")], "account_id bigint, account_name string"
-            ).write.mode("append").parquet(str(ddir))
-
-    q = stream_enrich_refreshing(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(edir)),
-        lambda: spark.read.schema(
-            "account_id bigint, account_name string"
-        ).parquet(str(ddir)),
-        on="account_id",
-        sink=sink,
-        checkpoint=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    merged = {}
-    for s_ in seen:
-        merged.update(s_)
-    # the refreshing variant DOES see gamma — the snapshot one does not
-    assert merged == {10: "alpha", 11: "beta", 12: "gamma"}
-
-
 def test_soft_dedup_admit_bootstrap_and_running_weights(spark, tmp_path):
     """Round-11 unit: soft_dedup_admit admits EVERYTHING (weights,
     never rejection), bootstraps an empty store (no-dup batch -> all
@@ -452,685 +152,3 @@ def test_soft_dedup_admit_bootstrap_and_running_weights(spark, tmp_path):
     assert f2[10]["cluster_id"] == 1
     assert f2[10]["n_cluster"] == 2 and f2[10]["weight"] == 0.5
     assert f2[11]["cluster_id"] == 11 and f2[11]["weight"] == 1.0
-
-
-def test_stream_soft_dedup_matches_batch_curation(spark, tmp_path):
-    """Round-11 batch parity: stream the curation pipeline's stage-4
-    input through stream_soft_dedup_documents in 3 micro-batches, then
-    soft_dedup_finalize(store, delivered=pipeline output) must equal
-    run_curation_pipeline(soft_dedup=True)'s (cluster_id, weight) per
-    delivered doc EXACTLY — same candidate rule, same star CC, same
-    1/|cluster ∩ delivered| rounding."""
-    import json
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.functions.text import (
-        demojibake,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.jobs import (
-        run_curation_pipeline,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.dedup import (
-        exact_dedup,
-        soft_dedup_finalize,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.quality import (
-        quality_gate,
-        repetition_stats,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.plans.measures import t
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_soft_dedup_documents,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    # replicate curation stages 0-3 (encoding hygiene, quality gate,
-    # repetition gate, exact dedup) to produce the stage-4 input the
-    # soft-dedup clustering sees in the batch pipeline
-    d = t(spark, sf, "documents").withColumn("text", demojibake(F.col("text")))
-    gated = quality_gate(d)
-    repetitive = (
-        repetition_stats(gated)
-        .filter(
-            (F.col("dup_token_ratio") > 0.9)
-            | (F.coalesce(F.col("dup_bigram_ratio"), F.lit(0.0)) > 0.9)
-        )
-        .select("doc_id")
-    )
-    gated = gated.join(repetitive, "doc_id", "left_anti")
-    canon = exact_dedup(gated).select(F.col("keep_id").alias("doc_id"))
-    uniq = gated.join(canon, "doc_id", "left_semi")
-    rows = [
-        r.asDict()
-        for r in uniq.select("doc_id", "text", "lang", "source", "n_chars")
-        .orderBy("doc_id")
-        .collect()
-    ]  # sf0.001: bounded test-only collect
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    bsz = (len(rows) + 2) // 3
-    for bi in range(3):
-        fp = in_dir / f"b{bi}.json"
-        fp.write_text(
-            "\n".join(json.dumps(r) for r in rows[bi * bsz : (bi + 1) * bsz])
-        )
-        # streaming file source orders by mtime -- pin distinct stamps
-        _os.utime(fp, (1_700_000_000 + bi, 1_700_000_000 + bi))
-
-    out = str(tmp_path / "out")
-    store = str(tmp_path / "sd_store")
-    q = stream_soft_dedup_documents(
-        spark, str(in_dir), out, store, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(300)
-
-    streamed = spark.read.parquet(out)
-    # soft semantics: every stage-4 doc admitted, weights in (0, 1]
-    assert streamed.count() == len(rows)
-    assert streamed.filter(
-        (F.col("weight") <= 0) | (F.col("weight") > 1)
-    ).count() == 0
-
-    curated = run_curation_pipeline(
-        spark, sf, str(tmp_path / "c_soft"), soft_dedup=True
-    )
-    fin = soft_dedup_finalize(
-        spark, store, delivered=curated.select("doc_id")
-    )
-    want = {
-        r["doc_id"]: (r["cluster_id"], r["weight"])
-        for r in curated.select("doc_id", "cluster_id", "weight").collect()
-    }
-    got = {
-        r["doc_id"]: (r["cluster_id"], r["weight"]) for r in fin.collect()
-    }
-    assert got == want
-
-
-def test_stream_soft_dedup_compact_every_resyncs_running_weights(
-    spark, tmp_path
-):
-    """Round-11: compact_every runs the label-rewriting soft-store
-    compaction inside foreachBatch (the quiet window), so a bridge
-    doc's cluster merge reaches the STORED labels and later batches'
-    RUNNING weights are exact — without it batch 3's A-duplicate
-    would see n_cluster 3 (the stale-label undercount pinned in
-    tests/test_dedup.py). Bridge fixture: A ∦ B, C = A‖B near both
-    (deterministic under the md5 hash family)."""
-    import json
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_soft_dedup_documents,
-    )
-
-    A = " ".join(f"a3w{i}" for i in range(12))
-    B = " ".join(f"b3w{i}" for i in range(12))
-    C = A + " " + B
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out = str(tmp_path / "out")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_batch(bi, rows):
-        (in_dir / f"b{bi}.json").write_text(
-            "\n".join(
-                json.dumps(
-                    {"doc_id": i, "text": t, "lang": "en", "source": "s",
-                     "n_chars": len(t)}
-                )
-                for i, t in rows
-            )
-        )
-        q = stream_soft_dedup_documents(
-            spark, str(in_dir), out, store, ckpt, compact_every=1
-        )
-        q.awaitTermination(120)
-
-    run_batch(0, [(1, A), (2, B)])
-    run_batch(1, [(3, C)])
-    # the compaction after batch 1 rewrote B's stored label to 1
-    stored = {
-        r["doc_id"]: r["cluster_id"]
-        for r in spark.read.parquet(f"{store}/sigs").collect()
-    }
-    assert stored == {1: 1, 2: 1, 3: 1}
-    run_batch(2, [(4, A)])
-    got = {
-        r["doc_id"]: (r["cluster_id"], r["n_cluster"], r["weight"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got[4] == (1, 4, 0.25)  # exact running size post-rewrite
-    assert got[3][0] == 1
-
-
-def test_stream_embeddings_index_matches_one_shot_build(spark, tmp_path):
-    """Round-12: embeddings streamed through stream_embeddings_index
-    in two micro-batches query EXACTLY like a one-shot index build
-    over the full corpus under the same frozen centroids."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_query_index,
-        load_ivf_index,
-        save_ivf_index,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_embeddings_index,
-    )
-
-    base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = base.filter(F.col("vec_id") < 5)
-    seed = base.filter(F.col("vec_id") % 3 == 0)
-    rest = base.filter(F.col("vec_id") % 3 != 0).collect()
-
-    store = str(tmp_path / "ivf_stream")
-    save_ivf_index(build_ivf_index(seed, n_centroids=8), store)
-
-    # two jsonl files -> two micro-batches under maxFilesPerTrigger=1
-    edir = tmp_path / "in"
-    edir.mkdir()
-    halves = [rest[: len(rest) // 2], rest[len(rest) // 2 :]]
-    for fi, rows in enumerate(halves):
-        fp = edir / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for r in rows:
-                f.write(
-                    _json.dumps(
-                        {
-                            "vec_id": r["vec_id"],
-                            "embedding": list(r["embedding"]),
-                            "label": r["label"],
-                        }
-                    )
-                    + "\n"
-                )
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-
-    q = stream_embeddings_index(
-        spark,
-        str(edir),
-        store,
-        str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination()
-
-    cents = load_ivf_index(spark, store)["centroids"]
-    full = str(tmp_path / "ivf_full")
-    save_ivf_index(build_ivf_index(base, centroids=cents), full)
-
-    got = {
-        (r["q_id"], r["rnk"]): r["vec_id"]
-        for r in ivf_query_index(
-            load_ivf_index(spark, store), queries, k=5, n_probes=2
-        ).collect()
-    }
-    want = {
-        (r["q_id"], r["rnk"]): r["vec_id"]
-        for r in ivf_query_index(
-            load_ivf_index(spark, full), queries, k=5, n_probes=2
-        ).collect()
-    }
-    assert got == want and len(got) == 25
-
-
-@pytest.mark.slow  # round 16: heavy leg, slow tier (see pytest.ini)
-def test_stream_nsw_index_recall_after_two_batches(spark, tmp_path):
-    """Round-13: embeddings streamed through stream_nsw_index in two
-    micro-batches (with a compaction after the second) stay
-    searchable — recall@5 over the FULL corpus clears the 0.6 floor
-    and the compaction's degree cap holds."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
-        brute_force_topk,
-        nsw_build_graph,
-        nsw_query_index,
-        save_nsw_index,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_nsw_index,
-    )
-
-    base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = base.filter(F.col("vec_id") < 5)
-    seed = base.filter(F.col("vec_id") % 3 == 0)
-    rest = base.filter(F.col("vec_id") % 3 != 0).collect()
-
-    store = str(tmp_path / "nsw_stream")
-    save_nsw_index(seed, nsw_build_graph(seed), store)
-
-    edir = tmp_path / "in"
-    edir.mkdir()
-    halves = [rest[: len(rest) // 2], rest[len(rest) // 2 :]]
-    for fi, rows in enumerate(halves):
-        fp = edir / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for r in rows:
-                f.write(
-                    _json.dumps(
-                        {
-                            "vec_id": r["vec_id"],
-                            "embedding": list(r["embedding"]),
-                            "label": r["label"],
-                        }
-                    )
-                    + "\n"
-                )
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-
-    q = stream_nsw_index(
-        spark,
-        str(edir),
-        store,
-        str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-        compact_every=2,
-    )
-    q.awaitTermination()
-
-    assert spark.read.parquet(f"{store}/vectors").count() == base.count()
-    g = spark.read.parquet(f"{store}/graph")
-    assert (
-        g.groupBy("level", "src").count().agg(F.max("count")).collect()[0][0]
-        <= 12
-    )
-    truth = {
-        (r["q_id"], r["vec_id"])
-        for r in brute_force_topk(base, queries, k=5).collect()
-    }
-    approx = {
-        (r["q_id"], r["vec_id"])
-        for r in nsw_query_index(spark, store, queries, k=5).collect()
-    }
-    assert len(approx & truth) / len(truth) >= 0.6
-
-
-def test_stream_drift_gated_ingest_routes_shifted_batch(spark, tmp_path):
-    """Round-12: three micro-batches through the drift gate — two
-    statistically alike batches land in the corpus, the wildly
-    shifted third routes to quarantine; the monitor table records
-    every batch with its scores and route."""
-    import json as _json
-    import os as _os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_drift_gated_ingest,
-    )
-
-    def doc(i, n_chars, lang):
-        return {
-            "doc_id": i,
-            "text": "w " * 5,
-            "lang": lang,
-            "source": "s",
-            "n_chars": n_chars,
-        }
-
-    edir = tmp_path / "in"
-    edir.mkdir()
-    batches = [
-        # batches 0/1: lengths spread over [0, 4000], english/german mix
-        [doc(i, (i * 37) % 4000, ["en", "de"][i % 2]) for i in range(200)],
-        [doc(200 + i, (i * 41) % 4000, ["en", "de"][i % 2]) for i in range(200)],
-        # batch 2: everything crammed at one length, one new language
-        [doc(400 + i, 50, "xx") for i in range(200)],
-    ]
-    for fi, rows in enumerate(batches):
-        fp = edir / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-
-    out = str(tmp_path / "out")
-    quarantine = str(tmp_path / "quarantine")
-    store = str(tmp_path / "store")
-    q = stream_drift_gated_ingest(
-        spark,
-        str(edir),
-        out,
-        quarantine,
-        store,
-        str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination()
-
-    monitor = {
-        r["batch_id"]: r
-        for r in spark.read.parquet(store + "/monitor").collect()
-    }
-    assert len(monitor) == 3
-    # cold start admits by construction
-    assert monitor[0]["route"] == "out"
-    assert monitor[0]["chi2_defined"] is False
-    assert monitor[1]["route"] == "out"
-    assert monitor[2]["route"] == "quarantine"
-    assert monitor[2]["psi_shifted"] or monitor[2]["lang_reject_95"]
-    # disarmed-by-default contract (round 14): w1_threshold=None means
-    # the W1 scorer never runs — every monitor row carries NULL in
-    # both W1 columns, and the route is decided by PSI/chi2 alone
-    assert all(
-        r["w1_dist"] is None and r["w1_shifted"] is None
-        for r in monitor.values()
-    )
-
-    good = spark.read.parquet(out)
-    bad = spark.read.parquet(quarantine)
-    assert good.count() == 400 and bad.count() == 200
-    assert {r["__batch_id"] for r in good.select("__batch_id").distinct().collect()} == {0, 1}
-
-
-def test_stream_drift_gated_ingest_w1_catches_location_drift(spark, tmp_path):
-    """Round-13: the optional W1 scorer flags a +200-char location
-    shift that PSI's 410-wide buckets smear into noise (both batches
-    stay near-uniform over the bucket grid) and whose language mix is
-    unchanged — only w1_shifted quarantines the batch."""
-    import json as _json
-    import os as _os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_drift_gated_ingest,
-    )
-
-    def doc(i, n_chars):
-        return {
-            "doc_id": i,
-            "text": "w " * 5,
-            "lang": ["en", "de"][i % 2],
-            "source": "s",
-            "n_chars": n_chars,
-        }
-
-    edir = tmp_path / "in"
-    edir.mkdir()
-    batches = [
-        [doc(i, (i * 37) % 4000) for i in range(400)],
-        # near-identical bucket occupancy (only the two edge buckets
-        # move, PSI ≈ 0.04 « 0.25), same language mix, but every
-        # length shifted +200 — a pure location drift (NOT mod-4000:
-        # a circular shift of a uniform would leave W1 ≈ 0)
-        [doc(400 + i, (i * 37) % 4000 + 200) for i in range(400)],
-    ]
-    for fi, rows in enumerate(batches):
-        fp = edir / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-
-    out = str(tmp_path / "out")
-    quarantine = str(tmp_path / "quarantine")
-    store = str(tmp_path / "store")
-    q = stream_drift_gated_ingest(
-        spark,
-        str(edir),
-        out,
-        quarantine,
-        store,
-        str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-        w1_threshold=100.0,
-    )
-    q.awaitTermination()
-
-    monitor = {
-        r["batch_id"]: r
-        for r in spark.read.parquet(store + "/monitor").collect()
-    }
-    assert len(monitor) == 2
-    assert monitor[0]["route"] == "out"
-    assert monitor[0]["w1_dist"] is None  # cold start admits
-    r1 = monitor[1]
-    # the shift is invisible to PSI and chi2 on this construction...
-    assert r1["psi_shifted"] is False
-    assert not r1["lang_reject_95"]
-    # ...but W1 reads it directly, in n_chars units
-    assert r1["w1_shifted"] is True and r1["w1_dist"] > 100.0
-    assert r1["route"] == "quarantine"
-    assert spark.read.parquet(quarantine).count() == 400
-
-
-def test_stream_paragraph_dedup_matches_one_shot(spark, tmp_path):
-    """Round-14: documents streamed in doc_id order through
-    stream_paragraph_dedup (two micro-batches, in-sink compaction
-    after the second) must produce exactly the one-shot
-    paragraph_dedup result — the lifetime hash store carries
-    first-occurrence ownership across the batch boundary."""
-    import json as _json
-    import os as _os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.dedup import (
-        paragraph_dedup,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_paragraph_dedup,
-    )
-
-    rows = [
-        (1, "alpha beta\n\ngamma\n\nalpha beta"),
-        (2, "gamma\n\ndelta"),
-        (3, "alpha beta\n\ngamma"),
-        (4, "delta\n\nepsilon"),
-    ]
-    edir = tmp_path / "in"
-    edir.mkdir()
-    for fi, half in enumerate((rows[:2], rows[2:])):
-        fp = edir / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for doc_id, text in half:
-                f.write(_json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-
-    out = str(tmp_path / "out")
-    store = str(tmp_path / "store")
-    q = stream_paragraph_dedup(
-        spark,
-        str(edir),
-        out,
-        store,
-        str(tmp_path / "ckpt"),
-        compact_every=2,
-    )
-    q.awaitTermination(120)
-
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    want = sorted(
-        map(
-            tuple,
-            paragraph_dedup(
-                spark.createDataFrame(rows, "doc_id bigint, text string")
-            ).collect(),
-        )
-    )
-    assert got == want
-    # compaction ran: the store holds exactly the distinct survivors
-    # (alpha beta, gamma, delta, epsilon)
-    hashes = spark.read.parquet(f"{store}/hashes")
-    assert hashes.count() == hashes.distinct().count() == 4
-
-
-@pytest.mark.slow  # round 16: heavy leg, slow tier (see pytest.ini)
-def test_stream_drift_dashboard_matches_batch_recompute(spark, tmp_path):
-    """Round-14 (r13 verdict task 3): three micro-batches of events
-    streamed through stream_drift_dashboard must leave the gold drift
-    and mix panels EQUAL to a one-shot refresh_drift_dashboard over
-    the same rows — the monitoring family's dashboard layer is now
-    stream-fresh like the index sinks, behind the same generation
-    manifest (generation advances per refresh, never a mid-rewrite
-    mix)."""
-    import datetime as dt
-    import json as _json
-    import os as _os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark import (
-        jobs,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import (
-        generations as G,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_drift_dashboard,
-    )
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        ("click", base + dt.timedelta(weeks=w, hours=i), float(i * 7 % 50))
-        for w in range(3)
-        for i in range(20)
-    ] + [
-        ("view", base + dt.timedelta(weeks=w, hours=i), float(i * 11 % 50))
-        for w in range(3)
-        for i in range(10)
-    ]
-    edir = tmp_path / "in"
-    edir.mkdir()
-    # one file per week → three micro-batches in arrival order
-    for fi in range(3):
-        fp = edir / f"week{fi}.jsonl"
-        with open(fp, "w") as f:
-            for et, ts, val in rows:
-                if (ts - base).days // 7 == fi:
-                    f.write(
-                        _json.dumps(
-                            {
-                                "event_type": et,
-                                "ts": ts.isoformat(),
-                                "value": val,
-                            }
-                        )
-                        + "\n"
-                    )
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-
-    gold_stream = str(tmp_path / "gold_stream")
-    q = stream_drift_dashboard(
-        spark,
-        str(edir),
-        gold_stream,
-        str(tmp_path / "ckpt"),
-        schema="event_type string, ts timestamp, value double",
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(180)
-
-    ev = spark.createDataFrame(
-        rows, "event_type string, ts timestamp, value double"
-    )
-    gold_batch = str(tmp_path / "gold_batch")
-    want = jobs.refresh_drift_dashboard(spark, ev, gold_batch)
-    for name in ("drift_panel", "mix_panel"):
-        got = G.read_current(spark, f"{gold_stream}/{name}")
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want[name].collect())
-        ), name
-        # one generation per micro-batch refresh: 3 batches → gen 2
-        assert G.current_generation(f"{gold_stream}/{name}") == 2
-    # the accumulated silver carries every streamed row exactly once
-    assert (
-        spark.read.parquet(f"{gold_stream}/events_silver").count()
-        == len(rows)
-    )
-
-
-def test_read_monitor_merges_pre_w1_schema(spark, tmp_path):
-    """Round-14 ADVICE: a stream upgraded mid-store appends 10-column
-    monitor rows (w1_dist, w1_shifted — round 13) next to round-12-era
-    8-column files; a bare parquet read infers from ONE footer and can
-    silently drop the new columns or the old rows' view of them.
-    read_monitor must surface all 10 columns, NULL-backfilled on the
-    old rows."""
-    import os as _os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        read_monitor,
-    )
-
-    store = str(tmp_path / "store")
-    mon = _os.path.join(store, "monitor")
-    # round-12-era row: 8 columns, no W1
-    spark.createDataFrame(
-        [(0, 10, 0.01, False, 1.5, True, False, "out")],
-        "batch_id bigint, n_batch bigint, psi double, "
-        "psi_shifted boolean, lang_chi2 double, chi2_defined boolean, "
-        "lang_reject_95 boolean, route string",
-    ).write.mode("append").parquet(mon)
-    # round-13+ row: the widened 10-column schema
-    spark.createDataFrame(
-        [(1, 12, 0.02, False, 1.2, True, False, 42.5, True, "quarantine")],
-        "batch_id bigint, n_batch bigint, psi double, "
-        "psi_shifted boolean, lang_chi2 double, chi2_defined boolean, "
-        "lang_reject_95 boolean, w1_dist double, w1_shifted boolean, "
-        "route string",
-    ).write.mode("append").parquet(mon)
-
-    got = read_monitor(spark, store)
-    assert {"w1_dist", "w1_shifted", "route", "psi"} <= set(got.columns)
-    rows = {r["batch_id"]: r for r in got.collect()}
-    assert len(rows) == 2
-    assert rows[0]["w1_dist"] is None and rows[0]["w1_shifted"] is None
-    assert rows[0]["route"] == "out"
-    assert rows[1]["w1_dist"] == 42.5 and rows[1]["w1_shifted"] is True
-
-
-def test_stream_bm25_index_matches_one_shot(spark, tmp_path):
-    """Round-12: documents streamed through stream_bm25_index in two
-    micro-batches (with a compaction in between) retrieve EXACTLY like
-    the one-shot bm25_topk over the full corpus."""
-    import json as _json
-    import os as _os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.corpus import (
-        bm25_query_store,
-        bm25_topk,
-        corpus_bigram_queries,
-    )
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_bm25_index,
-    )
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    rows = d.collect()
-    edir = tmp_path / "in"
-    edir.mkdir()
-    halves = [rows[: len(rows) // 2], rows[len(rows) // 2 :]]
-    for fi, chunk in enumerate(halves):
-        fp = edir / f"f{fi}.jsonl"
-        with open(fp, "w") as f:
-            for r in chunk:
-                f.write(_json.dumps(r.asDict()) + "\n")
-        _os.utime(fp, (1_700_000_000 + fi, 1_700_000_000 + fi))
-
-    store = str(tmp_path / "bm25")
-    q = stream_bm25_index(
-        spark,
-        str(edir),
-        store,
-        str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-        compact_every=1,
-    )
-    q.awaitTermination()
-
-    queries = corpus_bigram_queries(d)
-    got = {
-        (r["query"], r["rnk"]): (r["doc_id"], r["score"])
-        for r in bm25_query_store(spark, store, queries).collect()
-    }
-    want = {
-        (r["query"], r["rnk"]): (r["doc_id"], r["score"])
-        for r in bm25_topk(d).collect()
-    }
-    assert got == want and len(got) == 25

@@ -983,51 +983,6 @@ def test_ks_admit_all_null_batch_still_emits_one_row(spark, tmp_path):
     assert r["ks_stat"] is None and r["reject_95"] is False
 
 
-def test_drift_gated_ingest_survives_all_null_lang_batch(spark, tmp_path):
-    """End-to-end form of the ADVICE scenario: the FIRST trigger file
-    carries only NULL-lang rows; the stream must route it (cold start
-    admits) rather than wedge on an IndexError replay loop."""
-    import json
-    import os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_drift_gated_ingest,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    # one row per PSI bucket (width 410 over [0,4095]) so the uniform
-    # cold-start reference does not flag — the scenario under test is
-    # the all-NULL lang column, not a numeric shift
-    with open(in_dir / "b0.json", "w") as f:
-        for i in range(10):
-            f.write(
-                json.dumps(
-                    {"doc_id": i, "n_chars": i * 410 + 100, "lang": None}
-                )
-                + "\n"
-            )
-    out = str(tmp_path / "out")
-    q = stream_drift_gated_ingest(
-        spark,
-        str(in_dir),
-        out,
-        str(tmp_path / "quarantine"),
-        str(tmp_path / "store"),
-        str(tmp_path / "ckpt"),
-        schema="doc_id bigint, n_chars bigint, lang string",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    monitor = spark.read.parquet(str(tmp_path / "store" / "monitor"))
-    rows = monitor.collect()
-    assert len(rows) == 1
-    assert rows[0]["route"] == "out"
-    assert rows[0]["chi2_defined"] is False
-    assert os.path.exists(out)
-    assert spark.read.parquet(out).count() == 10
-
-
 @pytest.mark.parametrize("batch_rows", [[(None,), (None,)], []])
 def test_digest_admits_survive_null_batch_on_seeded_store(
     spark, tmp_path, batch_rows
@@ -1073,69 +1028,3 @@ def test_digest_admits_survive_null_batch_on_seeded_store(
     assert rk["n_hist"] == 100 and rk["reject_95"] is True
     rw = w1_admit(shifted, w1_store, threshold=5.0).collect()[0]
     assert rw["n_hist"] == 100 and rw["shifted"] is True
-
-
-def test_drift_gated_ingest_survives_null_numeric_batch_mid_stream(
-    spark, tmp_path
-):
-    """End-to-end replay of the ADVICE scenario through the armed
-    router: batch 1 seeds the stores, batch 2 carries only NULL
-    n_chars (n_batch = 0 against a seeded centroid history — the
-    exact poisoned-batch foreachBatch replay loop), batch 3 is
-    healthy. With w1_threshold armed, the stream must process all
-    three triggers instead of wedging on batch 2."""
-    import json
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
-        stream_drift_gated_ingest,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out = str(tmp_path / "out")
-
-    def run_batch(name, rows):
-        with open(in_dir / name, "w") as f:
-            for row in rows:
-                f.write(json.dumps(row) + "\n")
-        q = stream_drift_gated_ingest(
-            spark,
-            str(in_dir),
-            out,
-            str(tmp_path / "quarantine"),
-            str(tmp_path / "store"),
-            str(tmp_path / "ckpt"),
-            schema="doc_id bigint, n_chars bigint, lang string",
-            available_now=True,
-            w1_threshold=2000.0,
-        )
-        q.awaitTermination(120)
-
-    healthy = [
-        {"doc_id": i, "n_chars": i * 410 + 100, "lang": "en"}
-        for i in range(10)
-    ]
-    run_batch("b0.json", healthy)
-    run_batch(
-        "b1.json",
-        [
-            {"doc_id": 100 + i, "n_chars": None, "lang": "en"}
-            for i in range(5)
-        ],
-    )
-    run_batch(
-        "b2.json",
-        [
-            {"doc_id": 200 + i, "n_chars": i * 410 + 100, "lang": "en"}
-            for i in range(10)
-        ],
-    )
-    monitor = spark.read.parquet(str(tmp_path / "store" / "monitor"))
-    rows = {r["batch_id"]: r for r in monitor.collect()}
-    assert len(rows) == 3
-    null_row = rows[1]
-    assert null_row["w1_dist"] is None and null_row["route"] == "out"
-    healthy_row = rows[2]
-    assert healthy_row["w1_dist"] is not None
-    # all three batches routed out (no wedge, nothing quarantined)
-    assert spark.read.parquet(out).count() == 25

@@ -175,30 +175,30 @@ def test_soft_store_delete(spark, tmp_path):
         compact_soft_store,
         delete_from_soft_store,
         soft_dedup_admit,
-        soft_dedup_finalize,
+    )
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.stores import (
+        read_live,
     )
 
     store = str(tmp_path / "soft")
     base = "the quick brown fox jumps over the lazy dog again and again " * 5
-    soft_dedup_admit(
+    out = soft_dedup_admit(
         spark.createDataFrame(
             [(1, base), (2, base + " tail")], "doc_id bigint, text string"
         ),
         store,
-    )
+    ).collect()
     # both landed in one cluster
-    fin = {r["doc_id"]: r for r in soft_dedup_finalize(spark, store).collect()}
-    assert fin[1]["cluster_id"] == fin[2]["cluster_id"]
-    assert fin[1]["n_cluster"] == 2
+    got = {r["doc_id"]: r for r in out}
+    assert got[1]["cluster_id"] == got[2]["cluster_id"]
+    assert got[1]["n_cluster"] == got[2]["n_cluster"] == 2
 
     delete_from_soft_store(
         spark.createDataFrame([(1,)], "doc_id bigint"), store
     )
-    # finalize over survivors only: 2 is now a singleton
-    fin2 = {
-        r["doc_id"]: r for r in soft_dedup_finalize(spark, store).collect()
-    }
-    assert set(fin2) == {2} and fin2[2]["n_cluster"] == 1
+    # the live store holds the survivor only
+    live = read_live(spark, store, "sigs", id_col="doc_id")
+    assert {r["doc_id"] for r in live.collect()} == {2}
     # a new near-copy clusters with the SURVIVOR only: running size 2
     # (members {2, 3}) — a broken tombstone filter would count the
     # ghost and report 3
@@ -214,81 +214,6 @@ def test_soft_store_delete(spark, tmp_path):
     assert not os.path.exists(f"{store}/tombstones")
     ids = {r["doc_id"] for r in spark.read.parquet(f"{store}/sigs").collect()}
     assert ids == {2, 3}
-
-
-def test_ivf_delete_logical(spark, tmp_path):
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_delete,
-        ivf_query_index,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
-    store = str(tmp_path / "ivf")
-    base = (
-        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        .filter(F.col("vec_id") < 80)
-        .localCheckpoint(eager=True)
-    )
-    save_ivf_index(build_ivf_index(base), store)
-    deleted = base.filter(F.col("vec_id") % 10 == 3).select("vec_id")
-    ivf_delete(deleted, store)
-    ivf_delete(deleted, store)  # replay-idempotent
-    q = base.filter(F.col("vec_id") < 3)
-    got = ivf_query_index(load_ivf_index(spark, store), q, k=5, n_probes=2)
-    del_ids = {r["vec_id"] for r in deleted.collect()}
-    rows = got.collect()
-    assert len(rows) > 0
-    assert not ({r["vec_id"] for r in rows} & del_ids)
-
-
-def test_ivf_rebuild_drops_tombstoned_ids_and_clears_set(spark, tmp_path):
-    """A rebuild through save_ivf_index is the IVF store's compaction:
-    ids tombstoned there are dropped from the lists it writes (even
-    when the rebuild base still carries them), the tombstone set is
-    cleared after both tables are written, and queries equal a fresh
-    build over the surviving vectors."""
-    import os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_delete,
-        ivf_query_index,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
-    base = (
-        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        .filter(F.col("vec_id") < 80)
-        .localCheckpoint(eager=True)
-    )
-    # deleted ids sit above the 8 smallest (the default centroid seeds),
-    # so the rebuild's quantizer equals the survivors-only build's
-    deleted = base.filter(
-        (F.col("vec_id") % 10 == 3) & (F.col("vec_id") > 10)
-    ).select("vec_id")
-    del_ids = {r["vec_id"] for r in deleted.collect()}
-    survivors = base.join(deleted, "vec_id", "left_anti")
-    store, fresh = str(tmp_path / "ivf"), str(tmp_path / "fresh")
-    save_ivf_index(build_ivf_index(base), store)
-    ivf_delete(deleted, store)
-    # rebuild over the FULL base, deleted vectors included
-    save_ivf_index(build_ivf_index(base), store)
-    assert not os.path.exists(f"{store}/tombstones")
-    listed = {r["vec_id"] for r in spark.read.parquet(f"{store}/lists.parquet").collect()}
-    assert not (listed & del_ids)
-    assert listed == {r["vec_id"] for r in survivors.collect()}
-    save_ivf_index(build_ivf_index(survivors), fresh)
-    q = base.filter(F.col("vec_id") < 3)
-    got = sorted(
-        map(tuple, ivf_query_index(load_ivf_index(spark, store), q, k=5, n_probes=2).collect())
-    )
-    want = sorted(
-        map(tuple, ivf_query_index(load_ivf_index(spark, fresh), q, k=5, n_probes=2).collect())
-    )
-    assert got and got == want
 
 
 def test_nsw_delete_soft_then_physical(spark, tmp_path):
