@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.cacheutil import Frames
-from .operators.generations import generation_path, read_current, write_generation
+from .operators.generations import publish
 from .operators.snapshot import upsert_merge
 from .plans import gold
 from .sources.sinks import materialize_gold
@@ -52,15 +52,13 @@ def refresh_gold(
     def _publish(df: DataFrame, name: str, partition_by=None) -> DataFrame:
         path = os.path.join(gold_path, name)
         if atomic:
-            gen = write_generation(df, path, partition_by=partition_by)
-            path = generation_path(path, gen)
-        else:
-            writer = df.write.mode("overwrite").option(
-                "partitionOverwriteMode", "static"
-            )
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
+            return publish(df, path, f"{prefix}{name}", partition_by)
+        writer = df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "static"
+        )
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
         out = spark.read.schema(df.schema).parquet(path)
         out.createOrReplaceTempView(f"{prefix}{name}")
         return out
@@ -413,44 +411,29 @@ def refresh_drift_dashboard(
     gold_path: str,
     ref_weeks: int = 4,
     prefix: str = "gold_",
-    atomic: bool = True,
 ) -> dict[str, DataFrame]:
     """Materialize the rolling drift PANEL as gold tables (round 13 —
     the refresh_gold posture applied to the monitoring family): the
     numeric per-(series, week) KS/W1/PSI panel
     (quality.rolling_drift over integer-floored event values) and the
     weekly categorical mix panel (quality.rolling_chi2 over
-    event_type), each published behind the generation manifest by
-    default — dashboards read old-or-new, never a mid-rewrite mix,
-    and both frames are week-grain-small so the full rewrite is the
-    right trade. Registers ``{prefix}drift_panel`` /
+    event_type), each published behind the generation manifest
+    (generations.publish) — dashboards read old-or-new, never a
+    mid-rewrite mix, and both frames are week-grain-small so the full
+    rewrite is the right trade. Registers ``{prefix}drift_panel`` /
     ``{prefix}mix_panel`` temp views like the BI gold layer. Returns
     the published frames."""
     from pyspark.sql import functions as F
 
     from .operators.quality import rolling_chi2, rolling_drift
 
-    def _publish(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(gold_path, name)
-        if atomic:
-            write_generation(df, path)
-            out = read_current(spark, path)
-            out.createOrReplaceTempView(f"{prefix}{name}")
-            return out
-        return materialize_gold(df, path, view_name=f"{prefix}{name}")
-
-    out: dict[str, DataFrame] = {}
     # the panels' count pins are freed once both are published
     with Frames() as frames:
-        out["drift_panel"] = _publish(
-            frames.own(rolling_drift(
-                events.withColumn("value", F.floor("value")),
-                "value",
-                ref_weeks=ref_weeks,
-            )),
-            "drift_panel",
-        )
-        out["mix_panel"] = _publish(
-            frames.own(rolling_chi2(events, ref_weeks=ref_weeks)), "mix_panel"
-        )
-    return out
+        drift = frames.own(rolling_drift(
+            events.withColumn("value", F.floor("value")), "value", ref_weeks=ref_weeks
+        ))
+        mix = frames.own(rolling_chi2(events, ref_weeks=ref_weeks))
+        return {
+            name: publish(df, os.path.join(gold_path, name), f"{prefix}{name}")
+            for name, df in (("drift_panel", drift), ("mix_panel", mix))
+        }

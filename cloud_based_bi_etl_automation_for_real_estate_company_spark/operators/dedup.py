@@ -1774,20 +1774,13 @@ def compact_minhash_store(
     IDENTICAL so candidate lookup across a compaction is invariant
     (pinned by ``tests/test_dedup.py::
     test_minhash_store_compaction_lookup_invariance``) — except rows
-    tombstoned by :func:`delete_from_minhash_store`, which this pass
+    tombstoned by :func:`stores.delete`, which this pass
     physically drops.
     """
     stores.compact(
         spark, store_path, {"sigs": {}}, id_col=lambda df: df.columns[0],
         bytes_per_file=bytes_per_file,
     )
-
-
-# Logical delete from the minhash signature store: tombstoned docs
-# stop suppressing near-duplicates at the next incremental_minhash_dedup
-# batch (a fresh copy of removed content is a fresh admit, not a
-# duplicate of a ghost); compact_minhash_store makes it physical.
-delete_from_minhash_store = stores.delete
 
 
 def compact_soft_store(
@@ -1864,10 +1857,3 @@ def compact_soft_store(
         id_col=id_col,
         bytes_per_file=bytes_per_file,
     )
-
-
-# Logical delete from the soft-dedup store: tombstoned members leave
-# candidate lookup and cluster counts at the next soft_dedup_admit;
-# compact_soft_store drops them physically and
-# re-derives every cluster label from the surviving signatures.
-delete_from_soft_store = stores.delete

@@ -83,3 +83,20 @@ def read_current(spark: SparkSession, table_path: str) -> DataFrame:
     if gen is None:
         raise FileNotFoundError(f"no published generation under {table_path}")
     return spark.read.parquet(generation_path(table_path, gen))
+
+
+def publish(
+    df: DataFrame,
+    table_path: str,
+    view_name: str,
+    partition_by: list[str] | None = None,
+) -> DataFrame:
+    """Write ``df`` as the next generation of ``table_path``, read that
+    generation back with the schema just written (no schema-inference
+    job) and register it as the temp view ``view_name``."""
+    gen = write_generation(df, table_path, partition_by=partition_by)
+    out = df.sparkSession.read.schema(df.schema).parquet(
+        generation_path(table_path, gen)
+    )
+    out.createOrReplaceTempView(view_name)
+    return out

@@ -467,6 +467,186 @@ def domain_cap(
     )
 
 
+def _two_sample(cells: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """The exact two-sample drift statistics, written once for every
+    exact monitor in this module (batch, rolling and admission).
+
+    ``cells`` is a zero-filled count grid (``keys``…, axis, cur, ref):
+    one row per key and axis point, where ``cur`` and ``ref`` are the
+    two samples' counts at that point. The axis column's name picks
+    the statistic:
+
+    - ``v``, an ordered value grid: the KS and W1 numerators. Both
+      ECDFs step only at grid points, so with running counts C_cur and
+      C_ref the scaled gap is |C_cur·n_ref − C_ref·n_cur|, in
+      DECIMAL(38,0). ``ks_int`` is its max and ``w1_int`` the sum of
+      gap·Δv (Δv = next v − v as BIGINT, 0 at the last point). Then
+      KS = ks_int/(n_cur·n_ref) and W1 = w1_int/(n_cur·n_ref): one
+      division at the end.
+    - ``bucket``, every bucket of the key present: ``psi``, the
+      add-one-smoothed Σ (p−q)·ln(p/q), with p = (cur+1)/(n_cur+B),
+      q = (ref+1)/(n_ref+B) and B the key's bucket count. Each term is
+      rounded to DECIMAL(28,12), so the sum does not depend on order.
+    - ``c``, every category present in either sample: χ² of the 2×k
+      table, Σ D²/(cur+ref) / (n_cur·n_ref) with n = n_cur + n_ref and
+      D = cur·n − n_cur·(cur+ref) in DECIMAL(38,0). The terms are
+      rounded to DECIMAL(38,12); ``s`` is their sum, ``k`` the number
+      of categories, ``chi2`` is NULL when a sample is empty, and
+      ``reject_95`` compares it with the Wilson–Hilferty 95% critical
+      value df·(1 − 2/(9df) + z₀.₉₅·√(2/(9df)))³ at df = k − 1 (the
+      divisor floored at 1, so df = 0 gives a critical value of 0).
+
+    Returns one row per key with ``n_cur``, ``n_ref`` and the axis's
+    columns; with no ``keys``, exactly one row, even over an empty
+    grid (NULL sums, k = 0). Every count stays an exact integer and
+    the only floats are per-term ratios, so the DuckDB oracles replay
+    each value bit for bit."""
+    keys = list(keys)
+    axis = cells.columns[len(keys)]
+    cur, ref = F.col("cur"), F.col("ref")
+    order = Window.partitionBy(*keys).orderBy(axis)
+    whole = order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    n_cur, n_ref = F.sum(cur).over(whole), F.sum(ref).over(whole)
+    if axis == "v":
+        upto = order.rowsBetween(Window.unboundedPreceding, 0)
+        gap = F.abs(
+            F.sum(cur).over(upto).cast("decimal(38,0)") * n_ref
+            - F.sum(ref).over(upto).cast("decimal(38,0)") * n_cur
+        )
+        v = F.col("v").cast("bigint")
+        terms = [gap.alias("gap"), (F.lead(v).over(order) - v).alias("dv")]
+        stats = [
+            F.max("gap").alias("ks_int"),
+            F.sum(F.col("gap") * F.coalesce("dv", F.lit(0)))
+            .cast("decimal(38,0)")
+            .alias("w1_int"),
+        ]
+    elif axis == "bucket":
+        nb = F.count(F.lit(1)).over(whole)
+        p = (cur + F.lit(1)).cast("double") / (n_cur + nb).cast("double")
+        q = (ref + F.lit(1)).cast("double") / (n_ref + nb).cast("double")
+        term = F.round((p - q) * F.log(p / q), 12).cast("decimal(28,12)")
+        terms = [term.alias("t")]
+        stats = [F.sum("t").cast("double").alias("psi")]
+    else:
+        d = cur.cast("decimal(38,0)") * (n_cur + n_ref) - n_cur.cast(
+            "decimal(38,0)"
+        ) * (cur + ref)
+        term = F.round((d * d).cast("double") / (cur + ref).cast("double"), 12)
+        terms = [term.cast("decimal(38,12)").alias("t")]
+        stats = [F.sum("t").cast("double").alias("s"), F.count(F.lit(1)).alias("k")]
+    out = (
+        cells.select(*keys, "cur", "ref", *terms)
+        .groupBy(*keys)
+        .agg(F.sum("cur").alias("n_cur"), F.sum("ref").alias("n_ref"), *stats)
+    )
+    if axis != "c":
+        return out
+    dof = (F.col("k") - F.lit(1)).cast("double")
+    dofc = F.greatest(dof, F.lit(1.0))
+    wh = F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofc) + F.lit(
+        1.6448536269514722
+    ) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofc))
+    return out.withColumn("chi2", F.try_divide(F.col("s"), _pairs())).withColumn(
+        "reject_95", F.col("chi2") > dof * wh * wh * wh
+    )
+
+
+def _pairs() -> Column:
+    """n_cur·n_ref in DOUBLE: the one divisor of the integer statistics."""
+    return F.col("n_cur").cast("double") * F.col("n_ref").cast("double")
+
+
+def _per_slice(
+    df: DataFrame,
+    group_col: str,
+    axis: Column,
+    name: str,
+    *cols: Column | str,
+    points: DataFrame | None = None,
+) -> DataFrame:
+    """The batch monitors: score every slice of ``group_col`` against
+    the rest of the corpus. The (slice, ``axis``) counts of ``df`` are
+    pinned; each slice gets a :func:`_two_sample` grid row (axis
+    column ``name``) at every point seen in any slice, or at every row
+    of ``points`` when given, with ref = all slices' count − cur.
+    Returns (``group_col``, n_source, n_rest, *``cols``), the pin
+    attached (``cacheutil.release(result)`` frees it)."""
+    with Frames() as frames:
+        counts = frames.pin(
+            df.groupBy(group_col, axis.alias(name)).agg(F.count(F.lit(1)).alias("cnt")),
+            eager=True,
+        )
+        allc = counts.groupBy(name).agg(F.sum("cnt").alias("tot"))
+        zero = (
+            counts.select(group_col)
+            .distinct()
+            .crossJoin(F.broadcast(allc.select(name) if points is None else points))
+            .withColumn("cnt", F.lit(0).cast("bigint"))
+        )
+        cells = (
+            counts.unionByName(zero)
+            .groupBy(group_col, name)
+            .agg(F.sum("cnt").alias("cur"))
+            .join(F.broadcast(allc), name, "left")
+            .select(
+                group_col, name, "cur",
+                (F.coalesce("tot", F.lit(0)) - F.col("cur")).alias("ref"),
+            )
+        )
+        return frames.attach(
+            _two_sample(cells, [group_col]).select(
+                group_col,
+                F.col("n_cur").alias("n_source"),
+                F.col("n_ref").alias("n_rest"),
+                *cols,
+            ),
+            counts,
+        )
+
+
+def _trailing(
+    counts: DataFrame,
+    keys: Sequence[str],
+    axis: str,
+    ref_weeks: int,
+    out_weeks: DataFrame | None,
+) -> DataFrame:
+    """The rolling monitors' :func:`_two_sample` grid: each week w of
+    each series against the summed counts of its trailing weeks
+    [w − ``ref_weeks``, w − 1]. ``counts`` is (``keys``…, week,
+    ``axis``, cnt) with unique keys; the grid is (``keys``…, w,
+    ``axis``, cur, ref). ``out_weeks`` (``keys``…, w) restricts the
+    weeks returned; their reference still reads every week."""
+    keys = list(keys)
+    weeks = counts.select(*keys, F.col("week").alias("w")).distinct()
+    if out_weeks is not None:
+        weeks = weeks.join(out_weeks, [*keys, "w"], "left_semi")
+    later = F.transform(
+        F.sequence(F.lit(1), F.lit(ref_weeks)),
+        lambda k: F.date_add(F.col("week"), (k * 7).cast("int")),
+    )
+    ref = (
+        counts.select(*keys, F.explode(later).alias("w"), axis, "cnt")
+        .groupBy(*keys, "w", axis)
+        .agg(F.sum("cnt").alias("ref"))
+    )
+    cur = counts.select(
+        *keys, F.col("week").alias("w"), axis, F.col("cnt").alias("cur")
+    )
+    return (
+        cur.join(ref, [*keys, "w", axis], "full_outer")
+        .join(weeks, [*keys, "w"], "left_semi")
+        .select(
+            *keys,
+            "w",
+            axis,
+            F.coalesce("cur", F.lit(0)).cast("bigint").alias("cur"),
+            F.coalesce("ref", F.lit(0)).cast("bigint").alias("ref"),
+        )
+    )
+
+
 def ks_drift(
     df: DataFrame,
     value_col: str = "n_chars",
@@ -481,87 +661,18 @@ def ks_drift(
     (n1·n2)), c(0.05)=1.358) — the distribution-shift gate a training
     pipeline runs when a new crawl slice lands.
 
-    Exactness: both ECDFs are step functions that only change at
-    observed values, so D is evaluated on the distinct-value grid, and
-    the sup comparison runs in INTEGER cross-multiplied form
-    max |cum_g·n_rest − cum_rest·n_g| (one exact division at the very
-    end) — no float accumulation, so the oracle replays bit-for-bit.
-
-    Spark shape: one (group,value) count agg, a per-value corpus agg,
-    one BOUNDED grid×groups broadcast expansion (|distinct values| ×
-    |groups| rows — value grids are histogram-sized, groups are corpus
-    slices, both orders of magnitude below row count at any SF), a
-    group-partitioned cumulative window, and one max agg. Nothing in
-    the plan ever re-scans the corpus. Products stay in BIGINT — at
-    corpora past ~3·10⁹ rows switch the cross-multiply to
-    DECIMAL(38,0) (n²·cum can overflow 2⁶³).
+    NULL values are excluded (they carry no distribution information).
+    D is exact on the distinct-value grid (:func:`_two_sample`, ``v``
+    axis; pinned counts as in :func:`_per_slice`). Returns
+    (``group_col``, n_source, n_rest, ks_stat, reject_95).
     """
-    # NULL values would inflate n_g through counts/totals while never
-    # matching the (group, value) join-back, and the two engines sort
-    # NULLS on opposite ends of the cumulative window — exclude them
-    # up front (round-11 ADVICE); a NULL measurement carries no
-    # distribution information either way
-    df = df.filter(F.col(value_col).isNotNull())
-    # referenced four times below (totals, grand, allc, cells) and
-    # only groups×distinct-values rows — checkpoint so the corpus
-    # scan runs once (PERF.md round 9)
-    counts = (
-        df.groupBy(group_col, value_col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
+    ks = F.col("ks_int").cast("double") / _pairs()
+    crit = F.lit(alpha_coeff) * F.sqrt(
+        (F.col("n_cur") + F.col("n_ref")).cast("double") / _pairs()
     )
-    totals = counts.groupBy(group_col).agg(
-        F.sum("cnt").cast("bigint").alias("n_g")
-    )
-    grand = counts.agg(F.sum("cnt").cast("bigint").alias("n"))
-    allc = counts.groupBy(value_col).agg(
-        F.sum("cnt").cast("bigint").alias("cnt_all")
-    )
-    cells = (
-        totals.crossJoin(F.broadcast(allc))
-        .join(
-            counts,
-            [group_col, value_col],
-            "left",
-        )
-        .select(
-            group_col,
-            value_col,
-            "n_g",
-            F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-            "cnt_all",
-        )
-    )
-    w = (
-        Window.partitionBy(group_col)
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cums = cells.select(
-        group_col,
-        "n_g",
-        F.sum("cnt").over(w).cast("bigint").alias("cum_g"),
-        F.sum("cnt_all").over(w).cast("bigint").alias("cum_all"),
-    )
-    d_int = F.abs(
-        F.col("cum_g") * (F.col("n") - F.col("n_g"))
-        - (F.col("cum_all") - F.col("cum_g")) * F.col("n_g")
-    )
-    dmax = (
-        cums.join(F.broadcast(grand))
-        .groupBy(group_col, "n_g", "n")
-        .agg(F.max(d_int).alias("d_int"))
-    )
-    n1 = F.col("n_g").cast("double")
-    n2 = (F.col("n") - F.col("n_g")).cast("double")
-    ks = F.col("d_int").cast("double") / (n1 * n2)
-    crit = F.lit(alpha_coeff) * F.sqrt(F.col("n").cast("double") / (n1 * n2))
-    return dmax.select(
-        group_col,
-        F.col("n_g").alias("n_source"),
-        (F.col("n") - F.col("n_g")).alias("n_rest"),
-        ks.alias("ks_stat"),
-        (ks > crit).alias("reject_95"),
+    return _per_slice(
+        df.filter(F.col(value_col).isNotNull()), group_col, F.col(value_col), "v",
+        ks.alias("ks_stat"), (ks > crit).alias("reject_95"),
     )
 
 
@@ -581,18 +692,11 @@ def psi_drift(
     stay finite. Conventional reading: <0.1 stable, >0.25 shifted —
     the ``shifted`` flag uses 0.25.
 
-    Exactness: bucket ids are INTEGER arithmetic ((v−min)·B div
-    (max−min+1) — floor division on non-negatives, identical in both
-    engines), counts are integers, and the only floats are the final
-    shares and ln terms, summed as round-12 DECIMAL(28,12).
-
-    Spark shape: one (group,bucket) count agg off a map-side bucket
-    projection (global min/max ride a 1-row broadcast), a bounded
-    groups×buckets spine, and one sum per group. Returns
-    (``group_col``, n_source, n_rest, psi, shifted).
+    NULL values are excluded. Bucket ids are integer arithmetic
+    ((v−min)·B div (max−min+1)), the same in both engines; the sum is
+    :func:`_two_sample`'s ``bucket`` axis over all ``n_buckets``
+    buckets. Returns (``group_col``, n_source, n_rest, psi, shifted).
     """
-    # same NULL exclusion as ks_drift: a NULL value would count toward
-    # n_g but land in no bucket, skewing every share
     df = df.filter(F.col(value_col).isNotNull())
     rng = df.agg(
         F.min(value_col).cast("bigint").alias("mn"),
@@ -600,68 +704,15 @@ def psi_drift(
     )
     bucketed = df.join(F.broadcast(rng)).select(
         group_col,
-        (
-            (F.col(value_col).cast("bigint") - F.col("mn"))
-            * F.lit(n_buckets)
-        ).alias("__num"),
+        ((F.col(value_col).cast("bigint") - F.col("mn")) * F.lit(n_buckets)).alias(
+            "__num"
+        ),
         (F.col("mx") - F.col("mn") + F.lit(1)).alias("__den"),
     )
-    # referenced four times below (totals, grand, allc, cells) and
-    # only groups×buckets rows — checkpoint so the corpus scan runs
-    # once (PERF.md round 9)
-    counts = (
-        bucketed.select(
-            group_col, F.expr("__num DIV __den").alias("bucket")
-        )
-        .groupBy(group_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
-    totals = counts.groupBy(group_col).agg(
-        F.sum("cnt").cast("bigint").alias("n_g")
-    )
-    grand = counts.agg(F.sum("cnt").cast("bigint").alias("n"))
-    allc = counts.groupBy("bucket").agg(
-        F.sum("cnt").cast("bigint").alias("cnt_all")
-    )
-    spine = totals.crossJoin(
-        F.broadcast(
-            df.sparkSession.range(0, n_buckets).select(
-                F.col("id").alias("bucket")
-            )
-        )
-    )
-    cells = (
-        spine.join(F.broadcast(allc), "bucket", "left")
-        .join(counts, [group_col, "bucket"], "left")
-        .join(F.broadcast(grand))
-        .select(
-            group_col,
-            "n_g",
-            "n",
-            F.coalesce(F.col("cnt"), F.lit(0)).alias("c_g"),
-            F.coalesce(F.col("cnt_all"), F.lit(0)).alias("c_all"),
-        )
-    )
-    nb = F.lit(n_buckets)
-    p = (F.col("c_g") + F.lit(1)).cast("double") / (
-        F.col("n_g") + nb
-    ).cast("double")
-    q = (F.col("c_all") - F.col("c_g") + F.lit(1)).cast("double") / (
-        F.col("n") - F.col("n_g") + nb
-    ).cast("double")
-    term = (p - q) * F.log(p / q)
-    out = cells.groupBy(group_col, "n_g", "n").agg(
-        F.sum(F.round(term, 12).cast("decimal(28,12)"))
-        .cast("double")
-        .alias("psi")
-    )
-    return out.select(
-        group_col,
-        F.col("n_g").alias("n_source"),
-        (F.col("n") - F.col("n_g")).alias("n_rest"),
-        "psi",
-        (F.col("psi") > F.lit(0.25)).alias("shifted"),
+    return _per_slice(
+        bucketed, group_col, F.expr("__num DIV __den"), "bucket",
+        "psi", (F.col("psi") > F.lit(0.25)).alias("shifted"),
+        points=df.sparkSession.range(0, n_buckets).select(F.col("id").alias("bucket")),
     )
 
 
@@ -679,96 +730,15 @@ def w1_drift(
     a pipeline alerts on when "how far did lengths move" matters more
     than "did they move at all".
 
-    Exactness: both ECDFs are step functions constant between observed
-    values, so the integral is the exact finite sum
-    Σ_i |F_g(v_i) − F_rest(v_i)|·(v_{i+1} − v_i) over the sorted
-    distinct-value grid (the last grid point contributes 0 since both
-    CDFs are 1 there). The summand runs in INTEGER cross-multiplied
-    form |cum_g·n_rest − cum_rest·n_g|·Δv with ONE exact division by
-    n_g·n_rest at the end — no float accumulation, the oracle replays
-    bit-for-bit. The cross-multiply and its sum accumulate in
-    DECIMAL(38,0) (round-13 ADVICE: a BIGINT sum wraps SILENTLY past
-    ~10⁹ rows × wide value ranges while the DuckDB oracle — HUGEINT —
-    would not; decimal on the grid-sized frame costs nothing and
-    overflow now fails loudly instead of returning a wrong w1_dist).
-
-    Spark shape: IDENTICAL to ks_drift — one (group,value) count agg,
-    a bounded grid×groups broadcast expansion, one group-partitioned
-    cumulative window (which also serves the lead(Δv) step — same
-    partition, same order, ONE window exchange), and one sum agg.
-    Returns (``group_col``, n_source, n_rest, w1_dist).
+    NULL values are excluded. Both ECDFs are step functions, so the
+    integral is the exact finite sum over the sorted distinct-value
+    grid (:func:`_two_sample`, ``v`` axis, Δv in BIGINT units; a
+    single-value grid gives W1 = 0). Returns (``group_col``,
+    n_source, n_rest, w1_dist).
     """
-    # same NULL exclusion as ks_drift (round-11 ADVICE): NULLs carry
-    # no distribution information and break the cumulative window's
-    # cross-engine ordering
-    df = df.filter(F.col(value_col).isNotNull())
-    counts = (
-        df.groupBy(group_col, value_col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
-    totals = counts.groupBy(group_col).agg(
-        F.sum("cnt").cast("bigint").alias("n_g")
-    )
-    grand = counts.agg(F.sum("cnt").cast("bigint").alias("n"))
-    allc = counts.groupBy(value_col).agg(
-        F.sum("cnt").cast("bigint").alias("cnt_all")
-    )
-    cells = (
-        totals.crossJoin(F.broadcast(allc))
-        .join(counts, [group_col, value_col], "left")
-        .select(
-            group_col,
-            value_col,
-            "n_g",
-            F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-            "cnt_all",
-        )
-    )
-    w = Window.partitionBy(group_col).orderBy(value_col)
-    cums = cells.select(
-        group_col,
-        "n_g",
-        F.sum("cnt")
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("bigint")
-        .alias("cum_g"),
-        F.sum("cnt_all")
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("bigint")
-        .alias("cum_all"),
-        (
-            F.lead(F.col(value_col).cast("bigint")).over(w)
-            - F.col(value_col).cast("bigint")
-        ).alias("dv"),
-    )
-    # the last grid point (NULL lead) contributes 0 — keep the row via
-    # coalesce instead of filtering so a degenerate single-value grid
-    # still emits its group with W1 = 0
-    term = (
-        F.abs(
-            F.col("cum_g").cast("decimal(38,0)") * (F.col("n") - F.col("n_g"))
-            - (F.col("cum_all") - F.col("cum_g")).cast("decimal(38,0)")
-            * F.col("n_g")
-        )
-        * F.coalesce(F.col("dv"), F.lit(0))
-    )
-    agg = (
-        cums.join(F.broadcast(grand))
-        .groupBy(group_col, "n_g", "n")
-        .agg(F.sum(term).cast("decimal(38,0)").alias("w1_int"))
-    )
-    return agg.select(
-        group_col,
-        F.col("n_g").alias("n_source"),
-        (F.col("n") - F.col("n_g")).alias("n_rest"),
-        (
-            F.col("w1_int").cast("double")
-            / (
-                F.col("n_g").cast("double")
-                * (F.col("n") - F.col("n_g")).cast("double")
-            )
-        ).alias("w1_dist"),
+    return _per_slice(
+        df.filter(F.col(value_col).isNotNull()), group_col, F.col(value_col), "v",
+        (F.col("w1_int").cast("double") / _pairs()).alias("w1_dist"),
     )
 
 
@@ -783,91 +753,21 @@ def chi2_drift(
     value g, test whether g's ``cat_col`` mix (e.g. language mix)
     differs from the REST of the corpus. The classic two-sample
     chi-square: χ² = Σ_{c,s} (O_sc − E_sc)²/E_sc over categories c and
-    the two samples s ∈ {g, rest}, E_sc = n_s·ct_c/n.
+    the two samples s ∈ {g, rest}, E_sc = n_s·ct_c/n, in the collapsed
+    integer form of :func:`_two_sample`'s ``c`` axis, with its
+    Wilson–Hilferty 95% flag at df = (#categories in the corpus − 1).
 
-    Exactness: both samples' deviations share one integer numerator —
-    (O_g,c·n − n_g·ct_c) = −(O_rest,c·n − n_rest·ct_c) — so the
-    statistic collapses to χ² = Σ_c D_c²/ct_c / (n_g·n_rest) with
-    D_c = O_g,c·n − n_g·ct_c all-integer (the two samples' E-scaled
-    squares share D_c² and their 1/(n·n_g)+1/(n·n_rest) weights sum
-    to exactly 1/(n_g·n_rest)). D_c² stays under 2⁵³ at any
-    tested SF (exact as a double); each per-category division is one
-    exactly-rounded IEEE op, summed as round-12 DECIMAL(38,12), then one
-    final scale — the oracle replays bit-for-bit. Past ~3·10⁷ rows
-    per slice move D_c² to DECIMAL(38,0).
-
-    The 95% rejection flag uses the Wilson–Hilferty cube approximation
-    of the chi-square critical value at df = (#categories − 1):
-    crit ≈ df·(1 − 2/(9df) + z₀.₉₅·√(2/(9df)))³ — closed-form in both
-    engines, accurate to ~3 decimal places for df ≥ 1, and evaluated
-    identically from the same integers on both sides.
-
-    Spark shape: one (group,category) count agg (category
-    cardinalities are vocabulary-sized, orders below row count), a
-    bounded groups×categories broadcast spine so absent categories
-    count as 0, and one sum per group. Nothing re-scans the corpus.
-    Returns (``group_col``, n_source, n_rest, df_chi2, chi2,
+    NULL categories are excluded; a category absent from g counts 0
+    there. Returns (``group_col``, n_source, n_rest, df_chi2, chi2,
     reject_95).
     """
-    # NULL categories are excluded like NULL values in ks/psi/w1: a
-    # NULL would inflate n_g while belonging to no category cell
-    df = df.filter(F.col(cat_col).isNotNull())
-    counts = (
-        df.groupBy(group_col, cat_col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
-    totals = counts.groupBy(group_col).agg(
-        F.sum("cnt").cast("bigint").alias("n_g")
-    )
-    grand = counts.agg(F.sum("cnt").cast("bigint").alias("n"))
-    allc = counts.groupBy(cat_col).agg(
-        F.sum("cnt").cast("bigint").alias("ct")
-    )
-    n_cats = allc.agg(F.count(F.lit(1)).cast("bigint").alias("k"))
-    cells = (
-        totals.crossJoin(F.broadcast(allc))
-        .join(counts, [group_col, cat_col], "left")
-        .join(F.broadcast(grand))
-        .select(
-            group_col,
-            "n_g",
-            "n",
-            "ct",
-            F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("o_g"),
-        )
-    )
-    d = F.col("o_g") * F.col("n") - F.col("n_g") * F.col("ct")
-    term = (d * d).cast("double") / F.col("ct").cast("double")
-    agg = cells.groupBy(group_col, "n_g", "n").agg(
-        F.sum(F.round(term, 12).cast("decimal(38,12)"))
-        .cast("double")
-        .alias("s")
-    )
-    chi2 = F.col("s") / (
-        F.col("n_g").cast("double")
-        * (F.col("n") - F.col("n_g")).cast("double")
-    )
-    dof = (F.col("k") - F.lit(1)).cast("double")
-    # dofc floors the WH divisor at 1 so a single-category corpus
-    # (df = 0, chi2 exactly 0, test undefined) evaluates without an
-    # ANSI divide-by-zero; crit keeps the true dof factor, so df = 0
-    # yields crit = 0 and the flag stays false
-    dofc = F.greatest(dof, F.lit(1.0))
-    wh = F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofc) + F.lit(
-        1.6448536269514722
-    ) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofc))
-    crit = dof * wh * wh * wh
-    return (
-        agg.join(F.broadcast(n_cats))
-        .select(
-            group_col,
-            F.col("n_g").alias("n_source"),
-            (F.col("n") - F.col("n_g")).alias("n_rest"),
-            (F.col("k") - F.lit(1)).alias("df_chi2"),
-            chi2.alias("chi2"),
-            (chi2 > crit).alias("reject_95"),
-        )
+    return _per_slice(
+        df.filter(F.col(cat_col).isNotNull()), group_col, F.col(cat_col), "c",
+        (F.col("k") - F.lit(1)).alias("df_chi2"),
+        # a plain division, as ks_drift's and w1_drift's: a corpus of one
+        # slice has no rest, and the batch family raises there
+        (F.col("s") / _pairs()).alias("chi2"),
+        "reject_95",
     )
 
 
@@ -950,135 +850,56 @@ def rolling_drift_from_counts(
     weeks' counts), and the PSI hull stays global, so restricted rows
     are bit-identical to the same rows of an unrestricted run.
 
-    ``counts`` is read several times, so it is pinned once; the pin is
-    attached to the result (``cacheutil.release(result)`` frees it)."""
+    KS and W1 are :func:`_two_sample` over the week-vs-trailing grid;
+    PSI is the same cells folded to ``n_buckets`` equal-width buckets
+    over the GLOBAL value hull. ``counts`` is read several times, so
+    it is pinned once; the pin is attached to the result
+    (``cacheutil.release(result)`` frees it)."""
     if ref_weeks < 1:
         raise ValueError("need ref_weeks >= 1")
     g = group_col
     with Frames() as frames:
         counts = frames.pin(counts, eager=True)
-        weeks = counts.select(g, F.col("week").alias("w")).distinct()
-        if out_weeks is not None:
-            weeks = weeks.join(out_weeks, [g, "w"], "left_semi")
-        hull = counts.agg(
-            F.min("v").alias("lo"), F.max("v").alias("hi")
-        )
-        ref = (
-            counts.select(
-                g,
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.lit(ref_weeks)),
-                        lambda k: F.date_add(F.col("week"), (k * 7).cast("int")),
-                    )
-                ).alias("w"),
-                "v",
-                "cnt",
-            )
-            .groupBy(g, "w", "v")
-            .agg(F.sum("cnt").alias("ref"))
-        )
-        cur = counts.select(g, F.col("week").alias("w"), "v", F.col("cnt").alias("cur"))
-        cells = (
-            cur.join(ref, [g, "w", "v"], "full_outer")
-            .join(weeks, [g, "w"], "left_semi")
-            .select(
-                g,
-                "w",
-                "v",
-                F.coalesce(F.col("cur"), F.lit(0)).cast("bigint").alias("cur"),
-                F.coalesce(F.col("ref"), F.lit(0)).cast("bigint").alias("ref"),
-            )
-        )
-        win = Window.partitionBy(g, "w").orderBy("v")
-        seq = win.rowsBetween(Window.unboundedPreceding, 0)
-        tot = win.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        cums = cells.select(
-            g,
-            "w",
-            "v",
-            F.sum("cur").over(seq).cast("bigint").alias("cum_cur"),
-            F.sum("ref").over(seq).cast("bigint").alias("cum_ref"),
-            F.sum("cur").over(tot).cast("bigint").alias("n_cur"),
-            F.sum("ref").over(tot).cast("bigint").alias("n_ref"),
-            (F.lead("v").over(win) - F.col("v")).alias("dv"),
-            "cur",
-            "ref",
-        )
-        d_int = F.abs(
-            F.col("cum_cur").cast("decimal(38,0)") * F.col("n_ref")
-            - F.col("cum_ref").cast("decimal(38,0)") * F.col("n_cur")
-        )
-        ksw1 = cums.groupBy(g, "w", "n_cur", "n_ref").agg(
-            F.max(d_int).alias("ks_int"),
-            F.sum(d_int * F.coalesce(F.col("dv"), F.lit(0)))
-            .cast("decimal(38,0)")
-            .alias("w1_int"),
-        )
-        # PSI leg: same cells folded to frozen global equal-width buckets
-        nb = F.lit(n_buckets)
-        # integer DIV (the psi_admit/psi_drift edge convention — no float
-        # in the bucket id); v ≥ lo always, so no negative truncation case
+        cells = _trailing(counts, [g], "v", ref_weeks, out_weeks)
+        hull = counts.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+        # integer DIV (psi_drift's edge convention); v ≥ lo always
         bucket = F.least(
             F.lit(n_buckets - 1).cast("bigint"),
             F.expr(f"(v - lo) * {n_buckets} DIV (hi - lo + 1)"),
         )
-        bsums = (
+        folded = (
             cells.join(F.broadcast(hull))
             .groupBy(g, "w", bucket.alias("bucket"))
-            .agg(
-                F.sum("cur").cast("bigint").alias("bc"),
-                F.sum("ref").cast("bigint").alias("br"),
+            .agg(F.sum("cur").alias("bc"), F.sum("ref").alias("br"))
+        )
+        buckets = counts.sparkSession.range(0, n_buckets).select(
+            F.col("id").alias("bucket")
+        )
+        bcells = (
+            cells.select(g, "w")
+            .distinct()
+            .crossJoin(F.broadcast(buckets))
+            .join(folded, [g, "w", "bucket"], "left")
+            .select(
+                g, "w", "bucket",
+                F.coalesce("bc", F.lit(0)).cast("bigint").alias("cur"),
+                F.coalesce("br", F.lit(0)).cast("bigint").alias("ref"),
             )
         )
-        bspine = weeks.crossJoin(
-            F.broadcast(
-                counts.sparkSession.range(0, n_buckets).select(
-                    F.col("id").alias("bucket")
-                )
-            )
-        )
-        bcells = bspine.join(bsums, [g, "w", "bucket"], "left").select(
-            g,
-            "w",
-            F.coalesce(F.col("bc"), F.lit(0)).cast("bigint").alias("bc"),
-            F.coalesce(F.col("br"), F.lit(0)).cast("bigint").alias("br"),
-        )
-        btot = bcells.groupBy(g, "w").agg(
-            F.sum("bc").cast("bigint").alias("tc"),
-            F.sum("br").cast("bigint").alias("tr"),
-        )
-        p = (F.col("bc") + F.lit(1)).cast("double") / (F.col("tc") + nb).cast(
-            "double"
-        )
-        q = (F.col("br") + F.lit(1)).cast("double") / (F.col("tr") + nb).cast(
-            "double"
-        )
-        psi = (
-            bcells.join(btot, [g, "w"])
-            .groupBy(g, "w", "tc", "tr")
-            .agg(
-                F.sum(F.round((p - q) * F.log(p / q), 12).cast("decimal(28,12)"))
-                .cast("double")
-                .alias("psi")
-            )
-            .select(g, "w", "psi")
-        )
+        psi = _two_sample(bcells, [g, "w"]).select(g, "w", "psi")
         defined = (F.col("n_cur") > 0) & (F.col("n_ref") > 0)
-        denom = F.col("n_cur").cast("double") * F.col("n_ref").cast("double")
         return frames.attach(
-            ksw1.join(psi, [g, "w"])
+            _two_sample(cells, [g, "w"])
+            .join(psi, [g, "w"])
             .select(
                 g,
                 F.col("w").alias("week_start"),
                 "n_cur",
                 "n_ref",
-                F.when(defined, F.col("ks_int").cast("double") / denom).alias(
+                F.when(defined, F.col("ks_int").cast("double") / _pairs()).alias(
                     "ks_stat"
                 ),
-                F.when(defined, F.col("w1_int").cast("double") / denom).alias(
+                F.when(defined, F.col("w1_int").cast("double") / _pairs()).alias(
                     "w1_dist"
                 ),
                 F.when(defined, F.col("psi")).alias("psi"),
@@ -1140,81 +961,27 @@ def rolling_chi2_from_counts(
     panel rows are computed, while the reference side still draws on
     the full spine — restricted rows are bit-identical to the same
     rows of an unrestricted run (no global coupling in the chi2
-    panel, unlike the numeric panel's PSI hull). The pinned ``counts``
-    is attached to the result, as in :func:`rolling_drift_from_counts`."""
+    panel, unlike the numeric panel's PSI hull). χ² is
+    :func:`_two_sample`'s ``c`` axis over the week∪reference
+    categories; a week with an empty reference keeps its row with NULL
+    statistics and ``drift_defined`` false. The pinned ``counts`` is
+    attached to the result, as in :func:`rolling_drift_from_counts`."""
     if ref_weeks < 1:
         raise ValueError("need ref_weeks >= 1")
     with Frames() as frames:
         counts = frames.pin(counts, eager=True)
-        weeks = counts.select(F.col("week").alias("w")).distinct()
-        if out_weeks is not None:
-            weeks = weeks.join(out_weeks, ["w"], "left_semi")
-        ref = (
-            counts.select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.lit(ref_weeks)),
-                        lambda k: F.date_add(F.col("week"), (k * 7).cast("int")),
-                    )
-                ).alias("w"),
-                "c",
-                "cnt",
-            )
-            .groupBy("w", "c")
-            .agg(F.sum("cnt").alias("ref"))
-        )
-        cur = counts.select(
-            F.col("week").alias("w"), "c", F.col("cnt").alias("cur")
-        )
-        cells = (
-            cur.join(ref, ["w", "c"], "full_outer")
-            .join(weeks, ["w"], "left_semi")
-            .select(
-                "w",
-                F.coalesce(F.col("cur"), F.lit(0)).cast("bigint").alias("cg"),
-                F.coalesce(F.col("ref"), F.lit(0)).cast("bigint").alias("ch"),
-            )
-        )
-        tot = cells.groupBy("w").agg(
-            F.sum("cg").cast("bigint").alias("n_cur"),
-            F.sum("ch").cast("bigint").alias("n_ref"),
-            F.count(F.lit(1)).cast("bigint").alias("k"),
-        )
-        n = F.col("n_cur") + F.col("n_ref")
-        # the cross-multiplied residual squares in DECIMAL(38,0) — d ~ n²,
-        # so d² in BIGINT would wrap past n ≈ 55k rows/week (the round-13
-        # w1_drift ADVICE lesson applied at birth); decimal holds to 1e19
-        d = (
-            F.col("cg") * n - F.col("n_cur") * (F.col("cg") + F.col("ch"))
-        ).cast("decimal(38,0)")
-        term = F.round(
-            (d * d).cast("double") / (F.col("cg") + F.col("ch")).cast("double"),
-            12,
-        ).cast("decimal(38,12)")
-        chi2 = F.try_divide(
-            F.col("s"),
-            F.col("n_cur").cast("double") * F.col("n_ref").cast("double"),
-        )
-        dof = (F.col("k") - F.lit(1)).cast("double")
-        dofc = F.greatest(dof, F.lit(1.0))
-        wh = F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofc) + F.lit(
-            1.6448536269514722
-        ) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofc))
-        crit = dof * wh * wh * wh
+        st = _two_sample(_trailing(counts, [], "c", ref_weeks, out_weeks), ["w"])
         defined = (F.col("n_cur") > 0) & (F.col("n_ref") > 0)
         return frames.attach(
-            cells.join(tot, "w")
-            .groupBy("w", "n_cur", "n_ref", "k")
-            .agg(F.sum(term).cast("double").alias("s"))
-            .select(
+            st.select(
                 F.col("w").alias("week_start"),
                 "n_cur",
                 "n_ref",
                 F.when(defined, F.col("k") - F.lit(1)).alias("df_chi2"),
-                F.when(defined, chi2).alias("chi2"),
-                F.coalesce(
-                    F.when(defined, chi2 > crit), F.lit(False)
-                ).alias("reject_95"),
+                F.when(defined, F.col("chi2")).alias("chi2"),
+                F.coalesce(F.when(defined, F.col("reject_95")), F.lit(False)).alias(
+                    "reject_95"
+                ),
                 defined.alias("drift_defined"),
             ),
             counts,
@@ -1241,7 +1008,7 @@ def psi_admit(
     Bucket edges are FROZEN ([``lo``, ``hi``] equal-width, outside
     values clipped into the end buckets) — streaming PSI must compare
     against fixed edges or every batch would re-bucket history.
-    Same add-one smoothing and round-12 decimal term sum as
+    The score is :func:`_two_sample`'s ``bucket`` axis, as in
     psi_drift; the first batch scores against an empty history
     (every q_i = 1/n_buckets — a well-defined uniform reference,
     document the cold-start in the caller's alerting).
@@ -1255,7 +1022,6 @@ def psi_admit(
     """
     spark = batch_df.sparkSession
     width = hi - lo + 1
-    nb = F.lit(n_buckets)
     # integer DIV (truncates toward zero, but the clamp absorbs the
     # only negative case — values below lo land in bucket 0 either way)
     bucket = F.least(
@@ -1283,40 +1049,25 @@ def psi_admit(
         )
         if hist is None:
             hist = spark.createDataFrame([], "bucket bigint, cnt bigint")
-        hcounts = hist.groupBy("bucket").agg(
-            F.sum("cnt").cast("bigint").alias("ch")
-        )
-        spine = spark.range(0, n_buckets).select(F.col("id").alias("bucket"))
         cells = (
-            spine.join(bcounts.withColumnRenamed("cnt", "cg"), "bucket", "left")
-            .join(hcounts, "bucket", "left")
+            spark.range(0, n_buckets)
+            .select(F.col("id").alias("bucket"))
+            .join(bcounts.withColumnRenamed("cnt", "cur"), "bucket", "left")
+            .join(
+                hist.groupBy("bucket").agg(F.sum("cnt").cast("bigint").alias("ref")),
+                "bucket",
+                "left",
+            )
             .select(
-                F.coalesce(F.col("cg"), F.lit(0)).alias("cg"),
-                F.coalesce(F.col("ch"), F.lit(0)).alias("ch"),
+                "bucket",
+                F.coalesce("cur", F.lit(0)).alias("cur"),
+                F.coalesce("ref", F.lit(0)).alias("ref"),
             )
         )
-        tot = cells.agg(
-            F.sum("cg").cast("bigint").alias("n_batch"),
-            F.sum("ch").cast("bigint").alias("n_hist"),
-        )
-        p = (F.col("cg") + F.lit(1)).cast("double") / (
-            F.col("n_batch") + nb
-        ).cast("double")
-        q = (F.col("ch") + F.lit(1)).cast("double") / (
-            F.col("n_hist") + nb
-        ).cast("double")
-        term = (p - q) * F.log(p / q)
         out = frames.pin(
-            cells.join(F.broadcast(tot))
-            .groupBy("n_batch", "n_hist")
-            .agg(
-                F.sum(F.round(term, 12).cast("decimal(28,12)"))
-                .cast("double")
-                .alias("psi")
-            )
-            .select(
-                "n_batch",
-                "n_hist",
+            _two_sample(cells, []).select(
+                F.col("n_cur").alias("n_batch"),
+                F.col("n_ref").alias("n_hist"),
                 "psi",
                 (F.col("psi") > F.lit(0.25)).alias("shifted"),
             ),
@@ -1340,16 +1091,14 @@ def chi2_admit(
     ``{store_path}/cats`` (one tiny (c, cnt) parquet table, appended
     per batch), then fold the batch in.
 
-    The statistic is the same collapsed two-sample form as
-    chi2_drift with (batch, history) as the two samples:
-    χ² = Σ_c D_c²/ct_c / (n_batch·n_hist), D_c = o_c·n − n_batch·ct_c
-    all-integer over the batch∪history category union, round-12
-    decimal term sum, one try_divide at the end — so the cold start
-    (empty history) yields a NULL statistic with ``chi2_defined``
-    false rather than a fabricated reference (unlike PSI, chi-square
-    has no natural uniform fallback). The 95% flag uses the same
-    Wilson–Hilferty critical value as chi2_drift (df floored at 1
-    inside the divisor; df = k−1 over categories present).
+    The statistic is chi2_drift's (:func:`_two_sample`'s ``c`` axis)
+    with (batch, history) as the two samples, over the
+    batch∪history category union. The cold start (empty history)
+    yields a NULL statistic with ``chi2_defined`` false rather than a
+    fabricated reference (unlike PSI, chi-square has no natural
+    uniform fallback). An all-NULL batch on an empty history still
+    returns its row: n_batch = n_hist = 0, df_chi2, chi2 and
+    reject_95 NULL, chi2_defined false.
 
     Crash contract: the score row is computed and checkpointed
     BEFORE the store append (sink-before-append, like the rest of
@@ -1374,65 +1123,29 @@ def chi2_admit(
         )
         if hist is None:
             hist = spark.createDataFrame([], "c string, cnt bigint")
-        hcounts = hist.groupBy("c").agg(F.sum("cnt").cast("bigint").alias("ch"))
         cells = (
-            bcounts.withColumnRenamed("cnt", "cg")
-            .join(hcounts, "c", "full_outer")
+            bcounts.withColumnRenamed("cnt", "cur")
+            .join(
+                hist.groupBy("c").agg(F.sum("cnt").cast("bigint").alias("ref")),
+                "c",
+                "full_outer",
+            )
             .select(
-                F.coalesce(F.col("cg"), F.lit(0)).cast("bigint").alias("cg"),
-                F.coalesce(F.col("ch"), F.lit(0)).cast("bigint").alias("ch"),
+                "c",
+                F.coalesce("cur", F.lit(0)).cast("bigint").alias("cur"),
+                F.coalesce("ref", F.lit(0)).cast("bigint").alias("ref"),
             )
         )
-        tot = cells.agg(
-            F.sum("cg").cast("bigint").alias("n_batch"),
-            F.sum("ch").cast("bigint").alias("n_hist"),
-            F.count(F.lit(1)).cast("bigint").alias("k"),
-        )
-        n = F.col("n_batch") + F.col("n_hist")
-        d = F.col("cg") * n - F.col("n_batch") * (F.col("cg") + F.col("ch"))
-        term = F.round(
-            (d * d).cast("double")
-            / (F.col("cg") + F.col("ch")).cast("double"),
-            12,
-        ).cast("decimal(38,12)")
-        chi2 = F.try_divide(
-            F.col("s"),
-            F.col("n_batch").cast("double") * F.col("n_hist").cast("double"),
-        )
-        dof = (F.col("k") - F.lit(1)).cast("double")
-        dofc = F.greatest(dof, F.lit(1.0))
-        wh = F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofc) + F.lit(
-            1.6448536269514722
-        ) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofc))
-        crit = dof * wh * wh * wh
-        # round-13 ADVICE fix: the output row derives from two ALWAYS-
-        # one-row global aggregates (tot × term-sum) instead of a groupBy
-        # over ``cells`` — a batch whose cat_col is all NULL on an empty
-        # history produces zero cells, and the old groupBy then emitted
-        # ZERO rows, so a caller's collect()[0] raised IndexError (inside
-        # a foreachBatch, the checkpoint replayed the poisoned batch
-        # forever). Degenerate row: n_batch=n_hist=0,
-        # df_chi2 NULL, chi2 NULL, chi2_defined false (admit).
-        ssum = (
-            cells.join(F.broadcast(tot))
-            .agg(F.sum(term).cast("double").alias("s"))
-        )
+        n_batch = F.coalesce("n_cur", F.lit(0))
+        n_hist = F.coalesce("n_ref", F.lit(0))
         out = frames.pin(
-            tot.select(
-                F.coalesce(F.col("n_batch"), F.lit(0)).alias("n_batch"),
-                F.coalesce(F.col("n_hist"), F.lit(0)).alias("n_hist"),
-                "k",
-            )
-            .join(F.broadcast(ssum))
-            .select(
-                "n_batch",
-                "n_hist",
+            _two_sample(cells, []).select(
+                n_batch.alias("n_batch"),
+                n_hist.alias("n_hist"),
                 F.when(F.col("k") > 0, F.col("k") - F.lit(1)).alias("df_chi2"),
-                chi2.alias("chi2"),
-                (
-                    (F.col("n_batch") > 0) & (F.col("n_hist") > 0)
-                ).alias("chi2_defined"),
-                (chi2 > crit).alias("reject_95"),
+                "chi2",
+                ((n_batch > 0) & (n_hist > 0)).alias("chi2_defined"),
+                "reject_95",
             ),
             eager=True,
         )
@@ -1606,7 +1319,8 @@ def ks_admit(
     (n_batch, 0, NULL, false) and seeds the store; alert on the NULL
     upstream if cold-start admission must be manual.
 
-    Returns one row: (n_batch, n_hist, ks_stat, reject_95). Compaction:
+    Returns one row: (n_batch, n_hist, ks_stat, reject_95), a
+    checkpoint attached to itself (``cacheutil.release(result)``). Compaction:
     :func:`compact_ks_store` re-merges the centroid store in a quiet
     window; the merged digest is a (deterministic) re-clustering, so scores
     across a compaction agree within digest accuracy, not bitwise.
@@ -1624,38 +1338,39 @@ def ks_admit(
     # a groupBy over it would emit zero rows, breaking the
     # one-row-per-batch contract callers' collect()[0] relies on
     maxd = scored.agg(F.max(d).alias("ks_stat"))
-    out = (
-        tot.join(F.broadcast(w_tot))
-        .join(F.broadcast(maxd))
-        .select(
-            "n_batch",
-            F.round("w_hist", 0).cast("bigint").alias("n_hist"),
-            F.when(
-                (F.col("w_hist") > 0) & (F.col("n_batch") > 0),
-                F.col("ks_stat"),
-            ).alias("ks_stat"),
-            # try_divide: n_batch = 0 (all-NULL batch on a seeded
-            # store) would DIVIDE_BY_ZERO under ANSI before the
-            # coalesce(False) could mask it
-            F.coalesce(
-                (F.col("w_hist") > 0)
-                & (
-                    F.col("ks_stat")
-                    > F.lit(alpha_coeff)
-                    * F.sqrt(
-                        F.try_divide(
-                            F.col("n_batch") + F.col("w_hist"),
-                            F.col("n_batch") * F.col("w_hist"),
+    with Frames() as frames:
+        out = frames.pin(
+            tot.join(F.broadcast(w_tot))
+            .join(F.broadcast(maxd))
+            .select(
+                "n_batch",
+                F.round("w_hist", 0).cast("bigint").alias("n_hist"),
+                F.when(
+                    (F.col("w_hist") > 0) & (F.col("n_batch") > 0),
+                    F.col("ks_stat"),
+                ).alias("ks_stat"),
+                # try_divide: n_batch = 0 (all-NULL batch on a seeded
+                # store) would DIVIDE_BY_ZERO under ANSI before the
+                # coalesce(False) could mask it
+                F.coalesce(
+                    (F.col("w_hist") > 0)
+                    & (
+                        F.col("ks_stat")
+                        > F.lit(alpha_coeff)
+                        * F.sqrt(
+                            F.try_divide(
+                                F.col("n_batch") + F.col("w_hist"),
+                                F.col("n_batch") * F.col("w_hist"),
+                            )
                         )
-                    )
-                ),
-                F.lit(False),
-            ).alias("reject_95"),
+                    ),
+                    F.lit(False),
+                ).alias("reject_95"),
+            ),
+            eager=True,
         )
-        .localCheckpoint(eager=True)
-    )
-    sig.write.mode("append").parquet(f"{store_path}/centroids")
-    return out
+        sig.write.mode("append").parquet(f"{store_path}/centroids")
+        return frames.attach(out)
 
 
 def compact_ks_store(

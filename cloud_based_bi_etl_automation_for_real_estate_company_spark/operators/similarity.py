@@ -1122,8 +1122,9 @@ def nsw_topk(
     shuffled; a batch whose estimated per-hop state exceeds
     ``NSW_BROADCAST_MAX_ROWS`` degrades to planner-chosen joins instead
     of failing on the broadcast cap. The estimate reads the graph's own
-    max out-degree and top layer, so a graph grown past ``M`` by
-    appends is sized as it is.
+    max degree (out plus in: each hop walks the edges both ways) and
+    top layer, so a graph grown past ``M`` by appends, or a hub many
+    nodes point at, is sized as it is.
     Recall is audited (≥ floor vs brute force) in tests and the
     x_ann_hnsw gate; the trade is recall-vs-scan, never exactness of
     the arithmetic (6-dp cosine, id tie-breaks).
@@ -1156,8 +1157,12 @@ def nsw_topk(
         )
         # enter at the highest NON-EMPTY layer (a tiny corpus may draw no
         # node at max_level); the same 1-row collect reads the graph's
-        # max out-degree for the broadcast guard below
-        top_lvl, degree = graph.groupBy("level", "src").count().agg(
+        # max degree for the broadcast guard below: out plus in, since
+        # every hop walks the edges and their reverses
+        ends = graph.select("level", F.col("src").alias("node")).unionByName(
+            graph.select("level", F.col("dst").alias("node"))
+        )
+        top_lvl, degree = ends.groupBy("level", "node").count().agg(
             F.max("level"), F.max("count")
         ).collect()[0]
         # broadcast-posture guard: everything hinted below is

@@ -59,19 +59,12 @@ def get_spark(
         # 15.9/16.3/23.0 s with SHJ allowed vs 14.0/14.0/12.9 s with
         # the Spark-default SMJ preference: per-partition hash-table
         # builds lose to sort-merge on presorted small runs across
-        # nearly every join leg. The env knob stays for cluster
-        # profiles where per-partition builds fit executor memory, and
-        # the AQE SMJ→SHJ rewrite below stays (runtime-size-gated; it
-        # was active in BOTH measured configs). Strategy swap only —
-        # results and exchange counts are unchanged either way.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
-        )
+        # nearly every join leg. The AQE SMJ→SHJ rewrite below stays
+        # (runtime-size-gated; it was active in BOTH measured configs).
+        # Strategy swap only — results and exchange counts are
+        # unchanged either way.
+        .config("spark.sql.join.preferSortMergeJoin", "true")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")

@@ -228,7 +228,7 @@ def refresh_drift_panels_incremental(
 
     from pyspark.sql import functions as F
 
-    from ..operators.generations import read_current, write_generation
+    from ..operators.generations import publish, read_current
     from ..operators.quality import (
         rolling_chi2_from_counts,
         rolling_drift_from_counts,
@@ -321,13 +321,10 @@ def refresh_drift_panels_incremental(
             ))
             mix = frames.own(rolling_chi2_from_counts(cat, ref_weeks=ref_weeks))
 
-        out: dict[str, DataFrame] = {}
-        for name, df in (("drift_panel", drift), ("mix_panel", mix)):
-            path = os.path.join(gold_path, name)
-            write_generation(df, path)
-            cur = read_current(spark, path)
-            cur.createOrReplaceTempView(f"{prefix}{name}")
-            out[name] = cur
+        out = {
+            name: publish(df, os.path.join(gold_path, name), f"{prefix}{name}")
+            for name, df in (("drift_panel", drift), ("mix_panel", mix))
+        }
     tmp = pub_file + ".tmp"
     with open(tmp, "w") as f:
         json.dump({"batch_id": upto_batch_id, "lo": lo, "hi": hi}, f)

@@ -255,16 +255,20 @@ def test_operator_leaves_no_persisted_rdds(spark, name):
 
 def test_drift_gated_drain_frees_per_batch_pins(spark, tmp_path):
     """The admission gate's per-batch step over three batches: pin the
-    batch, score it with psi_admit, chi2_admit and w1_admit, and own
-    their score rows in the batch's scope. Nothing stays persisted."""
+    batch, score it with psi_admit, chi2_admit, ks_admit and w1_admit,
+    and own their score rows in the batch's scope. Nothing stays
+    persisted, though every score frame is still referenced: only an
+    explicit free, not JVM GC, can pass the check."""
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.quality import (
         chi2_admit,
+        ks_admit,
         psi_admit,
         w1_admit,
     )
 
     store = str(tmp_path / "store")
     before = _persisted(spark)
+    scores = []
     for b in range(3):
         batch = spark.createDataFrame(
             [(b * 10 + i, i * 410 + 100, "en" if i % 3 else "de") for i in range(10)],
@@ -272,9 +276,14 @@ def test_drift_gated_drain_frees_per_batch_pins(spark, tmp_path):
         )
         with Frames() as frames:
             pinned = frames.pin(batch, eager=True)
-            frames.own(psi_admit(pinned, f"{store}/psi")).collect()
-            frames.own(chi2_admit(pinned, f"{store}/chi2")).collect()
-            frames.own(w1_admit(pinned, f"{store}/w1", threshold=500.0)).collect()
+            scores += [
+                frames.own(psi_admit(pinned, f"{store}/psi")),
+                frames.own(chi2_admit(pinned, f"{store}/chi2")),
+                frames.own(ks_admit(pinned, f"{store}/ks")),
+                frames.own(w1_admit(pinned, f"{store}/w1", threshold=500.0)),
+            ]
+            for score in scores[-4:]:
+                score.collect()
     assert not _persisted(spark) - before
 
 
@@ -304,6 +313,41 @@ def test_drift_dashboard_batches_free_count_pins(spark, tmp_path):
 
 
 SURFACE = {n for n in dir(cacheutil) if not n.startswith("__")}
+
+# The (module, top-level def) sites in operators/ that still call
+# localCheckpoint directly instead of pinning through a Frames scope,
+# each with what it pins. Moving a site to Frames removes its entry;
+# no site may be added.
+BARE_CHECKPOINTS = {
+    ("corpus", "js_divergence_by_group"): "(group, term) counts read four times",
+    ("corpus", "mixture_sample"): "the internally built mixture table",
+    ("dedup", "compact_soft_store"): "live signatures read by the relabel pass",
+    ("dedup", "incremental_minhash_dedup"): "batch signatures; the flagged batch",
+    ("dedup", "incremental_paragraph_dedup"): "survivor set and output the sink sees",
+    ("dedup", "prefix_filter_pairs"): "token set and prefix set, each multi-read",
+    ("dedup", "soft_dedup_admit"): "signatures, components and the assignment",
+    ("graph", "copurchase_lift"): "cap-bounded baskets read twice",
+    ("graph", "pagerank"): "node set and weighted edges of the loop",
+    ("graph", "triangles"): "the two fan-out points of the triangle plan",
+    ("ml", "logreg_train"): "training rows re-read by every gradient step",
+    ("similarity", "_select_neighbors_heuristic"): "trimmed candidate edges",
+    ("timeseries", "acf_integer"): "centered series read three times",
+    ("timeseries", "seasonal_decompose_daily"): "full 7-day windows read twice",
+    ("timeseries", "theil_sen_slope"): "bucket-grain input read three times",
+    ("timeseries", "xcorr_integer"): "centered pair read three times",
+}
+
+
+def _bare_checkpoints(src: str, module: str) -> set[tuple[str, str]]:
+    """(module, top-level def) of every direct localCheckpoint call."""
+    return {
+        (module, top.name)
+        for top in ast.parse(src).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    }
 
 
 def _violations(src: str, name: str) -> list[str]:
@@ -347,6 +391,16 @@ def test_frame_lifetimes_go_through_cacheutil():
         for v in _violations(p.read_text(), str(p.relative_to(PKG.parent)))
     ]
     assert not bad, "\n".join(bad)
+    bare = {
+        site
+        for p in sorted((PKG / "operators").glob("*.py"))
+        if p.name != "cacheutil.py"
+        for site in _bare_checkpoints(p.read_text(), p.stem)
+    }
+    assert bare == set(BARE_CHECKPOINTS), (
+        f"unlisted: {sorted(bare - set(BARE_CHECKPOINTS))}; "
+        f"gone (drop the entry): {sorted(set(BARE_CHECKPOINTS) - bare)}"
+    )
 
 
 def test_guard_catches_each_pattern():

@@ -1,12 +1,15 @@
-"""Every top-level package def is reached from a user path, not only from tests.
+"""Every top-level package def and name binding is reached from a user
+path, not only from tests.
 
-An AST scan, Spark-free. The roots are the package's module-level code,
-``bench.py``, ``__spark_entry__.py``, ``perfbench/`` and ``scripts/``,
-plus ``KEEP`` below. From the roots, each reached def adds the names its
-body uses, until nothing new is reached. Names are matched by
-identifier (``Name`` ids and ``Attribute`` attrs), so a comment or a
-docstring that mentions a def does not reach it, and neither does an
-import that nothing uses.
+An AST scan, Spark-free. The defs are the package's top-level functions,
+classes and simple name bindings (``X = ...``, ``X: T = ...``, ``a, b =
+...``). The roots are the package's other module-level code (a binding's
+value runs on import, so it counts), ``bench.py``, ``__spark_entry__.py``,
+``perfbench/`` and ``scripts/``, plus ``KEEP`` below. From the roots,
+each reached def adds the names its body uses, until nothing new is
+reached. Names are matched by identifier (``Name`` ids and ``Attribute``
+attrs), so a comment or a docstring that mentions a def does not reach
+it, and neither does an import that nothing uses.
 
 A def this test reports is reachable only from ``tests/``: delete it
 with the tests whose only subject it is, or wire it into a user path.
@@ -41,6 +44,7 @@ KEEP = {
     "compact_paragraph_store": "paragraph-hash store compaction",
     "compact_soft_store": "soft-dedup store compaction and relabel",
     "compact_ks_store": "KS/W1 centroid store compaction",
+    "SILVER_EVENT_SCHEMA": "the silver contract tests build their fixtures from",
 }
 
 
@@ -55,9 +59,38 @@ def _names(nodes) -> set[str]:
     return out
 
 
+def _bound(stmt: ast.stmt) -> list[str]:
+    """The names a top-level simple binding defines ([] for any other
+    statement, and for dunders, which the import system reads)."""
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    else:
+        return []
+    names = []
+    for t in targets:
+        elts = t.elts if isinstance(t, ast.Tuple) else [t]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names += [e.id for e in elts]
+    return [n for n in names if not n.startswith("__")]
+
+
+def _defs(tree: ast.Module) -> list[tuple[str, ast.stmt]]:
+    """(name, statement) of every top-level def, class and binding."""
+    out = []
+    for stmt in tree.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.append((stmt.name, stmt))
+        out += [(name, stmt) for name in _bound(stmt)]
+    return out
+
+
 def _module_level(tree: ast.Module) -> list[ast.AST]:
-    """Statements that run on import, minus imports and def bodies (a
-    def's decorators and defaults run on import, so they count)."""
+    """Statements that run on import, minus imports, def bodies and the
+    names a binding defines (a def's decorators and defaults and a
+    binding's value run on import, so they count)."""
     out: list[ast.AST] = []
     for stmt in tree.body:
         if isinstance(stmt, (ast.Import, ast.ImportFrom)):
@@ -67,6 +100,8 @@ def _module_level(tree: ast.Module) -> list[ast.AST]:
             out += [d for d in stmt.args.kw_defaults if d is not None]
         elif isinstance(stmt, ast.ClassDef):
             out += stmt.decorator_list + stmt.bases
+        elif _bound(stmt):
+            out += [stmt.value] if stmt.value is not None else []
         else:
             out.append(stmt)
     return out
@@ -74,15 +109,14 @@ def _module_level(tree: ast.Module) -> list[ast.AST]:
 
 def unreached() -> list[tuple[str, str, int]]:
     """(module path, def name, line count) of every top-level package def
-    that no root reaches."""
+    or binding that no root reaches."""
     defs: dict[str, list[tuple[str, ast.AST]]] = {}
     roots: set[str] = set(KEEP)
     for path in sorted(PKG.rglob("*.py")):
         tree = ast.parse(path.read_text(), str(path))
         rel = str(path.relative_to(ROOT))
-        for stmt in tree.body:
-            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                defs.setdefault(stmt.name, []).append((rel, stmt))
+        for name, stmt in _defs(tree):
+            defs.setdefault(name, []).append((rel, stmt))
         roots |= _names(_module_level(tree))
     entry_files = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
     entry_files += sorted((ROOT / "perfbench").glob("*.py"))
@@ -114,15 +148,14 @@ def unreached() -> list[tuple[str, str, int]]:
 def test_every_package_def_is_reached_from_a_user_path():
     dead = unreached()
     listing = "\n".join(f"  {rel}: {name} ({n} lines)" for rel, name, n in dead)
-    assert not dead, f"{len(dead)} package defs reachable only from tests:\n{listing}"
+    assert not dead, f"{len(dead)} package names reachable only from tests:\n{listing}"
 
 
 def test_keep_list_names_existing_defs():
     names = {
-        stmt.name
+        name
         for path in PKG.rglob("*.py")
-        for stmt in ast.parse(path.read_text()).body
-        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        for name, _ in _defs(ast.parse(path.read_text()))
     }
     assert set(KEEP) <= names, sorted(set(KEEP) - names)
 
@@ -131,4 +164,4 @@ if __name__ == "__main__":
     dead = unreached()
     for rel, name, n in dead:
         print(f"{rel}: {name} ({n})")
-    print(len(dead), "defs,", sum(n for *_, n in dead), "lines")
+    print(len(dead), "names,", sum(n for *_, n in dead), "lines")

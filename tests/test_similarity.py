@@ -286,9 +286,24 @@ def test_nsw_topk_descends_deep_prebuilt_graph(spark):
     assert a == b and len(a) > 0
 
 
+def _nsw_degree(graph):
+    """(max out-degree, max out+in degree, top level) of an NSW graph."""
+    from pyspark.sql import functions as F
+
+    ends = graph.select("level", F.col("src").alias("node")).unionByName(
+        graph.select("level", F.col("dst").alias("node"))
+    )
+    out_deg = graph.groupBy("level", "src").count().agg(F.max("count")).first()[0]
+    both, top = (
+        ends.groupBy("level", "node").count()
+        .agg(F.max("count"), F.max("level")).first()
+    )
+    return out_deg, both, top
+
+
 def test_nsw_broadcast_guard_reads_graph_degree(spark, monkeypatch):
     """The NSW broadcast guard sizes per-hop state from the graph's own
-    max out-degree and top layer, not from the ``M`` argument: with the
+    max degree and top layer, not from the ``M`` argument: with the
     budget between the two estimates, a graph whose degree exceeds M
     runs unhinted, and its results equal the broadcast run's."""
     from pyspark.sql import functions as F
@@ -296,10 +311,7 @@ def test_nsw_broadcast_guard_reads_graph_degree(spark, monkeypatch):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = e.filter("vec_id < 3")
     graph = S.nsw_build_graph(e, M=8).localCheckpoint(eager=True)
-    degree, top = (
-        graph.groupBy("level", "src").count()
-        .agg(F.max("count"), F.max("level")).collect()[0]
-    )
+    _, degree, top = _nsw_degree(graph)
     assert degree > 1
 
     def budget(deg):  # 3 queries, default beam 16 and hops 3
@@ -313,6 +325,48 @@ def test_nsw_broadcast_guard_reads_graph_degree(spark, monkeypatch):
     assert not hinted
     monkeypatch.setattr(S, "NSW_BROADCAST_MAX_ROWS", budget(degree))
     hint = sorted(map(tuple, S.nsw_topk(e, q, k=5, graph=graph, M=1).collect()))
+    assert hinted
+    assert plain == hint and len(plain) > 0
+
+
+def test_nsw_broadcast_guard_counts_in_degree(spark, monkeypatch):
+    """Each NSW hop walks the edges and their reverses, so a hub that
+    many nodes point at fans out by its in-degree. With the budget at
+    the out-degree-only estimate of a hub graph, the search runs
+    unhinted, and its results equal the broadcast run's."""
+    from pyspark.sql import functions as F
+
+    e = spark.range(200).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.sin("id"), F.cos("id"), F.sin(F.col("id") * 2)).alias("embedding"),
+    )
+    q = e.filter("vec_id < 3")
+    # a chain i -> i+1 plus every node -> hub 0: out-degree 2, in-degree
+    # of the hub ~ |nodes|
+    ids = e.select(F.col("vec_id").alias("src"))
+    graph = (
+        ids.select("src", (F.col("src") + 1).alias("dst"))
+        .filter(F.col("dst") < 200)
+        .unionByName(
+            ids.filter("src > 0").select("src", F.lit(0).cast("bigint").alias("dst"))
+        )
+        .select(F.lit(0).alias("level"), "src", "dst", F.lit(0.0).alias("sim"))
+        .localCheckpoint(eager=True)
+    )
+    out_deg, degree, top = _nsw_degree(graph)
+    assert (out_deg, top) == (2, 0) and degree > 100
+
+    def budget(deg):  # 3 queries, default beam 16 and hops 3
+        return 3 * 16 * (deg + 1) * (3 + top + 1)
+
+    hinted = []
+    broadcast = F.broadcast
+    monkeypatch.setattr(F, "broadcast", lambda df: hinted.append(1) or broadcast(df))
+    monkeypatch.setattr(S, "NSW_BROADCAST_MAX_ROWS", budget(out_deg))
+    plain = sorted(map(tuple, S.nsw_topk(e, q, k=5, graph=graph).collect()))
+    assert not hinted
+    monkeypatch.setattr(S, "NSW_BROADCAST_MAX_ROWS", budget(degree))
+    hint = sorted(map(tuple, S.nsw_topk(e, q, k=5, graph=graph).collect()))
     assert hinted
     assert plain == hint and len(plain) > 0
 

@@ -861,6 +861,38 @@ def test_chi2_drift_null_category_excluded(spark):
     assert rows["g1"]["n_source"] == 2 and rows["g1"]["n_rest"] == 2
 
 
+def test_batch_drift_scores_a_null_slice_against_the_rest(spark):
+    """A NULL ``group_col`` value is one more slice: its row compares its
+    own counts with the rest, like any other slice's. Slice NULL holds
+    values {5, 6} and langs {de, en}; the rest holds {1, 2, 3} and
+    {en, en, de}."""
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.quality import (
+        chi2_drift,
+        ks_drift,
+        psi_drift,
+        w1_drift,
+    )
+
+    df = spark.createDataFrame(
+        [("a", 1, "en"), ("a", 2, "en"), ("b", 3, "de"), (None, 5, "de"),
+         (None, 6, "en")],
+        "source string, n_chars bigint, lang string",
+    )
+
+    def null_row(f):
+        return next(r for r in f(df).collect() if r["source"] is None)
+
+    ks = null_row(ks_drift)
+    assert (ks["n_source"], ks["n_rest"], ks["ks_stat"]) == (2, 3, 1.0)
+    assert null_row(w1_drift)["w1_dist"] == 3.5  # disjoint: the mean shift
+    # D_de = 1·5 − 2·2 = 1, D_en = 1·5 − 2·3 = −1: (1/2 + 1/3) / (2·3)
+    assert abs(null_row(chi2_drift)["chi2"] - 5 / 36) < 1e-12
+    # the NULL slice fills the top buckets as slice a fills the bottom
+    # ones, so both score the same PSI
+    rows = {r["source"]: r["psi"] for r in psi_drift(df).collect()}
+    assert rows[None] == rows["a"]
+
+
 def test_chi2_admit_cold_start_and_hand_computed_second_batch(
     spark, tmp_path
 ):

@@ -1,6 +1,6 @@
 """Round 15 — store takedown family (tombstones over the append-only
 lifetime stores: stores.delete / stores.read_tombstones +
-bm25_delete_docs, delete_from_minhash_store, nsw_delete).
+bm25_delete_docs, nsw_delete).
 
 The append-only stores had no delete path: a takedown
 (right-to-be-forgotten, licensing removal) at 100 TB cannot rewrite a
@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import stores
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.corpus import (
     bm25_delete_docs,
     bm25_index_append,
@@ -39,7 +40,6 @@ from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.corpu
 )
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.dedup import (
     compact_minhash_store,
-    delete_from_minhash_store,
     incremental_minhash_dedup,
 )
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.similarity import (
@@ -106,10 +106,6 @@ def test_tombstone_broadcast_keys_on_size(spark, tmp_path, monkeypatch):
     """The tombstone set is broadcast into every anti-join while its
     on-disk size is under the module constant; above it the frame is
     unhinted, and the answer is the same either way."""
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import (
-        stores,
-    )
-
     d = (
         spark.read.parquet(f"{SF_DIR}/documents.parquet")
         .select("doc_id", "text")
@@ -148,7 +144,7 @@ def test_minhash_delete_readmits_fresh_copy(spark, tmp_path):
     assert not incremental_minhash_dedup(d2, store).collect()[0]["admitted"]
 
     # take down BOTH admitted ids: a fresh near-copy is a fresh admit
-    delete_from_minhash_store(
+    stores.delete(
         spark.createDataFrame([(1,), (2,)], "doc_id bigint"), store
     )
     d3 = spark.createDataFrame(
@@ -173,7 +169,6 @@ def test_minhash_delete_readmits_fresh_copy(spark, tmp_path):
 def test_soft_store_delete(spark, tmp_path):
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.dedup import (
         compact_soft_store,
-        delete_from_soft_store,
         soft_dedup_admit,
     )
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.stores import (
@@ -193,7 +188,7 @@ def test_soft_store_delete(spark, tmp_path):
     assert got[1]["cluster_id"] == got[2]["cluster_id"]
     assert got[1]["n_cluster"] == got[2]["n_cluster"] == 2
 
-    delete_from_soft_store(
+    stores.delete(
         spark.createDataFrame([(1,)], "doc_id bigint"), store
     )
     # the live store holds the survivor only
