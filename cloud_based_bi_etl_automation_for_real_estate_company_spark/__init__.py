@@ -12,7 +12,7 @@ Layout:
   operators/   reusable dataflow operators (snapshot, dedup, similarity, rollup)
   plans/       the BI measure library (gold-layer queries) + calendar dim
   sources/     batch/stream source helpers (paginated REST, webhook JSON)
-  streaming/   structured-streaming pipelines (watermark dedup, routing sink)
+  streaming/   structured-streaming pipelines (id dedup, routing sink)
 """
 
 __version__ = "0.1.0"

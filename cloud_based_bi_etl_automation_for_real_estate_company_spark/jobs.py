@@ -14,7 +14,9 @@ with live silver, latest-per-key, write the snapshot.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.cacheutil import Frames
@@ -41,6 +43,16 @@ def refresh_gold(
     deleted loses its snapshot partition instead of keeping a stale
     one that every measure would then count. Each table is read back
     with the schema just written (no schema-inference job).
+
+    The seven measure tables (funnel, conversion_rates, sales_totals,
+    agent_table, agent_ranking, monthly_trend, detail_listing) only
+    read the published snapshot, so they are built and published
+    concurrently, one pool thread each; every pool job runs in the
+    caller's job group, description and tags. The result dict keeps
+    the builders' order, and a failed table re-raises its exception.
+    While the refresh runs, a concurrent reader can see any mix of new
+    and old measure tables, but every new one is computed from the new
+    snapshot.
 
     ``atomic=False`` (default) overwrites each table's directory in
     place — a concurrent reader can catch a table mid-rewrite.
@@ -77,8 +89,13 @@ def refresh_gold(
         "monthly_trend": gold.monthly_trend,
         "detail_listing": gold.detail_listing,
     }
-    for name, fn in builders.items():
-        out[name] = _publish(fn(snap), name)
+
+    @inheritable_thread_target(spark)
+    def build(name: str) -> DataFrame:
+        return _publish(builders[name](snap), name)
+
+    with ThreadPoolExecutor(len(builders)) as pool:
+        out.update(zip(builders, pool.map(build, builders)))
     return out
 
 

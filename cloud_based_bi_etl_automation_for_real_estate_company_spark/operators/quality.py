@@ -605,6 +605,21 @@ def _per_slice(
         )
 
 
+def _join_null_safe(
+    left: DataFrame, right: DataFrame, keys: Sequence[str], how: str
+) -> DataFrame:
+    """``left.join(right, keys, how)`` with a NULL key equal to a NULL
+    key, so a NULL series keeps its rows. ``how`` is inner, left or
+    left_semi; the key columns come from ``left``."""
+    tmp = {k: f"__r_{k}" for k in keys}
+    right = right.select(
+        *[F.col(k).alias(t) for k, t in tmp.items()],
+        *[c for c in right.columns if c not in tmp],
+    )
+    cond = [F.col(k).eqNullSafe(F.col(t)) for k, t in tmp.items()]
+    return left.join(right, cond, how).drop(*tmp.values())
+
+
 def _trailing(
     counts: DataFrame,
     keys: Sequence[str],
@@ -617,33 +632,36 @@ def _trailing(
     [w − ``ref_weeks``, w − 1]. ``counts`` is (``keys``…, week,
     ``axis``, cnt) with unique keys; the grid is (``keys``…, w,
     ``axis``, cur, ref). ``out_weeks`` (``keys``…, w) restricts the
-    weeks returned; their reference still reads every week."""
+    weeks returned; their reference still reads every week. A NULL
+    key is a series of its own.
+
+    Each count row is shifted to weeks +0…+``ref_weeks``: shift 0 is
+    its week's ``cur``, the others its later weeks' ``ref``, and one
+    grouped sum aligns both samples."""
     keys = list(keys)
     weeks = counts.select(*keys, F.col("week").alias("w")).distinct()
     if out_weeks is not None:
-        weeks = weeks.join(out_weeks, [*keys, "w"], "left_semi")
-    later = F.transform(
-        F.sequence(F.lit(1), F.lit(ref_weeks)),
-        lambda k: F.date_add(F.col("week"), (k * 7).cast("int")),
+        weeks = _join_null_safe(weeks, out_weeks, [*keys, "w"], "left_semi")
+    k = F.col("k")
+    shifted = counts.select(
+        *keys, "week", axis, "cnt",
+        F.explode(F.sequence(F.lit(0), F.lit(ref_weeks))).alias("k"),
+    ).select(
+        *keys,
+        F.date_add(F.col("week"), (k * 7).cast("int")).alias("w"),
+        axis,
+        F.when(k == 0, F.col("cnt")).alias("cur"),
+        F.when(k > 0, F.col("cnt")).alias("ref"),
     )
-    ref = (
-        counts.select(*keys, F.explode(later).alias("w"), axis, "cnt")
-        .groupBy(*keys, "w", axis)
-        .agg(F.sum("cnt").alias("ref"))
+    grid = shifted.groupBy(*keys, "w", axis).agg(
+        F.sum("cur").alias("cur"), F.sum("ref").alias("ref")
     )
-    cur = counts.select(
-        *keys, F.col("week").alias("w"), axis, F.col("cnt").alias("cur")
-    )
-    return (
-        cur.join(ref, [*keys, "w", axis], "full_outer")
-        .join(weeks, [*keys, "w"], "left_semi")
-        .select(
-            *keys,
-            "w",
-            axis,
-            F.coalesce("cur", F.lit(0)).cast("bigint").alias("cur"),
-            F.coalesce("ref", F.lit(0)).cast("bigint").alias("ref"),
-        )
+    return _join_null_safe(grid, weeks, [*keys, "w"], "left_semi").select(
+        *keys,
+        "w",
+        axis,
+        F.coalesce("cur", F.lit(0)).cast("bigint").alias("cur"),
+        F.coalesce("ref", F.lit(0)).cast("bigint").alias("ref"),
     )
 
 
@@ -800,10 +818,10 @@ def rolling_drift(
     fix restored for the batch report).
 
     Spark shape — the count-spine discipline of the family: ONE
-    fact-scan aggregation to (series, week, v) counts; the rolling
-    reference is that spine EXPLODED ref_weeks times on the week axis
-    (bounded ×``ref_weeks`` row growth, never fact-sized) and
-    re-aggregated; cur/ref align on a full-outer (series, w, v) join;
+    fact-scan aggregation to (series, week, v) counts; that spine is
+    EXPLODED to weeks +0…+ref_weeks (bounded ×(``ref_weeks``+1) row
+    growth, never fact-sized) and ONE grouped sum aligns each week's
+    cur with its trailing ref (a NULL series is a series of its own);
     one (series, w)-partitioned ordered window carries cum counts AND
     the Δv lead for W1 (same partition, same order — one window
     exchange); KS/W1 reduce in the final agg, and PSI folds the same
@@ -875,22 +893,16 @@ def rolling_drift_from_counts(
         buckets = counts.sparkSession.range(0, n_buckets).select(
             F.col("id").alias("bucket")
         )
-        bcells = (
-            cells.select(g, "w")
-            .distinct()
-            .crossJoin(F.broadcast(buckets))
-            .join(folded, [g, "w", "bucket"], "left")
-            .select(
-                g, "w", "bucket",
-                F.coalesce("bc", F.lit(0)).cast("bigint").alias("cur"),
-                F.coalesce("br", F.lit(0)).cast("bigint").alias("ref"),
-            )
+        grid = cells.select(g, "w").distinct().crossJoin(F.broadcast(buckets))
+        bcells = _join_null_safe(grid, folded, [g, "w", "bucket"], "left").select(
+            g, "w", "bucket",
+            F.coalesce("bc", F.lit(0)).cast("bigint").alias("cur"),
+            F.coalesce("br", F.lit(0)).cast("bigint").alias("ref"),
         )
         psi = _two_sample(bcells, [g, "w"]).select(g, "w", "psi")
         defined = (F.col("n_cur") > 0) & (F.col("n_ref") > 0)
         return frames.attach(
-            _two_sample(cells, [g, "w"])
-            .join(psi, [g, "w"])
+            _join_null_safe(_two_sample(cells, [g, "w"]), psi, [g, "w"], "inner")
             .select(
                 g,
                 F.col("w").alias("week_start"),
@@ -932,10 +944,10 @@ def rolling_chi2(
     reference report NULL statistics with ``drift_defined`` false —
     the every-cell-reported invariant of the family.
 
-    Spark shape: one fact-scan (week, category) count agg; the
-    reference is that spine exploded ``ref_weeks``× on the week axis
-    and re-aggregated (bounded growth, never fact-sized); one
-    (week, category)-grain join + one week-grain agg. Returns
+    Spark shape: one fact-scan (week, category) count agg; that spine
+    exploded to weeks +0…+``ref_weeks`` (bounded growth, never
+    fact-sized) and summed once per (week, category) into cur and
+    ref; one week-grain agg. Returns
     (week_start, n_cur, n_ref, df_chi2, chi2, reject_95,
     drift_defined)."""
     if ref_weeks < 1:

@@ -14,11 +14,15 @@ spooler replaced by any HTTP→log edge (nginx+Kafka, API gateway →
 object store); the Spark side is transport-agnostic by construction.
 
 Single-threaded stdlib ``HTTPServer`` — a test/dev edge, not a load
-balancer; one spool file per receiver instance, so concurrent
-receivers never interleave partial lines. The file is appended for the
-receiver's whole lifetime and never rotated: Spark's file source reads
-each file once, so lines appended after a running stream has listed
-the file are not seen — drain the spool after :meth:`stop`.
+balancer; each receiver writes its own spool files, so concurrent
+receivers never interleave partial lines. Spark's file source reads a
+file once, when it first lists it, and skips names that start with
+``.`` or ``_``. So a receiver appends to a hidden in-progress file and
+renames it (``os.replace``, under the append lock) to a visible
+``.json`` once it is older than :data:`ROTATE_S` and on :meth:`stop`;
+the next POST starts a new in-progress file. A running stream sees
+every acknowledged event, at most about :data:`ROTATE_S` after its ack,
+and nothing is appended to a file after the stream can list it.
 """
 
 from __future__ import annotations
@@ -26,8 +30,15 @@ from __future__ import annotations
 import json
 import os
 import threading
+import time
 import uuid
 from http.server import BaseHTTPRequestHandler, HTTPServer
+
+# serve_forever's poll interval: how long stop() waits for the server
+# loop to notice the shutdown request
+POLL_S = 0.05
+# an in-progress spool file older than this is published
+ROTATE_S = 1.0
 
 
 class WebhookReceiver:
@@ -40,9 +51,9 @@ class WebhookReceiver:
     def __init__(self, spool_dir: str, host: str = "127.0.0.1", port: int = 0):
         os.makedirs(spool_dir, exist_ok=True)
         self.spool_dir = spool_dir
-        self._fname = os.path.join(
-            spool_dir, f"spool-{uuid.uuid4().hex[:12]}.json"
-        )
+        self._prefix = f"spool-{uuid.uuid4().hex[:12]}"
+        self._seq = 0
+        self._opened = None  # monotonic time of the in-progress file's first line
         self._lock = threading.Lock()
         self.n_received = 0
         self.n_rejected = 0
@@ -73,7 +84,9 @@ class WebhookReceiver:
                 payload["account"] = account
                 line = json.dumps(payload, separators=(",", ":"))
                 with receiver._lock:
-                    with open(receiver._fname, "a") as f:
+                    if receiver._opened is None:
+                        receiver._opened = time.monotonic()
+                    with open(receiver._in_progress(), "a") as f:
                         f.write(line + "\n")
                     receiver.n_received += 1
                 self.send_response(200)
@@ -84,12 +97,32 @@ class WebhookReceiver:
             def log_message(self, *args):  # silence test output
                 pass
 
-        self._server = HTTPServer((host, port), Handler)
+        class Server(HTTPServer):
+            def service_actions(self):  # each serve_forever poll
+                receiver._publish(ROTATE_S)
+
+        self._server = Server((host, port), Handler)
         self.port = self._server.server_address[1]
         self._started = False
         self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True
+            target=self._server.serve_forever, args=(POLL_S,), daemon=True
         )
+
+    def _in_progress(self) -> str:
+        return os.path.join(self.spool_dir, f".{self._prefix}-{self._seq}.json")
+
+    def _publish(self, min_age: float) -> None:
+        """Make the in-progress file visible to the file source if it
+        has been open for at least ``min_age`` seconds."""
+        with self._lock:
+            if self._opened is None or time.monotonic() - self._opened < min_age:
+                return
+            os.replace(
+                self._in_progress(),
+                os.path.join(self.spool_dir, f"{self._prefix}-{self._seq}.json"),
+            )
+            self._seq += 1
+            self._opened = None
 
     def start(self) -> "WebhookReceiver":
         self._thread.start()
@@ -97,8 +130,10 @@ class WebhookReceiver:
         return self
 
     def stop(self) -> None:
+        """Stop serving and publish the in-progress file."""
         # shutdown() blocks on serve_forever()'s completion event —
         # calling it on a never-started server deadlocks forever
         if self._started:
             self._server.shutdown()
         self._server.server_close()
+        self._publish(0.0)

@@ -6,16 +6,17 @@ Reference behavior being reproduced (SURVEY.md §2.7):
   dedup on event id (ON CONFLICT DO NOTHING, webhook_app.py:48);
 - no late-data dropping — events accepted whenever they arrive, with
   both arrival time (received_at) and event time kept
-  (webhook_app.py:54,56); the watermark exists only to bound dedup
-  state, set generously;
+  (webhook_app.py:54,56); there is no watermark, so no row is ever
+  late;
 - idempotent partitioned sink (foreachBatch + parquet append keyed
   dedup) replacing connection-per-event inserts (webhook_app.py:38).
 
 State sizing at scale: dropDuplicates keeps one record per event id
-inside the watermark horizon; with a 1-hour horizon and ~1k events/s
-that is ~3.6M keys of state per office — trivially partitioned across
-executors by the id hash. ``stream_silver`` sizes that state to the
-cluster's cores (see its docstring).
+for the query's whole life, as the reference's ``ON CONFLICT (id) DO
+NOTHING`` remembers every id it ever inserted; the state grows with
+the number of distinct ids (~86M keys a day at ~1k events/s),
+partitioned across executors by the id hash. ``stream_silver`` sizes
+that state to the cluster's cores (see its docstring).
 """
 
 from __future__ import annotations
@@ -37,11 +38,17 @@ def stream_silver(
     in_path: str,
     out_path: str,
     checkpoint: str,
-    watermark: str = "1 hour",
     available_now: bool = True,
 ) -> StreamingQuery:
-    """readStream → whitelist/unwrap/project → watermark + dedup(id)
-    → foreachBatch partitioned write.
+    """readStream → whitelist/unwrap/project → dedup(id) → foreachBatch
+    partitioned write.
+
+    The dedup state holds every id the query has seen, with no
+    watermark: a provider retry of any earlier event is dropped however
+    late it comes (the reference's ``ON CONFLICT (id) DO NOTHING``),
+    and an ``available_now`` drain runs no closing no-data micro-batch.
+    A checkpoint written while the dedup had a watermark restarts with
+    the same state.
 
     ``available_now=True`` drains all available input then stops —
     the batch-equivalent trigger used by tests and the 8×/day refresh
@@ -62,11 +69,7 @@ def stream_silver(
     same session during that window sees the core count too.
     """
     raw = read_webhook_json(spark, in_path, streaming=True)
-    silver = (
-        project_silver(unwrap_events(raw))
-        .withWatermark("received_at", watermark)
-        .dropDuplicates(["id"])
-    )
+    silver = project_silver(unwrap_events(raw)).dropDuplicates(["id"])
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once; the append is made effectively

@@ -7,8 +7,10 @@ pinned, replaced and released through one owner.
   caller;
 - leak regression: each converted operator, run on a small input and
   collected, leaves no RDD it persisted behind once ``release(result)``
-  ran. JVM GC can only remove persisted RDDs, so the assertion cannot
-  flake;
+  ran. Every frame a checkpoint returns stays referenced until the
+  assertion (the ``pins`` fixture), so JVM GC cannot unpersist a
+  leaked checkpoint first and a leak always fails; GC can only remove
+  persisted RDDs, so a run that frees its pins always passes;
 - guard: outside cacheutil.py the package never persists/unpersists,
   never calls ``localCheckpoint()`` without an explicit ``eager=``, and
   never takes a name from cacheutil that it does not define.
@@ -21,6 +23,7 @@ import pathlib
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame
 
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import (
     cacheutil,
@@ -38,6 +41,21 @@ PKG = (
 
 def _persisted(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.fixture
+def pins(monkeypatch) -> list:
+    """Every frame ``localCheckpoint`` returns during the test, held
+    until the test ends."""
+    held = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def held_checkpoint(self, *args, **kwargs):
+        held.append(checkpoint(self, *args, **kwargs))
+        return held[-1]
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", held_checkpoint)
+    return held
 
 
 def _is_persisted(spark, df) -> bool:
@@ -244,16 +262,17 @@ LEAK_CASES = {
 
 
 @pytest.mark.parametrize("name", sorted(LEAK_CASES))
-def test_operator_leaves_no_persisted_rdds(spark, name):
+def test_operator_leaves_no_persisted_rdds(spark, pins, name):
     before = _persisted(spark)
     result = LEAK_CASES[name](spark)
     if result is not None:
         result.collect()
     release(result)
+    assert pins
     assert not _persisted(spark) - before
 
 
-def test_drift_gated_drain_frees_per_batch_pins(spark, tmp_path):
+def test_drift_gated_drain_frees_per_batch_pins(spark, pins, tmp_path):
     """The admission gate's per-batch step over three batches: pin the
     batch, score it with psi_admit, chi2_admit, ks_admit and w1_admit,
     and own their score rows in the batch's scope. Nothing stays
@@ -287,16 +306,19 @@ def test_drift_gated_drain_frees_per_batch_pins(spark, tmp_path):
     assert not _persisted(spark) - before
 
 
-def test_drift_dashboard_batches_free_count_pins(spark, tmp_path):
+def test_drift_dashboard_batches_free_count_pins(spark, pins, tmp_path):
     """Three incremental drift-dashboard batches publish their panels
     and leave no checkpoint of the count spine behind: the panels'
-    ``counts`` pins are owned by the refresh and freed after publish."""
+    ``counts`` pins are owned by the refresh and freed after publish.
+    Every batch, its panels and every pin stay referenced until the
+    check."""
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
         drift_dashboard_batch,
     )
 
     gold = str(tmp_path / "gold")
     before = _persisted(spark)
+    held = []
     for b in range(3):
         batch = spark.createDataFrame(
             [
@@ -309,6 +331,8 @@ def test_drift_dashboard_batches_free_count_pins(spark, tmp_path):
         ).withColumn("ts", F.to_timestamp("ts"))
         out = drift_dashboard_batch(spark, batch, b, gold)
         assert out["drift_panel"].count() > 0 and out["mix_panel"].count() > 0
+        held.append((batch, out))
+    assert pins
     assert not _persisted(spark) - before
 
 

@@ -418,6 +418,57 @@ def test_rolling_drift_reference_window_slides(spark):
     assert out["2024-02-12"]["drift_defined"] is False
 
 
+def test_rolling_drift_keeps_a_null_series(spark):
+    """A NULL ``group_col`` value is a series of its own: its rows equal
+    those of the same data relabelled to a non-NULL value, in the full
+    panel and in a refresh restricted to its last week."""
+    from datetime import datetime, timedelta
+
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.quality import (
+        rolling_drift,
+        rolling_drift_from_counts,
+    )
+
+    base = datetime(2024, 1, 1)  # Monday
+    rows = [
+        (g, base + timedelta(weeks=w), v)
+        for w in range(3)
+        for g, vs in (("view", (1, 2, 3 + w)), (None, (w, w + 2, 5, 7 - w)))
+        for v in vs
+    ]
+    last = base.date() + timedelta(weeks=2)
+
+    def panels(label):
+        df = spark.createDataFrame(
+            [(label if g is None else g, ts, v) for g, ts, v in rows],
+            "event_type string, ts timestamp, value bigint",
+        )
+        counts = df.groupBy(
+            "event_type",
+            F.date_trunc("week", "ts").cast("date").alias("week"),
+            F.col("value").alias("v"),
+        ).agg(F.count(F.lit(1)).alias("cnt"))
+        out_weeks = spark.createDataFrame(
+            [(label, last)], "event_type string, w date"
+        )
+        return [
+            [tuple(r) for r in f.collect()]
+            for f in (
+                rolling_drift(df, "value"),
+                rolling_drift_from_counts(counts, out_weeks=out_weeks),
+            )
+        ]
+
+    def series(rows, label):
+        return sorted(r[1:] for r in rows if r[0] == label)
+
+    null, named = panels(None), panels("zz")
+    for got, want, n_weeks in zip(null, named, (3, 1)):
+        assert len(series(want, "zz")) == n_weeks
+        assert series(got, None) == series(want, "zz")
+        assert series(got, "view") == series(want, "view")
+
+
 def test_rolling_chi2_hand_computed(spark):
     """Rolling weekly categorical drift (round 13): week 1 is a cold
     start; week 2 = [a,b,b,b] vs reference [a,a,a,b] — the chi2_admit
