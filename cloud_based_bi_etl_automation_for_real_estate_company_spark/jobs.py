@@ -5,7 +5,7 @@ receiver + 8×/day Power BI refresh, reference README.md:511–513).
 ``refresh_gold`` is the scheduled batch: silver event log → current
 snapshot → every dashboard measure materialized as gold parquet + SQL
 views. Each refresh recomputes the snapshot from all of silver, once,
-and replaces the published gold tables in full.
+pins it, and replaces the published gold tables in full.
 
 ``run_backfill_merge`` is the U2/J4 flow: merge a historical bulk load
 with live silver, latest-per-key, write the snapshot.
@@ -23,7 +23,17 @@ from .operators.cacheutil import Frames
 from .operators.generations import publish
 from .operators.snapshot import upsert_merge
 from .plans import gold
+from .schemas import SILVER_EVENT_SCHEMA
 from .sources.sinks import materialize_gold
+
+# The published snapshot's column order: lead_id, the other event
+# columns, event, then account (its partition column, read back last).
+_SNAPSHOT_COLUMNS = (
+    ["lead_id"]
+    + [f.name for f in SILVER_EVENT_SCHEMA
+       if f.name not in ("lead_id", "account", "event")]
+    + ["event", "account"]
+)
 
 
 def refresh_gold(
@@ -35,24 +45,27 @@ def refresh_gold(
 ) -> dict[str, DataFrame]:
     """The 8×/day dashboard refresh.
 
-    The lead snapshot is built from silver once and published first;
-    every measure table is then computed from the PUBLISHED snapshot,
-    so the silver scan, the delete anti-join and the latest-per-lead
-    window run once per refresh, not once per table. Every table is
-    published as a full replacement: an account whose leads are all
-    deleted loses its snapshot partition instead of keeping a stale
-    one that every measure would then count. Each table is read back
-    with the schema just written (no schema-inference job).
+    Silver is read with ``schemas.SILVER_EVENT_SCHEMA`` (no
+    schema-inference job) and its ``__batch_id`` bookkeeping column is
+    dropped. The lead snapshot is built from it once — one shuffle, see
+    ``gold.lead_snapshot`` — and pinned; the snapshot table and the
+    seven measure tables (funnel, conversion_rates, sales_totals,
+    agent_table, agent_ranking, monthly_trend, detail_listing) are then
+    all published concurrently from that pin, one pool thread each, so
+    the silver scan and the snapshot window run once per refresh, not
+    once per table. Every pool job runs in the caller's job group,
+    description and tags. The result dict keeps the builders' order
+    (the snapshot first), a failed table re-raises its exception, and
+    the pin is freed before this returns: every returned frame reads
+    its published files.
 
-    The seven measure tables (funnel, conversion_rates, sales_totals,
-    agent_table, agent_ranking, monthly_trend, detail_listing) only
-    read the published snapshot, so they are built and published
-    concurrently, one pool thread each; every pool job runs in the
-    caller's job group, description and tags. The result dict keeps
-    the builders' order, and a failed table re-raises its exception.
-    While the refresh runs, a concurrent reader can see any mix of new
-    and old measure tables, but every new one is computed from the new
-    snapshot.
+    Every table is published as a full replacement: an account whose
+    leads are all deleted loses its snapshot partition instead of
+    keeping a stale one that every measure would then count. Each
+    table is read back with the schema just written (no
+    schema-inference job). While the refresh runs, a concurrent reader
+    can see any mix of new and old tables, but every new one is
+    computed from the same snapshot.
 
     ``atomic=False`` (default) overwrites each table's directory in
     place — a concurrent reader can catch a table mid-rewrite.
@@ -75,12 +88,9 @@ def refresh_gold(
         out.createOrReplaceTempView(f"{prefix}{name}")
         return out
 
-    silver = spark.read.parquet(silver_path)
-    out: dict[str, DataFrame] = {}
-    snap = out["lead_snapshot"] = _publish(
-        gold.lead_snapshot(silver), "lead_snapshot", partition_by=["account"]
-    )
+    silver = spark.read.schema(SILVER_EVENT_SCHEMA).parquet(silver_path)
     builders = {
+        "lead_snapshot": lambda snap: snap,
         "funnel": gold.funnel,
         "conversion_rates": gold.conversion_rates,
         "sales_totals": gold.sales_totals,
@@ -89,14 +99,18 @@ def refresh_gold(
         "monthly_trend": gold.monthly_trend,
         "detail_listing": gold.detail_listing,
     }
+    with Frames() as frames:
+        snap = frames.pin(
+            gold.lead_snapshot(silver.select(*_SNAPSHOT_COLUMNS)), eager=True
+        )
 
-    @inheritable_thread_target(spark)
-    def build(name: str) -> DataFrame:
-        return _publish(builders[name](snap), name)
+        @inheritable_thread_target(spark)
+        def build(name: str) -> DataFrame:
+            partition_by = ["account"] if name == "lead_snapshot" else None
+            return _publish(builders[name](snap), name, partition_by)
 
-    with ThreadPoolExecutor(len(builders)) as pool:
-        out.update(zip(builders, pool.map(build, builders)))
-    return out
+        with ThreadPoolExecutor(len(builders)) as pool:
+            return dict(zip(builders, pool.map(build, builders)))
 
 
 def run_backfill_merge(

@@ -29,11 +29,10 @@ counts in manager_example.png.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.transforms import davg, dsum, ratio
-from ..operators.snapshot import latest_per_key
 from ..schemas import EVENT_LEAD_DELETED
 
 # Pipeline stages in funnel order (labels from the dashboards;
@@ -49,17 +48,33 @@ def _stage_rank_col() -> Column:
 
 
 def lead_snapshot(silver: DataFrame, slicer: Column | None = None) -> DataFrame:
-    """Current state per lead (A7/W1) with deleted leads excluded
-    (J5 anti-join on lead.deleted events, webhook_app.py:101–124)."""
-    deleted = (
-        silver.filter(F.col("event") == EVENT_LEAD_DELETED)
-        .select("lead_id")
-        .distinct()
+    """Current state per lead (A7/W1) with deleted leads excluded (J5,
+    webhook_app.py:101–124), in one shuffle: one window per ``lead_id``
+    ranks a ``lead.deleted`` event first, then the live events by
+    ``(received_at, id)`` descending. A lead whose first row is a
+    delete is dropped; otherwise its first row is its current state.
+    Rows with a NULL ``event`` are neither live nor deletes. A delete
+    with a NULL ``lead_id`` removes nothing, and the live rows with a
+    NULL ``lead_id`` keep their latest one (the NULL key is one group,
+    as in ``operators.snapshot.latest_per_key``)."""
+    event = F.col("event")
+    kind = (
+        F.when(
+            event == EVENT_LEAD_DELETED,
+            F.when(F.col("lead_id").isNotNull(), 2).otherwise(0),
+        )
+        .when(event.isNotNull(), 1)
+        .otherwise(0)
     )
-    live = silver.filter(F.col("event") != EVENT_LEAD_DELETED).join(
-        deleted, "lead_id", "left_anti"
+    w = Window.partitionBy("lead_id").orderBy(
+        F.desc("__kind"), F.desc("received_at"), F.desc("id")
     )
-    snap = latest_per_key(live, ["lead_id"], ["received_at", "id"])
+    snap = (
+        silver.withColumn("__kind", kind)
+        .withColumn("__rn", F.row_number().over(w))
+        .filter((F.col("__rn") == 1) & (F.col("__kind") == 1))
+        .drop("__kind", "__rn")
+    )
     return snap.filter(slicer) if slicer is not None else snap
 
 

@@ -108,8 +108,8 @@ WEBHOOK_ENVELOPE_SCHEMA = StructType(
 )
 
 # Silver event-log schema (union of README.md:71–134 column tables),
-# stored once partitioned by (account, event) instead of 12 physical
-# tables (S7 rewrite of webhook_app.py:37,70,103,129).
+# stored as one table instead of 12 physical tables (S7 rewrite of
+# webhook_app.py:37,70,103,129); readers pass it instead of inferring.
 SILVER_EVENT_SCHEMA = StructType(
     [
         StructField("id", LongType()),

@@ -12,13 +12,18 @@ processed declaratively:
     → event dispatch by type (P4, webhook_app.py:167–176)
     → per-event projection (P1/P2/P3, webhook_app.py:51–62 etc.)
     → dedup by event id (S8, ON CONFLICT DO NOTHING, webhook_app.py:48)
-    → single table partitioned by (account, event) (S7 rewrite of the
-      12 physical f"{account}_{event}" tables, webhook_app.py:37,...)
+    → one silver table with account and event as ordinary columns (S7
+      rewrite of the 12 physical f"{account}_{event}" tables,
+      webhook_app.py:37,...), landed one batch at a time in a
+      ``__batch_id=<n>`` directory the batch owns (``write_silver``)
 
 At scale: the parse+project pipeline is a single narrow stage (no
 shuffle until dedup); dedup shuffles on the high-cardinality event id;
-the partitioned write gives partition pruning to every downstream
-reader (replacing the reference's per-office physical tables).
+each batch writes one file per task of its last stage, and a retried
+batch replaces its own files. The gold refresh reads all of silver, so
+no reader prunes on account or event. A silver directory in the older
+(account, event) partitioned layout cannot be read together with this
+one (Spark refuses the mixed partition columns): start a new path.
 """
 
 from __future__ import annotations
@@ -145,13 +150,21 @@ def project_silver(events: DataFrame) -> DataFrame:
     )
 
 
-def write_silver(events: DataFrame, path: str) -> None:
-    """S7 — the 12-physical-tables rewrite: one dataset partitioned by
-    (account, event); downstream partition pruning replaces the manual
-    table split."""
+def write_silver(events: DataFrame, path: str, batch_id: int) -> None:
+    """S7/S8 — the one replay-safe batch writer: land ``events`` in the
+    ``__batch_id=<batch_id>`` partition of ``path`` with DYNAMIC
+    partition overwrite. A retry of the same batch overwrites its own
+    partition instead of appending a second copy, so the sink converges
+    under replay with no upstream exactly-once assumption (the
+    reference's ``ON CONFLICT (id) DO NOTHING``, webhook_app.py:48).
+    The ``stream_silver`` sink, ``ingest_batch`` and the three writes of
+    ``drift_dashboard_batch`` all land through it. Every other column
+    is written as is; ``__batch_id`` is bookkeeping that readers drop."""
     (
-        events.write.mode("append")
-        .partitionBy("account", "event")
+        events.withColumn("__batch_id", F.lit(batch_id).cast("bigint"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch_id")
         .parquet(path)
     )
 
@@ -165,6 +178,10 @@ def ingest_batch(
     Metrics ride on ``Observation`` — computed by the SAME job that
     writes the data (no second scan), the declarative replacement for
     the reference's per-request log lines (webhook_app.py:156,175).
+    The load lands through ``write_silver`` as batch -1: stream batch
+    ids count up from 0, so it never shares a partition with a stream
+    batch on the same path, and a rerun (which re-reads the whole
+    input) replaces the previous load.
     """
     from pyspark.sql import Observation
 
@@ -184,5 +201,5 @@ def ingest_batch(
             F.approx_count_distinct(F.col("account")).alias("n_accounts"),
         )
     )
-    write_silver(silver, out_path)
+    write_silver(silver, out_path, -1)
     return silver, obs.get

@@ -8,8 +8,9 @@ Reference behavior being reproduced (SURVEY.md §2.7):
   both arrival time (received_at) and event time kept
   (webhook_app.py:54,56); there is no watermark, so no row is ever
   late;
-- idempotent partitioned sink (foreachBatch + parquet append keyed
-  dedup) replacing connection-per-event inserts (webhook_app.py:38).
+- replay-safe sink (foreachBatch + ``write_silver``: each micro-batch
+  overwrites the ``__batch_id`` partition it owns) replacing
+  connection-per-event inserts (webhook_app.py:38).
 
 State sizing at scale: dropDuplicates keeps one record per event id
 for the query's whole life, as the reference's ``ON CONFLICT (id) DO
@@ -41,7 +42,7 @@ def stream_silver(
     available_now: bool = True,
 ) -> StreamingQuery:
     """readStream → whitelist/unwrap/project → dedup(id) → foreachBatch
-    partitioned write.
+    batch-owned write (``write_silver``).
 
     The dedup state holds every id the query has seen, with no
     watermark: a provider retry of any earlier event is dropped however
@@ -72,10 +73,10 @@ def stream_silver(
     silver = project_silver(unwrap_events(raw)).dropDuplicates(["id"])
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once; the append is made effectively
-        # idempotent by the upstream dedup + downstream latest-per-key
-        # reads (operators.snapshot), mirroring conflict-skip semantics.
-        write_silver(batch_df, out_path)
+        # foreachBatch is at-least-once; a retried batch overwrites the
+        # __batch_id partition it landed before, so silver holds each
+        # event once (conflict-skip semantics with no later read fix-up)
+        write_silver(batch_df, out_path, batch_id)
 
     writer = silver.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint
@@ -89,26 +90,6 @@ def stream_silver(
         return writer.start()
     finally:
         spark.conf.set(key, caller)
-
-
-def _write_batch_partition(
-    df: DataFrame, path: str, batch_id: int
-) -> None:
-    """Replay-idempotent micro-batch write (round-15 ADVICE close):
-    every batch owns the ``__batch_id=<n>`` partition and lands it
-    with DYNAMIC partition overwrite — a foreachBatch retry of the
-    same batch overwrites its own partition instead of
-    double-appending, so the sink converges under replay with no
-    upstream exactly-once assumption."""
-    from pyspark.sql import functions as F
-
-    (
-        df.withColumn("__batch_id", F.lit(batch_id).cast("bigint"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(path)
-    )
 
 
 def drift_dashboard_batch(
@@ -126,7 +107,8 @@ def drift_dashboard_batch(
     into the spine state, refresh only the touched panel weeks.
 
     1. Silver: the batch's rows land in their own ``__batch_id``
-       partition with dynamic overwrite (replay-idempotent — the
+       partition through ``write_silver``, the dynamic-overwrite
+       writer the webhook silver sink uses (replay-idempotent — the
        round-14 ADVICE flag on the append form).
     2. Spine deltas: the batch is aggregated to the SAME count grains
        the panels are built from — (event_type, week, floor(value))
@@ -150,9 +132,7 @@ def drift_dashboard_batch(
     with Frames() as frames:
         # the batch feeds three writes; freed once they landed
         b = frames.pin(batch_df, eager=True)
-        _write_batch_partition(
-            b, os.path.join(gold_path, "events_silver"), batch_id
-        )
+        write_silver(b, os.path.join(gold_path, "events_silver"), batch_id)
         week = F.date_trunc("week", F.col("ts")).cast("date").alias("week")
         num_delta = (
             b.withColumn("value", F.floor("value"))
@@ -164,7 +144,7 @@ def drift_dashboard_batch(
             )
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        _write_batch_partition(
+        write_silver(
             num_delta,
             os.path.join(gold_path, "panel_state", "num_counts"),
             batch_id,
@@ -174,7 +154,7 @@ def drift_dashboard_batch(
             .groupBy(week, F.col("event_type").alias("c"))
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        _write_batch_partition(
+        write_silver(
             cat_delta,
             os.path.join(gold_path, "panel_state", "cat_counts"),
             batch_id,

@@ -336,6 +336,28 @@ def test_drift_dashboard_batches_free_count_pins(spark, pins, tmp_path):
     assert not _persisted(spark) - before
 
 
+def test_refresh_gold_frees_its_snapshot_pin(spark, pins, webhook_corpus, tmp_path):
+    """``refresh_gold`` pins the lead snapshot once and publishes every
+    table from it; the pin is freed before it returns. Every returned
+    frame and the pin stay referenced until the check."""
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.jobs import (
+        refresh_gold,
+    )
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.webhook import (
+        ingest_batch,
+    )
+
+    path, _ = webhook_corpus
+    silver = str(tmp_path / "silver")
+    ingest_batch(spark, path, silver)
+    before = _persisted(spark)
+    out = refresh_gold(spark, silver, str(tmp_path / "gold"))
+    for df in out.values():
+        df.collect()
+    assert pins
+    assert _persisted(spark) == before
+
+
 SURFACE = {n for n in dir(cacheutil) if not n.startswith("__")}
 
 # The (module, top-level def) sites in operators/ that still call

@@ -11,9 +11,28 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.snapshot import (
+    latest_per_key,
+)
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.plans import gold
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.schemas import (
+    EVENT_LEAD_DELETED,
+    SILVER_EVENT_SCHEMA,
+)
 
 T0 = dt.datetime(2025, 8, 1, 10, 0, 0)
+
+
+def ev(i, lead_id, step, amount, email, event="lead.step.changed", minutes=0):
+    """One silver row (``SILVER_EVENT_SCHEMA`` order) of office_a."""
+    return (
+        i, "office_a", event, "sig", True, 1, 200,
+        T0 + dt.timedelta(minutes=minutes), lead_id, f"L{lead_id}",
+        "open", step, 1, "Ventas",
+        Decimal(str(amount)) if amount is not None else None,
+        T0, T0 + dt.timedelta(minutes=minutes), email,
+        "http://x", None, None, None, "{}",
+    )
 
 
 @pytest.fixture(scope="module")
@@ -21,16 +40,6 @@ def silver(spark):
     """10 leads across steps/agents; lead 9 deleted; lead 1 has two
     events (later one wins)."""
     rows = []
-
-    def ev(i, lead_id, step, amount, email, event="lead.step.changed", minutes=0):
-        return (
-            i, "office_a", event, "sig", True, 1, 200,
-            T0 + dt.timedelta(minutes=minutes), lead_id, f"L{lead_id}",
-            "open", step, 1, "Ventas",
-            Decimal(str(amount)) if amount is not None else None,
-            T0, T0 + dt.timedelta(minutes=minutes), email,
-            "http://x", None, None, None, "{}",
-        )
 
     rows.append(ev(1, 1, "Ingresados", 100.0, "a@x", minutes=1))
     rows.append(ev(2, 1, "Firmados", 1000.0, "a@x", minutes=5))  # wins
@@ -43,9 +52,6 @@ def silver(spark):
     rows.append(ev(9, 8, "Firmados", 2000.0, "b@x", minutes=2))
     rows.append(ev(10, 9, "Firmados", 9999.0, "a@x", minutes=2))
     rows.append(ev(11, 9, None, None, None, event="lead.deleted", minutes=9))
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.schemas import (
-        SILVER_EVENT_SCHEMA,
-    )
     return spark.createDataFrame(rows, SILVER_EVENT_SCHEMA)
 
 
@@ -114,3 +120,46 @@ def test_slicer_filter(silver):
     snap = gold.lead_snapshot(silver, slicer=F.col("user_email") == "a@x")
     s = gold.sales_totals(snap).collect()[0]
     assert s["monto_colocado"] == 4000.0
+
+
+def _anti_join_snapshot(silver):
+    """The earlier three-shuffle form of ``gold.lead_snapshot``: a
+    distinct of the deleted ids, a left-anti join of the live rows
+    against it, then the latest row per lead."""
+    deleted = silver.filter(F.col("event") == EVENT_LEAD_DELETED).select("lead_id").distinct()
+    live = silver.filter(F.col("event") != EVENT_LEAD_DELETED).join(
+        deleted, "lead_id", "left_anti"
+    )
+    return latest_per_key(live, ["lead_id"], ["received_at", "id"])
+
+
+def test_one_shuffle_snapshot_equals_the_anti_join_form(spark, silver):
+    """NULL lead ids, a delete with a NULL lead id, a lead updated
+    after its delete, a ``received_at`` tie broken by ``id`` and NULL
+    events: the one-window snapshot keeps exactly the rows the
+    anti-join form keeps, from one shuffle."""
+    d = EVENT_LEAD_DELETED
+    edge = spark.createDataFrame(
+        [
+            ev(20, None, "Ingresados", 1.0, "n@x", minutes=1),
+            ev(21, None, "Firmados", 2.0, "n@x", minutes=3),  # latest NULL-lead row
+            ev(22, None, None, None, None, event=d, minutes=5),  # deletes nothing
+            ev(23, 30, "Ingresados", 5.0, "a@x", minutes=1),
+            ev(24, 30, None, None, None, event=d, minutes=2),
+            ev(25, 30, "Firmados", 6.0, "a@x", minutes=4),  # after its delete
+            ev(26, 31, "Ingresados", 7.0, "b@x", minutes=2),
+            ev(27, 31, "Autorizados", 8.0, "b@x", minutes=2),  # tie: id 27 wins
+            ev(28, 32, "Asesorados", 9.0, "b@x", minutes=1),
+            ev(29, 32, "Firmados", 9.5, "b@x", event=None, minutes=9),
+            ev(30, 33, "Firmados", 10.0, "b@x", event=None, minutes=1),
+        ],
+        SILVER_EVENT_SCHEMA,
+    )
+    for frame in (silver, edge, silver.unionByName(edge)):
+        snap = gold.lead_snapshot(frame)
+        assert snap.columns == frame.columns
+        want = _anti_join_snapshot(frame).select(*frame.columns)
+        assert set(snap.collect()) == set(want.collect())
+    assert {r["id"] for r in gold.lead_snapshot(edge).collect()} == {21, 27, 28}
+    plan = gold.lead_snapshot(silver)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan

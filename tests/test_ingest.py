@@ -10,6 +10,9 @@ from pyspark.sql import functions as F
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.snapshot import (
     latest_per_key,
 )
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.schemas import (
+    SILVER_EVENT_SCHEMA,
+)
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources import webhook as W
 
 
@@ -32,9 +35,9 @@ def test_pipeline_end_to_end(spark, webhook_corpus, tmp_path):
         "lead.step.changed", "lead.creation", "lead.deleted",
         "client_folder.created")))
     out = str(tmp_path / "silver")
-    W.write_silver(silver, out)
+    W.write_silver(silver, out, 0)
     back = spark.read.parquet(out)
-    # partitioned layout restores account/event columns
+    # account/event are ordinary columns of the batch's files
     assert set(back.select("account").distinct().toPandas()["account"]) == {
         "office_a", "office_b", "office_c"}
 
@@ -60,3 +63,23 @@ def test_dedup_idempotent(spark, webhook_corpus):
     once = events.dropDuplicates(["id"])
     twice = once.dropDuplicates(["id"])
     assert once.count() == twice.count()
+
+
+def test_project_silver_schema_is_the_declared_silver_schema(spark, tmp_path):
+    """``refresh_gold`` reads silver with ``SILVER_EVENT_SCHEMA`` instead
+    of inferring it, so what ``project_silver`` writes must match it in
+    names, types and order. Resolved from the plan alone: no Spark job
+    runs."""
+    sc = spark.sparkContext
+    group = f"silver-schema-{id(tmp_path)}"
+    sc.setJobGroup(group, "project_silver schema")
+    try:
+        raw = W.read_webhook_json(spark, str(tmp_path))
+        got = W.project_silver(W.unwrap_events(raw)).schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [(f.name, f.dataType) for f in got] == [
+        (f.name, f.dataType) for f in SILVER_EVENT_SCHEMA
+    ]
+    assert not sc.statusTracker().getJobIdsForGroup(group)
