@@ -7,6 +7,9 @@ scope, which frees what it still holds on exit (error path too):
 - ``frames.pin(df, eager=...)`` is ``df.localCheckpoint(eager=...)``;
 - ``frames.pin(df, eager=True, replaces=(old, ...))`` is the loop-round
   step: the new frame materializes first, then ``old`` is freed;
+- ``frames.pin(df, eager=True, count=True)`` returns ``(frame, rows)``:
+  an ``Observation`` on the pinned plan is filled by the checkpoint's
+  own job, so the row count costs no ``count()`` job of its own;
 - ``frames.attach(result, *frames)`` hands frames a returned lazy
   ``result`` still reads to the caller, who frees them with
   :func:`release` (``result``) after the last action over it;
@@ -20,7 +23,8 @@ from __future__ import annotations
 
 import weakref
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 # result frame -> RDDs holding the blocks of the frames it still reads
 _ATTACHED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
@@ -57,12 +61,16 @@ class Frames:
         held, self._held = self._held, []
         _free(rdd for _, rdd in held)
 
-    def pin(self, df: DataFrame, *, eager: bool, replaces=()) -> DataFrame:
+    def pin(self, df: DataFrame, *, eager: bool, replaces=(), count=False):
         """Checkpoint ``df``, then free the held frames in ``replaces``
-        (others, and None, are left alone; needs ``eager=True``)."""
-        if replaces and not eager:
-            raise ValueError("replaces= needs eager=True: a lazy pin has "
-                             "not materialized when the old frames go")
+        (others, and None, are left alone; needs ``eager=True``). With
+        ``count=True`` (needs ``eager=True``) return ``(frame, rows)``."""
+        if (replaces or count) and not eager:
+            raise ValueError("replaces= and count= need eager=True: a lazy "
+                             "pin has not materialized yet")
+        if count:
+            seen = Observation()
+            df = df.observe(seen, F.count(F.lit(1)).alias("rows"))
         out = df.localCheckpoint(eager=eager)
         keep, dead = [], []
         for f, rdd in self._held:
@@ -72,7 +80,7 @@ class Frames:
                 keep.append((f, rdd))
         self._held = keep + [(out, _blocks(out))]
         _free(dead)
-        return out
+        return (out, seen.get["rows"]) if count else out
 
     def attach(self, result: DataFrame, *frames: DataFrame | None) -> DataFrame:
         """Hand held ``frames`` (default: ``result`` itself; None is

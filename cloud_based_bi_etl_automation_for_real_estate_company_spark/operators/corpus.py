@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
+from ..session import local_frame
 from . import stores
 from .cacheutil import Frames
 
@@ -854,8 +855,8 @@ def bpe_train(
     """
     merges, _ = _bpe_train_rounds(df, text_col, num_merges, min_count, batch)
     spark = df.sparkSession
-    return spark.createDataFrame(
-        merges, "merge_rank int, pair string, merged string, n bigint"
+    return local_frame(
+        spark, merges, "merge_rank int, pair string, merged string, n bigint"
     )
 
 
@@ -1192,7 +1193,11 @@ def _bm25_score_postings(
     # projection) so this BroadcastExchange canonicalizes identically
     # to qstats' broadcast below and Spark REUSES one build — a
     # projected build side would re-execute the caller's query-term
-    # derivation (a corpus scan in the one-shot gates) a second time
+    # derivation (a corpus scan in the one-shot gates) a second time.
+    # Each build scans the caller's query frame: one built on the
+    # driver with session.local_frame is a JVM local relation, while a
+    # createDataFrame(list) frame costs a Python-worker task per
+    # partition per scan
     dfreq = (
         tf.join(F.broadcast(qterms), "term", "left_semi")
         .groupBy("term")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
+from ..session import local_frame
 from . import stores
 from .cacheutil import Frames
 
@@ -284,9 +285,7 @@ def _local_cc(cur: DataFrame, spark, id_type) -> DataFrame:
             StructField("cluster_id", id_type),
         ]
     )
-    return spark.createDataFrame(
-        [(n, comp_min[find(n)]) for n in parent], schema
-    )
+    return local_frame(spark, [(n, comp_min[find(n)]) for n in parent], schema)
 
 
 def local_finish_budget(spark) -> int:
@@ -340,7 +339,7 @@ def connected_components_star(
     Local finish: star contraction shrinks the edge list
     geometrically, so the LAST rounds are tiny and pure overhead (4
     jobs, ~6 exchanges each). Once the canon list is ≤
-    ``local_finish_max_edges`` rows (a count on the pinned frame), one
+    ``local_finish_max_edges`` rows (counted by the pin's own job), one
     driver-side union-find over a provably bounded collect finishes
     the components — GraphX-style CC's last-mile switch. ``None``
     resolves via ``local_finish_budget`` (1% of driver heap at
@@ -382,12 +381,13 @@ def connected_components_star(
         local_finish_max_edges = local_finish_budget(spark)
 
     with Frames() as frames:
-        cur = frames.pin(
+        cur, n_cur = frames.pin(
             _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))),
             eager=True,
+            count=True,
         )
         for _ in range(max_iter):
-            if local_finish_max_edges and cur.count() <= local_finish_max_edges:
+            if local_finish_max_edges and n_cur <= local_finish_max_edges:
                 return _local_cc(cur, spark, id_type)
             # for node n: flag-sum = #canon edges with n as parent (u
             # side), count − flag-sum = #child appearances
@@ -426,7 +426,9 @@ def connected_components_star(
             # small star's symmetrize + min-agg is immune to both. Once
             # mid materialized, cur and stats are dead.
             mid = frames.pin(rewired.union(anchors), eager=True, replaces=(cur, stats))
-            cur = frames.pin(_canon(_small_star(mid)), eager=True, replaces=(mid,))
+            cur, n_cur = frames.pin(
+                _canon(_small_star(mid)), eager=True, replaces=(mid,), count=True
+            )
         # fixpoint is a star forest: every edge points (root=min) ← node
         members = cur.select(
             F.col("v").alias("doc_id"), F.col("u").alias("cluster_id")
@@ -915,7 +917,7 @@ def incremental_paragraph_dedup(
         missing_ok=True,
     )
     if seen is None:
-        seen = spark.createDataFrame([], "para_hash string")
+        seen = local_frame(spark, [], "para_hash string")
     fresh = paras.join(
         seen.select(F.col("para_hash").alias("__h")), "__h", "left_anti"
     )
@@ -1505,7 +1507,7 @@ def incremental_minhash_dedup(
         # non-bigint id column types the store correctly from batch one
         # (round-6 ADVICE: never hardcode the id type)
         id_type = sig.schema[id_col].dataType.simpleString()
-        store_sig = spark.createDataFrame([], f"{id_col} {id_type}, {mh_ddl}")
+        store_sig = local_frame(spark, [], f"{id_col} {id_type}, {mh_ddl}")
     store_banded = band_keys(store_sig, id_col, num_hashes, bands)
 
     def n_eq(a: str, b: str):
@@ -1647,8 +1649,8 @@ def soft_dedup_admit(
     )
     if store_sig is None:
         id_type = sig.schema[id_col].dataType.simpleString()
-        store_sig = spark.createDataFrame(
-            [], f"{id_col} {id_type}, {mh_ddl}, cluster_id {id_type}"
+        store_sig = local_frame(
+            spark, [], f"{id_col} {id_type}, {mh_ddl}, cluster_id {id_type}"
         )
     # The store is referenced three times (band keys, verification
     # join, cluster counts) but deliberately NOT checkpointed: each

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .cacheutil import Frames
 
 
@@ -290,8 +291,8 @@ def _local_kcore(
     schema = StructType(
         [StructField("node", id_type), StructField("deg", LongType())]
     )
-    return e.sparkSession.createDataFrame(
-        [(n, d) for n, d in deg.items() if d >= k], schema
+    return local_frame(
+        e.sparkSession, [(n, d) for n, d in deg.items() if d >= k], schema
     )
 
 
@@ -316,11 +317,10 @@ def kcore(
     aggregation + one semi-join on the surviving edge list — the same
     per-round keyed-shuffle shape as the CC loop, with a per-round
     localCheckpoint keeping the plan linear. ``rounds`` bounds the
-    peel; an unchanged surviving-edge count is the fixpoint (one
-    cheap count on the already-checkpointed frame, the CC loop's
-    label-sum trick), so converged graphs exit early with a result
-    identical to running every round — which keeps the fixed-round
-    DuckDB oracle exact. A graph whose peel depth EXCEEDS ``rounds``
+    peel; a round with no under-degree node is the fixpoint (an
+    isEmpty over the checkpointed degree table), so converged graphs
+    exit early with a result identical to running every round — which
+    keeps the fixed-round DuckDB oracle exact. A graph whose peel depth EXCEEDS ``rounds``
     (e.g. a long path at k=2 peels two endpoints per round) would
     return a strict superset of the k-core; pass
     ``require_convergence=True`` to get a loud ValueError instead of
@@ -350,7 +350,7 @@ def kcore(
         local_finish_max_edges = local_finish_budget(edges.sparkSession)
     converged = False
     with Frames() as frames:
-        e = frames.pin(
+        e, n_e = frames.pin(
             edges.select(
                 F.least(F.col(src_col), F.col(dst_col)).alias("a"),
                 F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
@@ -358,14 +358,15 @@ def kcore(
             .filter(F.col("a") != F.col("b"))
             .distinct(),
             eager=True,
+            count=True,
         )
         for i in range(rounds):
             # local finish (connected_components_star's move): once the
             # shrinking edge list fits the driver budget, collect it
-            # (bounded by the count gate) and bulk-peel locally under
-            # the SAME remaining-round bound (the fixed-round oracle
-            # contract). local_finish_max_edges=0 stays distributed.
-            n_e = e.count()
+            # (bounded by the count gate; the count comes from the
+            # pin's own job) and bulk-peel locally under the SAME
+            # remaining-round bound (the fixed-round oracle contract).
+            # local_finish_max_edges=0 stays distributed.
             if local_finish_max_edges and n_e <= local_finish_max_edges:
                 return _local_kcore(
                     e, k, rounds - i, require_convergence, rounds
@@ -381,11 +382,12 @@ def kcore(
                 converged = True
                 break
             keep = deg.filter(F.col("deg") >= k).select("n")
-            e = frames.pin(
+            e, n_e = frames.pin(
                 e.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
                 .join(keep.withColumnRenamed("n", "b"), "b", "left_semi"),
                 eager=True,
                 replaces=(e, deg),
+                count=True,
             )
         if require_convergence and not converged:
             # a peel landing on the fixpoint exactly at round `rounds`

@@ -63,8 +63,9 @@ def incremental_sync(
 
         merged = latest_per_key(fresh, keys, order_by)
 
-    # write to a new generation dir, then flip the watermark; readers
-    # of the previous generation are unaffected mid-write
+    # overwrite data_path in place (the path the merge reads), then
+    # advance the watermark; there is no generation dir, so a reader
+    # of data_path during the write is not isolated from it
     merged.write.mode("overwrite").parquet(data_path)
     out = spark.read.parquet(data_path)
     new_max = out.agg(F.max(updated_col)).collect()[0][0]

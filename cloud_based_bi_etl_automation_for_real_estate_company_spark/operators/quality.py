@@ -14,6 +14,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import stores
 from .cacheutil import Frames
 
@@ -66,8 +67,8 @@ def check(df: DataFrame, expectations: Sequence[tuple[str, Column]]) -> DataFram
     row = df.agg(*aggs).collect()[0]
     spark = df.sparkSession
     data = [(name, int(row[name]), int(row["__total"])) for name, _ in expectations]
-    return spark.createDataFrame(
-        data, "expectation string, n_violations bigint, n_rows bigint"
+    return local_frame(
+        spark, data, "expectation string, n_violations bigint, n_rows bigint"
     )
 
 
@@ -88,8 +89,8 @@ def stratified_sample(
     no shuffle at all: at 100 TB this is a pure map-side filter.
     """
     spark = df.sparkSession
-    rate_df = spark.createDataFrame(
-        list(rates.items()), f"{class_col} string, __rate int"
+    rate_df = local_frame(
+        spark, list(rates.items()), f"{class_col} string, __rate int"
     )
     bucket = F.pmod(
         F.conv(F.substring(F.md5(F.col(content_col)), 1, 8), 16, 10).cast("bigint"),
@@ -1060,7 +1061,7 @@ def psi_admit(
             missing_ok=True,
         )
         if hist is None:
-            hist = spark.createDataFrame([], "bucket bigint, cnt bigint")
+            hist = local_frame(spark, [], "bucket bigint, cnt bigint")
         cells = (
             spark.range(0, n_buckets)
             .select(F.col("id").alias("bucket"))
@@ -1134,7 +1135,7 @@ def chi2_admit(
             missing_ok=True,
         )
         if hist is None:
-            hist = spark.createDataFrame([], "c string, cnt bigint")
+            hist = local_frame(spark, [], "c string, cnt bigint")
         cells = (
             bcounts.withColumnRenamed("cnt", "cur")
             .join(
@@ -1197,7 +1198,7 @@ def _digest_scored_grid(
         missing_ok=True,
     )
     if hist is None:
-        hist = spark.createDataFrame([], "mean double, weight double")
+        hist = local_frame(spark, [], "mean double, weight double")
 
     counts = (
         clean.groupBy(F.col(value_col).cast("double").alias("v"))

@@ -1150,10 +1150,11 @@ def nsw_topk(
         # pin the query sliver once: every hop broadcasts it (scoring) and
         # derives per-hop state from it — without the checkpoint each
         # broadcast build re-runs the caller's query-frame lineage
-        # (round 16; also makes the guard count below a ~free job)
-        q = frames.pin(
+        # (round 16); the pin's own job counts it for the guard below
+        q, n_q = frames.pin(
             queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")),
             eager=True,
+            count=True,
         )
         # enter at the highest NON-EMPTY layer (a tiny corpus may draw no
         # node at max_level); the same 1-row collect reads the graph's
@@ -1169,7 +1170,6 @@ def nsw_topk(
         # O(n_q · beam · degree · hops) rows; a corpus-sized batch degrades
         # to planner-chosen joins instead of failing on the broadcast cap.
         # The estimate deliberately overcounts (every hop fully fresh).
-        n_q = q.count()
         est_rows = n_q * beam * ((degree or 0) + 1) * (hops + (top_lvl or 0) + 1)
         hint = F.broadcast if est_rows <= NSW_BROADCAST_MAX_ROWS else (lambda df: df)
         bvec = base.select(F.col(id_col).alias("node"), F.col(vec_col).alias("__b"))
@@ -1234,10 +1234,9 @@ def nsw_topk(
                 )
         found = visited
         if exclude is not None:
+            # no distinct: duplicate ids cannot change a left_anti join
             found = found.join(
-                exclude.select(F.col(id_col).alias("node")).distinct(),
-                "node",
-                "left_anti",
+                exclude.select(F.col(id_col).alias("node")), "node", "left_anti"
             )
         return frames.attach(
             found.drop("q_emb")  # internal hop-state column

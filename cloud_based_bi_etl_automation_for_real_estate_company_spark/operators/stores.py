@@ -33,6 +33,8 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import hadoop_fs, read_parquet
+
 # Tombstone sets broadcast into every reader's anti-join while their
 # on-disk size stays below this (far under Spark's 8 GB broadcast
 # ceiling); a larger takedown backlog is joined unhinted and the
@@ -43,17 +45,12 @@ TOMBSTONE_BROADCAST_MAX_BYTES = 16 << 20
 Rewrite = Callable[[dict[str, DataFrame], DataFrame | None], dict[str, DataFrame]]
 
 
-def _fs_path(spark, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
 def hadoop_path_exists(spark, path: str) -> bool:
     """Typed existence probe through the Hadoop FileSystem API (local,
     HDFS, S3A alike). Only a missing path reads False; a permissions
     or connectivity failure raises, so "missing store" stays the only
     way into a bootstrap branch."""
-    fs, jpath = _fs_path(spark, path)
+    fs, jpath = hadoop_fs(spark, path)
     return bool(fs.exists(jpath))
 
 
@@ -76,13 +73,16 @@ def read_store(
       load-bearing only where dropping a newer column would destroy
       it — compaction rewrites — and costs a footer merge that grows
       with the file count, so query reads pass ``merge=False``.
+      Those take the footer schema from the session's cache
+      (:func:`session.read_parquet`) and launch no job after the
+      first read; the guards check the cached schema.
     """
     from pyspark.sql.types import StructType
 
-    reader = spark.read
     if merge:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(path)
+        df = spark.read.option("mergeSchema", "true").parquet(path)
+    else:
+        df = read_parquet(spark, path)
     have = {f.name: f.dataType for f in df.schema.fields}
     problems: list[str] = []
     if required:
@@ -111,28 +111,28 @@ def read_store(
 def read_tombstones(
     spark, store_path: str, id_col: str = "doc_id"
 ) -> DataFrame | None:
-    """The store's distinct tombstoned ids, or None when nothing was
+    """The store's tombstoned ids as written, or None when nothing was
     ever deleted (readers then skip the anti-join). The id column is
     guarded, so a tombstone set written under another id name fails
     loudly instead of anti-joining nothing.
 
-    The set is broadcast-hinted while its on-disk bytes (one file
-    listing, no Spark job) are below ``TOMBSTONE_BROADCAST_MAX_BYTES``:
-    every consumer then streams the store side of its anti-join and
-    never shuffles it. Above that the frame is returned unhinted."""
-    fs, jpath = _fs_path(spark, f"{store_path}/tombstones")
+    An id deleted twice appears twice. Every consumer is a
+    ``left_anti`` join, which duplicates cannot change, so the set is
+    not deduplicated: a read costs one scan for the broadcast and no
+    shuffle. The set is broadcast-hinted while its on-disk bytes (one
+    file listing, no Spark job) are below
+    ``TOMBSTONE_BROADCAST_MAX_BYTES``: every consumer then streams the
+    store side of its anti-join and never shuffles it. Above that the
+    frame is returned unhinted."""
+    fs, jpath = hadoop_fs(spark, f"{store_path}/tombstones")
     if not fs.exists(jpath):
         return None
-    tomb = (
-        read_store(
-            spark,
-            f"{store_path}/tombstones",
-            required_names=(id_col,),
-            merge=False,
-        )
-        .select(id_col)
-        .distinct()
-    )
+    tomb = read_store(
+        spark,
+        f"{store_path}/tombstones",
+        required_names=(id_col,),
+        merge=False,
+    ).select(id_col)
     if fs.getContentSummary(jpath).getLength() < TOMBSTONE_BROADCAST_MAX_BYTES:
         tomb = F.broadcast(tomb)
     return tomb
@@ -183,7 +183,7 @@ def delete(ids: DataFrame, store_path: str, id_col: str = "doc_id") -> None:
 def clear_tombstones(spark, store_path: str) -> None:
     """Drop a store's tombstone set — strictly after every table that
     dropped the tombstoned rows is written (see :func:`compact`)."""
-    fs, jpath = _fs_path(spark, f"{store_path}/tombstones")
+    fs, jpath = hadoop_fs(spark, f"{store_path}/tombstones")
     fs.delete(jpath, True)
 
 

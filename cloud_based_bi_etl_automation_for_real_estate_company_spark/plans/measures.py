@@ -31,12 +31,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.transforms import davg, dsum, ratio
-from ..session import prewarm_python_workers
+from ..session import prewarm_python_workers, read_events, read_parquet
 from .calendar import calendar_dim
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table (lazy parquet scan; columns pruned per-plan).
+    The footer schema comes from the session's cache
+    (``session.read_parquet``), so only a table's first read in a
+    session launches a schema-inference job.
 
     events.parquet has shipped ``ts`` as either TIMESTAMP(NANOS) or
     TIMESTAMP(MICROS) depending on fixture vintage; ``session.
@@ -56,10 +59,8 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
     prewarm_python_workers(spark, block=False)
     if name == "events":
-        from ..session import read_events
-
         return read_events(spark, os.path.join(sf_dir, "events.parquet"))
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # ---------------------------------------------------------------------------

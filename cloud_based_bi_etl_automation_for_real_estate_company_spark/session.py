@@ -16,8 +16,9 @@ from __future__ import annotations
 
 import os
 import threading
+import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
     "region",
@@ -141,7 +142,7 @@ def read_events(spark: SparkSession, path: str):
     from pyspark.sql.types import LongType, TimestampNTZType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
@@ -150,3 +151,88 @@ def read_events(spark: SparkSession, path: str):
         # unix_micros()/from_utc_timestamp() require TIMESTAMP (LTZ).
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` through the Hadoop API: local,
+    HDFS and S3A alike, and no Spark job."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+# session -> {path: (data files listed at fill, footer schema)}; one
+# session serves reads from several threads, so access takes the lock
+_FOOTERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_FOOTERS_LOCK = threading.Lock()
+
+
+def _data_files(spark: SparkSession, path: str) -> frozenset | None:
+    """(name, length, mtime) of each data file directly under ``path``
+    (or of ``path`` itself), from one ``listStatus``. Names starting
+    with ``_`` or ``.`` are skipped: ``_SUCCESS`` is rewritten by every
+    append. None for a missing path, an empty one, or a partitioned
+    layout (a subdirectory), which are never cached."""
+    from py4j.protocol import Py4JJavaError
+
+    fs, jpath = hadoop_fs(spark, path)
+    try:
+        listed = fs.listStatus(jpath)
+    except Py4JJavaError:
+        return None
+    files = []
+    for st in listed:
+        name = st.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        if st.isDirectory():
+            return None
+        files.append((name, st.getLen(), st.getModificationTime()))
+    return frozenset(files) or None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job
+    after the first read: the footer schema comes from a cache keyed
+    on the session and the path.
+
+    An entry holds for as long as every data file listed when it was
+    filled is still there with the same name, length and mtime. An
+    append keeps it, which is the answer a ``mergeSchema``-off read
+    gives anyway (Spark reads one footer and assumes every file
+    agrees). An overwrite, a compaction or a generation swap removes a
+    listed file, so the next read infers again. Only schemas are
+    cached, never data."""
+    files = _data_files(spark, path)
+    with _FOOTERS_LOCK:
+        cached = _FOOTERS.get(spark, {}).get(path)
+    if files is not None and cached is not None and cached[0] <= files:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if files is not None:
+        with _FOOTERS_LOCK:
+            _FOOTERS.setdefault(spark, {})[path] = (files, df.schema)
+    return df
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-built frame (``rows``: tuples in ``schema``'s field
+    order; ``schema``: a StructType or a DDL string) as an Arrow local
+    relation. Below ``spark.sql.execution.arrow.localRelationThreshold``
+    it is a JVM ``LocalRelation``, which collects and broadcasts with
+    no job; above it, a JVM-side RDD of Arrow batches. Neither runs a
+    Python worker, where ``createDataFrame(list)`` makes a PythonRDD
+    that every scan pays one Python task per partition for. Values
+    convert as ``createDataFrame(list)`` converts them."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    table = (
+        LocalDataToArrowConversion.convert(rows, schema, False)
+        if rows
+        else to_arrow_schema(schema).empty_table()
+    )
+    return spark.createDataFrame(table, schema)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cacheutil import Frames
+from ..session import local_frame
 from ..sources.webhook import (
     project_silver,
     read_webhook_json,
@@ -231,7 +232,7 @@ def refresh_drift_panels_incremental(
         try:
             return spark.read.schema(schema).parquet(p)
         except Exception:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
 
     num_raw = _state(
         "num_counts",

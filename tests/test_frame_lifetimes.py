@@ -7,10 +7,11 @@ pinned, replaced and released through one owner.
   caller;
 - leak regression: each converted operator, run on a small input and
   collected, leaves no RDD it persisted behind once ``release(result)``
-  ran. Every frame a checkpoint returns stays referenced until the
-  assertion (the ``pins`` fixture), so JVM GC cannot unpersist a
-  leaked checkpoint first and a leak always fails; GC can only remove
-  persisted RDDs, so a run that frees its pins always passes;
+  ran, and neither does the bench runner's step over a builder. Every
+  frame a checkpoint returns stays referenced until the assertion (the
+  ``pins`` fixture), so JVM GC cannot unpersist a leaked checkpoint
+  first and a leak always fails; GC can only remove persisted RDDs, so
+  a run that frees its pins always passes;
 - guard: outside cacheutil.py the package never persists/unpersists,
   never calls ``localCheckpoint()`` without an explicit ``eager=``, and
   never takes a name from cacheutil that it does not define.
@@ -356,6 +357,21 @@ def test_refresh_gold_frees_its_snapshot_pin(spark, pins, webhook_corpus, tmp_pa
         df.collect()
     assert pins
     assert _persisted(spark) == before
+
+
+def test_bench_runner_releases_the_builders_pins(spark, pins):
+    """``bench.time_leg`` (the HEADLINE loop's step) releases what the
+    builder's result still holds: x_label_prop attaches its last
+    label checkpoint to the result it returns."""
+    import __spark_entry__
+    import bench
+
+    before = _persisted(spark)
+    _, rows = bench.time_leg(
+        __spark_entry__.queries()["x_label_prop"], spark, "/root/testdata/sf0.001"
+    )
+    assert rows > 0 and pins
+    assert len(_persisted(spark)) == len(before)
 
 
 SURFACE = {n for n in dir(cacheutil) if not n.startswith("__")}
