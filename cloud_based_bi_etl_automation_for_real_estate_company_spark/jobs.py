@@ -24,7 +24,6 @@ from .operators.generations import publish
 from .operators.snapshot import upsert_merge
 from .plans import gold
 from .schemas import SILVER_EVENT_SCHEMA
-from .sources.sinks import materialize_gold
 
 # The published snapshot's column order: lead_id, the other event
 # columns, event, then account (its partition column, read back last).
@@ -41,7 +40,6 @@ def refresh_gold(
     silver_path: str,
     gold_path: str,
     prefix: str = "gold_",
-    atomic: bool = False,
 ) -> dict[str, DataFrame]:
     """The 8×/day dashboard refresh.
 
@@ -59,35 +57,15 @@ def refresh_gold(
     the pin is freed before this returns: every returned frame reads
     its published files.
 
-    Every table is published as a full replacement: an account whose
-    leads are all deleted loses its snapshot partition instead of
-    keeping a stale one that every measure would then count. Each
-    table is read back with the schema just written (no
-    schema-inference job). While the refresh runs, a concurrent reader
-    can see any mix of new and old tables, but every new one is
-    computed from the same snapshot.
-
-    ``atomic=False`` (default) overwrites each table's directory in
-    place — a concurrent reader can catch a table mid-rewrite.
-    ``atomic=True`` publishes each table as a fresh generation
-    directory behind a manifest (operators/generations.py): readers
-    see old-or-new, never a mix — the right trade for the dashboard
-    gold layer, which is small relative to silver."""
-
-    def _publish(df: DataFrame, name: str, partition_by=None) -> DataFrame:
-        path = os.path.join(gold_path, name)
-        if atomic:
-            return publish(df, path, f"{prefix}{name}", partition_by)
-        writer = df.write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        out = spark.read.schema(df.schema).parquet(path)
-        out.createOrReplaceTempView(f"{prefix}{name}")
-        return out
-
+    Every table is published as a full replacement, the next
+    generation behind its link (``operators.generations``): an account
+    whose leads are all deleted loses its snapshot partition instead
+    of keeping a stale one that every measure would then count. A
+    concurrent reader of one table sees the old table or the new one,
+    never a partial one; across tables it can see a mix of old and new
+    while the refresh runs, but every new one is computed from the
+    same snapshot. Each table is read back with the schema just
+    written (no schema-inference job)."""
     silver = spark.read.schema(SILVER_EVENT_SCHEMA).parquet(silver_path)
     builders = {
         "lead_snapshot": lambda snap: snap,
@@ -107,7 +85,10 @@ def refresh_gold(
         @inheritable_thread_target(spark)
         def build(name: str) -> DataFrame:
             partition_by = ["account"] if name == "lead_snapshot" else None
-            return _publish(builders[name](snap), name, partition_by)
+            return publish(
+                builders[name](snap), os.path.join(gold_path, name),
+                f"{prefix}{name}", partition_by,
+            )
 
         with ThreadPoolExecutor(len(builders)) as pool:
             return dict(zip(builders, pool.map(build, builders)))
@@ -117,9 +98,11 @@ def run_backfill_merge(
     backfill: DataFrame, live: DataFrame, out_path: str
 ) -> DataFrame:
     """U2/J4 — one-time history merge: bulk-loaded backfill ∪ live
-    stream → last-write-wins snapshot (reference README.md:149)."""
+    stream → last-write-wins snapshot (reference README.md:149),
+    published as a full replacement of ``out_path`` (as
+    :func:`refresh_gold` publishes its snapshot)."""
     merged = upsert_merge(backfill, live, ["lead_id"], ["received_at", "id"])
-    return materialize_gold(merged, out_path, partition_by=["account"])
+    return publish(merged, out_path, partition_by=["account"])
 
 
 def run_curation_pipeline(
@@ -448,7 +431,7 @@ def refresh_drift_dashboard(
     numeric per-(series, week) KS/W1/PSI panel
     (quality.rolling_drift over integer-floored event values) and the
     weekly categorical mix panel (quality.rolling_chi2 over
-    event_type), each published behind the generation manifest
+    event_type), each published as a generation
     (generations.publish) — dashboards read old-or-new, never a
     mid-rewrite mix, and both frames are week-grain-small so the full
     rewrite is the right trade. Registers ``{prefix}drift_panel`` /

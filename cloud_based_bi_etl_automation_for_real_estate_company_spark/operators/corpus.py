@@ -1351,13 +1351,13 @@ def bm25_index_append(
 
     Store growth is O(distinct (doc, term)) per batch; postings are
     term-skew-free on disk (hash-partitioned parquet) and
-    :func:`compact_bm25_store` right-sizes the file count in quiet
-    windows."""
+    :func:`compact_bm25_store` right-sizes the file count between
+    appends."""
     tok = new_docs.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("term")
     )
     tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf.write.mode("append").parquet(f"{store_path}/postings")
+    stores.append(tf, store_path, "postings")
 
 
 def bm25_query_store(
@@ -1407,9 +1407,9 @@ def compact_bm25_store(
     spark, store_path: str, bytes_per_file: int = 128 << 20
 ) -> None:
     """Store-lifecycle companion to :func:`bm25_index_append`: rewrite
-    ``{store_path}/postings`` into right-sized files under the
-    :func:`stores.compact` quiet-window contract (don't run
-    concurrently with appends or queries). The row set is IDENTICAL,
+    ``{store_path}/postings`` into right-sized files through
+    :func:`stores.compact` (queries may run meanwhile, appends may
+    not). The row set is IDENTICAL,
     so retrieval across a compaction is invariant (test-pinned) —
     except postings tombstoned by :func:`bm25_delete_docs`, which this
     pass physically drops."""

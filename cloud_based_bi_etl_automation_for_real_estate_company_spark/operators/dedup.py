@@ -947,9 +947,9 @@ def incremental_paragraph_dedup(
     ).localCheckpoint(eager=True)
     if sink is not None:
         sink(out)
-    kept.select(F.col("__h").alias("para_hash")).write.mode(
-        "append"
-    ).parquet(f"{store_path}/hashes")
+    stores.append(
+        kept.select(F.col("__h").alias("para_hash")), store_path, "hashes"
+    )
     return out
 
 
@@ -960,7 +960,7 @@ def compact_paragraph_store(
     :func:`incremental_paragraph_dedup`: at-least-once replays append
     duplicate hashes (harmless for membership — the anti-join is
     set-semantics — but wasteful); re-write ``{store_path}/hashes``
-    DISTINCT under the :func:`stores.compact` quiet-window contract.
+    DISTINCT through :func:`stores.compact` (no appends meanwhile).
     Membership — and therefore every subsequent batch's result — is
     invariant under compaction (pytest-pinned)."""
     stores.compact(
@@ -1583,8 +1583,8 @@ def incremental_minhash_dedup(
     if sink is not None:
         sink(new_docs.join(admitted_ids, id_col, "left_semi"))
     # single-table append: one job commit, no cross-directory tear
-    sig.join(admitted_ids, id_col, "left_semi").write.mode("append").parquet(
-        f"{store_path}/sigs"
+    stores.append(
+        sig.join(admitted_ids, id_col, "left_semi"), store_path, "sigs"
     )
     return flagged
 
@@ -1757,9 +1757,9 @@ def soft_dedup_admit(
     )
     if sink is not None:
         sink(new_docs.join(flagged, id_col))
-    sig.join(
-        flagged.select(id_col, "cluster_id"), id_col
-    ).write.mode("append").parquet(f"{store_path}/sigs")
+    stores.append(
+        sig.join(flagged.select(id_col, "cluster_id"), id_col), store_path, "sigs"
+    )
     return flagged
 
 
@@ -1771,8 +1771,8 @@ def compact_minhash_store(
     ``{store_path}/sigs``, so after thousands of batches the store is
     thousands of small files and every candidate lookup pays the
     file-listing + tiny-scan tax. Rewrite the store into
-    ⌈size/``bytes_per_file``⌉ right-sized files under the
-    :func:`stores.compact` quiet-window contract. The row set is
+    ⌈size/``bytes_per_file``⌉ right-sized files through
+    :func:`stores.compact` (no appends meanwhile). The row set is
     IDENTICAL so candidate lookup across a compaction is invariant
     (pinned by ``tests/test_dedup.py::
     test_minhash_store_compaction_lookup_invariance``) — except rows
@@ -1797,16 +1797,16 @@ def compact_soft_store(
 ) -> None:
     """Compaction for the SOFT-dedup store that also RECONCILES the
     provisional admission-time cluster labels: besides rewriting
-    ``{store_path}/sigs`` into right-sized files (same generation-swap
-    contract as :func:`compact_minhash_store`), every row's
+    ``{store_path}/sigs`` into right-sized files (published as the next
+    generation, as :func:`compact_minhash_store` does), every row's
     ``cluster_id`` is replaced by the EXACT label — the
     band-bucket → signature-agreement → star-CC clustering of the
     signatures alone, so a bridge doc that merged
     two clusters after its members were admitted stops splitting their
     running counts. After this, :func:`soft_dedup_admit`'s running
     sizes/labels are exact AS OF the compaction point (later batches
-    can of course bridge again — run compaction periodically in the
-    quiet window).
+    can of course bridge again — run compaction periodically, between
+    appends).
 
     Cost: one clustering pass over signatures (~K×8 bytes/doc — no
     text anywhere) folded into a rewrite the store needed anyway.

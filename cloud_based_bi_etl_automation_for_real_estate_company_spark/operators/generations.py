@@ -1,102 +1,113 @@
-"""Generation-directory table maintenance — atomic snapshot refresh
-without a table format's MERGE/commit log.
+"""The one way a table is replaced: a generation behind a symlink.
 
-Problem: `mode("overwrite")` deletes files before the rewrite
-finishes; a dashboard query running mid-refresh reads a half table.
-The reference sidesteps this because Power BI copies data into its own
-store at import time (reference README.md:511) — our readers hit the
-files directly, so the swap must be atomic.
+A table path is a relative symlink to a hidden sibling directory
+``.<name>-gen-<n>``. :func:`publish` writes the complete new contents
+into ``.<name>-gen-<n+1>``, then flips the link: a new link at a
+temporary name, renamed over the table path with ``os.replace``
+(atomic on one POSIX filesystem). A reader sees the old table or the
+new one, never an empty or a partial one — what Power BI gets from its
+import copy (reference README.md:511), while our readers hit the files.
+The generation before the current one is kept, so a reader that listed
+its files can finish; older ones are removed.
 
-Mechanism: each refresh writes a complete snapshot into a fresh
-``gen-<n>/`` directory, then atomically re-points a one-line manifest
-(os.replace — POSIX-atomic on the same filesystem). Readers resolve
-the manifest first, so they see either the old or the new generation,
-never a mix. Old generations are retired only after a retention count,
-letting in-flight readers finish (the same reader/writer isolation
-idea a table format's snapshot log provides, minus the format
-dependency; on object stores swap the rename for a conditional PUT).
+Readers resolve the link before they list (``session.read_parquet``):
+Spark records the files it lists under the path it was given, so a
+frame listed through the link would look for them in the new
+generation. A plain read of the link path works while nothing
+publishes.
+
+Link targets are relative, so a directory of tables moves whole. Local
+filesystem only. A table path that is a plain directory was written
+before generations: it is refused, not converted, and must be rebuilt.
+A crashed publish leaves an unlinked generation that the next publish
+overwrites whole.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import re
 import shutil
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
-
-MANIFEST = "_current.json"
-
-
-def _manifest_path(table_path: str) -> str:
-    return os.path.join(table_path, MANIFEST)
+from pyspark.sql import DataFrame
 
 
-def generation_path(table_path: str, gen: int) -> str:
-    """The directory holding generation ``gen`` of the table."""
-    return os.path.join(table_path, f"gen-{gen}")
+def local_path(path: str) -> str:
+    """``path`` as a local filesystem path without a trailing slash.
+    A non-local URI raises before anything is written; a file:// scheme
+    is stripped."""
+    scheme = urlparse(path).scheme
+    if scheme not in ("", "file"):
+        raise ValueError(
+            f"tables are replaced by flipping a local symlink; path "
+            f"{path!r} (scheme {scheme!r}) is not a local filesystem path. "
+            "Replace object-store / table-format tables with their native "
+            "atomic commit."
+        )
+    path = urlparse(path).path if scheme == "file" else path
+    return path.rstrip("/") or path
 
 
-def current_generation(table_path: str) -> int | None:
-    p = _manifest_path(table_path)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)["generation"]
+def _next_generation(path: str) -> int:
+    """One past the link's target; 0 for a table that does not exist."""
+    if os.path.islink(path):
+        return int(os.readlink(path).rsplit("-gen-", 1)[1]) + 1
+    if os.path.lexists(path):
+        raise ValueError(
+            f"{path} is a plain directory, not a published table (it was "
+            "written before tables were published as generations); "
+            "remove it and rebuild the table"
+        )
+    return 0
 
 
-def write_generation(
-    df: DataFrame,
-    table_path: str,
-    keep_generations: int = 2,
-    partition_by: list[str] | None = None,
-) -> int:
-    """Write ``df`` as the next generation and atomically publish it.
-    Returns the new generation number."""
-    cur = current_generation(table_path)
-    nxt = 0 if cur is None else cur + 1
-    gen_dir = generation_path(table_path, nxt)
-    # a generation is a complete snapshot: replace any leftover of a
-    # crashed earlier attempt whole, whatever the session's overwrite mode
-    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(gen_dir)
-
-    os.makedirs(table_path, exist_ok=True)
-    tmp = _manifest_path(table_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"generation": nxt}, f)
-    os.replace(tmp, _manifest_path(table_path))  # the atomic publish
-
-    # retire generations beyond the retention window
-    floor = nxt - keep_generations
-    for name in os.listdir(table_path):
-        if name.startswith("gen-") and int(name.split("-")[1]) < floor:
-            shutil.rmtree(os.path.join(table_path, name), ignore_errors=True)
-    return nxt
-
-
-def read_current(spark: SparkSession, table_path: str) -> DataFrame:
-    """Resolve the manifest, read that generation's parquet."""
-    gen = current_generation(table_path)
-    if gen is None:
-        raise FileNotFoundError(f"no published generation under {table_path}")
-    return spark.read.parquet(generation_path(table_path, gen))
+def _flip(path: str, write) -> str:
+    """Write the next generation of ``path`` with ``write(directory)``,
+    point ``path`` at it in one rename, then remove the generations
+    older than the one it replaced. Returns the directory."""
+    path = local_path(path)
+    gen = _next_generation(path)
+    parent, name = os.path.split(path)
+    gen_dir = os.path.join(parent, f".{name}-gen-{gen}")
+    shutil.rmtree(gen_dir, ignore_errors=True)  # a crashed publish's leftover
+    write(gen_dir)
+    tmp = os.path.join(parent, f".{name}-link")
+    if os.path.lexists(tmp):  # left by a crash between the two calls
+        os.remove(tmp)
+    os.symlink(os.path.basename(gen_dir), tmp)
+    os.replace(tmp, path)
+    old = re.compile(rf"\.{re.escape(name)}-gen-(\d+)")
+    for entry in os.listdir(parent or "."):
+        m = old.fullmatch(entry)
+        if m and int(m.group(1)) < gen - 1:
+            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+    return gen_dir
 
 
 def publish(
     df: DataFrame,
-    table_path: str,
-    view_name: str,
+    path: str,
+    view_name: str | None = None,
     partition_by: list[str] | None = None,
 ) -> DataFrame:
-    """Write ``df`` as the next generation of ``table_path``, read that
-    generation back with the schema just written (no schema-inference
-    job) and register it as the temp view ``view_name``."""
-    gen = write_generation(df, table_path, partition_by=partition_by)
-    out = df.sparkSession.read.schema(df.schema).parquet(
-        generation_path(table_path, gen)
-    )
-    out.createOrReplaceTempView(view_name)
+    """Write ``df`` as the next generation of the table at ``path`` and
+    flip the table to it. Returns the generation read back with the
+    schema just written (no schema-inference job), registered as the
+    temp view ``view_name`` when one is given."""
+    # a generation is a complete snapshot, whatever the session's
+    # partition overwrite mode
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    gen_dir = _flip(path, writer.parquet)
+    out = df.sparkSession.read.schema(df.schema).parquet(gen_dir)
+    if view_name:
+        out.createOrReplaceTempView(view_name)
     return out
+
+
+def publish_empty(path: str) -> None:
+    """Flip the table at ``path`` to a generation with no files: a
+    cleared set that readers see as zero bytes (``stores`` tombstones)."""
+    _flip(path, os.makedirs)

@@ -18,6 +18,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
+from .generations import publish
 from .snapshot import upsert_merge
 
 
@@ -56,18 +58,17 @@ def incremental_sync(
     order_by = [updated_col] + ([tiebreak_col] if tiebreak_col else [])
     data_path = os.path.join(target_path, "data")
     if os.path.exists(data_path):
-        current = spark.read.parquet(data_path)
+        current = read_parquet(spark, data_path)
         merged = upsert_merge(current, fresh, keys, order_by)
     else:
         from .snapshot import latest_per_key
 
         merged = latest_per_key(fresh, keys, order_by)
 
-    # overwrite data_path in place (the path the merge reads), then
-    # advance the watermark; there is no generation dir, so a reader
-    # of data_path during the write is not isolated from it
-    merged.write.mode("overwrite").parquet(data_path)
-    out = spark.read.parquet(data_path)
+    # the merge reads the current generation and publishes the next one,
+    # so a reader of data_path sees the old snapshot or the new; the
+    # watermark advances after the flip
+    out = publish(merged, data_path)
     new_max = out.agg(F.max(updated_col)).collect()[0][0]
     if new_max is not None:
         write_watermark(target_path, str(new_max))

@@ -1086,7 +1086,7 @@ def psi_admit(
             ),
             eager=True,
         )
-        bcounts.write.mode("append").parquet(f"{store_path}/hist")
+        stores.append(bcounts, store_path, "hist")
         return frames.attach(out)
 
 
@@ -1162,7 +1162,7 @@ def chi2_admit(
             ),
             eager=True,
         )
-        bcounts.write.mode("append").parquet(f"{store_path}/cats")
+        stores.append(bcounts, store_path, "cats")
         return frames.attach(out)
 
 
@@ -1334,8 +1334,8 @@ def ks_admit(
 
     Returns one row: (n_batch, n_hist, ks_stat, reject_95), a
     checkpoint attached to itself (``cacheutil.release(result)``). Compaction:
-    :func:`compact_ks_store` re-merges the centroid store in a quiet
-    window; the merged digest is a (deterministic) re-clustering, so scores
+    :func:`compact_ks_store` re-merges the centroid store between
+    appends; the merged digest is a (deterministic) re-clustering, so scores
     across a compaction agree within digest accuracy, not bitwise.
     """
     scored, tot, w_tot, sig = _digest_scored_grid(
@@ -1382,7 +1382,7 @@ def ks_admit(
             ),
             eager=True,
         )
-        sig.write.mode("append").parquet(f"{store_path}/centroids")
+        stores.append(sig, store_path, "centroids")
         return frames.attach(out)
 
 
@@ -1392,8 +1392,8 @@ def compact_ks_store(
 ) -> None:
     """Store-lifecycle companion to :func:`ks_admit`: re-merge the
     appended per-batch centroid sets into one ≤2δ-row digest via
-    tdigest_merge under the :func:`stores.compact` quiet-window
-    contract. Total weight is preserved exactly; subsequent KS scores
+    tdigest_merge through :func:`stores.compact` (no appends
+    meanwhile). Total weight is preserved exactly; subsequent KS scores
     agree within digest accuracy (a merge is a deterministic
     re-clustering, not a row-identical rewrite — the documented
     t-digest trade)."""
@@ -1505,5 +1505,5 @@ def w1_admit(
             ),
             eager=True,
         )
-        sig.write.mode("append").parquet(f"{store_path}/centroids")
+        stores.append(sig, store_path, "centroids")
         return frames.attach(out)

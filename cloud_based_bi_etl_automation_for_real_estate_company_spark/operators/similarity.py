@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import as_double, cosine, dot, sign_bucket
 from . import stores
 from .cacheutil import Frames
+from .generations import publish
 from .partitioning import spread
 
 # NSW search broadcasts its per-hop state while the estimated rows
@@ -1261,12 +1262,12 @@ def save_nsw_index(
 ) -> None:
     """Persist a layered-NSW index: ``{store}/graph`` (level, src,
     dst, sim) + ``{store}/vectors`` (the raw vectors — graph search
-    scores candidates exactly, so the index must carry them).
-    Overwrites."""
-    base.select(F.col(id_col), F.col(vec_col)).write.mode(
-        "overwrite"
-    ).parquet(f"{store_path}/vectors")
-    graph.write.mode("overwrite").parquet(f"{store_path}/graph")
+    scores candidates exactly, so the index must carry them). Each
+    table is published as its next generation
+    (``operators.generations``), vectors first, so a query never reads
+    a half-written table."""
+    publish(base.select(F.col(id_col), F.col(vec_col)), f"{store_path}/vectors")
+    publish(graph, f"{store_path}/graph")
 
 
 def nsw_index_append(
@@ -1292,7 +1293,7 @@ def nsw_index_append(
     the SAME level it would have drawn in a one-shot build. Reverse
     edges can push an old node's out-degree past M — queries only get
     MORE candidates from that (recall up, cost up);
-    :func:`compact_nsw_graph` re-prunes to the cap in a quiet window.
+    :func:`compact_nsw_graph` re-prunes to the cap between appends.
     Append-built graphs are not edge-identical to one-shot builds
     (insert order is real in HNSW too) — the contract is the recall
     floor, pinned by the parity test. Raises FileNotFoundError when
@@ -1359,9 +1360,9 @@ def nsw_index_append(
                 "sim",
             )
             edges = edges.unionByName(found).unionByName(rev)
-        newv.drop("__lvl").write.mode("append").parquet(f"{store_path}/vectors")
+        stores.append(newv.drop("__lvl"), store_path, "vectors")
         if edges is not None:
-            edges.write.mode("append").parquet(f"{store_path}/graph")
+            stores.append(edges, store_path, "graph")
 
 
 def nsw_query_index(
@@ -1380,7 +1381,9 @@ def nsw_query_index(
     query API (bm25_query_store's posture for graph ANN)."""
     # Tombstoned vectors are read, excluded from the top-k, and still
     # route (nsw_topk's soft-delete contract); the physical drop
-    # happens at compact_nsw_graph.
+    # happens at compact_nsw_graph. Tombstones are read first (the
+    # stores read-order rule).
+    tomb = stores.read_tombstones(spark, store_path, id_col)
     vecs = stores.read_live(
         spark, store_path, "vectors", required_names=(id_col, vec_col)
     )
@@ -1388,7 +1391,6 @@ def nsw_query_index(
         spark, store_path, "graph", required="level int, sim double",
         required_names=("src", "dst"),
     )
-    tomb = stores.read_tombstones(spark, store_path, id_col)
     # pin_graph=False (round 16): the store graph's lineage is already
     # a flat parquet scan — the eager checkpoint only added one full
     # graph materialization job per query call
@@ -1543,8 +1545,8 @@ def compact_nsw_graph(
     """Store-lifecycle companion to :func:`nsw_index_append`: dedupe
     replayed edges and re-prune every (level, src) adjacency to its
     top-``M`` by similarity (reverse-edge appends deliberately
-    overflow the cap), then swap generations under the
-    :func:`stores.compact` quiet-window contract.
+    overflow the cap), then publish the next generations under
+    :func:`stores.compact`'s read-order rule.
 
     ``select``: ``"topm"`` prunes each (level, src) adjacency to the
     M most-similar neighbors — cheap, but it collapses the adjacency
@@ -1573,8 +1575,7 @@ def compact_nsw_graph(
     Tombstoned ids (:func:`nsw_delete`) are made PHYSICAL here: their
     vectors and every incident edge are dropped before the prune, so
     the refresh's NN-descent re-links the neighborhoods around the
-    holes; the vectors table is rewritten through the same generation
-    swap."""
+    holes; the vectors table is published the same way."""
     def rewrite(live, tomb):
         g = live["graph"].dropDuplicates(["level", "src", "dst"])
         vecs = live["vectors"]
@@ -1630,7 +1631,7 @@ def compact_nsw_graph(
             out["vectors"] = vecs
         return out
 
-    # the rewrite's pins live until the generation swap has written them
+    # the rewrite's pins live until the publish has written them
     with Frames() as frames:
         stores.compact(
             spark,

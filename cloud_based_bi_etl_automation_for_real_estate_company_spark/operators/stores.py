@@ -9,31 +9,40 @@ Families and their subdirectories under one ``store_path``:
   ``centroids``);
 - deletions of any family land in ``{store_path}/tombstones``.
 
-Three verbs, one rule set:
+Every subdirectory is a published table (``operators.generations``):
+a link to its current generation. Four verbs, one rule set:
 
+- :func:`append` — land a batch in a table's current generation,
+  publishing generation 0 on first use.
 - :func:`read_live` — the query/admission read: schema-guarded,
   single-footer (``mergeSchema`` off), minus tombstones. A missing
   store raises unless the caller bootstraps (``missing_ok``).
 - :func:`delete` — append ids to the tombstone set. Readers anti-join
   it at once; compaction makes the delete physical. This is the
   delete-file design of Delta/Iceberg.
-- :func:`compact` — the quiet-window rewrite: mergeSchema read of
-  every subdir, a family rewrite, a generation swap per subdir, and
-  the tombstones cleared (:func:`clear_tombstones`) only after every
-  swap.
+- :func:`compact` — a mergeSchema read of every table, a family
+  rewrite published as each table's next generation, then an empty
+  tombstone generation.
+
+Read-order rule: :func:`read_live` resolves the tombstones BEFORE the
+table, and :func:`compact` flips the tables BEFORE it clears the
+tombstones. A reader that saw the cleared set therefore sees the
+compacted tables, so no deleted row is ever resurrected, and queries
+may run during a compaction. Appends and compactions of one store must
+not overlap: an append that lands in a generation the compaction has
+already read is lost when the table flips.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Callable
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import hadoop_fs, read_parquet
+from ..session import hadoop_fs, read_parquet, resolve
+from .generations import local_path, publish, publish_empty
 
 # Tombstone sets broadcast into every reader's anti-join while their
 # on-disk size stays below this (far under Spark's 8 GB broadcast
@@ -41,17 +50,8 @@ from ..session import hadoop_fs, read_parquet
 # planner picks the strategy. Compaction clears the backlog.
 TOMBSTONE_BROADCAST_MAX_BYTES = 16 << 20
 
-# A compaction rewrite: (live tables, tombstone set) -> tables to swap.
+# A compaction rewrite: (live tables, tombstone set) -> tables to publish.
 Rewrite = Callable[[dict[str, DataFrame], DataFrame | None], dict[str, DataFrame]]
-
-
-def hadoop_path_exists(spark, path: str) -> bool:
-    """Typed existence probe through the Hadoop FileSystem API (local,
-    HDFS, S3A alike). Only a missing path reads False; a permissions
-    or connectivity failure raises, so "missing store" stays the only
-    way into a bootstrap branch."""
-    fs, jpath = hadoop_fs(spark, path)
-    return bool(fs.exists(jpath))
 
 
 def read_store(
@@ -80,7 +80,7 @@ def read_store(
     from pyspark.sql.types import StructType
 
     if merge:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
+        df = spark.read.option("mergeSchema", "true").parquet(resolve(path))
     else:
         df = read_parquet(spark, path)
     have = {f.name: f.dataType for f in df.schema.fields}
@@ -111,10 +111,11 @@ def read_store(
 def read_tombstones(
     spark, store_path: str, id_col: str = "doc_id"
 ) -> DataFrame | None:
-    """The store's tombstoned ids as written, or None when nothing was
-    ever deleted (readers then skip the anti-join). The id column is
-    guarded, so a tombstone set written under another id name fails
-    loudly instead of anti-joining nothing.
+    """The store's tombstoned ids as written, or None when nothing is
+    deleted: the set was never written, or a compaction cleared it
+    (a generation of zero bytes). Readers then skip the anti-join. The
+    id column is guarded, so a tombstone set written under another id
+    name fails loudly instead of anti-joining nothing.
 
     An id deleted twice appears twice. Every consumer is a
     ``left_anti`` join, which duplicates cannot change, so the set is
@@ -123,19 +124,19 @@ def read_tombstones(
     file listing, no Spark job) are below
     ``TOMBSTONE_BROADCAST_MAX_BYTES``: every consumer then streams the
     store side of its anti-join and never shuffles it. Above that the
-    frame is returned unhinted."""
-    fs, jpath = hadoop_fs(spark, f"{store_path}/tombstones")
+    frame is returned unhinted. Size and frame come from one resolved
+    generation."""
+    path = resolve(f"{store_path}/tombstones")
+    fs, jpath = hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return None
+    size = fs.getContentSummary(jpath).getLength()
+    if size == 0:
+        return None
     tomb = read_store(
-        spark,
-        f"{store_path}/tombstones",
-        required_names=(id_col,),
-        merge=False,
+        spark, path, required_names=(id_col,), merge=False
     ).select(id_col)
-    if fs.getContentSummary(jpath).getLength() < TOMBSTONE_BROADCAST_MAX_BYTES:
-        tomb = F.broadcast(tomb)
-    return tomb
+    return F.broadcast(tomb) if size < TOMBSTONE_BROADCAST_MAX_BYTES else tomb
 
 
 def read_live(
@@ -153,14 +154,29 @@ def read_live(
     keep routing. A missing table raises, or returns None with
     ``missing_ok`` for callers that bootstrap an empty store."""
     path = f"{store_path}/{subdir}"
-    if missing_ok and not hadoop_path_exists(spark, path):
+    # only a missing table reads False; a permissions or connectivity
+    # failure raises, so "missing store" is the only way to bootstrap
+    fs, jpath = hadoop_fs(spark, path)
+    if missing_ok and not fs.exists(jpath):
         return None
+    # tombstones first: the module's read-order rule
+    tomb = read_tombstones(spark, store_path, id_col) if id_col else None
     df = read_store(
         spark, path, required=required, required_names=required_names,
         merge=False,
     )
-    tomb = read_tombstones(spark, store_path, id_col) if id_col else None
     return df if tomb is None else df.join(tomb, id_col, "left_anti")
+
+
+def append(df: DataFrame, store_path: str, subdir: str) -> None:
+    """Append ``df`` to the current generation of
+    ``{store_path}/{subdir}``; the first append publishes it as
+    generation 0, so a reader never sees the table half-created."""
+    path = local_path(f"{store_path}/{subdir}")
+    if os.path.islink(path):
+        df.write.mode("append").parquet(os.path.realpath(path))
+    else:
+        publish(df, path)
 
 
 def delete(ids: DataFrame, store_path: str, id_col: str = "doc_id") -> None:
@@ -175,31 +191,7 @@ def delete(ids: DataFrame, store_path: str, id_col: str = "doc_id") -> None:
     Tombstones are by id and win over any row bearing that id —
     including one appended after the delete — until a compaction:
     re-adding a deleted id means compact first or mint a new id."""
-    ids.select(id_col).distinct().write.mode("append").parquet(
-        f"{store_path}/tombstones"
-    )
-
-
-def clear_tombstones(spark, store_path: str) -> None:
-    """Drop a store's tombstone set — strictly after every table that
-    dropped the tombstoned rows is written (see :func:`compact`)."""
-    fs, jpath = hadoop_fs(spark, f"{store_path}/tombstones")
-    fs.delete(jpath, True)
-
-
-def _local_store_path(store_path: str) -> str:
-    """The generation swap is two local renames: refuse a non-local
-    URI before anything is written (no orphaned ``__compacting``
-    directory on an object store) and strip a file:// scheme."""
-    scheme = urlparse(store_path).scheme
-    if scheme not in ("", "file"):
-        raise ValueError(
-            f"store compaction swaps generations with local "
-            f"renames; store_path {store_path!r} (scheme {scheme!r}) "
-            "is not a local filesystem path. Compact object-store / "
-            "table-format deployments with their native atomic rewrite."
-        )
-    return urlparse(store_path).path if scheme == "file" else store_path
+    append(ids.select(id_col).distinct(), store_path, "tombstones")
 
 
 def _plan_bytes(df: DataFrame) -> int | None:
@@ -211,29 +203,15 @@ def _plan_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def _swap(
-    frame: DataFrame, store_path: str, subdir: str, bytes_per_file: int,
-    read: DataFrame,
-) -> None:
-    """Write ``frame`` to ``{subdir}__compacting`` in right-sized files,
-    then rename it over ``subdir``. ``frame`` may read the live
-    directory: it is untouched until the renames. Rewrites never grow
-    a store, so the size estimate is the smaller of the rewrite's and
-    the compaction read's plan statistics (a checkpointed rewrite
+def _right_sized(frame: DataFrame, read: DataFrame, bytes_per_file: int) -> DataFrame:
+    """``frame`` in files of about ``bytes_per_file``. Rewrites never
+    grow a store, so the size estimate is the smaller of the rewrite's
+    and the compaction read's plan statistics (a checkpointed rewrite
     reports a near-Long.MaxValue size that would explode the file
     count)."""
     sizes = [b for b in (_plan_bytes(frame), _plan_bytes(read)) if b is not None]
     est = min(sizes, default=bytes_per_file)
-    n_files = min(max(1, -(-est // bytes_per_file)), 100_000)
-    live = os.path.join(store_path, subdir)
-    tmp = os.path.join(store_path, f"{subdir}__compacting")
-    frame.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    old = os.path.join(store_path, f"{subdir}__old")
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(live, old)
-    os.rename(tmp, live)
-    shutil.rmtree(old)
+    return frame.repartition(min(max(1, -(-est // bytes_per_file)), 100_000))
 
 
 def compact(
@@ -244,23 +222,21 @@ def compact(
     id_col: str | Callable[[DataFrame], str] | None = None,
     bytes_per_file: int = 128 << 20,
 ) -> None:
-    """Rewrite a store's tables into right-sized files in its quiet
-    window. ``subdirs`` maps each table to its :func:`read_store`
-    guards; every table is read with mergeSchema (a single-footer read
-    here would drop newer columns for good), and every table carrying
-    the tombstone key (``id_col``, or a function of the first table's
-    frame) is read minus tombstones. ``rewrite(live, tomb)`` returns
-    the tables to swap (default: ``live`` as read); it also gets the
-    tombstone set for tables keyed otherwise (NSW's edge table).
+    """Rewrite a store's tables into right-sized files. ``subdirs`` maps
+    each table to its :func:`read_store` guards; every table is read
+    with mergeSchema (a single-footer read here would drop newer
+    columns for good), and every table carrying the tombstone key
+    (``id_col``, or a function of the first table's frame) is read
+    minus tombstones. ``rewrite(live, tomb)`` returns the tables to
+    publish (default: ``live`` as read); it also gets the tombstone set
+    for tables keyed otherwise (NSW's edge table).
 
-    Swap contract: each table swaps by two local renames with a gap
-    between them, so compaction must not run concurrently with the
-    store's appends or queries — a bootstrap read inside the gap would
-    treat the store as empty. Table-format deployments swap atomically.
-    Tombstones are cleared strictly after every swap: a crash in
-    between leaves tombstones for already-absent ids, a no-op for
-    every reader, never a resurrected row."""
-    store_path = _local_store_path(store_path)
+    Each returned table is published as its next generation; the
+    tombstones are cleared after every table has flipped (the module's
+    read-order rule), so a crash in between leaves only no-op
+    tombstones. Tables flip one at a time: a reader of two (the NSW
+    graph and its vectors) may pair a compacted one with an old one."""
+    store_path = local_path(store_path)
     raw = {
         s: read_store(spark, f"{store_path}/{s}", **guards)
         for s, guards in subdirs.items()
@@ -275,6 +251,6 @@ def compact(
     }
     out = rewrite(live, tomb) if rewrite is not None else live
     for s, frame in out.items():
-        _swap(frame, store_path, s, bytes_per_file, raw[s])
+        publish(_right_sized(frame, raw[s], bytes_per_file), f"{store_path}/{s}")
     if tomb is not None:
-        clear_tombstones(spark, store_path)
+        publish_empty(f"{store_path}/tombstones")

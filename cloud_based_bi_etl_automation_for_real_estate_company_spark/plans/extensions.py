@@ -403,7 +403,7 @@ def q_x_ann_nsw_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = os.path.join(
         tempfile.mkdtemp(prefix="spark_graft_nsw_delete_"), "store"
     )
-    shutil.copytree(src, tmp)
+    shutil.copytree(src, tmp, symlinks=True)
     try:
         S.nsw_delete(deleted, tmp)
         approx = (

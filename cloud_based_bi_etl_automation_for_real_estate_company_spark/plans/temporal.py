@@ -1154,13 +1154,12 @@ def q_t24_drift_dashboard_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-ACCUMULATED drift dashboard drained to the gate
     (jobs.refresh_drift_dashboard, round 14): replay the refresh
     over three deterministic event slices — append each
-    slice to the silver store, republish the gold numeric panel behind
-    the generation manifest — then return the FINAL published
-    drift_panel read back through read_current. The accumulated
-    silver must reconstruct the corpus losslessly (parquet roundtrip,
-    NULL values included) and the generation swap must publish a
-    readable current table, so the drained panel equals the one-shot
-    t22 computation — the oracle IS t22's SQL verbatim (the
+    slice to the silver store, republish the gold numeric panel as the
+    next generation behind its link — then return the FINAL published
+    drift_panel. The accumulated silver must reconstruct the corpus
+    losslessly (parquet roundtrip, NULL values included) and the
+    generation flip must publish a readable current table, so the
+    drained panel equals the one-shot t22 computation — the oracle IS t22's SQL verbatim (the
     x_mlt_drain convention)."""
     import shutil
     import tempfile

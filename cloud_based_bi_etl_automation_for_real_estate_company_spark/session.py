@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 import threading
 import weakref
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -190,24 +191,35 @@ def _data_files(spark: SparkSession, path: str) -> frozenset | None:
     return frozenset(files) or None
 
 
+def resolve(path: str) -> str:
+    """A local ``path`` with its symlinks resolved: a published table
+    becomes its current generation. Other URIs are returned as given."""
+    scheme = urlparse(path).scheme
+    if scheme not in ("", "file"):
+        return path
+    return os.path.realpath(urlparse(path).path if scheme == "file" else path)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` without its schema-inference job
-    after the first read: the footer schema comes from a cache keyed
-    on the session and the path.
+    """``spark.read.parquet`` of the generation ``path`` resolves to
+    now (so the frame keeps reading it after a later publish), without
+    its schema-inference job after the first read: the footer schema
+    comes from a cache keyed on the session and the path as given.
 
     An entry holds for as long as every data file listed when it was
     filled is still there with the same name, length and mtime. An
     append keeps it, which is the answer a ``mergeSchema``-off read
     gives anyway (Spark reads one footer and assumes every file
-    agrees). An overwrite, a compaction or a generation swap removes a
-    listed file, so the next read infers again. Only schemas are
-    cached, never data."""
-    files = _data_files(spark, path)
+    agrees). An overwrite, a compaction or a publish lists other files,
+    so the next read infers again and replaces the entry. Only schemas
+    are cached, never data."""
+    resolved = resolve(path)
+    files = _data_files(spark, resolved)
     with _FOOTERS_LOCK:
         cached = _FOOTERS.get(spark, {}).get(path)
     if files is not None and cached is not None and cached[0] <= files:
-        return spark.read.schema(cached[1]).parquet(path)
-    df = spark.read.parquet(path)
+        return spark.read.schema(cached[1]).parquet(resolved)
+    df = spark.read.parquet(resolved)
     if files is not None:
         with _FOOTERS_LOCK:
             _FOOTERS.setdefault(spark, {})[path] = (files, df.schema)

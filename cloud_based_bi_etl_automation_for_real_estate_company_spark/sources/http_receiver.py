@@ -23,10 +23,18 @@ renames it (``os.replace``, under the append lock) to a visible
 the next POST starts a new in-progress file. A running stream sees
 every acknowledged event, at most about :data:`ROTATE_S` after its ack,
 and nothing is appended to a file after the stream can list it.
+
+A receiver that dies cannot publish its in-progress file, so each
+running receiver holds an ``fcntl.flock`` (released by the kernel when
+the process dies) on a hidden lock file named after its prefix, and
+``start`` publishes the in-progress files of every prefix whose lock it
+can take — never a live peer's.
 """
 
 from __future__ import annotations
 
+import fcntl
+import glob
 import json
 import os
 import threading
@@ -104,6 +112,8 @@ class WebhookReceiver:
         self._server = Server((host, port), Handler)
         self.port = self._server.server_address[1]
         self._started = False
+        self._flock = None  # the open lock file, held while running
+        self._lock_path = os.path.join(spool_dir, f".{self._prefix}.lock")
         self._thread = threading.Thread(
             target=self._server.serve_forever, args=(POLL_S,), daemon=True
         )
@@ -124,16 +134,43 @@ class WebhookReceiver:
             self._seq += 1
             self._opened = None
 
+    def _publish_orphans(self) -> None:
+        """Publish the in-progress files of every receiver on this spool
+        whose lock is free: its process is gone. The lock file goes
+        last, so a crash here leaves the rest for the next start."""
+        spool = glob.escape(self.spool_dir)
+        for lock in glob.glob(os.path.join(spool, ".spool-*.lock")):
+            prefix = os.path.basename(lock)[1:-len(".lock")]
+            try:
+                with open(lock) as f:
+                    fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    for tmp in glob.glob(os.path.join(spool, f".{prefix}-*.json")):
+                        name = os.path.basename(tmp)[1:]
+                        os.replace(tmp, os.path.join(self.spool_dir, name))
+                    os.remove(lock)
+            except (BlockingIOError, FileNotFoundError):
+                continue  # a live receiver (this one too), or a peer got there first
+
     def start(self) -> "WebhookReceiver":
+        # lock, then make the lock file visible: a peer never sees it free
+        self._flock = open(self._lock_path + ".tmp", "w")
+        fcntl.flock(self._flock, fcntl.LOCK_EX)
+        os.rename(self._lock_path + ".tmp", self._lock_path)
+        self._publish_orphans()
         self._thread.start()
         self._started = True
         return self
 
     def stop(self) -> None:
-        """Stop serving and publish the in-progress file."""
+        """Stop serving, publish the in-progress file and release the
+        lock."""
         # shutdown() blocks on serve_forever()'s completion event —
         # calling it on a never-started server deadlocks forever
         if self._started:
             self._server.shutdown()
         self._server.server_close()
         self._publish(0.0)
+        if self._flock is not None:
+            os.remove(self._lock_path)
+            self._flock.close()
+            self._flock = None

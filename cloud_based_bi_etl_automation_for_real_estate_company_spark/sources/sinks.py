@@ -4,9 +4,11 @@
   `action_history` via the psql CLI (reference README.md:146–147) —
   here a schema-declared CSV/Parquet load into the silver zone.
 - S11: Power BI Import-mode refresh 8×/day (reference README.md:511–513)
-  becomes gold-table materialization: recompute → overwrite parquet →
-  re-register views. Readers see pruned columnar gold instead of an
-  in-memory VertiPaq copy.
+  becomes gold-table publication (``jobs.refresh_gold`` through
+  ``operators.generations.publish``): recompute → write the next
+  generation → flip the table's link → re-register views. Readers see
+  pruned columnar gold instead of an in-memory VertiPaq copy, and
+  never a half-written table.
 - S6: the SQLite `INSERT OR REPLACE` sink (Lead_Ingestion_CRM_SQLite.py:
   141–148) — for JDBC parity a thin `df.write.jdbc` wrapper; the
   idiomatic path is upsert_merge + parquet (operators.snapshot).
@@ -29,31 +31,6 @@ def bulk_load_csv(
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
-
-
-def materialize_gold(
-    df: DataFrame,
-    path: str,
-    view_name: str | None = None,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
-    """S11 — gold refresh: overwrite the materialized table and
-    re-register its view. Dynamic partition overwrite only rewrites the
-    partitions present in ``df`` — an incremental refresh touches one
-    month's directory, not the whole table. The mode is a per-write
-    option, so the session's own overwrite mode is left as it was.
-
-    The table is read back with the schema just written, which skips
-    the parquet schema-inference job a bare read would run."""
-    spark = df.sparkSession
-    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    out = spark.read.schema(df.schema).parquet(path)
-    if view_name:
-        out.createOrReplaceTempView(view_name)
-    return out
 
 
 def write_jdbc(

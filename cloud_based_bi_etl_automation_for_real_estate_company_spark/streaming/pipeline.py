@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cacheutil import Frames
-from ..session import local_frame
+from ..session import local_frame, read_parquet
 from ..sources.webhook import (
     project_silver,
     read_webhook_json,
@@ -212,7 +212,7 @@ def refresh_drift_panels_incremental(
 
     from pyspark.sql import functions as F
 
-    from ..operators.generations import publish, read_current
+    from ..operators.generations import publish
     from ..operators.quality import (
         rolling_chi2_from_counts,
         rolling_drift_from_counts,
@@ -277,7 +277,7 @@ def refresh_drift_panels_incremental(
                 cat_raw.filter(F.col("__batch_id") > last).select(horizon).distinct(),
                 eager=True,
             )
-            old_drift = read_current(spark, os.path.join(gold_path, "drift_panel"))
+            old_drift = read_parquet(spark, os.path.join(gold_path, "drift_panel"))
             drift = old_drift.join(
                 aff_num,
                 old_drift["event_type"].eqNullSafe(aff_num["event_type"])
@@ -291,7 +291,7 @@ def refresh_drift_panels_incremental(
                     out_weeks=aff_num,
                 ))
             )
-            old_mix = read_current(spark, os.path.join(gold_path, "mix_panel"))
+            old_mix = read_parquet(spark, os.path.join(gold_path, "mix_panel"))
             mix = old_mix.join(
                 aff_cat, old_mix["week_start"] == aff_cat["w"], "left_anti"
             ).unionByName(

@@ -174,8 +174,8 @@ def test_store_read_after_append_and_delete_launches_no_inference(spark, tmp_pat
 
 def test_compaction_misses_the_cache_and_sees_the_merged_schema(spark, tmp_path):
     store = str(tmp_path / "s")
-    spark.createDataFrame([(1, "a")], "doc_id bigint, x string").write.parquet(
-        f"{store}/postings"
+    stores.append(
+        spark.createDataFrame([(1, "a")], "doc_id bigint, x string"), store, "postings"
     )
     assert read_parquet(spark, f"{store}/postings").columns == ["doc_id", "x"]
     # a wider append keeps the entry: the same answer a single-footer

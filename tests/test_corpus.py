@@ -668,8 +668,7 @@ def test_bm25_store_matches_one_shot_and_survives_compaction(spark, tmp_path):
     # compaction rewrote the layout, not the rows
     import os
 
-    assert os.path.isdir(f"{store}/postings")
-    assert not os.path.isdir(f"{store}/postings__compacting")
+    assert os.readlink(f"{store}/postings") == ".postings-gen-1"
 
 
 def test_more_like_this_hand_computed(spark):

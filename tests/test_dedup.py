@@ -789,7 +789,7 @@ def test_minhash_store_compaction_lookup_invariance(spark, tmp_path):
     D.incremental_minhash_dedup(b1, a).collect()
     D.incremental_minhash_dedup(b2, a).collect()
     b = str(tmp_path / "store_b")
-    shutil.copytree(a, b)
+    shutil.copytree(a, b, symlinks=True)
     files_before = len(glob.glob(f"{b}/sigs/*.parquet"))
     D.compact_minhash_store(spark, b)
     files_after = len(glob.glob(f"{b}/sigs/*.parquet"))
@@ -959,9 +959,9 @@ def test_round6_ops_partition_invariant(spark):
 
 
 def test_compact_minhash_store_rejects_remote_store(spark, tmp_path):
-    """ADVICE r7: the generation swap is os.rename — a non-local store
-    URI must raise BEFORE any rewrite happens (no orphaned
-    sigs__compacting directory on object stores)."""
+    """ADVICE r7: a table is replaced by a local link flip — a
+    non-local store URI must raise BEFORE any rewrite happens (no
+    orphaned generation directory on an object store)."""
     import pytest
 
     with pytest.raises(ValueError, match="local filesystem"):
@@ -1068,7 +1068,7 @@ def test_soft_store_compaction_invariance(spark, tmp_path):
     D.soft_dedup_admit(b1, a)
     D.soft_dedup_admit(b2, a)
     b = str(tmp_path / "soft_b")
-    shutil.copytree(a, b)
+    shutil.copytree(a, b, symlinks=True)
     files_before = len(glob.glob(f"{b}/sigs/*.parquet"))
     D.compact_minhash_store(spark, b)
     assert len(glob.glob(f"{b}/sigs/*.parquet")) < files_before
@@ -1123,7 +1123,7 @@ def test_compact_soft_store_reconciles_bridged_labels(spark, tmp_path):
     probe = str(tmp_path / "probe")
     import shutil
 
-    shutil.copytree(store, probe)
+    shutil.copytree(store, probe, symlinks=True)
     f4_stale = D.soft_dedup_admit(
         spark.createDataFrame([(4, A)], "doc_id bigint, text string"), probe
     ).collect()

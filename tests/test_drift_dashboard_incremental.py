@@ -38,8 +38,11 @@ import shutil
 from pyspark.sql import functions as F
 
 from cloud_based_bi_etl_automation_for_real_estate_company_spark import jobs
-from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import (
-    generations as G,
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.generations import (
+    publish,
+)
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.session import (
+    read_parquet,
 )
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.streaming.pipeline import (
     drift_dashboard_batch,
@@ -87,7 +90,7 @@ def _df(spark, rows):
 def _panels(spark, gold):
     return {
         name: sorted(
-            map(tuple, G.read_current(spark, f"{gold}/{name}").collect())
+            map(tuple, read_parquet(spark, f"{gold}/{name}").collect())
         )
         for name in ("drift_panel", "mix_panel")
     }
@@ -134,7 +137,7 @@ def test_untouched_weeks_carried_not_recomputed(spark, tmp_path):
     for i in range(3):
         drift_dashboard_batch(spark, _df(spark, _week_rows(i, seed=i)), i, gold)
     # plant the sentinel: psi = 123.456 on the earliest drift row
-    cur = G.read_current(spark, f"{gold}/drift_panel")
+    cur = read_parquet(spark, f"{gold}/drift_panel")
     wk0 = cur.agg(F.min("week_start")).collect()[0][0]
     tampered = cur.withColumn(
         "psi",
@@ -144,11 +147,11 @@ def test_untouched_weeks_carried_not_recomputed(spark, tmp_path):
             F.lit(123.456),
         ).otherwise(F.col("psi")),
     ).localCheckpoint(eager=True)
-    G.write_generation(tampered, f"{gold}/drift_panel")
+    publish(tampered, f"{gold}/drift_panel")
     # batch 3 touches ONLY week 9 — horizon [9, 13] never reaches week 0
     drift_dashboard_batch(spark, _df(spark, _week_rows(9, seed=7)), 3, gold)
     got = (
-        G.read_current(spark, f"{gold}/drift_panel")
+        read_parquet(spark, f"{gold}/drift_panel")
         .filter(
             (F.col("week_start") == F.lit(wk0))
             & (F.col("event_type") == "click")
@@ -164,7 +167,7 @@ def test_untouched_weeks_carried_not_recomputed(spark, tmp_path):
     got_w9 = sorted(
         map(
             tuple,
-            G.read_current(spark, f"{gold}/drift_panel")
+            read_parquet(spark, f"{gold}/drift_panel")
             .filter(F.col("week_start") > F.lit(wk0))
             .collect(),
         )
@@ -216,9 +219,9 @@ def test_hull_expansion_triggers_full_recompute(spark, tmp_path):
     gold = str(tmp_path / "gold")
     for i in range(2):
         drift_dashboard_batch(spark, _df(spark, _week_rows(i, seed=i)), i, gold)
-    cur = G.read_current(spark, f"{gold}/drift_panel")
+    cur = read_parquet(spark, f"{gold}/drift_panel")
     wk0 = cur.agg(F.min("week_start")).collect()[0][0]
-    G.write_generation(
+    publish(
         cur.withColumn("psi", F.lit(999.0)).localCheckpoint(eager=True),
         f"{gold}/drift_panel",
     )
@@ -231,7 +234,7 @@ def test_hull_expansion_triggers_full_recompute(spark, tmp_path):
         assert json.load(f)["hi"] == 500
     # sentinel gone — week-0 rows were recomputed
     got0 = (
-        G.read_current(spark, f"{gold}/drift_panel")
+        read_parquet(spark, f"{gold}/drift_panel")
         .filter(F.col("week_start") == F.lit(wk0))
         .collect()
     )

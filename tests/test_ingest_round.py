@@ -12,6 +12,8 @@ import datetime as dt
 import http.client
 import json
 import os
+import subprocess
+import sys
 import time
 from decimal import Decimal
 
@@ -19,9 +21,6 @@ import pytest
 from pyspark.errors import StreamingQueryException
 
 from cloud_based_bi_etl_automation_for_real_estate_company_spark import jobs
-from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import (
-    generations as G,
-)
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.plans.gold import (
     REJECTED,
     STAGE_RANK,
@@ -33,6 +32,7 @@ from cloud_based_bi_etl_automation_for_real_estate_company_spark.schemas import 
     EVENT_LEAD_DELETED,
     EVENT_STEP_CHANGED,
 )
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.session import read_parquet
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources import webhook as W
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.http_receiver import (
     WebhookReceiver,
@@ -336,9 +336,9 @@ def _snapshot_accounts(table_path: str) -> set[str]:
 def test_webhook_rounds_to_gold_match_recomputation(spark, tmp_path):
     """Two receiver → drain → refresh rounds. Round two deletes
     office_c's only lead, so the refresh must drop office_c's snapshot
-    partition in place and in a fresh generation alike."""
+    partition from the new generation."""
     spool, silver, ckpt = (str(tmp_path / d) for d in ("spool", "silver", "ckpt"))
-    gold_in_place, gold_atomic = str(tmp_path / "gold"), str(tmp_path / "gold_atomic")
+    gold_path = str(tmp_path / "gold")
     before = _session_conf(spark)
     rounds = []
     for posts in (_round_one(), _round_two()):
@@ -353,21 +353,17 @@ def test_webhook_rounds_to_gold_match_recomputation(spark, tmp_path):
         want = _expected(rounds)
         got_ids = [r.id for r in spark.read.parquet(silver).select("id").collect()]
         assert sorted(got_ids) == sorted(want["silver_ids"])
-        for gold_path, atomic in ((gold_in_place, False), (gold_atomic, True)):
-            out = jobs.refresh_gold(spark, silver, gold_path, atomic=atomic)
-            got = _got(out)
-            for name in GOLD_TABLES:
-                assert got[name] == want[name], (name, atomic, got[name], want[name])
+        got = _got(jobs.refresh_gold(spark, silver, gold_path))
+        for name in GOLD_TABLES:
+            assert got[name] == want[name], (name, got[name], want[name])
     assert _session_conf(spark) == before
 
     # office_c had a partition after round one; none is left after round two
     snap_accounts = {a for _, a, *_ in want["lead_snapshot"]}
     assert "office_c" not in snap_accounts
-    in_place = os.path.join(gold_in_place, "lead_snapshot")
-    atomic = os.path.join(gold_atomic, "lead_snapshot")
-    atomic = G.generation_path(atomic, G.current_generation(atomic))
-    assert _snapshot_accounts(in_place) == snap_accounts
-    assert _snapshot_accounts(atomic) == snap_accounts
+    snapshot = os.path.join(gold_path, "lead_snapshot")
+    assert os.readlink(snapshot) == ".lead_snapshot-gen-1"
+    assert _snapshot_accounts(snapshot) == snap_accounts
 
 
 def test_refresh_gold_builds_the_snapshot_once(spark, tmp_path):
@@ -394,6 +390,25 @@ def test_refresh_gold_builds_the_snapshot_once(spark, tmp_path):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs == 17, n_jobs
     assert _session_conf(spark) == before
+
+
+def test_a_gold_frame_built_before_a_refresh_reads_after_it(spark, tmp_path):
+    """List, replace, execute: a ``read_parquet`` frame of a gold table
+    keeps reading the generation it resolved, which the next refresh
+    retains, while a new read sees the new table."""
+    raw, silver = str(tmp_path / "raw"), str(tmp_path / "silver")
+    gold_path = str(tmp_path / "gold")
+    funnel = os.path.join(gold_path, "funnel")
+    _spool(raw, "events.json", _round_one())
+    W.ingest_batch(spark, raw, silver)
+    want = jobs.refresh_gold(spark, silver, gold_path)["funnel"].collect()
+    frame = read_parquet(spark, funnel)
+    # the rerun's batch replaces the first one with both rounds
+    _spool(raw, "events.json", _round_one() + _round_two())
+    W.ingest_batch(spark, raw, silver)
+    jobs.refresh_gold(spark, silver, gold_path)
+    assert read_parquet(spark, funnel).collect() != want
+    assert frame.collect() == want
 
 
 def _silver_ids(spark, path) -> list[int]:
@@ -434,6 +449,44 @@ def test_live_receiver_and_stream_lose_no_acknowledged_event(spark, tmp_path):
     finally:
         q.stop()
         rx.stop()
+
+
+# a receiver in its own process that never rotates its in-progress
+# file, so only a later receiver's start can publish it
+_RECEIVER = """
+import sys, time
+sys.path.insert(0, sys.argv[1])
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources import http_receiver
+http_receiver.ROTATE_S = 3600.0
+rx = http_receiver.WebhookReceiver(sys.argv[2]).start()
+print(rx.port, flush=True)
+time.sleep(600)
+"""
+
+
+def test_a_killed_receivers_acknowledged_events_reach_silver(spark, tmp_path):
+    """A receiver acknowledges 20 POSTs and is SIGKILLed before it
+    publishes its in-progress file. The next receiver's start publishes
+    it, so the drain lands every acknowledged event."""
+    spool, silver, ckpt = (str(tmp_path / d) for d in ("spool", "silver", "ckpt"))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.Popen(
+        [sys.executable, "-c", _RECEIVER, root, spool], stdout=subprocess.PIPE, text=True
+    )
+    posts = [
+        _post(700 + i, "office_a", C, 1700 + i, "Ingresados", 10.0 + i, "k@x.com")
+        for i in range(20)
+    ]
+    try:
+        port = int(proc.stdout.readline())
+        assert [_send(port, p) for p in posts] == [200] * 20
+    finally:
+        proc.kill()
+        proc.wait()
+        proc.stdout.close()
+    WebhookReceiver(spool).start().stop()
+    _drain(stream_silver(spark, spool, silver, ckpt, available_now=True))
+    assert sorted(_silver_ids(spark, silver)) == [p["id"] for p in posts]
 
 
 def _legacy_stream_silver(spark, spool, out, ckpt):

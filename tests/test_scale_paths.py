@@ -17,8 +17,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.plans.measures import t
-from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.sinks import (
-    materialize_gold,
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.generations import (
+    publish,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -26,7 +26,7 @@ SF = "/root/testdata/sf0.001"
 
 def test_dynamic_partition_pruning_on_gold_join(spark, tmp_path):
     o = t(spark, SF, "orders").withColumn("order_year", F.year("o_orderdate"))
-    gold = materialize_gold(
+    gold = publish(
         o, str(tmp_path / "orders_by_year"), partition_by=["order_year"]
     )
     # the filter must be on a NON-join column: a literal join-key
@@ -49,7 +49,7 @@ def test_dynamic_partition_pruning_on_gold_join(spark, tmp_path):
 
 def test_partition_pruning_static_filter_prunes_directories(spark, tmp_path):
     o = t(spark, SF, "orders").withColumn("order_year", F.year("o_orderdate"))
-    gold = materialize_gold(o, str(tmp_path / "orders_part"), partition_by=["order_year"])
+    gold = publish(o, str(tmp_path / "orders_part"), partition_by=["order_year"])
     df = gold.filter(F.col("order_year") == 1997)
     plan = df._jdf.queryExecution().toString()
     assert "PartitionFilters: [isnotnull(order_year" in plan

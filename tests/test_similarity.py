@@ -510,7 +510,7 @@ def test_compact_nsw_graph_refresh_structural_invariants(spark, tmp_path):
     refreshed = str(tmp_path / "refreshed")
     heuristic = str(tmp_path / "heuristic")
     for dst in (refreshed, heuristic):
-        _shutil.copytree(seed, dst)
+        _shutil.copytree(seed, dst, symlinks=True)
     compact_nsw_graph(spark, refreshed, M=6, refresh_iters=1)
     compact_nsw_graph(spark, heuristic, M=6, select="heuristic")
 

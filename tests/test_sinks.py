@@ -1,7 +1,9 @@
-"""S10/S11 sink tests: schema-declared bulk load, gold materialization
-with dynamic partition overwrite."""
+"""S10/S11 sink tests: schema-declared bulk load, gold publication as
+a generation behind a link."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql.types import (
     DoubleType,
@@ -11,9 +13,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.generations import (
+    publish,
+)
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.session import (
+    read_parquet,
+)
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.sources.sinks import (
     bulk_load_csv,
-    materialize_gold,
 )
 
 SCHEMA = StructType(
@@ -35,56 +42,31 @@ def test_bulk_load_csv_with_declared_schema(spark, tmp_path):
     assert rows[2]["lead_id"] is None  # malformed cell → NULL, row kept
 
 
-def test_materialize_gold_dynamic_partition_overwrite(spark, tmp_path):
-    out = str(tmp_path / "gold")
-    df1 = spark.createDataFrame(
-        [("2025-01", 10), ("2025-02", 20)], "month string, n int"
-    )
-    materialize_gold(df1, out, view_name="gold_t", partition_by=["month"])
-    assert spark.sql("SELECT sum(n) FROM gold_t").collect()[0][0] == 30
-
-    # refresh only February — January's partition must survive
-    df2 = spark.createDataFrame([("2025-02", 25)], "month string, n int")
-    refreshed = materialize_gold(df2, out, view_name="gold_t", partition_by=["month"])
-    got = {r["month"]: r["n"] for r in refreshed.collect()}
-    assert got == {"2025-01": 10, "2025-02": 25}
-
-
-def test_materialize_gold_leaves_session_overwrite_mode(spark, tmp_path):
-    """Dynamic overwrite is a per-write option: the session's own
-    overwrite mode is the same after the call."""
+def test_publish_leaves_session_overwrite_mode(spark, tmp_path):
+    """A generation is written with a per-write static overwrite: the
+    session's own overwrite mode is the same after the call."""
     key = "spark.sql.sources.partitionOverwriteMode"
     before = spark.conf.get(key)
     df = spark.createDataFrame([("2025-01", 1)], "month string, n int")
-    materialize_gold(df, str(tmp_path / "gold"), partition_by=["month"])
+    publish(df, str(tmp_path / "gold"), partition_by=["month"])
     assert spark.conf.get(key) == before
 
 
 def test_generation_atomic_swap(spark, tmp_path):
-    import os
-
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.generations import (
-        current_generation,
-        read_current,
-        write_generation,
-    )
-
+    """A reader that resolved a generation keeps reading it after the
+    next publish; new readers see the new one; the view re-points."""
     tbl = str(tmp_path / "snap")
-    g0 = write_generation(spark.range(10).toDF("id"), tbl)
-    assert g0 == 0 and current_generation(tbl) == 0
-    # a reader that resolved generation 0 keeps a stable view...
-    old_reader = read_current(spark, tbl)
+    publish(spark.range(10).toDF("id"), tbl, view_name="gold_snap")
+    assert os.readlink(tbl) == ".snap-gen-0"
+    old_reader = read_parquet(spark, tbl)
 
-    g1 = write_generation(spark.range(20).toDF("id"), tbl, keep_generations=2)
-    assert g1 == 1
-    assert read_current(spark, tbl).count() == 20   # new readers see gen-1
+    publish(spark.range(20).toDF("id"), tbl, view_name="gold_snap")
+    assert os.readlink(tbl) == ".snap-gen-1"
+    assert read_parquet(spark, tbl).count() == 20   # new readers see gen-1
+    assert spark.sql("SELECT count(*) FROM gold_snap").collect()[0][0] == 20
     assert old_reader.count() == 10                  # in-flight reader unaffected
-
-    # retention: after two more generations, gen-0 is retired
-    write_generation(spark.range(30).toDF("id"), tbl, keep_generations=2)
-    write_generation(spark.range(40).toDF("id"), tbl, keep_generations=2)
-    assert not os.path.exists(f"{tbl}/gen-0")
-    assert read_current(spark, tbl).count() == 40
+    # a plain read of the link path sees the current table
+    assert spark.read.parquet(tbl).count() == 20
 
 
 def test_corrupt_parquet_file_tolerance(spark, tmp_path):

@@ -3,11 +3,14 @@ composed refresh job (silver → all gold tables on disk + views)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from cloud_based_bi_etl_automation_for_real_estate_company_spark import jobs
+from cloud_based_bi_etl_automation_for_real_estate_company_spark.session import read_parquet
 from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.skew import (
     salted_agg,
     salted_join,
@@ -85,21 +88,14 @@ def test_refresh_gold_job(spark, tmp_path):
     snap = spark.read.parquet(str(tmp_path / "gold" / "lead_snapshot"))
     assert snap.filter(F.col("account") == "office_a").count() == 1
 
-    # atomic mode: same results, published behind a generation manifest
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import (
-        generations as G,
-    )
-
-    agold = str(tmp_path / "gold_atomic")
-    jobs.refresh_gold(spark, silver_path, agold, atomic=True)
-    assert G.current_generation(agold + "/funnel") == 0
+    # every table is a generation behind a link: a re-refresh flips
+    # the link and the views re-point to the new generation
+    assert os.readlink(str(tmp_path / "gold" / "funnel")) == ".funnel-gen-0"
+    jobs.refresh_gold(spark, silver_path, str(tmp_path / "gold"))
+    assert os.readlink(str(tmp_path / "gold" / "funnel")) == ".funnel-gen-1"
     assert spark.sql("SELECT Firmados FROM gold_funnel").collect()[0][0] == 1
-    # re-refresh bumps the generation; views re-point to the new one
-    jobs.refresh_gold(spark, silver_path, agold, atomic=True)
-    assert G.current_generation(agold + "/funnel") == 1
-    assert spark.sql("SELECT Firmados FROM gold_funnel").collect()[0][0] == 1
-    # partitioned snapshot generation keeps partition pruning
-    snap2 = G.read_current(spark, agold + "/lead_snapshot")
+    # the partitioned snapshot generation keeps partition pruning
+    snap2 = read_parquet(spark, str(tmp_path / "gold" / "lead_snapshot"))
     assert snap2.filter(F.col("account") == "office_a").count() == 1
 
 
@@ -222,14 +218,11 @@ def test_copurchase_edges_hot_order_stays_bounded(spark):
 @pytest.mark.slow  # round 16: heavy leg, slow tier (see pytest.ini)
 def test_refresh_drift_dashboard(spark, tmp_path):
     """Round-13: the rolling drift panels materialize as gold tables
-    behind the generation manifest — both week-grain frames land,
+    as generations behind links — both week-grain frames land,
     views register, a re-refresh bumps the generation, and the panel
     values equal the operators run directly."""
     import datetime as dt
 
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import (
-        generations as G,
-    )
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators.quality import (
         rolling_chi2,
     )
@@ -250,7 +243,7 @@ def test_refresh_drift_dashboard(spark, tmp_path):
     gold_path = str(tmp_path / "gold")
     out = jobs.refresh_drift_dashboard(spark, ev, gold_path)
     assert set(out) == {"drift_panel", "mix_panel"}
-    assert G.current_generation(gold_path + "/drift_panel") == 0
+    assert os.readlink(gold_path + "/drift_panel") == ".drift_panel-gen-0"
     # panels are queryable views with the operator's exact content
     got = {
         (str(r["week_start"]), r["n_cur"], r["n_ref"], r["chi2"])
@@ -268,4 +261,4 @@ def test_refresh_drift_dashboard(spark, tmp_path):
     assert sum(1 for r in drift if not r["drift_defined"]) == 2
     # re-refresh publishes a new generation
     jobs.refresh_drift_dashboard(spark, ev, gold_path)
-    assert G.current_generation(gold_path + "/drift_panel") == 1
+    assert os.readlink(gold_path + "/drift_panel") == ".drift_panel-gen-1"

@@ -93,10 +93,8 @@ def test_bm25_delete_matches_reduced_one_shot(spark, tmp_path):
     assert got_m == want_m and len(got_m) > 0
 
     # compaction: physical drop, tombstones cleared, answer invariant
-    import os
-
     compact_bm25_store(spark, full)
-    assert not os.path.exists(f"{full}/tombstones")
+    assert stores.read_tombstones(spark, full, "doc_id") is None
     left = spark.read.parquet(f"{full}/postings")
     assert left.filter(F.col("doc_id") % 7 == 0).count() == 0
     assert _rows(bm25_query_store(spark, full, q, k=5)) == want
@@ -154,10 +152,8 @@ def test_minhash_delete_readmits_fresh_copy(spark, tmp_path):
 
     # compaction drops the tombstoned signatures physically; doc 3's
     # signature survives and still suppresses its near-dups
-    import os
-
     compact_minhash_store(spark, store)
-    assert not os.path.exists(f"{store}/tombstones")
+    assert stores.read_tombstones(spark, store, "doc_id") is None
     ids = {r["doc_id"] for r in spark.read.parquet(f"{store}/sigs").collect()}
     assert ids == {3}
     d4 = spark.createDataFrame(
@@ -203,10 +199,8 @@ def test_soft_store_delete(spark, tmp_path):
     ).collect()[0]
     assert out3["n_cluster"] == 2
 
-    import os
-
     compact_soft_store(spark, store)
-    assert not os.path.exists(f"{store}/tombstones")
+    assert stores.read_tombstones(spark, store, "doc_id") is None
     ids = {r["doc_id"] for r in spark.read.parquet(f"{store}/sigs").collect()}
     assert ids == {2, 3}
 
@@ -237,10 +231,8 @@ def test_nsw_delete_soft_then_physical(spark, tmp_path):
 
     # physical delete at compaction (+ NN-descent re-link), tombstones
     # cleared, results still clean and recall holds
-    import os
-
     compact_nsw_graph(spark, store, refresh_iters=1)
-    assert not os.path.exists(f"{store}/tombstones")
+    assert stores.read_tombstones(spark, store, "vec_id") is None
     vec_ids = {
         r["vec_id"] for r in spark.read.parquet(f"{store}/vectors").collect()
     }
